@@ -8,8 +8,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Reproduces the reference's Iceberg-on-metastore table semantics
   * (`iceberg.raw.daily_reports` etc.) without a metastore service:
   *  - namespaces = directory prefixes (SURVEY §1.1);
-  *  - `overwritePartitions` = dynamic partition overwrite via a
-  *    temp-dir write + per-partition rename swap, replacing
+  *  - `overwritePartitionsByName` = dynamic partition overwrite as ONE
+  *    commit (the catalog's staged-invisible v2 write), replacing
   *    exactly the partitions present in the incoming DataFrame and
   *    preserving all others — the core idempotency semantic of
   *    `process_covid_ods.py:79-91` / `process_covid_dds.py:81-93` /
@@ -95,35 +95,50 @@ final case class Catalog(spark: SparkSession, root: String,
     * name, so a name can never be re-pointed at a second root within a
     * session (tests spin up many warehouses).
     */
-  lazy val sqlName: String = {
-    def tryBind(name: String): Boolean = {
-      val rootKey = s"spark.sql.catalog.$name.root"
-      val implKey = s"spark.sql.catalog.$name"
-      spark.conf.getOption(implKey) match {
-        case Some(impl) =>
-          impl == "graft.sources.GraftCatalog" &&
-            spark.conf.getOption(rootKey).contains(root) &&
-            spark.conf.getOption(s"spark.sql.catalog.$name.format")
-              .getOrElse("parquet") == format
-        case None =>
-          spark.conf.set(implKey, "graft.sources.GraftCatalog")
-          spark.conf.set(rootKey, root)
-          spark.conf.set(s"spark.sql.catalog.$name.format", format)
-          if (versions > 0)
-            spark.conf.set(s"spark.sql.catalog.$name.versions", versions.toString)
-          true
-      }
-    }
-    if (tryBind("graft")) "graft"
+  lazy val sqlName: String =
+    if (bind(spark, "graft")) "graft"
     else {
       val suffix = java.lang.Long.toHexString(
         scala.util.hashing.MurmurHash3.stringHash(s"$root|$format|$versions")
           .toLong & 0xffffffffL)
       val unique = s"graft_$suffix"
-      require(tryBind(unique),
+      require(bind(spark, unique),
         s"session catalog $unique is bound to a different root")
       unique
     }
+
+  /** Binds `name` to this root+format in `session`'s conf; false when
+    * the name is already bound there to another warehouse.
+    */
+  private def bind(session: SparkSession, name: String): Boolean = {
+    val rootKey = s"spark.sql.catalog.$name.root"
+    val implKey = s"spark.sql.catalog.$name"
+    session.conf.getOption(implKey) match {
+      case Some(impl) =>
+        impl == "graft.sources.GraftCatalog" &&
+          session.conf.getOption(rootKey).contains(root) &&
+          session.conf.getOption(s"spark.sql.catalog.$name.format")
+            .getOrElse("parquet") == format
+      case None =>
+        session.conf.set(implKey, "graft.sources.GraftCatalog")
+        session.conf.set(rootKey, root)
+        session.conf.set(s"spark.sql.catalog.$name.format", format)
+        if (versions > 0)
+          session.conf.set(s"spark.sql.catalog.$name.versions", versions.toString)
+        true
+    }
+  }
+
+  /** `df.writeTo` a table of this warehouse. The name resolves in the
+    * DataFrame's OWN session — a `foreachBatch` micro-batch runs in the
+    * stream's cloned session, which lacks a binding made after the
+    * stream started — so the binding is carried into that session.
+    */
+  private def writerFor(df: DataFrame, layer: String, table: String) = {
+    require(bind(df.sparkSession, sqlName),
+      s"session catalog $sqlName is bound to a different root in the " +
+        "DataFrame's session")
+    df.writeTo(sqlIdent(layer, table))
   }
 
   /** Fully-qualified SQL identifier for a table of this warehouse. */
@@ -147,7 +162,7 @@ final case class Catalog(spark: SparkSession, root: String,
     val clustered =
       if (sortCols.nonEmpty) df.sortWithinPartitions(sortCols.head, sortCols.tail: _*)
       else df
-    val w = clustered.writeTo(sqlIdent(layer, table))
+    val w = writerFor(clustered, layer, table)
     if (tableExists(layer, table)) w.append()
     else {
       ensureNamespace(layer)
@@ -158,16 +173,21 @@ final case class Catalog(spark: SparkSession, root: String,
     }
   }
 
-  /** Name-based dynamic partition overwrite (S6 by name): resolves to
-    * the catalog's staged-invisible hive-layout v2 write
+  /** S6 — idempotent dynamic partition overwrite, the warehouse's one
+    * partition-scoped commit: resolves to the catalog's
+    * staged-invisible hive-layout v2 write
     * ([[graft.sources.GraftPartitionedCow]] DynamicOverwriteWrite),
-    * replacing exactly the partitions present in `df`.
+    * replacing exactly the partitions present in `df` and preserving
+    * every other. The commit aborts with
+    * [[graft.sources.GraftCommitLock.ConcurrentCommitException]] when a
+    * touched partition gained or lost a data file or a deletion vector
+    * while the replacement was computed; the live table is untouched.
     */
   def overwritePartitionsByName(df: DataFrame, layer: String, table: String,
                                 partitionCols: Seq[String]): Unit = {
     require(partitionCols.nonEmpty,
       "overwritePartitionsByName needs partition columns")
-    val w = df.writeTo(sqlIdent(layer, table))
+    val w = writerFor(df, layer, table)
     if (tableExists(layer, table)) w.overwritePartitions()
     else {
       ensureNamespace(layer)
@@ -183,7 +203,7 @@ final case class Catalog(spark: SparkSession, root: String,
     */
   def createOrReplaceByName(df: DataFrame, layer: String, table: String,
                             partitionCols: Seq[String] = Nil): Unit = {
-    val w = df.writeTo(sqlIdent(layer, table))
+    val w = writerFor(df, layer, table)
     if (tableExists(layer, table))
       w.overwrite(org.apache.spark.sql.functions.lit(true))
     else {
@@ -242,169 +262,8 @@ final case class Catalog(spark: SparkSession, root: String,
     }
   }
 
-  /** S6 — idempotent dynamic partition overwrite: replaces only the
-    * partitions present in `df`, preserves everything else.
-    *
-    * Publication is crash-safe, matching the spirit of the reference's
-    * Iceberg `overwritePartitions()` commit
-    * (process_covid_ods.py:87, format-version=2): the whole incoming
-    * frame lands in a sibling temp directory first, then each touched
-    * partition directory is swapped in by rename. A failure anywhere
-    * during the (distributed, arbitrarily long) write phase leaves the
-    * live table byte-identical; the publish phase is one cheap rename
-    * pair per TOUCHED partition, each individually atomic, so no
-    * reader ever sees a half-written partition. (Cross-partition
-    * all-or-nothing would need a metadata pointer à la Iceberg —
-    * per-partition atomicity + idempotent re-run is the plain-directory
-    * equivalent: a crash between renames re-converges on retry.)
-    */
-  def overwritePartitions(df: DataFrame, layer: String, table: String,
-                          partitionCols: Seq[String]): Unit = {
-    require(partitionCols.nonEmpty,
-      "overwritePartitions needs partition columns; use createOrReplace for full rewrites")
-    val p = path(layer, table)
-    val base = new org.apache.hadoop.fs.Path(p)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // replacement files carry no equality-delete epoch floor (-1):
-    // their rows would be wrongly subject to live sidecars — refuse
-    graft.sources.GraftEqDel.requireNone(fs, base,
-      "a dynamic partition overwrite")
-    // mixed-era refusal (r13 item 3): a directory-granular replacement
-    // would strand old-era rows of the same logical partition
-    require(graft.sources.GraftEvolved.evolvedColsOf(fs, base).isEmpty,
-      s"$layer.$table has an un-materialized partition-spec evolution " +
-        "(file eras at mixed depths): partition overwrites are refused " +
-        "until CALL system.compact migrates the table to its current spec")
-    // CHECK constraints hold on the object-API overwrite too
-    val df1 = graft.sources.GraftCheck.guard(df,
-      graft.sources.GraftCheck.constraintsAt(
-        spark.sparkContext.hadoopConfiguration, p))
-    val tmp = new org.apache.hadoop.fs.Path(s"$p.__pubtmp")
-    val oldRoot = new org.apache.hadoop.fs.Path(s"$p.__pubold")
-    // enumerate the leaf partition directories under a root
-    // (depth = partition columns; names are hive col=val)
-    def leaves(root: org.apache.hadoop.fs.Path): Seq[String] = {
-      def walk(dir: org.apache.hadoop.fs.Path, level: Int,
-               rel: String): Seq[String] =
-        if (level == partitionCols.length) Seq(rel)
-        else fs.listStatus(dir).toSeq
-          .filter(st => st.isDirectory &&
-            st.getPath.getName.startsWith(partitionCols(level) + "="))
-          .flatMap { st =>
-            val name = st.getPath.getName
-            walk(st.getPath, level + 1,
-              if (rel.isEmpty) name else s"$rel/$name")
-          }
-      walk(root, 0, "")
-    }
-    // recovery — a previous publish may have crashed between its two
-    // renames, leaving a partition's ONLY copy under __pubold. Restore
-    // any such orphan into the (missing) live slot BEFORE clearing the
-    // backup root: deleting it first would destroy that only copy, and
-    // the docstring's 'a crash re-converges on retry' would only hold
-    // when the retry's write phase succeeds.
-    import graft.sources.GraftCommitLock
-    GraftCommitLock.withLock(fs, base, s"publish-recovery:$layer.$table") {
-      if (fs.exists(oldRoot)) {
-        leaves(oldRoot).foreach { rel =>
-          val live = new org.apache.hadoop.fs.Path(base, rel)
-          if (!fs.exists(live)) {
-            fs.mkdirs(live.getParent)
-            require(fs.rename(new org.apache.hadoop.fs.Path(oldRoot, rel), live),
-              s"publish recovery: could not restore $live from $oldRoot")
-          }
-        }
-        fs.delete(oldRoot, true)
-      }
-      fs.delete(tmp, true)
-    }
-    // interference fingerprint BEFORE the (long, unlocked) write: the
-    // swap below retires the touched partitions' current contents, so
-    // a commit landing in one of them mid-write would be erased — the
-    // optimistic check makes this writer abort cleanly instead
-    val before = visibleFileState(fs, base)
-    // phase 1 — the only phase that can fail for data reasons runs
-    // entirely against the temp dir; the live table is not involved
-    df1.write
-      .partitionBy(partitionCols: _*)
-      .options(writeOptions)
-      .mode("overwrite")
-      .format(format)
-      .save(tmp.toString)
-    if (!fs.exists(base)) {
-      // first publish: the temp dir IS the table
-      fs.mkdirs(base.getParent)
-      require(fs.rename(tmp, base), s"publish: could not install $base")
-      GraftCommitLock.withLock(fs, base, s"publish-journal:$layer.$table") {
-        graft.sources.GraftCommits.tryRecordClaiming(
-          fs, base, "overwrite", Set.empty)
-      }
-    } else {
-      // phase 2 — per-partition swap: live aside, new in, old dropped.
-      // Each rename is atomic on a real filesystem, so a partition is
-      // always either its complete old or complete new contents. The
-      // whole swap loop is one commit critical section; interference
-      // is checked only for the TOUCHED partitions (a concurrent
-      // append elsewhere is untouched by this publish and survives).
-      GraftCommitLock.withLock(fs, base, s"publish:$layer.$table") {
-        onBeforeSwapCheck()
-        val touched = leaves(tmp)
-        // an entry belongs to a touched partition if its rel path (or,
-        // for deletion-vector sidecars keyed "_graft_dv/<rel>", the
-        // data file's rel path) is under it — a merge-on-read DELETE
-        // landing mid-write changes ONLY the sidecar, and the swap
-        // would otherwise resurrect the deleted rows
-        def inTouched(rel: String): Boolean = {
-          val dataRel =
-            if (rel.startsWith(graft.sources.GraftDv.DirName + "/"))
-              rel.stripPrefix(graft.sources.GraftDv.DirName + "/")
-            else rel
-          touched.exists(t => dataRel.startsWith(t + "/"))
-        }
-        val nowTouched = visibleFileState(fs, base).filter {
-          case (rel, _) => inTouched(rel)
-        }
-        val beforeTouched = before.filter { case (rel, _) => inTouched(rel) }
-        if (nowTouched != beforeTouched) {
-          fs.delete(tmp, true)
-          throw new GraftCommitLock.ConcurrentCommitException(
-            s"$layer.$table: partitions ${touched.mkString(", ")} changed " +
-              "while this overwrite computed its replacement; the " +
-              "overwrite was DISCARDED and the live table is untouched " +
-              "— re-run it against the new state")
-        }
-        touched.foreach { rel =>
-          swapDirIn(fs,
-            newDir = new org.apache.hadoop.fs.Path(tmp, rel),
-            live = new org.apache.hadoop.fs.Path(base, rel),
-            aside = new org.apache.hadoop.fs.Path(oldRoot, rel))
-        }
-        fs.delete(tmp, true)
-        // tombstone the swapped-aside partitions (reader snapshot
-        // isolation, r12 item 2) — relative layout preserved, GC'd by
-        // remove_orphans after the grace window
-        val tomb = graft.sources.GraftRetired.retireRoot(fs, base, oldRoot)
-        // commit journal: the overwrite's adds are the touched
-        // partitions' new files; removes are their previous generation,
-        // preimages resolvable under the tombstoned aside root
-        graft.sources.GraftCommits.tryRecord(fs, base, "overwrite",
-          adds = visibleFileState(fs, base).keys.toSeq
-            .filter(r => inTouched(r) &&
-              !r.startsWith(graft.sources.GraftDv.DirName + "/")),
-          removes = beforeTouched.keys.toSeq
-            .filter(!_.startsWith(graft.sources.GraftDv.DirName + "/"))
-            .map(graft.sources.GraftCommits.Remove(_, tomb.getOrElse(""))))
-      }
-    }
-    // maintenance policy outside the lock: this commit grew the
-    // tombstone area (retired.expire_ms GC — r14 review finding)
-    graft.sources.GraftMaintenance.afterCommit(spark, fs, base)
-  }
-
   /** One atomic-per-step directory swap: move `live` aside (when it
-    * exists), rename `newDir` in, restore on failure. Shared by the
-    * per-partition publish loop and [[safeSwapWrite]] so the
-    * crash-safety protocol lives in exactly one place.
+    * exists), rename `newDir` in, restore on failure.
     */
   private def swapDirIn(fs: org.apache.hadoop.fs.FileSystem,
                         newDir: org.apache.hadoop.fs.Path,
@@ -436,7 +295,7 @@ final case class Catalog(spark: SparkSession, root: String,
   /** Full-replace preserving a hive-partitioned layout: the whole new
     * state lands partitioned in the sibling temp dir, then swaps in —
     * the static INSERT OVERWRITE semantic (every partition replaced,
-    * absent partitions dropped), unlike [[overwritePartitions]] which
+    * absent partitions dropped), unlike [[overwritePartitionsByName]] which
     * scopes the replace to the partitions present in `df`.
     */
   def createOrReplace(df: DataFrame, layer: String, table: String,
@@ -960,26 +819,31 @@ final case class Catalog(spark: SparkSession, root: String,
     */
   private[graft] var onBeforeSwapCheck: () => Unit = () => ()
 
+  /** Visible data files under `p`, recursively (`_`/`.` names skipped). */
+  private def dataFiles(fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
+    if (!fs.exists(p)) Nil
+    else fs.listStatus(p).toSeq.flatMap { st =>
+      val n = st.getPath.getName
+      if (n.startsWith("_") || n.startsWith(".")) Nil
+      else if (st.isDirectory) dataFiles(fs, st.getPath)
+      else Seq(st)
+    }
+
   /** Visible data files as (relPath -> (size, mtime)) — the
     * interference fingerprint for full-rewrite swaps.
     */
   private def visibleFileState(fs: org.apache.hadoop.fs.FileSystem,
       base: org.apache.hadoop.fs.Path): Map[String, (Long, Long)] = {
     val baseUri = base.toUri.getPath
-    def walk(p: org.apache.hadoop.fs.Path): Seq[(String, (Long, Long))] =
-      if (!fs.exists(p)) Nil
-      else fs.listStatus(p).toSeq.flatMap { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("_") || n.startsWith(".")) Nil
-        else if (st.isDirectory) walk(st.getPath)
-        else Seq((st.getPath.toUri.getPath.stripPrefix(baseUri)
-          .stripPrefix("/"), (st.getLen, st.getModificationTime)))
-      }
     // deletion-vector sidecars are part of the generation's ROW state:
     // a merge-on-read DELETE landing mid-rewrite must fail the swap
     // exactly like a data-file commit would (the rewrite read
     // pre-delete rows)
-    walk(base).toMap ++ graft.sources.GraftDv.fingerprint(fs, base)
+    dataFiles(fs, base).map(st => (st.getPath.toUri.getPath
+      .stripPrefix(baseUri).stripPrefix("/"),
+      (st.getLen, st.getModificationTime))).toMap ++
+      graft.sources.GraftDv.fingerprint(fs, base)
       .map { case (k, v) => (graft.sources.GraftDv.DirName + "/" + k, v) }
   }
 
@@ -996,7 +860,7 @@ final case class Catalog(spark: SparkSession, root: String,
     // live slot missing. Restore it BEFORE the deletes below: clearing
     // __swapold first would destroy that only copy, and a subsequent
     // write failure would then lose the previous table version
-    // entirely (mirrors overwritePartitions' publish recovery).
+    // entirely.
     // Recovery mutates the live slot, so it runs under the commit lock.
     GraftCommitLock.withLock(fs, hp, s"swap-recovery:$layer.$table") {
       if (!fs.exists(hp) && fs.exists(old)) {
@@ -1284,22 +1148,48 @@ final case class Catalog(spark: SparkSession, root: String,
       .transform(Materialize.once)
     merged.count() // force materialization before the paths are replaced
     if (partitionCols.nonEmpty) {
-      overwritePartitions(merged, layer, table, partitionCols)
+      overwritePartitionsByName(merged, layer, table, partitionCols)
       // dynamic overwrite cannot DELETE a partition: a touched
-      // partition whose every row was removed writes no files and the
-      // stale directory would resurrect the deleted rows — drop those
-      // directories explicitly (touched minus surviving; both sets are
-      // delta-bounded)
+      // partition whose every row was removed writes no files and its
+      // old generation would resurrect the deleted rows — retire those
+      // partitions as one more commit (touched minus surviving; both
+      // sets are delta-bounded)
       val touched = ups.select(partitionCols.map(col): _*).distinct()
         .collect().map(_.toSeq).toSet
       val surviving = merged.select(partitionCols.map(col): _*).distinct()
         .collect().map(_.toSeq).toSet
-      val base = new org.apache.hadoop.fs.Path(path(layer, table))
+      import org.apache.hadoop.fs.Path
+      import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+      import graft.sources.{GraftCommitLock, GraftCommits, GraftDv, GraftRetired}
+      val base = new Path(path(layer, table))
       val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      (touched -- surviving).foreach { values =>
-        val dir = partitionCols.zip(values)
-          .map { case (c, v) => s"$c=$v" }.mkString("/")
-        fs.delete(new org.apache.hadoop.fs.Path(base, dir), true)
+      val emptied = (touched -- surviving).toSeq.map { values =>
+        new Path(base, partitionCols.zip(values).map { case (c, v) =>
+          ExternalCatalogUtils.getPartitionPathString(c,
+            if (v == null) ExternalCatalogUtils.DEFAULT_PARTITION_NAME
+            else v.toString)
+        }.mkString("/"))
+      }.filter(fs.exists)
+      if (emptied.nonEmpty) {
+        GraftCommitLock.withLock(fs, base, s"merge-drop:$layer.$table") {
+          // tombstoned, not deleted: a reader that planned before this
+          // commit still finds its files ([[GraftRetired]])
+          val gone = emptied.flatMap(dataFiles(fs, _)).map(_.getPath)
+          val tomb = GraftRetired.retireFiles(fs, base, gone)
+          GraftDv.dropFor(fs, base, gone)
+          GraftCommits.tryRecord(fs, base, "delete", adds = Nil,
+            removes = gone.map(g => GraftCommits.Remove(
+              GraftCommits.relOf(fs, base, g), tomb.getOrElse(""))))
+          emptied.foreach { leaf =>
+            var d = leaf
+            while (d != base && d.getName.contains("=") && fs.exists(d) &&
+                fs.listStatus(d).isEmpty) {
+              fs.delete(d, false)
+              d = d.getParent
+            }
+          }
+        }
+        graft.sources.GraftMaintenance.afterCommit(spark, fs, base)
       }
     } else {
       safeSwapWrite(layer, table) { tmp =>

@@ -1545,8 +1545,9 @@ private[sources] class GraftTable(
     * .overwritePartitions()`) has no V1 fallback in Spark, so it is a
     * real v2 batch write: [[GraftPartitionedCow.DynamicOverwriteWrite]]
     * stages hive-layout files invisibly and replaces exactly the
-    * partitions that received data — the engine's
-    * `overwritePartitions` semantics on the DSv2 surface, and the
+    * partitions that received data in one commit — the warehouse's
+    * only dynamic partition overwrite (the object API's
+    * `overwritePartitionsByName` resolves here too), and the
     * reference's incremental unit (`overwritePartitions()`,
     * process_covid_ods.py:87) addressable purely by table NAME.
     */
@@ -4039,6 +4040,12 @@ private[graft] object GraftPartitionedCow {
     */
   private[graft] var onBetweenPublishAndRetire: String => Unit = _ => ()
 
+  /** Test seam: invoked inside the commit critical section, immediately
+    * before a dynamic partition overwrite's interference check — the
+    * window a racing commit must not slip through unseen.
+    */
+  private[graft] var onBeforeOverwriteCheck: String => Unit = _ => ()
+
   import org.apache.spark.sql.catalyst.InternalRow
   import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
   import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
@@ -4859,14 +4866,16 @@ private[graft] object GraftPartitionedCow {
       * open columnar writer at a time).
       */
     protected def sortedInput: Boolean
-    /** Copy-on-write replaces override this with the deletion-vector
-      * fingerprint taken at write BUILD ([[GraftDv.fingerprint]]): a
-      * merge-on-read DELETE landing between the operation's scan and
-      * this commit changed rows the rewrite has already read — the
-      * commit re-checks under the lock and the rewrite loses cleanly
-      * rather than silently erasing the delete.
+    /** Optimistic-concurrency check under the commit lock, before
+      * anything publishes: `finals` are the qualified paths the new
+      * generation is about to take. A write that read table state at
+      * build overrides this to throw
+      * [[GraftCommitLock.ConcurrentCommitException]] when that state
+      * moved, so it loses cleanly (its staged files are aborted)
+      * rather than silently erasing the other commit.
       */
-    protected def dvConflictGuard: Option[Map[String, (Long, Long)]] = None
+    protected def checkNoInterference(finals: Seq[Path],
+        fs: FileSystem): Unit = ()
 
     /** Whether this write may commit while equality-delete sidecars
       * ([[GraftEqDel]]) are live. Only the full replace is — it
@@ -4910,14 +4919,6 @@ private[graft] object GraftPartitionedCow {
         GraftCommitLock.withLock(fs, new Path(dir), "hive-layout-write") {
         if (!eqDeleteSafe)
           GraftEqDel.requireNone(fs, new Path(dir), description())
-        dvConflictGuard.foreach { before =>
-          val now = GraftDv.fingerprint(fs, new Path(dir))
-          if (now != before)
-            throw new GraftCommitLock.ConcurrentCommitException(
-              s"$dir: deletion vectors changed while this rewrite ran " +
-                "(a merge-on-read DELETE committed in between); the " +
-                "rewrite read pre-delete rows and was DISCARDED — re-run")
-        }
         val staged = messages.toSeq.flatMap {
           case CowTaskFiles(files, _, _) => files
           case _ => Nil
@@ -4928,6 +4929,8 @@ private[graft] object GraftPartitionedCow {
         // staged copies — byte-identical untouched partitions)
         val (toPublish, toDrop) = partitionPublish(staged, fs)
         toDrop.foreach(p => fs.delete(new Path(p), false))
+        checkNoInterference(
+          toPublish.map(p => fs.makeQualified(new Path(p._2))), fs)
         // phase 1 — publish the new generation (atomic per-file rename)
         val published = toPublish.map { case (staged0, fin) =>
           require(fs.rename(new Path(staged0), new Path(fin)),
@@ -5074,10 +5077,16 @@ private[graft] object GraftPartitionedCow {
       * committing while this rewrite runs invalidates the rows already
       * read — the commit re-checks under the lock and loses cleanly.
       */
-    override protected val dvConflictGuard
-        : Option[Map[String, (Long, Long)]] =
-      Some(GraftDv.fingerprint(new Path(dir).getFileSystem(
-        spark.sparkContext.hadoopConfiguration), new Path(dir)))
+    private val dvAtBuild = GraftDv.fingerprint(new Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration), new Path(dir))
+
+    override protected def checkNoInterference(finals: Seq[Path],
+        fs: FileSystem): Unit =
+      if (GraftDv.fingerprint(fs, new Path(dir)) != dvAtBuild)
+        throw new GraftCommitLock.ConcurrentCommitException(
+          s"$dir: deletion vectors changed while this rewrite ran " +
+            "(a merge-on-read DELETE committed in between); the " +
+            "rewrite read pre-delete rows and was DISCARDED — re-run")
 
     override def requiredDistribution(): Distribution =
       clusteringOf(partitionCols, bucketSpec)
@@ -5183,16 +5192,19 @@ private[graft] object GraftPartitionedCow {
   }
 
   /** Dynamic partition overwrite (`INSERT OVERWRITE` under dynamic
-    * mode, `df.writeTo(t).overwritePartitions()`): retires the old
-    * generation exactly in the partitions that RECEIVED new files —
-    * the engine's `overwritePartitions` contract
-    * ([[graft.runtime.Catalog.overwritePartitions]]) on the DSv2
-    * surface. No distribution requirement: the incoming partitioning
-    * is preserved, so a single-date daily refresh (the reference's
-    * incremental unit) keeps its full write parallelism instead of
-    * funneling the day through one task; the many-partitions case
-    * writes tasks×partitions files, the same trade Spark's own
-    * dynamic-partition writer makes absent an explicit repartition.
+    * mode, `df.writeTo(t).overwritePartitions()`,
+    * [[graft.runtime.Catalog.overwritePartitionsByName]]): retires the
+    * old generation exactly in the partitions that RECEIVED new files,
+    * as one commit. A touched partition that gained or lost a data
+    * file or a deletion vector since build makes the commit lose — a
+    * merge that read, modified and overwrites a partition must not
+    * erase a concurrent commit there. No distribution requirement: the
+    * incoming partitioning is preserved, so a single-date daily refresh
+    * (the reference's incremental unit) keeps its full write
+    * parallelism instead of funneling the day through one task; the
+    * many-partitions case writes tasks×partitions files, the same trade
+    * Spark's own dynamic-partition writer makes absent an explicit
+    * repartition.
     */
   final class DynamicOverwriteWrite(
       spark: SparkSession, format: String, dataSchema: StructType,
@@ -5205,11 +5217,38 @@ private[graft] object GraftPartitionedCow {
     override protected def journalKind: String = "overwrite"
     override protected def pruneEmptied: Boolean = false
     override protected def sortedInput: Boolean = false
-    override protected def retired(published: Seq[Path],
-        fs: FileSystem): Seq[Path] = {
-      val touched = published.map(_.getParent).toSet
+
+    // deletion vectors at build: with `oldFiles`, the state the commit
+    // re-checks in the partitions it touches
+    private val dvAtBuild = GraftDv.fingerprint(new Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration), new Path(dir))
+
+    private def oldIn(touched: Set[Path], fs: FileSystem): Seq[Path] =
       oldFiles.filter(f => touched.contains(fs.makeQualified(f).getParent))
+
+    override protected def checkNoInterference(finals: Seq[Path],
+        fs: FileSystem): Unit = {
+      GraftPartitionedCow.onBeforeOverwriteCheck(dir)
+      val touched = finals.map(_.getParent).toSet
+      val rels = touched.map(GraftCommits.relOf(fs, new Path(dir), _))
+      def inTouched(fp: Map[String, (Long, Long)]) =
+        fp.filter { case (rel, _) => rels.exists(t => rel.startsWith(t + "/")) }
+      val filesNow = touched.toSeq.flatMap(fs.listStatus(_).toSeq)
+        .filter(_.isFile).map(st => fs.makeQualified(st.getPath))
+        .filter(p => !p.getName.startsWith("_") && !p.getName.startsWith("."))
+      if (filesNow.toSet != oldIn(touched, fs).toSet ||
+          inTouched(GraftDv.fingerprint(fs, new Path(dir))) !=
+            inTouched(dvAtBuild))
+        throw new GraftCommitLock.ConcurrentCommitException(
+          s"$dir: partitions ${rels.toSeq.sorted.mkString(", ")} changed " +
+            "while this overwrite computed its replacement; the overwrite " +
+            "was DISCARDED and the live table is untouched — re-run it " +
+            "against the new state")
     }
+
+    override protected def retired(published: Seq[Path],
+        fs: FileSystem): Seq[Path] =
+      oldIn(published.map(_.getParent).toSet, fs)
   }
 
   /** Append to a BUCKETED table: a v2 hive-layout write (the V1 append

@@ -236,12 +236,12 @@ object Streaming {
             val target =
               if (added.isEmpty) target0
               else {
-                val widened = added.foldLeft(target0)((d, f) =>
-                  d.withColumn(f.name, lit(null).cast(f.dataType)))
-                if (partitionCols.nonEmpty)
-                  cat.overwritePartitions(widened, layer, table,
-                    partitionCols)
-                else cat.createOrReplace(widened, layer, table)
+                // every row changes shape: a full replace (a partition
+                // overwrite's by-name write would refuse the new column)
+                cat.createOrReplace(
+                  added.foldLeft(target0)((d, f) =>
+                    d.withColumn(f.name, lit(null).cast(f.dataType))),
+                  layer, table, partitionCols)
                 cat.read(layer, table)
               }
             // cross-batch ordering guard: narrow the stored-seq lookup
@@ -271,7 +271,7 @@ object Streaming {
             val rows = latest.filter(!del)
               .drop(deleteCol.toSeq: _*)
             if (partitionCols.nonEmpty)
-              cat.overwritePartitions(rows, layer, table, partitionCols)
+              cat.overwritePartitionsByName(rows, layer, table, partitionCols)
             else cat.createOrReplace(rows, layer, table)
           }
         }
@@ -287,8 +287,10 @@ object Streaming {
     * `covid_to_s3.py:83-88` / `alert_case_spike.sql:52-63`); each
     * micro-batch
     *
-    *  1. publishes its partitions into the dds fact table (dynamic
-    *     partition overwrite — idempotent, so checkpoint replay of a
+    *  1. publishes its partitions into the dds fact table in one
+    *     dynamic-partition-overwrite commit
+    *     ([[graft.runtime.Catalog.overwritePartitionsByName]], the
+    *     batch layers' commit — idempotent, so checkpoint replay of a
     *     batch converges), then
     *  2. evaluates ALL four alert rules for every date the batch
     *     delivered in ONE candidate pass
@@ -315,7 +317,7 @@ object Streaming {
           try {
             val dates = b.select(col("report_date").cast("string"))
               .distinct().collect().map(_.getString(0)).sorted.toSeq
-            cat.overwritePartitions(b, graft.layers.DdsLayer.layer,
+            cat.overwritePartitionsByName(b, graft.layers.DdsLayer.layer,
               graft.layers.DdsLayer.factTable, Seq("report_date"))
             graft.layers.AlertsLayer.runDates(cat, dates, fixedClock)
           } finally { b.unpersist(); () }

@@ -16,41 +16,41 @@ class CatalogSpec extends SparkSpec {
 
   test("overwritePartitions replaces only touched partitions") {
     val cat = Catalog(spark, tmpDir("cat"))
-    cat.overwritePartitions(
+    cat.overwritePartitionsByName(
       Seq(("2020-01-22", 1L), ("2020-01-23", 2L)).toDF("d", "v"),
       "ods", "t", Seq("d"))
     // re-run day 23 with a new value; day 22 must survive
-    cat.overwritePartitions(
+    cat.overwritePartitionsByName(
       Seq(("2020-01-23", 20L)).toDF("d", "v"), "ods", "t", Seq("d"))
     assert(readAll(cat) == Set(("2020-01-22", 1L), ("2020-01-23", 20L)))
   }
 
   test("out-of-order date backfill preserves later partitions") {
     val cat = Catalog(spark, tmpDir("cat"))
-    cat.overwritePartitions(Seq(("2020-01-25", 5L)).toDF("d", "v"), "ods", "t", Seq("d"))
-    cat.overwritePartitions(Seq(("2020-01-22", 1L)).toDF("d", "v"), "ods", "t", Seq("d"))
+    cat.overwritePartitionsByName(Seq(("2020-01-25", 5L)).toDF("d", "v"), "ods", "t", Seq("d"))
+    cat.overwritePartitionsByName(Seq(("2020-01-22", 1L)).toDF("d", "v"), "ods", "t", Seq("d"))
     assert(readAll(cat) == Set(("2020-01-22", 1L), ("2020-01-25", 5L)))
   }
 
   test("re-running the same partition twice is idempotent") {
     val cat = Catalog(spark, tmpDir("cat"))
     val df = Seq(("2020-01-22", 7L)).toDF("d", "v")
-    cat.overwritePartitions(df, "ods", "t", Seq("d"))
-    cat.overwritePartitions(df, "ods", "t", Seq("d"))
+    cat.overwritePartitionsByName(df, "ods", "t", Seq("d"))
+    cat.overwritePartitionsByName(df, "ods", "t", Seq("d"))
     assert(readAll(cat) == Set(("2020-01-22", 7L)))
   }
 
   test("a crash mid-overwrite leaves every old partition complete") {
     val cat = Catalog(spark, tmpDir("cat"))
-    cat.overwritePartitions(
+    cat.overwritePartitionsByName(
       Seq(("2020-01-22", 1L), ("2020-01-22", 2L), ("2020-01-23", 3L))
         .toDF("d", "v"),
       "ods", "t", Seq("d"))
     // the update evaluates lazily INSIDE the publish's write phase and
     // throws partway through — after some rows/files are already
-    // written. With the old in-place dynamic overwrite this could leave
-    // a half-replaced date; the temp+swap protocol must keep the live
-    // table byte-identical.
+    // written. An in-place dynamic overwrite could leave a
+    // half-replaced date; the staged-invisible commit must keep the
+    // live table byte-identical.
     val boom = udf { v: Long =>
       if (v >= 10L) throw new RuntimeException("injected mid-write failure")
       v
@@ -60,38 +60,16 @@ class CatalogSpec extends SparkSpec {
       .repartition(1)
       .select(col("d"), boom(col("v")).as("v"))
     intercept[org.apache.spark.SparkException] {
-      cat.overwritePartitions(bad, "ods", "t", Seq("d"))
+      cat.overwritePartitionsByName(bad, "ods", "t", Seq("d"))
     }
     // both rows of the touched partition AND the untouched partition
     // survive — no partial publish is visible
     assert(readAll(cat) ==
       Set(("2020-01-22", 1L), ("2020-01-22", 2L), ("2020-01-23", 3L)))
     // a later successful publish converges normally
-    cat.overwritePartitions(
+    cat.overwritePartitionsByName(
       Seq(("2020-01-22", 42L)).toDF("d", "v"), "ods", "t", Seq("d"))
     assert(readAll(cat) == Set(("2020-01-22", 42L), ("2020-01-23", 3L)))
-  }
-
-  test("a crash BETWEEN swap renames is healed by the next publish") {
-    val root = tmpDir("cat")
-    val cat = Catalog(spark, root)
-    cat.overwritePartitions(
-      Seq(("2020-01-22", 1L), ("2020-01-23", 3L)).toDF("d", "v"),
-      "ods", "t", Seq("d"))
-    // simulate the narrowest crash window: a partition moved aside but
-    // its replacement never renamed in — the partition's ONLY copy now
-    // lives under __pubold and the live table is missing it
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = new org.apache.hadoop.fs.Path(s"$root/ods/t/d=2020-01-22")
-    val aside = new org.apache.hadoop.fs.Path(s"$root/ods/t.__pubold/d=2020-01-22")
-    fs.mkdirs(aside.getParent)
-    assert(fs.rename(live, aside))
-    // the next publish (touching a DIFFERENT date) must first restore
-    // the orphan, not delete the backup root it sits in
-    cat.overwritePartitions(
-      Seq(("2020-01-23", 30L)).toDF("d", "v"), "ods", "t", Seq("d"))
-    assert(readAll(cat) == Set(("2020-01-22", 1L), ("2020-01-23", 30L)))
   }
 
   test("a crash BETWEEN safeSwapWrite renames is healed by the next replace") {

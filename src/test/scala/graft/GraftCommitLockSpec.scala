@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
 import graft.runtime.Catalog
-import graft.sources.GraftCommitLock
+import graft.sources.{GraftCommitLock, GraftPartitionedCow}
 
 /** Concurrent-writer commit safety (r11 item 6): every publish/retire
   * critical section runs under the table's sibling commit lock
@@ -191,7 +191,7 @@ class GraftCommitLockSpec extends SparkSpec {
     // a MOR DELETE landing mid-write changes ONLY the DV sidecar — the
     // touched-partition interference filter must still catch it, or the
     // swap would resurrect the deleted rows
-    eng.onBeforeSwapCheck = () => {
+    GraftPartitionedCow.onBeforeOverwriteCheck = _ => {
       val dataRel = fs.listStatus(new Path(dirP, "g=p0")).toSeq
         .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
           !st.getPath.getName.startsWith("."))
@@ -202,8 +202,8 @@ class GraftCommitLockSpec extends SparkSpec {
     }
     val upd0 = Seq((1L, 111L, "p0")).toDF("k", "v", "g")
     val e = try intercept[Throwable] {
-      eng.overwritePartitions(upd0, "ods", "p", Seq("g"))
-    } finally eng.onBeforeSwapCheck = () => ()
+      eng.overwritePartitionsByName(upd0, "ods", "p", Seq("g"))
+    } finally GraftPartitionedCow.onBeforeOverwriteCheck = _ => ()
     assert(hasConcurrent(e), s"expected ConcurrentCommitException, got $e")
     // the DELETE survived: its vector is live and the row stays deleted
     assert(spark.table(s"$cat.ods.p").count() == 99,
@@ -249,27 +249,49 @@ class GraftCommitLockSpec extends SparkSpec {
       "FROM range(0, 100)")
 
     // interference in a partition the overwrite TOUCHES: loser aborts
-    eng.onBeforeSwapCheck = () =>
+    GraftPartitionedCow.onBeforeOverwriteCheck = _ =>
       Seq((7777L, 7777L, "p0")).toDF("k", "v", "g").coalesce(1)
         .write.mode("append").partitionBy("g").parquet(s"$root/ods/p")
     val upd0 = Seq((1L, 111L, "p0")).toDF("k", "v", "g")
     val e = try intercept[Throwable] {
-      eng.overwritePartitions(upd0, "ods", "p", Seq("g"))
-    } finally eng.onBeforeSwapCheck = () => ()
+      eng.overwritePartitionsByName(upd0, "ods", "p", Seq("g"))
+    } finally GraftPartitionedCow.onBeforeOverwriteCheck = _ => ()
     assert(hasConcurrent(e), s"expected ConcurrentCommitException, got $e")
     assert(spark.table(s"$cat.ods.p").where(col("k") === 7777).count() == 1,
       "the raced-in commit was erased")
     assert(spark.table(s"$cat.ods.p").count() == 101)
 
+    // the same race through SQL: INSERT OVERWRITE under dynamic mode
+    // commits through the same write, so it loses the same way
+    GraftPartitionedCow.onBeforeOverwriteCheck = _ =>
+      Seq((7778L, 7778L, "p0")).toDF("k", "v", "g").coalesce(1)
+        .write.mode("append").partitionBy("g").parquet(s"$root/ods/p")
+    val modeKey = "spark.sql.sources.partitionOverwriteMode"
+    val prevMode = spark.conf.getOption(modeKey)
+    spark.conf.set(modeKey, "dynamic")
+    val eSql = try intercept[Throwable] {
+      spark.sql(s"INSERT OVERWRITE $cat.ods.p VALUES (1, 111, 'p0')")
+    } finally {
+      GraftPartitionedCow.onBeforeOverwriteCheck = _ => ()
+      prevMode match {
+        case Some(v) => spark.conf.set(modeKey, v)
+        case None => spark.conf.unset(modeKey)
+      }
+    }
+    assert(hasConcurrent(eSql), s"expected ConcurrentCommitException, got $eSql")
+    assert(spark.table(s"$cat.ods.p").where(col("k") === 7778).count() == 1,
+      "the raced-in commit was erased by INSERT OVERWRITE")
+    assert(spark.table(s"$cat.ods.p").count() == 102)
+
     // interference in an UNTOUCHED partition: this overwrite proceeds
     // (its publish cannot erase the other partition's commit)
-    eng.onBeforeSwapCheck = () =>
+    GraftPartitionedCow.onBeforeOverwriteCheck = _ =>
       Seq((8888L, 8888L, "p1")).toDF("k", "v", "g").coalesce(1)
         .write.mode("append").partitionBy("g").parquet(s"$root/ods/p")
     val replacement = spark.table(s"$cat.ods.p")
       .where(col("g") === "p0").withColumn("v", col("v") + 1)
-    try eng.overwritePartitions(replacement, "ods", "p", Seq("g"))
-    finally eng.onBeforeSwapCheck = () => ()
+    try eng.overwritePartitionsByName(replacement, "ods", "p", Seq("g"))
+    finally GraftPartitionedCow.onBeforeOverwriteCheck = _ => ()
     assert(spark.table(s"$cat.ods.p").where(col("k") === 8888).count() == 1,
       "an untouched-partition commit was erased by the overwrite")
     assert(spark.table(s"$cat.ods.p").where(col("k") === 7777).count() == 1)

@@ -230,7 +230,7 @@ class GraftRetiredSpec extends SparkSpec {
     perFilePartitions {
       val it = spark.table(s"$cat.ods.p").toLocalIterator()
       assert(it.hasNext); it.next()
-      eng.overwritePartitions(
+      eng.overwritePartitionsByName(
         Seq((7L, 700L, "p0"), (9L, 900L, "p0")).toDF("k", "v", "g"),
         "ods", "p", Seq("g"))
       var rows = 1
@@ -240,5 +240,32 @@ class GraftRetiredSpec extends SparkSpec {
     }
     assert(retiredCommits(root, "ods/p") > 0)
     assert(spark.table(s"$cat.ods.p").where(col("g") === "p0").count() == 2)
+  }
+
+  test("a partitioned merge that empties a partition tombstones its files") {
+    val (cat, root) = freshCatalog()
+    val eng = graft.runtime.Catalog(spark, root)
+    spark.sql(s"CREATE NAMESPACE $cat.ods")
+    spark.sql(s"CREATE TABLE $cat.ods.p (k BIGINT, v BIGINT, g STRING) " +
+      "PARTITIONED BY (g)")
+    spark.sql(s"INSERT INTO $cat.ods.p SELECT id, id, concat('p', id % 2) " +
+      "FROM range(0, 100)")
+    perFilePartitions {
+      val it = spark.table(s"$cat.ods.p").toLocalIterator()
+      assert(it.hasNext); it.next()
+      // delete every row of g=p0
+      eng.merge(
+        spark.range(0, 100, 2).select(col("id").as("k"), col("id").as("v"),
+          lit("p0").as("g"), lit(true).as("del")),
+        "ods", "p", keyCols = Seq("k"), partitionCols = Seq("g"),
+        deleteCol = Some("del"))
+      var rows = 1
+      while (it.hasNext) { it.next(); rows += 1 }
+      assert(rows == 100, s"in-flight read of the emptied partition " +
+        s"broke: $rows of 100 rows")
+    }
+    assert(retiredCommits(root, "ods/p") > 0)
+    assert(!fsOf(root).exists(new Path(s"$root/ods/p/g=p0")))
+    assert(spark.table(s"$cat.ods.p").count() == 50)
   }
 }

@@ -31,7 +31,7 @@ class MergeSpec extends SparkSpec {
 
   test("partitioned merge rewrites only the touched partitions") {
     val cat = Catalog(spark, tmpDir("merge-part"))
-    cat.overwritePartitions(
+    cat.overwritePartitionsByName(
       Seq((1L, "a", 10L), (2L, "b", 20L), (3L, "c", 30L)).toDF("id", "d", "v"),
       "ods", "t", Seq("d"))
     val before = new java.io.File(cat.path("ods", "t"), "d=c")
@@ -48,7 +48,7 @@ class MergeSpec extends SparkSpec {
 
   test("deleting every row of a touched partition removes its directory") {
     val cat = Catalog(spark, tmpDir("merge-empty-part"))
-    cat.overwritePartitions(
+    cat.overwritePartitionsByName(
       Seq((1L, "a", 10L), (2L, "b", 20L)).toDF("id", "d", "v"),
       "ods", "t", Seq("d"))
     cat.merge(Seq((1L, "a", 0L, true)).toDF("id", "d", "v", "is_deleted"),

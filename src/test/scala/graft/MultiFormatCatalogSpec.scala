@@ -23,10 +23,10 @@ class MultiFormatCatalogSpec extends SparkSpec {
 
     test(s"$fmt: dynamic partition overwrite replaces only touched partitions") {
       val cat = Catalog(spark, tmpDir(s"$fmt-dpo"), fmt)
-      cat.overwritePartitions(
+      cat.overwritePartitionsByName(
         Seq(("2020-01-22", 1L), ("2020-01-23", 2L)).toDF("d", "v"),
         "ods", "t", Seq("d"))
-      cat.overwritePartitions(
+      cat.overwritePartitionsByName(
         Seq(("2020-01-23", 20L)).toDF("d", "v"), "ods", "t", Seq("d"))
       assert(rows(cat) == Set(("2020-01-22", 1L), ("2020-01-23", 20L)))
     }

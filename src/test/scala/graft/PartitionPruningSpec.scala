@@ -43,7 +43,7 @@ class PartitionPruningSpec extends SparkSpec {
       }
     }.toDF("report_date", "location_key", "confirmed", "deaths",
       "recovered", "active", "ingestion_ts")
-    cat.overwritePartitions(fact, DdsLayer.layer, DdsLayer.factTable,
+    cat.overwritePartitionsByName(fact, DdsLayer.layer, DdsLayer.factTable,
       Seq("report_date"))
     val dim = Seq(
       ("AA", "Albania", 2020, 2800000L),

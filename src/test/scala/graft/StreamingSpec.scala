@@ -247,6 +247,49 @@ class StreamingSpec extends SparkSpec {
     q2.stop()
   }
 
+  test("mergeSink schema evolution on a partitioned table") {
+    implicit val sqlCtx = spark.sqlContext
+    val cat = Catalog(spark, tmpDir("cdc-evo-part-wh"))
+    def sink(df: org.apache.spark.sql.DataFrame, ckpt: String) =
+      Streaming.mergeSink(df, cat, "dds", "state", keyCols = Seq("id"),
+        seqCol = "seq", checkpoint = tmpDir(ckpt),
+        partitionCols = Seq("g"), deleteCol = Some("is_del"))
+    val mem1 = MemoryStream[(Long, String, Long, Boolean)]
+    val q1 = sink(mem1.toDF().toDF("id", "g", "seq", "is_del"), "evo-part-1")
+    mem1.addData((1L, "a", 1L, false), (2L, "b", 1L, false))
+    q1.processAllAvailable(); q1.stop()
+    val mem2 = MemoryStream[(Long, String, Long, Boolean, String)]
+    val q2 = sink(mem2.toDF().toDF("id", "g", "seq", "is_del", "src"),
+      "evo-part-2")
+    mem2.addData((2L, "b", 5L, false, "cdc"), (3L, "a", 6L, false, "cdc"))
+    q2.processAllAvailable(); q2.stop()
+    assert(cat.read("dds", "state").select($"id", $"g", $"src")
+      .as[(Long, String, Option[String])].collect().toSet == Set(
+        (1L, "a", None), (2L, "b", Some("cdc")), (3L, "a", Some("cdc"))))
+  }
+
+  test("a by-name write inside foreachBatch binds the catalog in the stream's session") {
+    implicit val sqlCtx = spark.sqlContext
+    // first used INSIDE the micro-batch: the catalog binding lands after
+    // the stream cloned its session, and the batch resolves names there
+    val cat = Catalog(spark, tmpDir("fb-bind-wh"))
+    val mem = MemoryStream[(Long, String)]
+    val q = mem.toDF().toDF("k", "g").writeStream
+      .option("checkpointLocation", tmpDir("fb-bind-ckpt"))
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+        cat.appendByName(b, "ods", "t", Seq("g")); ()
+      }
+      .start()
+    try {
+      mem.addData((1L, "a"), (2L, "b"))
+      q.processAllAvailable()
+      mem.addData((3L, "a"))
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(cat.table("ods", "t").select($"k").as[Long].collect().toSet ==
+      Set(1L, 2L, 3L))
+  }
+
   test("streaming alerts: exactly-once across duplicate delivery, agrees with batch") {
     implicit val sqlCtx = spark.sqlContext
     val clock = Some(Timestamp.valueOf("2024-01-01 00:00:00"))
@@ -269,7 +312,7 @@ class StreamingSpec extends SparkSpec {
     // batch reference: same data through AlertsLayer.run per day
     val batchCat = Catalog(spark, tmpDir("alerts-batch-wh"))
     batchCat.createOrReplace(dim, "dds", "dim_location")
-    batchCat.overwritePartitions(
+    batchCat.overwritePartitionsByName(
       facts.toDF("location_key", "report_date", "confirmed", "deaths"),
       "dds", "fact_covid", Seq("report_date"))
     Seq("2020-03-01", "2020-03-02", "2020-03-03")
