@@ -33,7 +33,7 @@ object CatalogQueries {
     * the compare.
     *
     * Scale shape: the merge itself is the production path (anti-join
-    * keep + union, safeSwapWrite); nothing here collects. Deterministic
+    * keep + union, staged full replace); nothing here collects. Deterministic
     * arithmetic only (key modulo), so both engines agree exactly.
     */
   def q159MergeUpsert(spark: SparkSession, dir: String): DataFrame = {
@@ -201,7 +201,8 @@ object CatalogQueries {
   /** q173 — small-files compaction through
     * [[graft.runtime.Catalog.compact]]: the fact table lands as 8
     * separate appends (8+ file groups), is compacted through the
-    * crash-safe swap, and must preserve every row and measure exactly.
+    * staged full replace, and must preserve every row and measure
+    * exactly.
     * File-count and layout assertions stay in CatalogMaintenanceSpec;
     * this is the driver-checked data-preservation contract.
     */
@@ -419,8 +420,8 @@ object CatalogQueries {
     * name resolution, a lost append, or a bad overwrite all break the
     * hash.
     *
-    * Scale shape: writes are the engine's partitioned-append /
-    * swap-replace protocols (no collects); the partitioned fact table
+    * Scale shape: writes are the catalog's staged append / full-replace
+    * commits (no collects); the partitioned fact table
     * gets hive pruning on any later day-scoped read.
     */
   def q182SqlCatalog(spark: SparkSession, dir: String): DataFrame = {

@@ -17,17 +17,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - `createOrReplace` = full overwrite (`process_covid_dds.py:41-44`);
   *  - `append` = partitioned append (`process_covid_raw.py:102-113`);
   *  - `versions > 0` retains each full-replace's previous state as an
-  *    Iceberg-snapshot-style version (the crash-safety protocol
-  *    already produces it as a complete directory — versioning keeps
-  *    it instead of deleting): `history` / `readVersion` (time
-  *    travel) / `restoreVersion` (rollback-as-a-version), pruned to
-  *    the newest `versions`. Applies to the safeSwapWrite paths
-  *    (createOrReplace, writeClustered, compact, unpartitioned
-  *    merge); partitioned overwrites stay partition-scoped.
+  *    Iceberg-snapshot-style version (the replace moves the files it
+  *    supersedes into the version store instead of retiring them):
+  *    `history` / `readVersion` (time travel) / `restoreVersion`
+  *    (rollback-as-a-version), pruned to the newest `versions`.
+  *    Applies to every full replace (createOrReplace, writeClustered,
+  *    compact, unpartitioned merge, SQL `INSERT OVERWRITE`);
+  *    partitioned overwrites stay partition-scoped.
   *
-  * Scale note: every write is a straight distributed parquet write — no
-  * driver-side collection; partition columns become hive directories so
-  * reads get partition pruning for free.
+  * Every write resolves by name to the session catalog's staged
+  * hive-layout writes ([[graft.sources.GraftCatalog]]): one commit
+  * protocol, and the table's metadata sidecar and commit journal
+  * survive every write. Scale note: every write is a straight
+  * distributed write — no driver-side collection; partition columns
+  * become hive directories so reads get partition pruning for free.
   */
 final case class Catalog(spark: SparkSession, root: String,
                          format: String = "parquet",
@@ -83,11 +86,10 @@ final case class Catalog(spark: SparkSession, root: String,
   // resolve `<catalog>.<layer>.<table>` identifiers through Spark's
   // catalog manager. Reads keep every DSv2 scan tier (pushdown, static
   // + runtime partition pruning via the catalog's
-  // SupportsRuntimeV2Filtering wrapper); writes resolve to the SAME
-  // crash-safe engine protocols (the catalog's V1Write delegates back
-  // here; dynamic partition overwrite is the catalog's staged-invisible
-  // hive-layout v2 write) — one warehouse, two addressing modes, one
-  // publish-safety story.
+  // SupportsRuntimeV2Filtering wrapper); writes — by name or through
+  // the path-addressed methods below — all commit through the
+  // catalog's staged-invisible hive-layout writes: one warehouse, two
+  // addressing modes, one publish-safety story.
 
   /** Session-catalog name bound to this root: `graft` when free (or
     * already bound to this root+format), otherwise a deterministic
@@ -107,8 +109,9 @@ final case class Catalog(spark: SparkSession, root: String,
       unique
     }
 
-  /** Binds `name` to this root+format in `session`'s conf; false when
-    * the name is already bound there to another warehouse.
+  /** Binds `name` to this root+format+versions in `session`'s conf;
+    * false when the name is already bound there to another warehouse
+    * or retention.
     */
   private def bind(session: SparkSession, name: String): Boolean = {
     val rootKey = s"spark.sql.catalog.$name.root"
@@ -118,7 +121,9 @@ final case class Catalog(spark: SparkSession, root: String,
         impl == "graft.sources.GraftCatalog" &&
           session.conf.getOption(rootKey).contains(root) &&
           session.conf.getOption(s"spark.sql.catalog.$name.format")
-            .getOrElse("parquet") == format
+            .getOrElse("parquet") == format &&
+          session.conf.getOption(s"spark.sql.catalog.$name.versions")
+            .getOrElse("0") == versions.toString
       case None =>
         session.conf.set(implKey, "graft.sources.GraftCatalog")
         session.conf.set(rootKey, root)
@@ -197,9 +202,10 @@ final case class Catalog(spark: SparkSession, root: String,
   }
 
   /** Name-based full replace (S7 by name): `overwrite(true)` resolves
-    * to the catalog's truncate write, which IS [[createOrReplace]]'s
-    * crash-safe swap (not a drop+recreate RTAS — the table identity and
-    * version history survive).
+    * to the catalog's truncate write
+    * ([[graft.sources.GraftPartitionedCow.TruncateReplaceWrite]]), not
+    * a drop+recreate RTAS — the table identity, properties, commit
+    * journal and version history survive.
     */
   def createOrReplaceByName(df: DataFrame, layer: String, table: String,
                             partitionCols: Seq[String] = Nil): Unit = {
@@ -222,7 +228,10 @@ final case class Catalog(spark: SparkSession, root: String,
     if (!fs.exists(p)) fs.mkdirs(p)
   }
 
-  /** S5 — partitioned append, clustered within partitions. */
+  /** S5 — partitioned append, clustered within partitions: the
+    * by-name append ([[appendByName]]) behind the object API's CHECK
+    * guard, after [[addMissingColumns]].
+    */
   def append(df: DataFrame, layer: String, table: String,
              partitionCols: Seq[String], sortCols: Seq[String] = Nil): Unit = {
     // appended files carry no equality-delete epoch floor (-1): rows
@@ -231,87 +240,61 @@ final case class Catalog(spark: SparkSession, root: String,
       new org.apache.hadoop.fs.Path(path(layer, table)).getFileSystem(
         spark.sparkContext.hadoopConfiguration),
       new org.apache.hadoop.fs.Path(path(layer, table)), "a batch append")
-    // write-time CHECK constraints (graft.sources.GraftCheck): a
-    // constrained table enforces on the object API too — the guard is
-    // a throwing Filter on the write's own row pass
-    val guarded = graft.sources.GraftCheck.guard(df,
+    addMissingColumns(df, layer, table)
+    appendByName(guarded(df, layer, table), layer, table, partitionCols,
+      sortCols)
+  }
+
+  /** Write-time CHECK constraints ([[graft.sources.GraftCheck]]) as a
+    * throwing Filter on the write's own row pass: a violation fails
+    * with the constraint's message before Spark's by-name write
+    * asserts a NOT NULL column itself.
+    */
+  private def guarded(df: DataFrame, layer: String, table: String): DataFrame =
+    graft.sources.GraftCheck.guard(df,
       graft.sources.GraftCheck.constraintsAt(
         spark.sparkContext.hadoopConfiguration, path(layer, table)))
-    val clustered =
-      if (sortCols.nonEmpty)
-        guarded.sortWithinPartitions(sortCols.head, sortCols.tail: _*)
-      else guarded
-    val base = new org.apache.hadoop.fs.Path(path(layer, table))
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // commit journal (graft.sources.GraftCommits): the V1 append does
-    // not know its final file names — claim them as the visible delta
-    // across the save. The pre-listing costs what the save's own
-    // committer already pays; the record write is one tiny file under
-    // the table commit lock.
-    val before = graft.sources.GraftCommits.universe(fs, base)
-    clustered.write
-      .partitionBy(partitionCols: _*)
-      .options(writeOptions)
-      .mode("append")
-      .format(format)
-      .save(path(layer, table))
-    graft.sources.GraftCommitLock.withLock(fs, base,
-        s"append-journal:$layer.$table") {
-      graft.sources.GraftCommits.tryRecordClaiming(
-        fs, base, "append", before)
-    }
-  }
 
-  /** One atomic-per-step directory swap: move `live` aside (when it
-    * exists), rename `newDir` in, restore on failure.
+  /** Columns of `df` the stored table lacks are added first, through
+    * the catalog's `ALTER TABLE ... ADD COLUMNS` (metadata-only: rows
+    * written before read them as NULL), so the by-name write accepts a
+    * wider frame — a schema-drifted append, a widening rewrite.
     */
-  private def swapDirIn(fs: org.apache.hadoop.fs.FileSystem,
-                        newDir: org.apache.hadoop.fs.Path,
-                        live: org.apache.hadoop.fs.Path,
-                        aside: org.apache.hadoop.fs.Path): Unit = {
-    val hadLive = fs.exists(live)
-    if (hadLive) {
-      fs.mkdirs(aside.getParent)
-      require(fs.rename(live, aside), s"swap: could not move $live aside")
-    } else fs.mkdirs(live.getParent)
-    if (!fs.rename(newDir, live)) {
-      val restored = hadLive && fs.rename(aside, live)
-      throw new IllegalStateException(
-        if (restored) s"swap failed for $live; original restored, new data left at $newDir"
-        else if (hadLive) s"swap failed for $live AND restore failed — original is at $aside"
-        else s"swap failed for $live; new data left at $newDir")
+  private def addMissingColumns(df: DataFrame, layer: String,
+                                table: String): Unit =
+    if (tableExists(layer, table)) {
+      val have = this.table(layer, table).columns.map(_.toLowerCase).toSet
+      val added = df.schema.fields.filterNot(f => have(f.name.toLowerCase))
+      if (added.nonEmpty)
+        spark.sql(s"ALTER TABLE ${sqlIdent(layer, table)} ADD COLUMNS (" +
+          added.map(f => s"`${f.name}` ${f.dataType.sql}").mkString(", ") +
+          ")")
     }
-  }
 
-  /** S7 — full-replace (dimension rebuild). Crash-safe like the
-    * reference's Iceberg `createOrReplace()`: the rebuild lands in a
-    * sibling temp dir and swaps in by rename, so a failed rebuild
-    * leaves the previous version intact — a plain in-place overwrite
-    * clears the target before the new files are committed.
+  /** S7 — full-replace (dimension rebuild), crash-safe like the
+    * reference's Iceberg `createOrReplace()`: the rebuild stages
+    * invisibly and publishes in one commit, so a failed rebuild leaves
+    * the previous version intact.
     */
   def createOrReplace(df: DataFrame, layer: String, table: String): Unit =
     createOrReplace(df, layer, table, Nil)
 
-  /** Full-replace preserving a hive-partitioned layout: the whole new
-    * state lands partitioned in the sibling temp dir, then swaps in —
-    * the static INSERT OVERWRITE semantic (every partition replaced,
-    * absent partitions dropped), unlike [[overwritePartitionsByName]] which
-    * scopes the replace to the partitions present in `df`.
+  /** Full-replace preserving a hive-partitioned layout — the static
+    * INSERT OVERWRITE semantic (every partition replaced, absent
+    * partitions dropped), unlike [[overwritePartitionsByName]] which
+    * scopes the replace to the partitions present in `df`: the by-name
+    * replace ([[createOrReplaceByName]]) behind the CHECK guard, after
+    * [[addMissingColumns]]. The commit aborts with
+    * [[graft.sources.GraftCommitLock.ConcurrentCommitException]] when
+    * another commit changed the table while the replacement was
+    * computed; the live table is untouched.
     */
   def createOrReplace(df: DataFrame, layer: String, table: String,
-                      partitionCols: Seq[String]): Unit =
-    safeSwapWrite(layer, table) { tmp =>
-      // CHECK constraints hold across full replaces too
-      val guarded = graft.sources.GraftCheck.guard(df,
-        graft.sources.GraftCheck.constraintsAt(
-          spark.sparkContext.hadoopConfiguration, path(layer, table)))
-      val w = guarded.write
-        .options(writeOptions)
-        .mode("overwrite")
-        .format(format)
-      (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-        .save(tmp)
-    }
+                      partitionCols: Seq[String]): Unit = {
+    addMissingColumns(df, layer, table)
+    createOrReplaceByName(guarded(df, layer, table), layer, table,
+      partitionCols)
+  }
 
   /** Incremental materialized-aggregate maintenance: fold a DELTA of
     * rows into a stored keyed aggregate without rescanning history.
@@ -319,7 +302,7 @@ final case class Catalog(spark: SparkSession, root: String,
     * aggregate (group-cardinality-sized, not history-sized), and
     * re-aggregated — sound for additive measures (count/sum; an avg is
     * maintained as its (sum, count) partials), which is exactly the
-    * algebra Spark's own partial aggregation relies on. The swap runs
+    * algebra Spark's own partial aggregation relies on. The replace runs
     * through [[createOrReplace]], so the refresh is crash-safe and
     * every refresh is a snapshot version — a double-applied delta is
     * repaired by `restoreVersion`, the same recovery story as the CDC
@@ -494,12 +477,11 @@ final case class Catalog(spark: SparkSession, root: String,
     * `partitionCols` is given). Streaming/incremental appends
     * accumulate thousands of small files; at 100 TB small files are a
     * NameNode/listing/scheduler tax AND a scan tax (each file is a
-    * split floor). The rewrite goes through a sibling temp directory,
-    * then a two-step rename swap (live dir aside, new dir in) so every
-    * failure mode leaves a complete copy of the data on disk; the
-    * brief no-path window between the renames is the price of not
-    * deleting before the new data is proven in place. Returns the
-    * write-task count (≈ files per partition directory).
+    * split floor). The rewrite is a [[createOrReplace]]: it stages
+    * invisibly and publishes in one commit, and loses cleanly (live
+    * table untouched, re-run it) when another commit landed while it
+    * ran. Returns the write-task count (≈ files per partition
+    * directory).
     */
   def compact(layer: String, table: String,
               partitionCols: Seq[String] = Nil,
@@ -523,29 +505,18 @@ final case class Catalog(spark: SparkSession, root: String,
       if (partitionCols.nonEmpty)
         source.repartition(tasks, partitionCols.map(col): _*)
       else source.repartition(tasks)
-    safeSwapWrite(layer, table) { tmp =>
-      val writer = balanced.write
-        .options(writeOptions)
-        .mode("overwrite")
-        .format(format)
-      (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)
-        .save(tmp)
-    }
+    createOrReplace(balanced, layer, table, partitionCols)
     tasks
   }
 
   /** LAYOUT-PRESERVING compaction by catalog NAME: a self
-    * `INSERT OVERWRITE` through the session catalog's write path.
-    * [[compact]] rewrites through a plain DataFrame write, which cannot
-    * tag bucket files — running it on a `bucket(n, col)` table would
-    * silently downgrade every future same-spec join to the fail-safe
-    * shuffle path. This variant resolves the table by name, so the
-    * catalog's own truncate write runs instead: bucketed tables take
+    * `INSERT OVERWRITE` of the table's own name-resolved scan (where
+    * [[compact]] re-reads the path with a schema merge and sizes its
+    * own tasks). The catalog's truncate write
     * [[graft.sources.GraftPartitionedCow.TruncateReplaceWrite]]
-    * (replacement rows re-clustered by the partition+bucket transforms
-    * → ~one tagged file per (partition, bucket); staged-invisible,
-    * old generation retired — or version-archived — in the driver
-    * commit), plain tables the V1 versioned swap-replace.
+    * re-clusters the rows by the partition+bucket transforms → ~one
+    * tagged file per (partition, bucket); staged-invisible, old
+    * generation retired — or version-archived — in the driver commit.
     *
     * Streaming appends (one file per epoch per bucket) are the
     * motivating accretion: N epochs × n buckets collapse to ~n files
@@ -746,10 +717,10 @@ final case class Catalog(spark: SparkSession, root: String,
     *
     * Never touched: visible data files, `_graft_meta` / `_graft_stats`
     * sidecars, `_graft_stream_commits` (epoch markers and crash-retry
-    * manifests ARE the exactly-once state), and the `.__versions` /
-    * `.__swap*` SIBLING directories (time-travel store and swap-crash
-    * recovery state live outside the table dir and are managed by
-    * their own protocols). The grace period is the correctness lever:
+    * manifests ARE the exactly-once state), and the `.__versions`
+    * SIBLING directory (the time-travel store lives outside the table
+    * dir and is managed by its own protocol). The grace period is the
+    * correctness lever:
     * an in-flight job's stage is younger than any sane grace, so
     * cleanup can run concurrently with writers.
     *
@@ -807,18 +778,6 @@ final case class Catalog(spark: SparkSession, root: String,
     (files + rf, bytes + rb)
   }
 
-  /** Full-replace through a sibling temp dir and a two-step rename
-    * swap: live dir aside, new dir in. Every failure mode leaves a
-    * complete copy of the data on disk — a plain mode("overwrite")
-    * clears the target BEFORE the new files are committed, so a failed
-    * write loses the table. Shared by compact() and merge().
-    */
-  /** Test seam: invoked immediately before the swap-time interference
-    * check, under the commit lock. Lets a spec inject a racing commit
-    * into the exact window the optimistic check guards.
-    */
-  private[graft] var onBeforeSwapCheck: () => Unit = () => ()
-
   /** Visible data files under `p`, recursively (`_`/`.` names skipped). */
   private def dataFiles(fs: org.apache.hadoop.fs.FileSystem,
       p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
@@ -830,108 +789,8 @@ final case class Catalog(spark: SparkSession, root: String,
       else Seq(st)
     }
 
-  /** Visible data files as (relPath -> (size, mtime)) — the
-    * interference fingerprint for full-rewrite swaps.
-    */
-  private def visibleFileState(fs: org.apache.hadoop.fs.FileSystem,
-      base: org.apache.hadoop.fs.Path): Map[String, (Long, Long)] = {
-    val baseUri = base.toUri.getPath
-    // deletion-vector sidecars are part of the generation's ROW state:
-    // a merge-on-read DELETE landing mid-rewrite must fail the swap
-    // exactly like a data-file commit would (the rewrite read
-    // pre-delete rows)
-    dataFiles(fs, base).map(st => (st.getPath.toUri.getPath
-      .stripPrefix(baseUri).stripPrefix("/"),
-      (st.getLen, st.getModificationTime))).toMap ++
-      graft.sources.GraftDv.fingerprint(fs, base)
-      .map { case (k, v) => (graft.sources.GraftDv.DirName + "/" + k, v) }
-  }
-
-  private def safeSwapWrite(layer: String, table: String)
-                           (writeTo: String => Unit): Unit = {
-    import graft.sources.GraftCommitLock
-    val p = path(layer, table)
-    val hp = new org.apache.hadoop.fs.Path(p)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(s"$p.__swapnew")
-    val old = new org.apache.hadoop.fs.Path(s"$p.__swapold")
-    // recovery — a previous swap may have crashed between its two
-    // renames, leaving the table's ONLY copy at __swapold with the
-    // live slot missing. Restore it BEFORE the deletes below: clearing
-    // __swapold first would destroy that only copy, and a subsequent
-    // write failure would then lose the previous table version
-    // entirely.
-    // Recovery mutates the live slot, so it runs under the commit lock.
-    GraftCommitLock.withLock(fs, hp, s"swap-recovery:$layer.$table") {
-      if (!fs.exists(hp) && fs.exists(old)) {
-        fs.mkdirs(hp.getParent)
-        require(fs.rename(old, hp),
-          s"swap recovery: could not restore $hp from $old")
-      } else if (fs.exists(old) && versions > 0) {
-        // a crash fell between the swap and the archive below — the
-        // orphan IS a complete previous version: finish archiving it
-        archiveVersion(fs, layer, table, old)
-      }
-      fs.delete(tmp, true)
-      fs.delete(old, true)
-    }
-    // OPTIMISTIC concurrency for the (long) rewrite itself (r11 item
-    // 6): fingerprint the live generation, write the replacement
-    // UNLOCKED, then verify under the lock that nothing committed in
-    // between — a full rewrite that swapped in over a concurrent
-    // commit would silently erase it. The maintenance job is the
-    // designated LOSER: it aborts cleanly (tmp discarded, live table
-    // untouched) and can simply re-run — the Iceberg retry contract.
-    val before = visibleFileState(fs, hp)
-    writeTo(tmp.toString)
-    GraftCommitLock.withLock(fs, hp, s"swap-commit:$layer.$table") {
-      onBeforeSwapCheck()
-      val now = visibleFileState(fs, hp)
-      if (now != before) {
-        fs.delete(tmp, true)
-        throw new GraftCommitLock.ConcurrentCommitException(
-          s"$layer.$table changed while its full rewrite ran " +
-            s"(${before.size} -> ${now.size} files); the rewrite was " +
-            "DISCARDED and the live table is untouched — re-run it")
-      }
-      swapDirIn(fs, newDir = tmp, live = hp, aside = old)
-    }
-    // snapshot retention (the Iceberg-snapshot semantic the reference
-    // relies on): the crash-safety protocol already produced the
-    // previous version as a complete directory — RETAIN it as
-    // v<N> instead of deleting, pruned to the newest `versions`
-    if (fs.exists(old)) {
-      if (versions > 0) archiveVersion(fs, layer, table, old)
-      else
-        // reader snapshot isolation (r12 item 2): the swapped-aside
-        // generation is TOMBSTONED, not deleted — an in-flight reader
-        // that planned before this swap re-points its vanished splits
-        // at the tombstone ([[graft.sources.GraftRetired]]); GC via
-        // remove_orphans
-        graft.sources.GraftRetired.retireRoot(fs, hp, old)
-    }
-    // maintenance policy outside the lock (retired.expire_ms GC)
-    graft.sources.GraftMaintenance.afterCommit(spark, fs, hp)
-  }
-
   private def versionsDir(layer: String, table: String) =
     new org.apache.hadoop.fs.Path(s"${path(layer, table)}.__versions")
-
-  /** Move a complete previous table copy into the version store as
-    * the next v<N> and prune beyond the retention window.
-    */
-  private def archiveVersion(fs: org.apache.hadoop.fs.FileSystem,
-                             layer: String, table: String,
-                             from: org.apache.hadoop.fs.Path): Unit = {
-    val dir = versionsDir(layer, table)
-    fs.mkdirs(dir)
-    val next = history(layer, table).lastOption.getOrElse(0) + 1
-    require(fs.rename(from, new org.apache.hadoop.fs.Path(dir, f"v$next%06d")),
-      s"version archive: could not retain $from as v$next")
-    history(layer, table).dropRight(versions).foreach { v =>
-      fs.delete(new org.apache.hadoop.fs.Path(dir, f"v$v%06d"), true)
-    }
-  }
 
   /** Retained version numbers for a versioned table, oldest first.
     * Version N is the table as it was BEFORE the (N+1)-th retained
@@ -1075,19 +934,10 @@ final case class Catalog(spark: SparkSession, root: String,
     require(!df.columns.contains("__z"),
       "writeClustered reserves the column name __z")
     val z = curveKey(df, zCols)
-    // temp-dir + rename swap: a re-cluster that fails mid-write must
-    // not have cleared the live table first
-    safeSwapWrite(layer, table) { tmp =>
-      df.withColumn("__z", z)
-        .repartitionByRange(files, col("__z"))
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write
-        .options(writeOptions)
-        .mode("overwrite")
-        .format(format)
-        .save(tmp)
-    }
+    createOrReplace(df.withColumn("__z", z)
+      .repartitionByRange(files, col("__z"))
+      .sortWithinPartitions("__z")
+      .drop("__z"), layer, table)
   }
 
   /** Row-level MERGE (upsert + delete) without a table format that
@@ -1191,12 +1041,7 @@ final case class Catalog(spark: SparkSession, root: String,
         }
         graft.sources.GraftMaintenance.afterCommit(spark, fs, base)
       }
-    } else {
-      safeSwapWrite(layer, table) { tmp =>
-        merged.write.options(writeOptions).mode("overwrite")
-          .format(format).save(tmp)
-      }
-    }
+    } else createOrReplaceByName(merged, layer, table)
     MergeStats(
       inserted = ups.filter(!del).count() - (matchedKeys - deleted),
       updated = matchedKeys - deleted,

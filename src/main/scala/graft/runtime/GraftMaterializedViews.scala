@@ -32,7 +32,7 @@ import graft.sources.{GraftCatalog, GraftCommits}
   *    records the definition + each base's commit position + journal
   *    incarnation identity in a `_graft_mv` sidecar that lives in the
   *    sibling `<name>.__mv/` directory (OUTSIDE the backing dir, so a
-  *    full-refresh swap cannot drop it — ADVICE r16).
+  *    full refresh's CREATE OR REPLACE cannot drop it — ADVICE r16).
   *  - `CALL system.refresh_materialized_view(table => 'ns.mv')` reads
   *    ONLY each base's changes above its recorded position (`.changes`
   *    with exact `_change_epoch` bounds — the refresh costs the
@@ -54,7 +54,7 @@ import graft.sources.{GraftCatalog, GraftCommits}
   * Identity and axis guards (ADVICE r16 high/medium): the sidecar
   * records each base journal's INCARNATION identity (first retained
   * record's ts-id, the exact [[graft.sources.GraftChanges]] feedId
-  * contract) — a full-directory swap restarts commit ids at 0, and
+  * contract) — a drop and re-create restarts commit ids at 0, and
   * without the identity the fold would silently no-op against stale
   * positions and then skip renumbered history. Both CREATE and refresh
   * also require each base to be in JOURNAL-AXIS feed mode (a
@@ -164,7 +164,7 @@ object GraftMaterializedViews {
     new String(java.util.Base64.getDecoder.decode(s), "UTF-8")
 
   /** The sibling state dir `<parent>/<name>.__mv/` — survives the
-    * full-refresh CREATE OR REPLACE swap of the backing dir (ADVICE
+    * full-refresh CREATE OR REPLACE of the backing dir (ADVICE
     * r16 low); its `.__` infix keeps it out of namespace listings. The
     * refresh lock is the sibling FILE `<name>.__mv.__lock` (the
     * [[graft.sources.GraftCommitLock]] path of this dir).
@@ -538,8 +538,8 @@ object GraftMaterializedViews {
   }
 
   /** Identity guard (ADVICE r16 high): a recorded position only means
-    * anything against the journal incarnation that issued it — a full
-    * swap (compact, create-or-replace) restarts ids at 0 and a fold
+    * anything against the journal incarnation that issued it — a drop
+    * and re-create (CREATE OR REPLACE TABLE) restarts ids at 0 and a fold
     * against the stale position would first silently no-op, then skip
     * the renumbered history. "" recorded = the MV was built before the
     * base had any journal; every retained commit is above position −1,
@@ -552,10 +552,31 @@ object GraftMaterializedViews {
     require(cur == recorded,
       s"materialized-view refresh: the change history of $source was " +
         "replaced since this view's position was recorded (journal " +
-        s"incarnation '$cur' != recorded '$recorded' — a compact/" +
-        "replace swap, or journal expiry past the first record); the " +
+        s"incarnation '$cur' != recorded '$recorded' — a drop and " +
+        "re-create, or journal expiry past the first record); the " +
         "incremental fold cannot tell what was applied — re-run with " +
         "full => true to re-bootstrap")
+  }
+
+  /** Floor guard: a base commit that floors the feed (a full replace or
+    * compact — its record ends row-level history) above the recorded
+    * position hides changes the incremental fold would have to read.
+    * Refuse with the re-bootstrap advice rather than let the feed's
+    * generic bound-the-read refusal surface mid-fold.
+    */
+  private def requireAboveFloor(spark: SparkSession, source: String,
+      pos: Long): Unit = {
+    val dir = tableDirOf(spark, source)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (ck, tail) = GraftCommits.load(fs, dir)
+    val floor = (ck.map(_.floor).getOrElse(-1L) +:
+      tail.filter(_.isFloor).map(_.id)).max
+    require(floor <= pos,
+      s"materialized-view refresh: $source committed a full replace or " +
+        s"compact (commit $floor) above this view's recorded position " +
+        s"$pos; commits at or below $floor are no longer row-level " +
+        "servable, so the incremental fold cannot apply them — re-run " +
+        "with full => true to re-bootstrap")
   }
 
   // ---- create / refresh ---------------------------------------------------
@@ -653,7 +674,7 @@ object GraftMaterializedViews {
     * refresh REFUSES loudly (full => true recomputes and clears it).
     * Never a silent double-fold, never a silent gap. Marker and
     * sidecar live in the sibling `<name>.__mv/` dir, OUTSIDE the
-    * backing dir the full-refresh swap replaces.
+    * backing dir the full refresh replaces.
     */
   def refresh(spark: SparkSession, cat: String, ns: String, name: String,
       full: Boolean): (Long, Long) = {
@@ -747,6 +768,8 @@ object GraftMaterializedViews {
     requireSameIncarnation(spark, meta.source, meta.feedId)
     meta.dim.foreach(d =>
       requireSameIncarnation(spark, d.source, d.feedId))
+    requireAboveFloor(spark, meta.source, meta.lastCommit)
+    meta.dim.foreach(d => requireAboveFloor(spark, d.source, d.lastCommit))
     val curF = lastCommitOf(spark, meta.source)
     val curD = meta.dim.map(d => lastCommitOf(spark, d.source))
     val anyNew = curF > meta.lastCommit ||

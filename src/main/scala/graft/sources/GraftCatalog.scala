@@ -14,9 +14,8 @@ import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
 import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.metric.{CustomMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read.{Batch, Scan, ScanBuilder, Statistics, SupportsPushDownAggregates, SupportsPushDownRequiredColumns, SupportsPushDownVariantExtractions, SupportsReportStatistics, SupportsRuntimeV2Filtering, VariantExtraction}
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, SupportsDynamicOverwrite, SupportsTruncate, V1Write, Write, WriteBuilder, WriterCommitMessage}
+import org.apache.spark.sql.connector.write.{BatchWrite, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, SupportsDynamicOverwrite, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.execution.datasources.v2.{FileScan, FileScanBuilder, FileTable}
-import org.apache.spark.sql.sources.InsertableRelation
 import org.apache.spark.sql.types.{DataType, DecimalType, DoubleType, FloatType, IntegerType, LongType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -53,11 +52,11 @@ import graft.runtime.Catalog
   *  - READS delegate to Spark's own file tables (ParquetTable & co), so
   *    the scans keep every DSv2 tier: filter/column pushdown, partition
   *    pruning, runtime (dynamic) pruning, footer statistics;
-  *  - INSERT INTO / INSERT OVERWRITE build a [[V1Write]] routed through
-  *    [[graft.runtime.Catalog]]'s crash-safe write protocols
-  *    (partitioned append; temp-dir + rename-swap full replace) — the
-  *    same paths the object API uses, so SQL writes inherit the
-  *    publish-safety story instead of reimplementing it;
+  *  - INSERT INTO / INSERT OVERWRITE (and every [[graft.runtime.Catalog]]
+  *    write, which resolves by name to the same builder) commit through
+  *    the staged-invisible hive-layout writes of [[GraftPartitionedCow]]
+  *    — append, full replace, dynamic partition overwrite — one
+  *    protocol, one commit journal, for every table;
   *  - MERGE / UPDATE / DELETE implement [[SupportsRowLevelOperations]]
   *    as group-based copy-on-write (see [[GraftTable]] docs).
   *
@@ -281,9 +280,10 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   }
 
   /** `SELECT ... FROM cat.ns.t TIMESTAMP AS OF ts` — resolves against
-    * each state's PUBLISH time, which the directory store carries for
-    * free: a directory's mtime is when its files were written, and the
-    * archive rename (like the publish swap) preserves it. The state at
+    * each state's PUBLISH time, carried as directory mtimes: a full
+    * replace stamps the live directory with its commit time and the
+    * archived `v<N>` with the replaced state's publish time
+    * ([[GraftPartitionedCow.TruncateReplaceWrite]]). The state at
     * ts is therefore the latest state (retained version or the live
     * table) whose publish mtime is at-or-before ts — Iceberg's
     * snapshot-as-of rule over a directory store. A ts before the
@@ -1243,8 +1243,6 @@ private[sources] class GraftTable(
   private val dir = dataDirOverride.getOrElse(s"$root/$layer/$table")
   private def readOnly: Boolean = dataDirOverride.isDefined
 
-  private def engine: Catalog = Catalog(spark, root, format, versions)
-
   /** Per-format reader options mirroring [[Catalog.readOptions]]; the
     * sidecar schema (when present) replaces csv inference.
     */
@@ -1464,19 +1462,10 @@ private[sources] class GraftTable(
 
   override def capabilities(): util.Set[TableCapability] =
     if (readOnly) util.EnumSet.of(TableCapability.BATCH_READ)
-    else if (meta.bucketSpec.isDefined || meta.evolvedCols.nonEmpty)
-      // bucketed tables write through the v2 hive-layout path only —
-      // declaring V1_BATCH_WRITE would make Spark REQUIRE a V1Write.
-      // Evolved-spec tables too: the V1 append cannot keep evolved
-      // columns in the data files while laying out their directories
-      util.EnumSet.of(TableCapability.BATCH_READ,
-        TableCapability.MICRO_BATCH_READ, TableCapability.BATCH_WRITE,
-        TableCapability.TRUNCATE, TableCapability.OVERWRITE_DYNAMIC,
-        TableCapability.STREAMING_WRITE)
     else util.EnumSet.of(TableCapability.BATCH_READ,
       TableCapability.MICRO_BATCH_READ, TableCapability.BATCH_WRITE,
-      TableCapability.V1_BATCH_WRITE, TableCapability.TRUNCATE,
-      TableCapability.OVERWRITE_DYNAMIC, TableCapability.STREAMING_WRITE)
+      TableCapability.TRUNCATE, TableCapability.OVERWRITE_DYNAMIC,
+      TableCapability.STREAMING_WRITE)
 
   /** Scans wrap the delegate builder to add what Spark's own V2 file
     * scans are missing: `SupportsRuntimeV2Filtering`. Without it, a
@@ -1536,21 +1525,6 @@ private[sources] class GraftTable(
     }
   }
 
-  /** INSERT INTO (append) / INSERT OVERWRITE (truncate): a V1 write
-    * whose insert() routes through the engine's partitioned append and
-    * swap-replace — SQL writes get the identical crash-safety contract
-    * as the object API, because they ARE the object API. Dynamic
-    * partition overwrite (`INSERT OVERWRITE` under
-    * partitionOverwriteMode=dynamic, `df.writeTo(t)
-    * .overwritePartitions()`) has no V1 fallback in Spark, so it is a
-    * real v2 batch write: [[GraftPartitionedCow.DynamicOverwriteWrite]]
-    * stages hive-layout files invisibly and replaces exactly the
-    * partitions that received data in one commit — the warehouse's
-    * only dynamic partition overwrite (the object API's
-    * `overwritePartitionsByName` resolves here too), and the
-    * reference's incremental unit (`overwritePartitions()`,
-    * process_covid_ods.py:87) addressable purely by table NAME.
-    */
   /** `auto_analyze = true`: after a committed write (batch insert,
     * overwrite, row-level rewrite, or streaming epoch), refresh the
     * [[GraftStats]] skipping manifest incrementally — only the files
@@ -1560,9 +1534,8 @@ private[sources] class GraftTable(
     * data is already committed when it runs, so a failed refresh must
     * not fail the write — affected files simply scan unpruned, the
     * same fail-safe as having no manifest entry. The wrapper preserves
-    * the inner write's planning contracts ([[V1Write]]-ness for the
-    * V1_BATCH_WRITE capability check; `RequiresDistributionAndOrdering`
-    * for the hive-layout/bucketed clustering).
+    * the inner write's planning contract (`RequiresDistributionAndOrdering`
+    * for the hive-layout clustering).
     */
   private def withAutoAnalyze(w: Write): Write = {
     import org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering
@@ -1613,7 +1586,8 @@ private[sources] class GraftTable(
       // point-lookup filters fresh at every commit too. Writer-shipped
       // filters publish FIRST (zero data re-read); the analyze after
       // is the fail-safe backstop for files without shipped filters
-      // (V1 appends, delta delete-only rows) — it finds shipped files
+      // (files written outside the catalog, delta delete-only rows) —
+      // it finds shipped files
       // covered and reads nothing for them. Advisory like the stats
       // refresh.
       meta.props.get("bloom_columns").foreach { cols =>
@@ -1636,8 +1610,8 @@ private[sources] class GraftTable(
       // auto-NDV (r13 item 4): writer-shipped registers publish FIRST
       // (zero data re-read — after the footer analyze above created
       // the entries they attach to), then the incremental analyzeNdv
-      // backstop covers files without shipped registers (V1 appends,
-      // timestamp columns, over-cap task fan-outs). Advisory like the
+      // backstop covers files without shipped registers (files written
+      // outside the catalog, timestamp columns, over-cap task fan-outs). Advisory like the
       // other refreshes.
       meta.props.get("ndv_columns").foreach { cols =>
         try {
@@ -1712,14 +1686,6 @@ private[sources] class GraftTable(
         s.abort(e, ms)
     }
     w match {
-      case v1: V1Write => new V1Write {
-        override def toInsertableRelation: InsertableRelation = {
-          val inner = v1.toInsertableRelation
-          (data, overwrite) => { inner.insert(data, overwrite); refresh(None) }
-        }
-        override def toStreaming: StreamingWrite = stream(v1.toStreaming)
-        override def description(): String = v1.description()
-      }
       case rdo: RequiresDistributionAndOrdering =>
         new Write with RequiresDistributionAndOrdering {
           override def requiredDistribution = rdo.requiredDistribution()
@@ -1741,6 +1707,20 @@ private[sources] class GraftTable(
     }
   }
 
+  /** Every batch write of a catalog table — SQL `INSERT INTO` /
+    * `INSERT OVERWRITE`, `df.writeTo(t)`, CTAS, and every
+    * [[graft.runtime.Catalog]] write, which resolves here by name — is
+    * one of three staged-invisible hive-layout writes: append
+    * ([[GraftPartitionedCow.AppendWrite]]), full replace
+    * ([[GraftPartitionedCow.TruncateReplaceWrite]]) and dynamic
+    * partition overwrite
+    * ([[GraftPartitionedCow.DynamicOverwriteWrite]], `INSERT
+    * OVERWRITE` under partitionOverwriteMode=dynamic,
+    * `.overwritePartitions()` — the reference's incremental unit,
+    * process_covid_ods.py:87). Each publishes its files, retires the
+    * superseded generation and journals one record in a single commit
+    * under the table's commit lock, keeping the table's sidecars.
+    */
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     require(!readOnly, s"${name()} is a time-travel snapshot: read-only")
     // `upsertKeys` write option (r11 item 4): the STREAMING face of
@@ -1767,6 +1747,8 @@ private[sources] class GraftTable(
         require(meta.renameAliases.isEmpty,
           s"${name()} has renamed columns with un-materialized aliases: " +
             "streaming upserts are refused until CALL system.compact")
+        GraftPartitionedCow.requireStreamable(spark, name(), dir,
+          info.schema(), effectivePartitionCols)
         // upsertMode=equality (r12 item 6): epochs write equality-
         // delete sidecars + appended rows, never scanning the target;
         // default (merge) keeps the per-epoch MERGE INTO machinery
@@ -1783,19 +1765,10 @@ private[sources] class GraftTable(
         if (upsertKeys.isEmpty) base else asUpsert(base)
 
       /** Reroute ONLY the streaming face to the upsert sink; the batch
-        * face (and its V1Write-ness / distribution requirements) stays
-        * exactly what the mode produced.
+        * face (and its distribution requirements) stays exactly what the
+        * mode produced.
         */
       private def asUpsert(base: Write): Write = base match {
-        case v1: V1Write => new V1Write {
-          override def toInsertableRelation: InsertableRelation =
-            v1.toInsertableRelation
-          override def toStreaming
-              : org.apache.spark.sql.connector.write.streaming.StreamingWrite =
-            upsertWrite()
-          override def description(): String =
-            s"graft-upsert ${v1.description()}"
-        }
         case rdo: org.apache.spark.sql.connector.write
             .RequiresDistributionAndOrdering => new Write
             with org.apache.spark.sql.connector.write
@@ -1810,8 +1783,14 @@ private[sources] class GraftTable(
           override def requiredOrdering = rdo.requiredOrdering()
           override def toBatch: BatchWrite = base.toBatch
           override def toStreaming
-              : org.apache.spark.sql.connector.write.streaming.StreamingWrite =
+              : org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
+            base match {
+              case h: GraftPartitionedCow.HiveLayoutWrite =>
+                h.streamingEpochs = true
+              case _ => ()
+            }
             upsertWrite()
+          }
           override def description(): String =
             s"graft-upsert ${base.description()}"
         }
@@ -1825,141 +1804,52 @@ private[sources] class GraftTable(
         }
       }
 
-      override def build(): Write = withAutoAnalyze(withUpsert(mode match {
-        // OVERWRITE_DYNAMIC is declared unconditionally in capabilities,
-        // so with partitionOverwriteMode=dynamic set SESSION-WIDE Spark
-        // plans OverwritePartitionsDynamic for ANY insert-overwrite —
-        // including unpartitioned tables, where "replace the partitions
-        // that received data" degenerates to a full replace. Route that
-        // case to the truncate semantics instead of refusing (r10
-        // ADVICE): bucketed tables take the bucket-tagging v2 full
-        // replace, plain ones the V1 versioned swap-replace.
-        case "dynamic" if effectivePartitionCols.isEmpty =>
-          // OverwritePartitionsDynamicExec has NO V1 fallback, so this
-          // must be a real v2 write even for plain tables
-          buildV2Replace(info.schema())
-        case "dynamic" =>
-          // mixed-era refusal: "replace the partitions that received
-          // data" is directory-granular, but an old-era file of the
-          // same LOGICAL partition lives in a parent directory the
-          // replacement never touches — its rows would survive a
-          // replace that should supersede them
-          require(evolvedCols.isEmpty,
-            s"${name()}: dynamic partition overwrite is refused while " +
-              "the partition spec evolution is un-materialized (file " +
-              "eras at mixed depths) — CALL system.compact to migrate " +
-              "the table to its current spec first")
-          val parts = effectivePartitionCols
-          val schema = info.schema()
-          val bad = parts.filter { c =>
-            schema.fields.find(_.name.equalsIgnoreCase(c))
-              .forall(f => !GraftPartitionedCow.dirRenderable(f.dataType))
-          }
-          require(bad.isEmpty,
-            s"${name()}: partition columns ${bad.mkString(", ")} have types " +
-              "whose directory rendering is ambiguous (supported: string, " +
-              "integral, boolean, date)")
-          val fs = new Path(dir)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val old = listDataFiles(fs, new Path(dir))
-          new GraftPartitionedCow.DynamicOverwriteWrite(
-            spark, format, schema, dir, parts, old, meta.bucketSpec)
-        case m => buildBatch(replace = m == "truncate")
-      }))
-
-      /** Staged-invisible v2 full replace (with version retention when
-        * configured) — the truncate path for bucketed tables and the
-        * dynamic-overwrite degenerate case above.
-        */
-      private def buildV2Replace(schema: StructType): Write = {
-        val fs = new Path(dir)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val old = listDataFiles(fs, new Path(dir))
-        new GraftPartitionedCow.TruncateReplaceWrite(spark, format,
-          schema, dir, effectivePartitionCols, old, meta.bucketSpec,
-          if (versions > 0) Some((s"$dir.__versions", versions)) else None,
-          info.queryId())
+      override def build(): Write = {
+        withAutoAnalyze(withUpsert(mode match {
+          // OVERWRITE_DYNAMIC is declared unconditionally in capabilities,
+          // so with partitionOverwriteMode=dynamic set SESSION-WIDE Spark
+          // plans OverwritePartitionsDynamic for ANY insert-overwrite —
+          // including unpartitioned tables, where "replace the partitions
+          // that received data" degenerates to a full replace. Route that
+          // case to the truncate semantics instead of refusing (r10
+          // ADVICE).
+          case "dynamic" if effectivePartitionCols.isEmpty => buildReplace()
+          case "dynamic" =>
+            // mixed-era refusal: "replace the partitions that received
+            // data" is directory-granular, but an old-era file of the
+            // same LOGICAL partition lives in a parent directory the
+            // replacement never touches — its rows would survive a
+            // replace that should supersede them
+            require(evolvedCols.isEmpty,
+              s"${name()}: dynamic partition overwrite is refused while " +
+                "the partition spec evolution is un-materialized (file " +
+                "eras at mixed depths) — CALL system.compact to migrate " +
+                "the table to its current spec first")
+            GraftPartitionedCow.requireDirRenderable(name(), info.schema(),
+              effectivePartitionCols)
+            new GraftPartitionedCow.DynamicOverwriteWrite(spark, format,
+              info.schema(), dir, effectivePartitionCols, oldFiles(),
+              meta.bucketSpec)
+          case "truncate" => buildReplace()
+          case _ =>
+            new GraftPartitionedCow.AppendWrite(spark, format, info.schema(),
+              dir, effectivePartitionCols, meta.bucketSpec, info.queryId())
+        }))
       }
 
-      private def buildBatch(replace: Boolean): Write =
-        if (meta.bucketSpec.isDefined || evolvedCols.nonEmpty) {
-          // bucketed tables write through the v2 hive-layout path — the
-          // V1 append cannot tag bucket files. Evolved-spec tables too:
-          // the hive-layout writers keep evolved columns IN the data
-          // (prepare's keepInData) while laying out the current spec
-          if (replace) buildV2Replace(info.schema())
-          else
-            new GraftPartitionedCow.BucketedAppendWrite(spark, format,
-              info.schema(), dir, effectivePartitionCols, meta.bucketSpec,
-              info.queryId())
-        } else
-          new V1Write {
-            override def toInsertableRelation: InsertableRelation =
-              (data, overwriteFlag) => {
-                val parts = effectivePartitionCols
-                // write-time CHECK constraints ride inside
-                // engine.append / engine.createOrReplace (the object
-                // API guards THERE, so this path inherits it without
-                // a second filter)
-                if (replace || overwriteFlag)
-                  // a full replace supersedes every row — the dir swap
-                  // carries the eq sidecars away with the old generation
-                  engine.createOrReplace(data, layer, table, parts)
-                else {
-                  // appended rows would be wrongly subject to LIVE
-                  // equality deletes (their floor is -1) — refuse
-                  GraftEqDel.requireNone(
-                    new Path(dir).getFileSystem(
-                      spark.sparkContext.hadoopConfiguration),
-                    new Path(dir), "a batch append")
-                  engine.append(data, layer, table, parts)
-                }
-              }
-            /** `df.writeStream.toTable("<cat>.<layer>.<table>")` —
-              * exactly-once-per-epoch streaming: Append output mode
-              * lands each epoch as an append
-              * ([[GraftPartitionedCow.StreamingAppendWrite]]); Complete
-              * output mode (`replace` here — Spark calls `truncate()`
-              * before `toStreaming` for it) lands each epoch as a full
-              * refresh ([[GraftPartitionedCow.StreamingReplaceWrite]]).
-              */
-            override def toStreaming
-                : org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
-              val parts = effectivePartitionCols
-              val schema = info.schema()
-              // `writeStream.toTable` hands the QUERY's schema straight
-              // through (no ResolveOutputRelation cast pass on this
-              // path), so a type drift — e.g. a DOUBLE landing in a
-              // BIGINT column — would write files the table's declared
-              // schema can never read back. Fail the mismatch at query
-              // START, not at first read.
-              meta.schema.foreach { declared =>
-                schema.fields.foreach { f =>
-                  declared.fields.find(_.name.equalsIgnoreCase(f.name))
-                    .foreach { d =>
-                      require(d.dataType == f.dataType,
-                        s"${name()}: streaming query writes ${f.name}: " +
-                          s"${f.dataType.simpleString} but the table " +
-                          s"declares ${d.dataType.simpleString} — cast in " +
-                          "the query (files would be unreadable)")
-                    }
-                }
-              }
-              val bad = parts.filter { c =>
-                schema.fields.find(_.name.equalsIgnoreCase(c))
-                  .forall(f => !GraftPartitionedCow.dirRenderable(f.dataType))
-              }
-              require(bad.isEmpty,
-                s"${name()}: partition columns ${bad.mkString(", ")} have " +
-                  "types whose directory rendering is ambiguous")
-              if (replace)
-                new GraftPartitionedCow.StreamingReplaceWrite(
-                  spark, format, schema, dir, parts, info.queryId())
-              else
-                new GraftPartitionedCow.StreamingAppendWrite(
-                  spark, format, schema, dir, parts, info.queryId())
-            }
-          }
+      private def oldFiles(): Seq[Path] = listDataFiles(
+        new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration),
+        new Path(dir))
+
+      /** Staged-invisible full replace, archiving the replaced state as
+        * a version when the catalog retains versions.
+        */
+      private def buildReplace(): Write =
+        new GraftPartitionedCow.TruncateReplaceWrite(spark, format,
+          info.schema(), dir, effectivePartitionCols, oldFiles(),
+          meta.bucketSpec,
+          if (versions > 0) Some((s"$dir.__versions", versions)) else None,
+          info.queryId())
     }
     if (upsertKeys.nonEmpty)
       new GraftWriteBuilder
@@ -2221,19 +2111,17 @@ private[sources] class GraftTable(
         else {
           // partitioned copy-on-write: the replacement write lays rows
           // out in the hive directory structure itself (the piece the
-          // flat v2 file write lacks). Partition values become
-          // directory names, so they must render identically to the
-          // dynamic-partition writer's tokens — restrict to the types
-          // whose rendering is unambiguous.
+          // flat v2 file write lacks) and retires the directories it
+          // scanned, so every partition column must be a plain column
+          // whose directory token is unambiguous
           val schema = writeInfo.schema()
-          val bad = parts.filter { c =>
-            schema.fields.find(_.name.equalsIgnoreCase(c))
-              .forall(f => !GraftPartitionedCow.dirRenderable(f.dataType))
-          }
-          require(bad.isEmpty,
-            s"${info.command}: partition columns ${bad.mkString(", ")} have " +
-              "types whose directory rendering is ambiguous (supported: " +
-              "string, integral, boolean, date); use graft.runtime.Catalog.merge")
+          val transforms = parts.filter(GraftTransforms.isTransform)
+          require(transforms.isEmpty,
+            s"${info.command}: hidden-partitioning fields " +
+              s"${transforms.mkString(", ")} are not supported by " +
+              "row-level copy-on-write")
+          GraftPartitionedCow.requireDirRenderable(info.command.toString,
+            schema, parts)
           require(parts.size < schema.fields.length,
             s"${info.command}: every column is a partition column — no " +
               "data columns to write")
@@ -4041,23 +3929,66 @@ private[graft] object GraftPartitionedCow {
   private[graft] var onBetweenPublishAndRetire: String => Unit = _ => ()
 
   /** Test seam: invoked inside the commit critical section, immediately
-    * before a dynamic partition overwrite's interference check — the
-    * window a racing commit must not slip through unseen.
+    * before an overwrite's interference check ([[requireUnchanged]]:
+    * dynamic partition overwrite and full replace) — the window a
+    * racing commit must not slip through unseen.
     */
   private[graft] var onBeforeOverwriteCheck: String => Unit = _ => ()
 
-  import org.apache.spark.sql.catalyst.InternalRow
+  /** The optimistic-concurrency check of a write that overwrites what
+    * it listed at build, run under the commit lock before anything
+    * publishes: in the partition directories `scope` (None = the whole
+    * table) the visible data files must still be exactly `oldFiles`
+    * and the deletion vectors exactly `dvAtBuild`. Otherwise another
+    * commit landed while the replacement was computed, and the write
+    * loses with [[GraftCommitLock.ConcurrentCommitException]] (its
+    * staged files are aborted; the live table is untouched) rather
+    * than silently erasing that commit.
+    */
+  private def requireUnchanged(fs: FileSystem, dir: String,
+      oldFiles: Seq[Path], dvAtBuild: Map[String, (Long, Long)],
+      scope: Option[Set[Path]], what: String): Unit = {
+    onBeforeOverwriteCheck(dir)
+    val base = new Path(dir)
+    val rels = scope.map(_.map(GraftCommits.relOf(fs, base, _)))
+    def inScope(fp: Map[String, (Long, Long)]) = rels match {
+      case None => fp
+      case Some(rs) =>
+        fp.filter { case (rel, _) => rs.exists(t => rel.startsWith(t + "/")) }
+    }
+    val filesNow = scope match {
+      case None => GraftEvolved.listVisible(fs, base).map(_.getPath)
+      case Some(dirs) => dirs.toSeq.flatMap(fs.listStatus(_).toSeq)
+        .filter(_.isFile).map(_.getPath)
+        .filter(p => !p.getName.startsWith("_") && !p.getName.startsWith("."))
+    }
+    val oldIn = oldFiles.map(fs.makeQualified).filter(f =>
+      scope.forall(_.contains(f.getParent)))
+    if (filesNow.map(fs.makeQualified).toSet != oldIn.toSet ||
+        inScope(GraftDv.fingerprint(fs, base)) != inScope(dvAtBuild))
+      throw new GraftCommitLock.ConcurrentCommitException(
+        s"$dir: $what changed while this overwrite computed its " +
+          "replacement; the overwrite was DISCARDED and the live table " +
+          "is untouched — re-run it against the new state")
+  }
+
+  import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
   import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+  import org.apache.spark.sql.catalyst.expressions.Cast
+  import org.apache.spark.sql.internal.SQLConf
   import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
   import org.apache.spark.sql.connector.expressions.SortOrder
   import org.apache.spark.sql.connector.write.{DataWriter, RequiresDistributionAndOrdering}
   import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
   import org.apache.spark.sql.types.{BooleanType, ByteType, IntegerType, LongType, ShortType, StringType}
 
-  /** Partition-value types whose directory rendering is unambiguous and
-    * identical to the dynamic-partition writer's (`String.valueOf` for
+  /** Partition-value types whose directory rendering is unambiguous —
+    * one spelling per value in every session (`String.valueOf` for
     * integrals/booleans, ISO `yyyy-MM-dd` for dates, the raw string
     * otherwise — escaping applied by `getPartitionPathString`).
+    * Timestamps render in the session time zone and fractional numbers
+    * have several spellings, so a directory token of theirs cannot be
+    * predicted from a value.
     */
   def dirRenderable(dt: DataType): Boolean = dt match {
     case _: StringType | IntegerType | LongType | ShortType | ByteType |
@@ -4065,12 +3996,70 @@ private[graft] object GraftPartitionedCow {
     case _ => false
   }
 
+  /** Refuses identity partition columns without a [[dirRenderable]]
+    * type for the writes that must find a partition's EXISTING
+    * directory from its values — dynamic partition overwrite, streaming
+    * epochs and row-level copy-on-write: under an ambiguous token the
+    * old directory would survive beside the new one. Appends and full
+    * replaces file such rows the way Spark's own writer does
+    * ([[renderRaw]]). Hidden-partitioning transforms render their own
+    * derived token and always pass.
+    */
+  def requireDirRenderable(what: String, schema: StructType,
+      partitionCols: Seq[String]): Unit = {
+    val bad = partitionCols.filter { c =>
+      GraftTransforms.parseOpt(c).isEmpty &&
+        schema.fields.find(_.name.equalsIgnoreCase(c))
+          .forall(f => !dirRenderable(f.dataType))
+    }
+    require(bad.isEmpty,
+      s"$what: partition columns ${bad.mkString(", ")} have types " +
+        "whose directory rendering is ambiguous (supported: string, " +
+        "integral, boolean, date)")
+  }
+
+  /** `layer.table` of a table directory: names the table in refusals
+    * raised where only its directory is at hand.
+    */
+  private def tableOf(dir: String): String = {
+    val p = new Path(dir)
+    s"${p.getParent.getName}.${p.getName}"
+  }
+
+  /** Start-time refusals of every streaming write into `dir`.
+    * `writeStream.toTable` hands the QUERY's schema straight through (no
+    * ResolveOutputRelation cast pass), so a type drift — e.g. a DOUBLE
+    * landing in a BIGINT column — would write files the table's
+    * declared schema can never read back: fail the mismatch at query
+    * START, not at first read.
+    */
+  def requireStreamable(spark: SparkSession, what: String, dir: String,
+      schema: StructType, partitionCols: Seq[String]): Unit = {
+    val dirP = new Path(dir)
+    GraftTableMeta.read(
+      dirP.getFileSystem(spark.sparkContext.hadoopConfiguration), dirP)
+      .schema.foreach { declared =>
+        schema.fields.foreach { f =>
+          declared.fields.find(_.name.equalsIgnoreCase(f.name)).foreach { d =>
+            require(d.dataType == f.dataType,
+              s"$what: streaming query writes ${f.name}: " +
+                s"${f.dataType.simpleString} but the table declares " +
+                s"${d.dataType.simpleString} — cast in the query (files " +
+                "would be unreadable)")
+          }
+        }
+      }
+    requireDirRenderable(what, schema, partitionCols)
+  }
+
   /** Raw directory-value rendering for a (possibly catalyst-internal)
-    * partition value of a [[dirRenderable]] type. Dates arrive as epoch
-    * days internally (Integer) or `java.sql.Date` externally — both
-    * render to the ISO form Spark's dynamic-partition writer uses.
-    * NULL stays null (getPartitionPathString maps it to the hive
-    * default partition).
+    * partition value. Dates arrive as epoch days internally (Integer) or
+    * `java.sql.Date` externally — both render to the ISO form Spark's
+    * dynamic-partition writer uses. Types outside [[dirRenderable]]
+    * (timestamps, fractional numbers) render exactly as that writer
+    * renders them: their string cast in the session time zone. NULL
+    * stays null (getPartitionPathString maps it to the hive default
+    * partition).
     */
   def renderRaw(value: Any, dt: DataType): String = value match {
     case null => null
@@ -4078,7 +4067,9 @@ private[graft] object GraftPartitionedCow {
       if dt == org.apache.spark.sql.types.DateType =>
       java.time.LocalDate.ofEpochDay(i.longValue()).toString
     case d: java.sql.Date => d.toLocalDate.toString
-    case v => v.toString
+    case v if dirRenderable(dt) => v.toString
+    case v => Cast(Literal(CatalystTypeConverters.convertToCatalyst(v), dt),
+      StringType, Some(SQLConf.get.sessionLocalTimeZone)).eval().toString
   }
 
   /** Directory token for predicate translation: None when the value
@@ -4130,8 +4121,9 @@ private[graft] object GraftPartitionedCow {
         case ByteType => un.toByte
         case BooleanType => un.toBoolean
         case DateType => java.time.LocalDate.parse(un).toEpochDay.toInt
-        case other => throw new IllegalArgumentException(
-          s"unparseable partition type $other")
+        // the inverse of [[renderRaw]]'s session-time-zone string cast
+        case other => Cast(Literal(un), other,
+          Some(SQLConf.get.sessionLocalTimeZone)).eval()
       }
     }
   }
@@ -4866,6 +4858,13 @@ private[graft] object GraftPartitionedCow {
       * open columnar writer at a time).
       */
     protected def sortedInput: Boolean
+    /** Set when Spark took this write's streaming face. Spark asks a
+      * micro-batch write for `toStreaming` BEFORE it reads the declared
+      * distribution and ordering, and the streaming writers keep one
+      * open file per key: an epoch into an identity-only layout then
+      * declares nothing and pays no per-epoch sort or shuffle.
+      */
+    @volatile private[sources] var streamingEpochs: Boolean = false
     /** Optimistic-concurrency check under the commit lock, before
       * anything publishes: `finals` are the qualified paths the new
       * generation is about to take. A write that read table state at
@@ -5041,6 +5040,15 @@ private[graft] object GraftPartitionedCow {
         bucketSpec.map { case (nb, c) => Expressions.bucket(nb, c)
           : org.apache.spark.sql.connector.expressions.Expression })
         .toArray)
+
+  /** A layout of identity partition columns only — no bucket and no
+    * hidden-partitioning transform, so no key needs its rows to meet in
+    * one task.
+    */
+  private[sources] def identityOnly(partitionCols: Seq[String],
+      bucketSpec: Option[(Int, String)]): Boolean =
+    bucketSpec.isEmpty &&
+      partitionCols.forall(GraftTransforms.parseOpt(_).isEmpty)
 
   /** Within-task ordering on the same keys: lets the task writer hold
     * ONE open file writer at a time (close-on-key-change) instead of
@@ -5228,22 +5236,10 @@ private[graft] object GraftPartitionedCow {
 
     override protected def checkNoInterference(finals: Seq[Path],
         fs: FileSystem): Unit = {
-      GraftPartitionedCow.onBeforeOverwriteCheck(dir)
       val touched = finals.map(_.getParent).toSet
-      val rels = touched.map(GraftCommits.relOf(fs, new Path(dir), _))
-      def inTouched(fp: Map[String, (Long, Long)]) =
-        fp.filter { case (rel, _) => rels.exists(t => rel.startsWith(t + "/")) }
-      val filesNow = touched.toSeq.flatMap(fs.listStatus(_).toSeq)
-        .filter(_.isFile).map(st => fs.makeQualified(st.getPath))
-        .filter(p => !p.getName.startsWith("_") && !p.getName.startsWith("."))
-      if (filesNow.toSet != oldIn(touched, fs).toSet ||
-          inTouched(GraftDv.fingerprint(fs, new Path(dir))) !=
-            inTouched(dvAtBuild))
-        throw new GraftCommitLock.ConcurrentCommitException(
-          s"$dir: partitions ${rels.toSeq.sorted.mkString(", ")} changed " +
-            "while this overwrite computed its replacement; the overwrite " +
-            "was DISCARDED and the live table is untouched — re-run it " +
-            "against the new state")
+      requireUnchanged(fs, dir, oldFiles, dvAtBuild, Some(touched),
+        "partitions " + touched.map(GraftCommits.relOf(fs, new Path(dir), _))
+          .toSeq.sorted.mkString(", "))
     }
 
     override protected def retired(published: Seq[Path],
@@ -5251,53 +5247,67 @@ private[graft] object GraftPartitionedCow {
       oldIn(published.map(_.getParent).toSet, fs)
   }
 
-  /** Append to a BUCKETED table: a v2 hive-layout write (the V1 append
-    * cannot tag buckets) that retires nothing; the clustered
-    * distribution on the bucket transform means each task owns whole
-    * buckets — one new file per bucket per append.
+  /** Append (`INSERT INTO`, `df.writeTo(t).append()`, CTAS, every
+    * object-API append): a hive-layout write that retires nothing.
+    * Rows are ordered by the layout keys, so each task writes one file
+    * per (partition, bucket) it holds. A layout with a bucket or a
+    * hidden-partitioning transform also declares the clustering on
+    * those keys (a bucket's rows must meet in one task to land in
+    * one tagged file); an identity-only layout keeps the incoming
+    * partitioning — no exchange, the full write parallelism of a
+    * single-partition daily append.
     */
-  final class BucketedAppendWrite(
+  final class AppendWrite(
       spark: SparkSession, format: String, dataSchema: StructType,
       dir: String, partitionCols: Seq[String],
       bucketSpec: Option[(Int, String)], queryId: String)
     extends HiveLayoutWrite(spark, format, dataSchema, dir, partitionCols,
       Nil, bucketSpec) with RequiresDistributionAndOrdering {
-    override def description(): String = s"graft bucketed-append $dir"
+    override def description(): String = s"graft append $dir"
     override protected def journalKind: String = "append"
     override def requiredDistribution(): Distribution =
-      clusteringOf(partitionCols, bucketSpec)
+      if (identityOnly(partitionCols, bucketSpec)) Distributions.unspecified()
+      else clusteringOf(partitionCols, bucketSpec)
     override def requiredOrdering(): Array[SortOrder] =
-      orderingOf(partitionCols, bucketSpec)
+      if (streamingEpochs && identityOnly(partitionCols, bucketSpec))
+        Array.empty
+      else orderingOf(partitionCols, bucketSpec)
     override def distributionStrictlyRequired(): Boolean = false
     override protected def sortedInput: Boolean = true
     override protected def pruneEmptied: Boolean = false
     override protected def retired(published: Seq[Path],
         fs: FileSystem): Seq[Path] = Nil
-    /** Streaming appends keep the bucket layout too — the epoch-deduped
-      * streaming write with the bucket spec threaded through.
+    /** `df.writeStream.toTable(...)` in Append output mode: the
+      * epoch-deduped streaming append, layout threaded through.
       */
     override def toStreaming
-        : org.apache.spark.sql.connector.write.streaming.StreamingWrite =
+        : org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
+      requireStreamable(spark, tableOf(dir), dir, dataSchema,
+        partitionCols)
+      streamingEpochs = true
       new StreamingAppendWrite(spark, format, dataSchema, dir,
         partitionCols, queryId, bucketSpec)
+    }
   }
 
-  /** INSERT OVERWRITE through the v2 path: staged-invisible full
-    * replace — publish the new generation (bucket-tagged when the table
-    * has a bucket spec), retire every pre-existing data file in the
-    * same commit. Used by bucketed tables (whose files the V1 swap
-    * cannot tag) and by `INSERT OVERWRITE` of an unpartitioned table
-    * planned as OverwritePartitionsDynamic (session-wide dynamic mode;
-    * no V1 fallback exists for that plan — r10 ADVICE).
+  /** Full replace (`INSERT OVERWRITE`, `.overwrite(lit(true))`,
+    * `createOrReplace`, compaction and clustering rewrites): publish the
+    * new generation, retire every pre-existing data file in the same
+    * commit. The table directory, its sidecars and its commit journal
+    * stay; the journal records a `replace` floor. The commit loses
+    * ([[requireUnchanged]]) when any data file or deletion vector of
+    * the table moved since build.
     *
-    * `versionStore = Some((versionsDir, retain))` preserves the
-    * version-retention contract of the V1 swap path: the retired
-    * generation is a COMPLETE previous table state (this is a full
-    * replace), so instead of deleting it the commit MOVES each retired
-    * file — relative hive path preserved — into the next `v<N>`
-    * directory of the store that `VERSION AS OF` / `readVersion`
-    * resolve against, pruned to the newest `retain`. One rename per
-    * retired file: same cost class as the deletes it replaces.
+    * `versionStore = Some((versionsDir, retain))` retains the replaced
+    * state: the commit MOVES each retired file — relative hive path
+    * preserved — into the next `v<N>` directory of the store that
+    * `VERSION AS OF` / `readVersion` resolve against (a replace of a
+    * table without data files mints an empty `v<N>`), pruned to the
+    * newest `retain`. One rename per retired file: same cost class as
+    * the tombstoning it replaces. `v<N>` takes the live directory's
+    * mtime from before this write and the live directory the commit
+    * time, so `TIMESTAMP AS OF` resolves each state by its publish
+    * time.
     */
   final class TruncateReplaceWrite(
       spark: SparkSession, format: String, dataSchema: StructType,
@@ -5309,18 +5319,25 @@ private[graft] object GraftPartitionedCow {
       oldFiles, bucketSpec) with RequiresDistributionAndOrdering {
     override def description(): String = s"graft truncate-replace $dir"
     override protected def journalKind: String = "replace"
-    /** Complete-output-mode streaming on a BUCKETED table: per-epoch
-      * full refresh that keeps the bucket-tagged layout (versioning
-      * does not apply per-epoch — see [[StreamingReplaceWrite]]).
+    /** Complete output mode: a per-epoch full refresh (versioning does
+      * not apply per-epoch — see [[StreamingReplaceWrite]]).
       */
     override def toStreaming
-        : org.apache.spark.sql.connector.write.streaming.StreamingWrite =
+        : org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
+      requireStreamable(spark, tableOf(dir), dir, dataSchema,
+        partitionCols)
+      streamingEpochs = true
       new StreamingReplaceWrite(spark, format, dataSchema, dir,
         partitionCols, queryId, bucketSpec)
+    }
     override def requiredDistribution(): Distribution =
-      clusteringOf(partitionCols, bucketSpec)
+      if (streamingEpochs && identityOnly(partitionCols, bucketSpec))
+        Distributions.unspecified()
+      else clusteringOf(partitionCols, bucketSpec)
     override def requiredOrdering(): Array[SortOrder] =
-      orderingOf(partitionCols, bucketSpec)
+      if (streamingEpochs && identityOnly(partitionCols, bucketSpec))
+        Array.empty
+      else orderingOf(partitionCols, bucketSpec)
     override def distributionStrictlyRequired(): Boolean = false
     override protected def sortedInput: Boolean = true
     override protected def pruneEmptied: Boolean = true
@@ -5328,12 +5345,26 @@ private[graft] object GraftPartitionedCow {
     // sidecars are cleared (or archived with the retained version
     // below) rather than refusing — this IS a materialization path
     override protected def eqDeleteSafe: Boolean = true
+
+    private val (dvAtBuild, replacedAt) = {
+      val fs = new Path(dir)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      // the replaced state's publish time, read before this write's
+      // staged files touch the live directory
+      (GraftDv.fingerprint(fs, new Path(dir)),
+        fs.getFileStatus(new Path(dir)).getModificationTime)
+    }
+
+    override protected def checkNoInterference(finals: Seq[Path],
+        fs: FileSystem): Unit =
+      requireUnchanged(fs, dir, oldFiles, dvAtBuild, None, "the table")
+
     override protected def retired(published: Seq[Path],
         fs: FileSystem): Seq[Path] = oldFiles
     override protected def retire(gone: Seq[Path], fs: FileSystem)
         : Option[String] = {
       val tomb: Option[String] = versionStore match {
-        case Some((store, retain)) if gone.nonEmpty =>
+        case Some((store, retain)) =>
           val storeP = new Path(store)
           val existing: Seq[Int] =
             if (!fs.exists(storeP)) Nil
@@ -5341,6 +5372,7 @@ private[graft] object GraftPartitionedCow {
               .filter(_.matches("v\\d{6}")).map(_.drop(1).toInt).sorted
           val vDir = new Path(storeP,
             f"v${existing.lastOption.getOrElse(0) + 1}%06d")
+          fs.mkdirs(vDir)
           val qualBase = fs.makeQualified(new Path(dir)).toString
           gone.foreach { f =>
             val rel = f.toString.stripPrefix(qualBase).stripPrefix("/")
@@ -5363,11 +5395,12 @@ private[graft] object GraftPartitionedCow {
           // equality-delete sidecars travel with the snapshot too —
           // the archived generation must read with its deletes applied
           GraftEqDel.archiveInto(fs, new Path(dir), vDir)
+          fs.setTimes(vDir, replacedAt, -1)
           existing.dropRight(retain - 1).foreach { v =>
             fs.delete(new Path(storeP, f"v$v%06d"), true)
           }
           None // preserved in the version store, not the tombstone area
-        case _ =>
+        case None =>
           val t = super.retire(gone, fs)
           // the replace superseded every row: live equality deletes
           // are consumed by it (this commit IS their materialization)
@@ -5379,6 +5412,7 @@ private[graft] object GraftPartitionedCow {
       val m = GraftTableMeta.read(fs, new Path(dir))
       if (m.aliases.nonEmpty)
         GraftTableMeta.write(fs, new Path(dir), m.copy(aliases = Nil))
+      fs.setTimes(new Path(dir), System.currentTimeMillis(), -1)
       tomb
     }
   }

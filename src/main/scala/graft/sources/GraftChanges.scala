@@ -605,8 +605,8 @@ private[sources] final class GraftChangesScan(
     /** Servable feed positions (streaming admission). */
     def feedIds: Seq[Long] = feedRecs.map(_.id).filter(_ > horizon)
 
-    /** Identity of THIS journal incarnation: a full replace swaps the
-      * journal away and a fresh one starts — a streaming checkpoint's
+    /** Identity of THIS journal incarnation: a drop and re-create
+      * starts a fresh journal — a streaming checkpoint's
       * offsets are only meaningful against the journal that issued
       * them, so the identity travels in the offset and mismatches
       * refuse loudly instead of silently skipping replaced history.

@@ -21,16 +21,16 @@ import org.apache.spark.sql.types.{BooleanType, DataType, StructType}
   *
   * Enforcement points (every row-ingest surface):
   *  - the hive-layout task writers ([[GraftCatalog.PartitionedCowWriter]])
-  *    — batch v2 writes, dynamic partition overwrites, bucketed
-  *    appends, streaming epochs (append / complete / both upsert
+  *    — batch appends and full replaces, dynamic partition
+  *    overwrites, streaming epochs (append / complete / both upsert
   *    modes), and copy-on-write row-level rewrites (so an UPDATE or
   *    MERGE cannot write a violating row either). Constraints resolve
   *    once per task against the write's row schema; a constraint whose
   *    columns are absent from a partial-row write (positional delete
   *    rows) is vacuously satisfied — deletes cannot violate a CHECK;
-  *  - the V1 append / full-replace path and the object API
-  *    ([[graft.runtime.Catalog]].append/createOrReplace), where the
-  *    input DataFrame is filtered through [[CheckConstraintExpr]] — a
+  *  - additionally the object API ([[graft.runtime.Catalog]]
+  *    .append/createOrReplace), where the input DataFrame is first
+  *    filtered through [[CheckConstraintExpr]] — a
   *    codegen'd predicate that THROWS on violation, so the guard rides
   *    the write's own pass over the rows (no second scan, and a
   *    Filter node is never pruned away).
@@ -222,7 +222,7 @@ private[graft] object GraftCheck {
       GraftTableMeta.read(fs, dir).props))
   }
 
-  /** DataFrame-level guard for the V1 / object-API paths: a Filter of
+  /** DataFrame-level guard for the object-API paths: a Filter of
     * [[CheckConstraintExpr]]s — always true unless a row violates, in
     * which case the task throws. Riding a Filter keeps the guard on
     * the write's own row pass and out of reach of column pruning.
@@ -278,7 +278,7 @@ private[graft] object GraftCheck {
 
 /** Boolean predicate that is TRUE unless its child is a definite FALSE
   * — then it THROWS the constraint violation. Codegen'd so the guard
-  * stays inside whole-stage codegen on the V1 write paths.
+  * stays inside whole-stage codegen on the object-API write paths.
   */
 private[graft] case class CheckConstraintExpr(child: Expression,
     name: String, checkSql: String)

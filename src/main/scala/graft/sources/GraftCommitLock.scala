@@ -9,7 +9,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * MERGE-ing the same target) could interleave their publish/retire
   * phases and silently lose one side's files. This lock is the
   * detect-and-refuse unit: the commit CRITICAL SECTION (publish +
-  * retire + directory swaps — seconds of driver-side renames, never
+  * retire + journal record — seconds of driver-side renames, never
   * the data write itself) runs under an exclusive lock file, and a
   * second committer landing inside that window FAILS CLEANLY with the
   * table intact — the optimistic-concurrency contract Iceberg bases
@@ -18,23 +18,22 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *
   * Mechanics:
   *  - the lock is a SIBLING file (`<tableDir>.__lock`, beside the
-  *    `.__versions` / `.__swap*` siblings) so full-directory swaps of
-  *    the table itself never move or orphan it, and a writer racing a
-  *    swap cannot re-create the live directory by locking it;
+  *    `.__versions` / `.__retired` siblings), outside every data
+  *    listing of the table;
   *  - acquisition is an atomic create-exclusive (`fs.create(p,
   *    overwrite = false)` — one winner per path on HDFS and local FS);
   *    the holder records owner + wall time for diagnostics;
   *  - a crashed holder's lock is BROKEN after `staleMs` (default 10
   *    minutes): every protocol under this lock is independently
-  *    crash-recoverable (staged-invisible files, rename re-convergence,
-  *    swap recovery), so breaking a stale lock never corrupts — it
+  *    crash-recoverable (staged-invisible files, rename
+  *    re-convergence), so breaking a stale lock never corrupts — it
   *    only re-admits writers.
   *
   * What this does NOT serialize: the distributed data write feeding a
   * commit (deliberately — a 100 TB rewrite must not block epochs for
-  * its whole duration). Full-rewrite swaps instead VERIFY at swap time
-  * that the table did not change under them and abort cleanly if it
-  * did — see [[graft.runtime.Catalog]] `safeSwapWrite`.
+  * its whole duration). Overwriting writes instead VERIFY at commit
+  * time that what they replace did not change under them and abort
+  * cleanly if it did — see [[GraftPartitionedCow]] `requireUnchanged`.
   */
 object GraftCommitLock {
 

@@ -41,13 +41,13 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *  - NEUTRAL (`maintenance`): file churn with no logical row change
   *    (compaction) — accounted, never fed.
   *
-  * Self-healing by construction: a full-directory swap (create-or-
-  * replace, compact via safeSwapWrite) replaces the table dir and the
-  * journal inside it; the next journaled commit finds visible files no
-  * record accounts for and writes a `genesis` floor record claiming
-  * them. A write path that bypasses the journal therefore degrades to
-  * a LOUD feed refusal (unaccounted files), never a silent gap, and
-  * `CALL system.compact` always resets the table to a servable state.
+  * Self-healing by construction: a table whose journal is empty (its
+  * files predate journaling, or were written outside the catalog)
+  * has them claimed by its first journaled commit under a `genesis`
+  * floor record. Files a journal-bypassing writer adds to a journaled
+  * table degrade to a LOUD feed refusal (unaccounted files), never a
+  * silent gap, and `CALL system.compact` (a full replace) always
+  * resets the table to a servable state.
   *
   * Crash window: records are finalized AFTER their commit's publish,
   * still under the lock. A crash in between leaves published files
@@ -578,7 +578,7 @@ private[graft] object GraftCommits {
   /** Append one commit record. MUST run inside the table's commit-lock
     * critical section, after the commit's publish/retire completed.
     * If the journal is empty and OTHER visible batch files exist (the
-    * pre-journal generation, or a post-swap generation), a `genesis`
+    * pre-journal generation), a `genesis`
     * floor record claims them first so accounting stays total.
     * Returns the assigned commit id.
     */
@@ -606,7 +606,7 @@ private[graft] object GraftCommits {
 
   /** Append a record whose adds are CLAIMED as the visible batch files
     * not present in `before` (for publish paths that don't know their
-    * final file names — the V1 append, delegated Spark writes). The
+    * final file names — delegated Spark writes). The
     * claim runs under the lock and ALSO subtracts the journal's own
     * accounted-live set (ADVICE r15 medium): a `before` listed before
     * an unlocked save can miss a concurrent committer's just-published

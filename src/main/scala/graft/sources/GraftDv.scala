@@ -214,8 +214,9 @@ private[graft] object GraftDv {
     * lock. A merge-on-read DELETE landing while the rewrite ran would
     * otherwise be silently erased (the rewrite read pre-delete rows);
     * the mismatch makes the REWRITE lose cleanly instead — the same
-    * designated-loser contract as the full-rewrite swap check
-    * (Iceberg's validateNoNewDeleteFiles).
+    * designated-loser contract as the overwrites' interference check
+    * (`GraftPartitionedCow.requireUnchanged`; Iceberg's
+    * validateNoNewDeleteFiles).
     */
   def fingerprint(fs: FileSystem, tableDir: Path): Map[String, (Long, Long)] =
     list(fs, tableDir).map { case (rel, p) =>

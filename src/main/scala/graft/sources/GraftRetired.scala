@@ -11,7 +11,7 @@ import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFil
   * never-delete-at-commit rule for a directory-listing table layout.
   *
   * The problem: every retiring commit (COW MERGE/UPDATE/DELETE, dynamic
-  * partition overwrite, compaction/cluster swaps) used to physically
+  * partition overwrite, full replaces and compactions) used to physically
   * DELETE the superseded generation inside the commit critical section.
   * Writer-vs-writer is safe (commit lock + optimistic checks), but a
   * long-running READER that planned its scan before the commit holds
@@ -23,8 +23,7 @@ import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFil
   *  - retiring commits RENAME superseded files into a sibling tombstone
   *    area `<tableDir>.__retired/<epochMillis>-<uuid>/<relative path>`
   *    (one rename per file — the same cost class as the deletes it
-  *    replaces; whole-directory swaps retire with ONE rename of the
-  *    swapped-aside root). The files leave the live listing atomically,
+  *    replaces). The files leave the live listing atomically,
   *    so new scans never see them — no listing surface changes at all.
   *  - an in-flight reader that planned a file before the commit opens
   *    it AFTER: the open fails, and [[FallbackReaderFactory]] re-resolves
@@ -48,8 +47,7 @@ import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFil
 private[graft] object GraftRetired {
 
   /** Sibling of the table dir (like `.__lock` / `.__versions`): never
-    * part of any data listing, survives whole-directory swaps of the
-    * table itself.
+    * part of any data listing.
     */
   def retiredRoot(tableDir: Path): Path =
     new Path(tableDir.getParent, tableDir.getName + ".__retired")
@@ -96,20 +94,6 @@ private[graft] object GraftRetired {
       require(fs.rename(f, dest),
         s"retire: could not tombstone $f as $dest")
     }
-  }
-
-  /** Tombstone a complete swapped-aside generation (compact/cluster
-    * swaps, partition-overwrite old roots) with ONE rename: the aside
-    * directory already mirrors the table's relative layout.
-    */
-  def retireRoot(fs: FileSystem, tableDir: Path, asideRoot: Path)
-      : Option[String] = {
-    if (!fs.exists(asideRoot)) return None
-    val commit = newCommitDir(tableDir)
-    fs.mkdirs(commit.getParent)
-    require(fs.rename(asideRoot, commit),
-      s"retire: could not tombstone $asideRoot as $commit")
-    Some(commit.getName)
   }
 
   /** Delete tombstone commits older than the grace window. Returns

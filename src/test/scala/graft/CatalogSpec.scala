@@ -70,35 +70,15 @@ class CatalogSpec extends SparkSpec {
     cat.overwritePartitionsByName(
       Seq(("2020-01-22", 42L)).toDF("d", "v"), "ods", "t", Seq("d"))
     assert(readAll(cat) == Set(("2020-01-22", 42L), ("2020-01-23", 3L)))
-  }
-
-  test("a crash BETWEEN safeSwapWrite renames is healed by the next replace") {
-    val root = tmpDir("cat")
-    val cat = Catalog(spark, root)
-    cat.createOrReplace(Seq(("a", 1L)).toDF("k", "v"), "ods", "t")
-    // simulate the narrowest crash window: the live dir moved aside but
-    // the replacement never renamed in — the table's ONLY copy now
-    // lives at __swapold and the live slot is missing
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = new org.apache.hadoop.fs.Path(s"$root/ods/t")
-    val aside = new org.apache.hadoop.fs.Path(s"$root/ods/t.__swapold")
-    assert(fs.rename(live, aside))
-    // a replace whose WRITE fails must still leave the previous
-    // version readable: recovery restores __swapold to the live slot
-    // before anything is deleted
-    intercept[Exception] {
-      val boom = udf { (_: Long) =>
-        throw new RuntimeException("boom"); 0L
-      }
-      cat.createOrReplace(
-        Seq(("b", 2L)).toDF("k", "v").withColumn("v", boom(col("v"))),
-        "ods", "t")
+    // a full replace whose write fails the same way leaves the previous
+    // state readable, and a clean retry goes through
+    intercept[org.apache.spark.SparkException] {
+      cat.createOrReplace(bad, "ods", "t", Seq("d"))
     }
-    assert(readAll2(cat, "ods", "t") == Set(("a", 1L)))
-    // and a clean retry still goes through
-    cat.createOrReplace(Seq(("c", 3L)).toDF("k", "v"), "ods", "t")
-    assert(readAll2(cat, "ods", "t") == Set(("c", 3L)))
+    assert(readAll(cat) == Set(("2020-01-22", 42L), ("2020-01-23", 3L)))
+    cat.createOrReplace(Seq(("2020-01-24", 7L)).toDF("d", "v"), "ods", "t",
+      Seq("d"))
+    assert(readAll(cat) == Set(("2020-01-24", 7L)))
   }
 
   private def readAll2(cat: Catalog, layer: String, table: String): Set[(String, Long)] =
@@ -144,22 +124,6 @@ class CatalogSpec extends SparkSpec {
     cat.createOrReplace(
       Seq(("a", 1L), ("b", 20L), ("c", 3L)).toDF("k", "v"), "dds", "t")
     assert(cat.changesBetween("dds", "t", from = 2).isEmpty)
-  }
-
-  test("a crash between swap and archive still retains the version") {
-    val root = tmpDir("vcat")
-    val cat = Catalog(spark, root, versions = 3)
-    cat.createOrReplace(Seq(("a", 1L)).toDF("k", "v"), "dds", "t")
-    // simulate the narrowest crash: the previous version was moved
-    // aside but never archived — the orphan must become a version on
-    // the next replace, not be deleted
-    Seq(("x", 9L)).toDF("k", "v").write.parquet(s"$root/dds/t.__swapold")
-    cat.createOrReplace(Seq(("b", 2L)).toDF("k", "v"), "dds", "t")
-    assert(cat.history("dds", "t") == Seq(1, 2))
-    assert(cat.readVersion("dds", "t", 1).select("k", "v")
-      .as[(String, Long)].collect().toSet == Set(("x", 9L)))
-    assert(cat.readVersion("dds", "t", 2).select("k", "v")
-      .as[(String, Long)].collect().toSet == Set(("a", 1L)))
   }
 
   test("tableExists probe (S4)") {

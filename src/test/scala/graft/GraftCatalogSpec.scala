@@ -117,6 +117,80 @@ class GraftCatalogSpec extends SparkSpec {
     assert(scanDesc.contains("PartitionFilters"))
   }
 
+  test("timestamp / decimal / double partitions: appends and full replaces file rows as Spark's writer does; dynamic overwrite refuses") {
+    val (cat, root) = freshCatalog()
+    spark.sql(s"CREATE NAMESPACE $cat.ods")
+    spark.sql(s"CREATE TABLE $cat.ods.tp (k BIGINT, ts TIMESTAMP, " +
+      "d DECIMAL(10,2), x DOUBLE) PARTITIONED BY (ts, d, x)")
+    spark.sql(s"INSERT INTO $cat.ods.tp VALUES " +
+      "(1, TIMESTAMP'2026-01-01 10:00:00', 1.5, 0.5), " +
+      "(2, TIMESTAMP'2026-01-02 00:00:00', 2, 1)")
+    // the session-time-zone string cast of each value, escaped
+    assert(new java.io.File(
+      s"$root/ods/tp/ts=2026-01-01 10%3A00%3A00/d=1.50/x=0.5").isDirectory)
+    def keys() = spark.table(s"$cat.ods.tp").orderBy("k").collect().toSeq
+    assert(keys() == Seq(
+      Row(1L, java.sql.Timestamp.valueOf("2026-01-01 10:00:00"),
+        new java.math.BigDecimal("1.50"), 0.5),
+      Row(2L, java.sql.Timestamp.valueOf("2026-01-02 00:00:00"),
+        new java.math.BigDecimal("2.00"), 1.0)))
+    assert(spark.table(s"$cat.ods.tp")
+      .where(col("ts") === lit("2026-01-02 00:00:00").cast("timestamp"))
+      .select("k").collect().toSeq == Seq(Row(2L)))
+    spark.sql(s"INSERT OVERWRITE $cat.ods.tp VALUES " +
+      "(3, TIMESTAMP'2026-01-03 00:00:00', 3, 1.5)")
+    assert(keys().map(_.getLong(0)) == Seq(3L))
+    // the dynamic overwrite must find each partition's existing
+    // directory from its values: refused for these types
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    try {
+      val e = intercept[Exception](spark.sql(s"INSERT OVERWRITE $cat.ods.tp " +
+        "VALUES (4, TIMESTAMP'2026-01-03 00:00:00', 3, 1.5)"))
+      assert(e.getMessage.contains("ambiguous"), e.getMessage)
+    } finally spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+    assert(keys().map(_.getLong(0)) == Seq(3L))
+  }
+
+  test("streaming epochs into an identity-partitioned table plan no sort or shuffle") {
+    import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import spark.implicits._
+    val (cat, _) = freshCatalog()
+    spark.sql(s"CREATE NAMESPACE $cat.ods")
+    spark.sql(s"CREATE TABLE $cat.ods.sa (k BIGINT, seg STRING) PARTITIONED BY (seg)")
+    spark.sql(s"CREATE TABLE $cat.ods.sc (seg STRING, n BIGINT) PARTITIONED BY (seg)")
+    // the streaming writers keep one open file per partition: an epoch
+    // needs neither the batch append's sort nor the full replace's
+    // clustering exchange
+    val ma = MemoryStream[(Long, String)]
+    val qa = ma.toDF().toDF("k", "seg").writeStream
+      .option("checkpointLocation", tmpDir("gcat-sa-cp"))
+      .toTable(s"$cat.ods.sa")
+    val mc = MemoryStream[(Long, String)]
+    val qc = mc.toDF().toDF("k", "seg").groupBy("seg")
+      .agg(count(lit(1)).as("n")).writeStream.outputMode("complete")
+      .option("checkpointLocation", tmpDir("gcat-sc-cp"))
+      .toTable(s"$cat.ods.sc")
+    try {
+      ma.addData((1L, "a"), (2L, "b"), (3L, "a")); qa.processAllAvailable()
+      mc.addData((1L, "a"), (2L, "b"), (3L, "a")); qc.processAllAvailable()
+      def plan(q: org.apache.spark.sql.streaming.StreamingQuery) =
+        q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution
+          .executedPlan.toString
+      assert(!plan(qa).contains("Sort"), plan(qa))
+      // the aggregation's own exchange stays; none is added on top
+      assert("Exchange".r.findAllMatchIn(plan(qc)).size == 1, plan(qc))
+    } finally { qa.stop(); qc.stop() }
+    assert(spark.table(s"$cat.ods.sa").count() == 3)
+    assert(spark.table(s"$cat.ods.sc").orderBy("seg").collect().toSeq ==
+      Seq(Row("a", 2L), Row("b", 1L)))
+    // the batch append still orders by the partition column
+    val batch = spark.sql(
+      s"INSERT INTO $cat.ods.sa SELECT k + 10, seg FROM $cat.ods.sa")
+    assert(batch.queryExecution.executedPlan.toString.contains("Sort"),
+      batch.queryExecution.executedPlan.toString)
+  }
+
   test("MERGE INTO executes upsert + delete through the SQL surface") {
     val (cat, _) = freshCatalog()
     spark.sql(s"CREATE NAMESPACE $cat.ods")
@@ -352,49 +426,54 @@ class GraftCatalogSpec extends SparkSpec {
     val (cat, root) = freshCatalog()
     spark.conf.set(s"spark.sql.catalog.$cat.versions", "3")
     spark.sql(s"CREATE NAMESPACE $cat.ods")
-    spark.sql(s"CREATE TABLE $cat.ods.hist (k BIGINT, v STRING)")
-    spark.sql(s"INSERT INTO $cat.ods.hist VALUES (1, 'a')")
-    spark.sql(s"INSERT OVERWRITE $cat.ods.hist VALUES (1, 'b'), (2, 'b')")
-    Thread.sleep(1200) // separate the two archive mtimes + the probe ts
-    val betweenMillis = System.currentTimeMillis()
-    Thread.sleep(1200)
-    spark.sql(s"INSERT OVERWRITE $cat.ods.hist VALUES (3, 'c')")
+    // a plain table, and a bucketed one (its replaced states are
+    // archived file by file)
+    for ((t, layout) <- Seq("hist" -> "",
+        "histb" -> " PARTITIONED BY (bucket(2, k))")) {
+      spark.sql(s"CREATE TABLE $cat.ods.$t (k BIGINT, v STRING)$layout")
+      spark.sql(s"INSERT INTO $cat.ods.$t VALUES (1, 'a')")
+      spark.sql(s"INSERT OVERWRITE $cat.ods.$t VALUES (1, 'b'), (2, 'b')")
+      Thread.sleep(1200) // separate the two archive mtimes + the probe ts
+      val betweenMillis = System.currentTimeMillis()
+      Thread.sleep(1200)
+      spark.sql(s"INSERT OVERWRITE $cat.ods.$t VALUES (3, 'c')")
 
-    // live vs versions (history numbering = object API's)
-    assert(spark.table(s"$cat.ods.hist").collect().toSeq == Seq(Row(3L, "c")))
-    val v1 = spark.sql(s"SELECT * FROM $cat.ods.hist VERSION AS OF 1")
-      .orderBy("k").collect().toSeq
-    assert(v1 == Seq(Row(1L, "a")), s"v1 = $v1")
-    val v2 = spark.sql(s"SELECT * FROM $cat.ods.hist VERSION AS OF 2")
-      .orderBy("k").collect().toSeq
-    assert(v2 == Seq(Row(1L, "b"), Row(2L, "b")), s"v2 = $v2")
+      // live vs versions (history numbering = object API's)
+      assert(spark.table(s"$cat.ods.$t").collect().toSeq == Seq(Row(3L, "c")))
+      val v1 = spark.sql(s"SELECT * FROM $cat.ods.$t VERSION AS OF 1")
+        .orderBy("k").collect().toSeq
+      assert(v1 == Seq(Row(1L, "a")), s"v1 = $v1")
+      val v2 = spark.sql(s"SELECT * FROM $cat.ods.$t VERSION AS OF 2")
+        .orderBy("k").collect().toSeq
+      assert(v2 == Seq(Row(1L, "b"), Row(2L, "b")), s"v2 = $v2")
 
-    // timestamp between the two replaces resolves to the middle state
-    val atTs = spark.sql(s"SELECT * FROM $cat.ods.hist " +
-        s"TIMESTAMP AS OF timestamp_millis(${betweenMillis}L)")
-      .orderBy("k").collect().toSeq
-    assert(atTs == Seq(Row(1L, "b"), Row(2L, "b")), s"atTs = $atTs")
-    // a future timestamp reads the live table
-    val future = spark.sql(s"SELECT * FROM $cat.ods.hist " +
-        s"TIMESTAMP AS OF timestamp_millis(${System.currentTimeMillis() + 60000}L)")
-      .collect().toSeq
-    assert(future == Seq(Row(3L, "c")))
+      // timestamp between the two replaces resolves to the middle state
+      val atTs = spark.sql(s"SELECT * FROM $cat.ods.$t " +
+          s"TIMESTAMP AS OF timestamp_millis(${betweenMillis}L)")
+        .orderBy("k").collect().toSeq
+      assert(atTs == Seq(Row(1L, "b"), Row(2L, "b")), s"atTs = $atTs")
+      // a future timestamp reads the live table
+      val future = spark.sql(s"SELECT * FROM $cat.ods.$t " +
+          s"TIMESTAMP AS OF timestamp_millis(${System.currentTimeMillis() + 60000}L)")
+        .collect().toSeq
+      assert(future == Seq(Row(3L, "c")))
 
-    // snapshots refuse writes, missing versions refuse loudly
-    val e = intercept[Exception] {
-      spark.sql(s"INSERT INTO $cat.ods.hist VERSION AS OF 1 VALUES (9, 'x')")
+      // snapshots refuse writes, missing versions refuse loudly
+      val e = intercept[Exception] {
+        spark.sql(s"INSERT INTO $cat.ods.$t VERSION AS OF 1 VALUES (9, 'x')")
+      }
+      assert(e != null)
+      val missing = intercept[Exception] {
+        spark.sql(s"SELECT * FROM $cat.ods.$t VERSION AS OF 99").collect()
+      }
+      assert(missing.getMessage.contains("no retained version"),
+        s"got: ${missing.getMessage}")
+
+      // object-API history sees the same numbering over the same root
+      val eng = Catalog(spark, root, versions = 3)
+      assert(eng.history("ods", t) == Seq(1, 2))
+      assert(eng.readVersion("ods", t, 1).collect().toSeq == Seq(Row(1L, "a")))
     }
-    assert(e != null)
-    val missing = intercept[Exception] {
-      spark.sql(s"SELECT * FROM $cat.ods.hist VERSION AS OF 99").collect()
-    }
-    assert(missing.getMessage.contains("no retained version"),
-      s"got: ${missing.getMessage}")
-
-    // object-API history sees the same numbering over the same root
-    val eng = Catalog(spark, root, versions = 3)
-    assert(eng.history("ods", "hist") == Seq(1, 2))
-    assert(eng.readVersion("ods", "hist", 1).collect().toSeq == Seq(Row(1L, "a")))
   }
 
   test("time travel x round-10 writers: versioning is full-replace-scoped (r10 item 7)") {

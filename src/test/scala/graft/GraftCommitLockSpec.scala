@@ -221,19 +221,21 @@ class GraftCommitLockSpec extends SparkSpec {
     spark.sql(s"INSERT INTO $cat.ods.t SELECT id, id FROM range(100, 200)")
 
     // inject a racing append into the exact window between the
-    // rewrite's read and its swap — the optimistic check must make
+    // rewrite's read and its commit — the optimistic check must make
     // the COMPACTION lose, with the raced-in row surviving
-    eng.onBeforeSwapCheck = () =>
+    GraftPartitionedCow.onBeforeOverwriteCheck = _ =>
       Seq((9999L, 9999L)).toDF("k", "v").coalesce(1)
         .write.mode("append").parquet(s"$root/ods/t")
     val e = try intercept[Throwable] { eng.compact("ods", "t") }
-      finally eng.onBeforeSwapCheck = () => ()
+      finally GraftPartitionedCow.onBeforeOverwriteCheck = _ => ()
     assert(hasConcurrent(e), s"expected ConcurrentCommitException, got $e")
-    // the winner's row is alive, nothing was lost, no tmp residue
+    // the winner's row is alive, nothing was lost, no staged residue
     assert(spark.table(s"$cat.ods.t").count() == 201)
     assert(spark.table(s"$cat.ods.t").where(col("k") === 9999).count() == 1)
     val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(!fs.exists(new Path(s"$root/ods/t.__swapnew")))
+    assert(!fs.listStatus(new Path(s"$root/ods/t"))
+      .exists(_.getPath.getName.startsWith(".")),
+      "a staged dot-file was left in the table dir")
     // a re-run against the settled state succeeds
     eng.compact("ods", "t")
     assert(spark.table(s"$cat.ods.t").count() == 201)

@@ -392,35 +392,48 @@ class GraftMaterializedViewSpec extends SparkSpec {
   }
 
   test("journal-incarnation identity: a base swap (compact) refuses the incremental fold; full re-bootstraps (ADVICE r16 high)") {
-    val (cat, _) = freshCatalog()
-    spark.sql(s"CREATE NAMESPACE $cat.ods")
-    spark.sql(s"CREATE NAMESPACE $cat.mart")
-    spark.sql(s"CREATE TABLE $cat.ods.sw (k BIGINT, v BIGINT, s STRING)")
-    spark.sql(s"INSERT INTO $cat.ods.sw VALUES (1, 10, 'x'), (2, 20, 'y')")
-    spark.sql(s"CREATE MATERIALIZED VIEW $cat.mart.swm AS " +
-      s"SELECT s, count(*) AS n, sum(v) AS sv FROM $cat.ods.sw GROUP BY s")
-    // a full-directory swap restarts the journal incarnation: ids
-    // restart at 0 and the recorded position means nothing anymore
-    spark.sql(s"CALL $cat.system.compact('ods.sw')").collect()
-    spark.sql(s"INSERT INTO $cat.ods.sw VALUES (3, 30, 'x')")
-    val e = intercept[Exception] {
+    // two ways a base's recorded position stops meaning anything: a
+    // compact rewrites every file under a `replace` floor (the folded
+    // commits are no longer row-level history), and a drop + re-create
+    // restarts the journal incarnation (ids restart at 0)
+    Seq("compact", "drop + re-create").foreach { how =>
+      val (cat, _) = freshCatalog()
+      spark.sql(s"CREATE NAMESPACE $cat.ods")
+      spark.sql(s"CREATE NAMESPACE $cat.mart")
+      spark.sql(s"CREATE TABLE $cat.ods.sw (k BIGINT, v BIGINT, s STRING)")
+      spark.sql(s"INSERT INTO $cat.ods.sw VALUES (1, 10, 'x'), (2, 20, 'y')")
+      spark.sql(s"CREATE MATERIALIZED VIEW $cat.mart.swm AS " +
+        s"SELECT s, count(*) AS n, sum(v) AS sv FROM $cat.ods.sw GROUP BY s")
+      val why = how match {
+        case "compact" =>
+          spark.sql(s"CALL $cat.system.compact('ods.sw')").collect()
+          "no longer row-level servable"
+        case _ =>
+          spark.sql(s"DROP TABLE $cat.ods.sw")
+          spark.sql(s"CREATE TABLE $cat.ods.sw (k BIGINT, v BIGINT, s STRING)")
+          spark.sql(s"INSERT INTO $cat.ods.sw VALUES (1, 10, 'x'), (2, 20, 'y')")
+          "incarnation"
+      }
+      spark.sql(s"INSERT INTO $cat.ods.sw VALUES (3, 30, 'x')")
+      val e = intercept[Exception] {
+        spark.sql(s"CALL $cat.system.refresh_materialized_view(" +
+          "table => 'mart.swm')").collect()
+      }
+      assert(e.getMessage.contains("full => true") &&
+        e.getMessage.contains(why), s"$how: ${e.getMessage}")
+      // the re-bootstrap recovers and records the NEW position
+      spark.sql(s"CALL $cat.system.refresh_materialized_view(" +
+        "table => 'mart.swm', full => true)").collect()
+      assert(rows(spark.table(s"$cat.mart.swm")
+          .select(col("s"), col("n"), col("sv"))) ==
+        Set(("x", 2L, 40L), ("y", 1L, 20L)), how)
+      spark.sql(s"INSERT INTO $cat.ods.sw VALUES (4, 40, 'y')")
       spark.sql(s"CALL $cat.system.refresh_materialized_view(" +
         "table => 'mart.swm')").collect()
+      assert(rows(spark.table(s"$cat.mart.swm")
+          .select(col("s"), col("n"), col("sv"))) ==
+        Set(("x", 2L, 40L), ("y", 2L, 60L)), how)
     }
-    assert(e.getMessage.contains("full => true") &&
-      e.getMessage.contains("incarnation"), e.getMessage)
-    // the re-bootstrap recovers and records the NEW incarnation
-    spark.sql(s"CALL $cat.system.refresh_materialized_view(" +
-      "table => 'mart.swm', full => true)").collect()
-    assert(rows(spark.table(s"$cat.mart.swm")
-        .select(col("s"), col("n"), col("sv"))) ==
-      Set(("x", 2L, 40L), ("y", 1L, 20L)))
-    spark.sql(s"INSERT INTO $cat.ods.sw VALUES (4, 40, 'y')")
-    spark.sql(s"CALL $cat.system.refresh_materialized_view(" +
-      "table => 'mart.swm')").collect()
-    assert(rows(spark.table(s"$cat.mart.swm")
-        .select(col("s"), col("n"), col("sv"))) ==
-      Set(("x", 2L, 40L), ("y", 2L, 60L)))
   }
 
   test("feed-axis guard: a stream-axis base refuses CREATE and refresh (ADVICE r16 medium); sidecar survives the full-refresh swap (ADVICE r16 low)") {

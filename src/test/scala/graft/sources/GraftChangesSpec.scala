@@ -824,18 +824,19 @@ class GraftChangesSpec extends SparkSpec {
     spark.sql(s"CREATE NAMESPACE $cat.ods")
     spark.sql(s"CREATE TABLE $cat.ods.r (k BIGINT, v BIGINT)")
     spark.sql(s"INSERT INTO $cat.ods.r VALUES (1, 10)")
-    // the full replace swaps the directory — journal and all: history
-    // resets (Delta's overwrite-under-CDF posture, loud not silent)
+    // the full replace journals a `replace` floor: history at or below
+    // it is not row-level servable (Delta's overwrite-under-CDF
+    // posture, loud not silent)
     spark.sql(s"INSERT OVERWRITE $cat.ods.r VALUES (5, 50), (6, 60)")
     assert(spark.table(s"$cat.ods.r.changes").collect().isEmpty,
       "post-replace feed should be empty until the next commit")
-    // the next commit claims the replaced generation under a genesis
-    // floor: its rows are accounted but not row-level servable
+    // the replaced generation's rows are accounted by the floor record
+    // but not row-level servable
     spark.sql(s"INSERT INTO $cat.ods.r VALUES (7, 70)")
     val feed = spark.table(s"$cat.ods.r.changes")
       .select(col("_change_epoch"), col("k"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    assert(feed == Seq((1L, 7L)), s"post-replace feed: $feed")
+    assert(feed == Seq((2L, 7L)), s"post-replace feed: $feed")
     val e = intercept[Exception] {
       spark.table(s"$cat.ods.r.changes")
         .where(col("_change_epoch") >= 0).collect()
@@ -919,16 +920,27 @@ class GraftChangesSpec extends SparkSpec {
     assert(all.count(_._1 == 0L) == 2 && net1 == Map(2L -> -1),
       s"restart delivery: $all")
 
-    // a full replace swaps the journal: the checkpoint's history is
-    // gone — the restarted stream refuses loudly
+    // a full replace floors the feed above the checkpoint: the
+    // undelivered history is not row-level servable — the restarted
+    // stream refuses loudly
     spark.sql(s"INSERT OVERWRITE $cat.ods.s VALUES (9, 90)")
     spark.sql(s"INSERT INTO $cat.ods.s VALUES (8, 80)")
     val q3 = run()
     val e = intercept[Exception] { q3.processAllAvailable(); q3.stop() }
     def msgs(t: Throwable): Seq[String] =
       if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
-    assert(msgs(e).exists(_.contains("replaced")),
-      s"wrong replaced-journal refusal: ${msgs(e).mkString(" | ")}")
+    assert(msgs(e).exists(_.contains("no longer row-level servable")),
+      s"wrong floored-feed refusal: ${msgs(e).mkString(" | ")}")
+
+    // a dropped and re-created table starts a new journal: the
+    // checkpoint's history is gone — the restarted stream refuses
+    spark.sql(s"DROP TABLE $cat.ods.s")
+    spark.sql(s"CREATE TABLE $cat.ods.s (k BIGINT, v BIGINT)")
+    spark.sql(s"INSERT INTO $cat.ods.s VALUES (7, 70)")
+    val q4 = run()
+    val e4 = intercept[Exception] { q4.processAllAvailable(); q4.stop() }
+    assert(msgs(e4).exists(_.contains("replaced")),
+      s"wrong replaced-journal refusal: ${msgs(e4).mkString(" | ")}")
   }
 
   test("NOT NULL data column reads nullable through .changes: IS NULL finds the delete rows") {

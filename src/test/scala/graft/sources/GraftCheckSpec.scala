@@ -57,6 +57,40 @@ class GraftCheckSpec extends SparkSpec {
     assert(spark.table(s"$cat.ods.t").count() == 3)
   }
 
+  test("a full replace keeps the table's metadata and commit journal") {
+    val (cat, root) = freshCatalog()
+    spark.sql(s"CREATE NAMESPACE $cat.ods")
+    // delete_mode stands in for any durable property: CREATE keeps
+    // only the keys the catalog understands
+    spark.sql(s"CREATE TABLE $cat.ods.t (k BIGINT, bal BIGINT) " +
+      "TBLPROPERTIES ('constraints.check.c' = 'bal >= 0', " +
+      "'delete_mode' = 'copy-on-write')")
+    spark.sql(s"INSERT INTO $cat.ods.t VALUES (1, 1)")
+    spark.sql(s"INSERT OVERWRITE $cat.ods.t VALUES (2, 2)")
+    // the constraint still enforces after the replace
+    violates { spark.sql(s"INSERT INTO $cat.ods.t VALUES (3, -3)") }
+    spark.sql(s"INSERT INTO $cat.ods.t VALUES (3, 3)")
+    val props = spark.sql(s"SHOW TBLPROPERTIES $cat.ods.t").collect()
+      .map(_.getString(0)).toSet
+    assert(props.contains("delete_mode") && props.contains("constraints.check.c"),
+      s"properties after the replace: $props")
+    // the journal survives too: the replace is one more record
+    val kinds = spark.table(s"$cat.ods.t.commits").orderBy("commit_id")
+      .select(col("kind")).as[String].collect().toSeq
+    assert(kinds == Seq("append", "replace", "append"), s"commits: $kinds")
+
+    // the object API's full replace (the dimension-rebuild path)
+    val eng = graft.runtime.Catalog(spark, root)
+    eng.createOrReplaceByName(Seq((1L, "a")).toDF("k", "s"), "dds", "dim")
+    eng.createOrReplaceByName(Seq((2L, "b")).toDF("k", "s"), "dds", "dim")
+    val dim = new org.apache.hadoop.fs.Path(eng.path("dds", "dim"))
+    val fs = dim.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.exists(new org.apache.hadoop.fs.Path(dim, "_graft_meta")),
+      "the replace dropped the table's metadata sidecar")
+    assert(eng.table("dds", "dim").as[(Long, String)].collect().toSeq ==
+      Seq((2L, "b")))
+  }
+
   test("DDL validation: unknown column, non-boolean, nondeterministic, subquery all refuse") {
     val (cat, _) = freshCatalog()
     spark.sql(s"CREATE NAMESPACE $cat.ods")
