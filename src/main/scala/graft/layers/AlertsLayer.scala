@@ -4,7 +4,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.runtime.Catalog
+import graft.runtime.{Catalog, WriteMetrics}
 import graft.schema.Schemas
 
 /** alerts: threshold rules over window-derived daily rates, inserted
@@ -125,7 +125,8 @@ object AlertsLayer {
 
   /** Exactly-once insert: anti-join candidates against existing alerts on
     * (alert_date, country, alert_type) — the NOT EXISTS of
-    * alert_case_spike.sql:57-63 — then append.
+    * alert_case_spike.sql:57-63 — then append. Returns the number of
+    * alerts appended; a day without new alerts commits nothing.
     */
   def run(cat: Catalog, alertDate: String,
           fixedClock: Option[Timestamp] = None): Long =
@@ -134,7 +135,8 @@ object AlertsLayer {
   /** Multi-date form of [[run]]: one candidate pass + one anti-join
     * for every date in `dates` (the streaming sink's per-micro-batch
     * unit). Exactly-once semantics are identical — the dedup key is
-    * still (alert_date, country, alert_type).
+    * still (alert_date, country, alert_type). The candidate plan runs
+    * once, inside the append, which also counts the rows it writes.
     */
   def runDates(cat: Catalog, dates: Seq[String],
                fixedClock: Option[Timestamp] = None): Long = {
@@ -157,14 +159,9 @@ object AlertsLayer {
     val ts = fixedClock.map(lit(_)).getOrElse(current_timestamp())
     val toWrite = fresh.withColumn("created_at", ts)
       .select(Schemas.covidAlerts.fieldNames.map(col).toIndexedSeq: _*)
-    // Persist before count+append: the candidate plan (fact-wide window,
-    // broadcast dim join, anti-join) would otherwise execute twice.
-    toWrite.persist()
-    try {
-      val n = toWrite.count()
-      if (n > 0) cat.appendByName(toWrite, layer, table, partitionCols = Nil)
-      n
-    } finally toWrite.unpersist()
+    WriteMetrics.observed(toWrite, count(lit(1)).as("rows")) { alerts =>
+      cat.appendByName(alerts, layer, table, partitionCols = Nil)
+    }.getAs[Long]("rows")
   }
 
   /** C6: notification digest for a date — an HTML list of that day's

@@ -2,7 +2,7 @@ package graft.layers
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.runtime.Catalog
+import graft.runtime.{Catalog, WriteMetrics}
 
 /** dds layer: star schema — `dim_location` + `fact_covid`.
   *
@@ -10,13 +10,16 @@ import graft.runtime.Catalog
   *  - dim_location: deterministic sha-256 surrogate key over
   *    `upper(trim(country)) || year` (F10), `distinct()` dedup (A2),
   *    full `createOrReplace` rebuild each run (S7);
-  *  - fact: ods rows for the run date (P4, C3 short-circuit), enriched
-  *    with `report_year` (F11), LEFT-joined to the dim on the compound
+  *  - fact: ods rows for the run date (P4), enriched with
+  *    `report_year` (F11), LEFT-joined to the dim on the compound
   *    (country name, year) key (J1) — the dim is countries×years, so it
   *    is explicitly `broadcast()`: at 100 TB the fact side never
   *    shuffles for this join;
-  *  - join-miss audit counting null surrogate keys (J4, P5);
-  *  - idempotent dynamic partition overwrite on `report_date` (S6).
+  *  - idempotent dynamic partition overwrite on `report_date` (S6);
+  *  - empty-slice short-circuit (C3) and join-miss audit counting null
+  *    surrogate keys (J4, P5): the reference runs a count for each; here
+  *    both counts ride the fact write, and a zero-row write commits
+  *    nothing.
   */
 object DdsLayer {
   val layer = "dds"
@@ -47,8 +50,10 @@ object DdsLayer {
         col("ingestion_ts"))
   }
 
-  /** Returns Some(missingJoinCount) if the partition was written, None if
-    * the ods slice was empty (C3).
+  /** Returns Some(missingJoinCount) if the fact partition was written,
+    * None if the ods slice was empty (C3) or a source table is missing.
+    * Two query executions: the dim replace, then the fact overwrite
+    * with its row and missing-key counts observed on the written rows.
     */
   def run(cat: Catalog, reportDate: String): Option[Long] = {
     // No population source yet (the reference's DAG guarantees its seed
@@ -64,11 +69,13 @@ object DdsLayer {
     if (!cat.tableExists(OdsLayer.layer, OdsLayer.table)) return None
     val ods = cat.table(OdsLayer.layer, OdsLayer.table)
       .filter(col("report_date") === lit(reportDate).cast("date"))
-    if (ods.isEmpty) return None
-
-    val fact = buildFact(ods, cat.table(layer, dimTable))
-    val missing = fact.filter(col("location_key").isNull).count()
-    cat.overwritePartitionsByName(fact, layer, factTable, Seq("report_date"))
-    Some(missing)
+    val written = WriteMetrics.observed(
+        buildFact(ods, cat.table(layer, dimTable)),
+        count(lit(1)).as("rows"),
+        count_if(col("location_key").isNull).as("missing")) { fact =>
+      cat.overwritePartitionsByName(fact, layer, factTable, Seq("report_date"))
+    }
+    if (written.getAs[Long]("rows") == 0) None
+    else Some(written.getAs[Long]("missing"))
   }
 }

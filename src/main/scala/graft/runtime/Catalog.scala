@@ -66,11 +66,19 @@ final case class Catalog(spark: SparkSession, root: String,
   /** S2 — catalog table scan (partition columns inferred from layout).
     * Applies any merge-on-read deletion vectors ([[graft.sources.GraftDv]])
     * the SQL-catalog surface recorded for the same warehouse dir — the
-    * object API and the name path read one table state.
+    * object API and the name path read one table state. A table with
+    * no data file (a zero-row CTAS or full replace) has no file to infer
+    * a schema from: it reads by name, with the schema its sidecar keeps.
     */
   def read(layer: String, table: String): DataFrame = {
-    val df = spark.read.format(format).options(readOptions)
-      .load(path(layer, table))
+    val df =
+      try spark.read.format(format).options(readOptions).load(path(layer, table))
+      catch {
+        case e: org.apache.spark.sql.AnalysisException
+            if e.getCondition == "UNABLE_TO_INFER_SCHEMA" &&
+              tableExists(layer, table) =>
+          return this.table(layer, table)
+      }
     graft.sources.GraftEqDel.applyToPathRead(spark,
       graft.sources.GraftDv.applyToPathRead(spark, df,
         new org.apache.hadoop.fs.Path(path(layer, table))),
@@ -160,7 +168,9 @@ final case class Catalog(spark: SparkSession, root: String,
   /** Name-based partitioned append (S5 by name): clusters within write
     * partitions like [[append]], then routes through the session
     * catalog — CTAS on first write (which persists the schema + spec in
-    * the table sidecar), by-name-resolved append after.
+    * the table sidecar), by-name-resolved append after. A zero-row
+    * append into an existing table commits nothing (no journal record,
+    * no file); a zero-row CTAS still creates the table, empty.
     */
   def appendByName(df: DataFrame, layer: String, table: String,
                    partitionCols: Seq[String], sortCols: Seq[String] = Nil): Unit = {
@@ -187,6 +197,8 @@ final case class Catalog(spark: SparkSession, root: String,
     * [[graft.sources.GraftCommitLock.ConcurrentCommitException]] when a
     * touched partition gained or lost a data file or a deletion vector
     * while the replacement was computed; the live table is untouched.
+    * A zero-row `df` touches no partition and commits nothing; on a
+    * missing table the CTAS still creates it, empty.
     */
   def overwritePartitionsByName(df: DataFrame, layer: String, table: String,
                                 partitionCols: Seq[String]): Unit = {
@@ -205,7 +217,8 @@ final case class Catalog(spark: SparkSession, root: String,
     * to the catalog's truncate write
     * ([[graft.sources.GraftPartitionedCow.TruncateReplaceWrite]]), not
     * a drop+recreate RTAS — the table identity, properties, commit
-    * journal and version history survive.
+    * journal and version history survive. A zero-row `df` still
+    * commits: it empties the table and journals a `replace`.
     */
   def createOrReplaceByName(df: DataFrame, layer: String, table: String,
                             partitionCols: Seq[String] = Nil): Unit = {

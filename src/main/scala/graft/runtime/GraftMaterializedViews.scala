@@ -802,11 +802,12 @@ object GraftMaterializedViews {
         // ONE action materializes both feeds and returns both counts —
         // two separate .count() calls paid a second full per-statement
         // execution (plan + job scheduling) for a number the first
-        // pass already knew (guide §7.3 driver/fixed cost)
-        val counts = dF.select(fcount(lit(1)))
-          .unionAll(dD.select(fcount(lit(1))))
-          .collect().map(_.getLong(0))
-        val (nF, nD) = (counts(0), counts(1))
+        // pass already knew (guide §7.3 driver/fixed cost). Each side
+        // carries its own tag: a union promises no row order.
+        val counts = dF.select(lit("f"), fcount(lit(1)))
+          .unionAll(dD.select(lit("d"), fcount(lit(1))))
+          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+        val (nF, nD) = (counts("f"), counts("d"))
         def joined(l: DataFrame, r: DataFrame, signCol: Column)
             : DataFrame = {
           val cond = ds.joinKeys.map { case (fc, dc) =>

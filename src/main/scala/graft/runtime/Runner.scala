@@ -13,7 +13,10 @@ import graft.layers._
   *    persisted under `<root>/_state/cursor`;
   *  - C2: layer ordering ingest → raw → ods → dds → mart → alerts
   *    (`covid_to_s3.py:169-173`);
-  *  - C3: empty-input short-circuits inside the layers;
+  *  - C3: empty-input short-circuits without a probe: each layer's
+  *    write counts its own rows, a zero-row append or partition
+  *    overwrite commits nothing, and the mart runs only when the fact
+  *    write carried rows;
   *  - C5: alerts run for cursor − 1 day (`covid_alerts_dag.py:12`).
   *
   * Each run is an incremental load of exactly one `report_date`
@@ -47,8 +50,8 @@ final case class Runner(cat: Catalog, inputDir: String) {
       RawLayer.ingest(cat, csv, fixedClock)
     OdsLayer.run(cat, d, fixedClock)
     // dim_location rebuilds unconditionally (process_covid_dds.py rebuilds
-    // the dim before its empty-ODS check); only the fact/mart builds are
-    // gated on a non-empty ODS slice for the date.
+    // the dim before its empty-ODS check); the mart is gated on the fact
+    // write having carried rows for the date.
     if (DdsLayer.run(cat, d).isDefined)
       MartLayer.run(cat, d)
     // C5: the reference advances the cursor BEFORE triggering the alerts

@@ -1666,7 +1666,12 @@ private[sources] class GraftTable(
       override def onDataWriterCommit(m: WriterCommitMessage): Unit =
         b.onDataWriterCommit(m)
       override def commit(ms: Array[WriterCommitMessage]): Unit = {
-        b.commit(ms); refresh(scopeOf(ms, fullReplace), ms)
+        b.commit(ms)
+        val noop = w match {
+          case h: GraftPartitionedCow.HiveLayoutWrite => h.commitsNothing(ms)
+          case _ => false
+        }
+        if (!noop) refresh(scopeOf(ms, fullReplace), ms)
       }
       override def abort(ms: Array[WriterCommitMessage]): Unit = b.abort(ms)
     }
@@ -2546,8 +2551,13 @@ private[sources] final class GraftScanBuilder(delegate: FileScanBuilder,
   private var metaFields: Seq[org.apache.spark.sql.types.StructField] = Nil
 
   override def pruneColumns(requiredSchema: StructType): Unit = {
+    // a table column under a reserved name disables the preimage
+    // mirrors ([[GraftDeltaMor.metadataColumns]]): `_graft_pre_*` is
+    // then that table's own data, read by the delegate
+    val mirrors = !tableSchema.fieldNames.exists(GraftDeltaMor.isEngineMetaField)
     val (meta, data) = requiredSchema.fields.partition(f =>
-      GraftDeltaMor.isEngineMetaField(f.name))
+      GraftDeltaMor.isMetaField(f.name) ||
+        (mirrors && GraftDeltaMor.isPreField(f.name)))
     metaFields = meta.toSeq
     // preimage mirrors copy their SOURCE column's value per row — the
     // source must be in the delegate read even when the query itself
@@ -4818,7 +4828,9 @@ private[graft] object GraftPartitionedCow {
     * the target partition directories, commit publishes by rename and
     * retires whatever [[retired]] selects. Subclasses choose the
     * retirement policy — that is the entire difference between a
-    * copy-on-write replacement and a dynamic partition overwrite.
+    * copy-on-write replacement and a dynamic partition overwrite — and
+    * whether a write that staged no file commits at all
+    * ([[commitsEmpty]]).
     */
   sealed abstract class HiveLayoutWrite(
       spark: SparkSession, format: String, dataSchema: StructType,
@@ -4884,6 +4896,28 @@ private[graft] object GraftPartitionedCow {
       */
     protected def eqDeleteSafe: Boolean = false
 
+    /** Whether a write that staged no file still commits: a full
+      * replace and a row-level rewrite retire files even when they write
+      * no row. A zero-row append or dynamic partition overwrite changes
+      * nothing, so it commits nothing: no lock, no journal record, no
+      * maintenance.
+      */
+    protected def commitsEmpty: Boolean = true
+
+    private def stagedOf(messages: Array[WriterCommitMessage])
+        : Seq[(String, String, Long)] =
+      messages.toSeq.flatMap {
+        case CowTaskFiles(files, _, _) => files
+        case _ => Nil
+      }
+
+    /** True when [[commitsEmpty]] is off and no task staged a file:
+      * the commit is a no-op, and so is any refresh that follows it.
+      */
+    private[sources] def commitsNothing(
+        messages: Array[WriterCommitMessage]): Boolean =
+      !commitsEmpty && stagedOf(messages).isEmpty
+
     /** Writer-side bloom maintenance spec (r12 item 5): set by
       * [[GraftTable.withAutoAnalyze]] from the table's `bloom_columns`
       * properties before the write plans — the single chokepoint every
@@ -4909,6 +4943,7 @@ private[graft] object GraftPartitionedCow {
       }
 
       override def commit(messages: Array[WriterCommitMessage]): Unit = {
+        if (commitsNothing(messages)) return
         val fs = new Path(dir)
           .getFileSystem(spark.sparkContext.hadoopConfiguration)
         // the whole publish/retire sequence is one commit critical
@@ -4918,10 +4953,7 @@ private[graft] object GraftPartitionedCow {
         GraftCommitLock.withLock(fs, new Path(dir), "hive-layout-write") {
         if (!eqDeleteSafe)
           GraftEqDel.requireNone(fs, new Path(dir), description())
-        val staged = messages.toSeq.flatMap {
-          case CowTaskFiles(files, _, _) => files
-          case _ => Nil
-        }
+        val staged = stagedOf(messages)
         // phase 0 — the publish policy may DROP staged files instead of
         // publishing them (leaf-narrowed replace: a partition proven
         // pure-carryover keeps its ORIGINAL files and discards the
@@ -5212,7 +5244,8 @@ private[graft] object GraftPartitionedCow {
     * parallelism instead of funneling the day through one task; the
     * many-partitions case writes tasks×partitions files, the same trade
     * Spark's own dynamic-partition writer makes absent an explicit
-    * repartition.
+    * repartition. A write of zero rows touches no partition and commits
+    * nothing: no lock, no journal record, no maintenance.
     */
   final class DynamicOverwriteWrite(
       spark: SparkSession, format: String, dataSchema: StructType,
@@ -5223,6 +5256,7 @@ private[graft] object GraftPartitionedCow {
 
     override def description(): String = s"graft dynamic-overwrite $dir"
     override protected def journalKind: String = "overwrite"
+    override protected def commitsEmpty: Boolean = false
     override protected def pruneEmptied: Boolean = false
     override protected def sortedInput: Boolean = false
 
@@ -5255,7 +5289,8 @@ private[graft] object GraftPartitionedCow {
     * those keys (a bucket's rows must meet in one task to land in
     * one tagged file); an identity-only layout keeps the incoming
     * partitioning — no exchange, the full write parallelism of a
-    * single-partition daily append.
+    * single-partition daily append. A batch append of zero rows commits
+    * nothing: no lock, no journal record, no maintenance.
     */
   final class AppendWrite(
       spark: SparkSession, format: String, dataSchema: StructType,
@@ -5265,6 +5300,7 @@ private[graft] object GraftPartitionedCow {
       Nil, bucketSpec) with RequiresDistributionAndOrdering {
     override def description(): String = s"graft append $dir"
     override protected def journalKind: String = "append"
+    override protected def commitsEmpty: Boolean = false
     override def requiredDistribution(): Distribution =
       if (identityOnly(partitionCols, bucketSpec)) Distributions.unspecified()
       else clusteringOf(partitionCols, bucketSpec)
@@ -5293,8 +5329,9 @@ private[graft] object GraftPartitionedCow {
   /** Full replace (`INSERT OVERWRITE`, `.overwrite(lit(true))`,
     * `createOrReplace`, compaction and clustering rewrites): publish the
     * new generation, retire every pre-existing data file in the same
-    * commit. The table directory, its sidecars and its commit journal
-    * stay; the journal records a `replace` floor. The commit loses
+    * commit — also when the new generation has no rows. The table
+    * directory, its sidecars and its commit journal stay; the journal
+    * records a `replace` floor. The commit loses
     * ([[requireUnchanged]]) when any data file or deletion vector of
     * the table moved since build.
     *

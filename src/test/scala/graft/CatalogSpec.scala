@@ -143,6 +143,47 @@ class CatalogSpec extends SparkSpec {
     assert(cat.read("raw", "t2").select("k").as[String].collect().toSeq == Seq("c"))
   }
 
+  test("a zero-row append or partition overwrite commits nothing; a zero-row replace empties the table") {
+    val cat = Catalog(spark, tmpDir("cat"))
+    val fs = new org.apache.hadoop.fs.Path(cat.root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // every entry under the table directory — data files, sidecars,
+    // the journal, directories (a lock file would bump one's mtime)
+    def tree(table: String): Set[(String, Long, Long)] = {
+      def walk(p: org.apache.hadoop.fs.Path): Seq[(String, Long, Long)] =
+        fs.listStatus(p).toSeq.flatMap { st =>
+          val here = (st.getPath.toString, st.getLen, st.getModificationTime)
+          if (st.isDirectory) here +: walk(st.getPath) else Seq(here)
+        }
+      walk(new org.apache.hadoop.fs.Path(cat.path("ods", table))).toSet
+    }
+    def commits(table: String): Seq[String] =
+      spark.table(s"${cat.sqlIdent("ods", table)}.commits")
+        .select("commit_id", "kind").collect().map(_.toString).toSeq
+    val rows = Seq(("2020-01-22", 1L), ("2020-01-23", 2L)).toDF("d", "v")
+    val none = rows.filter(col("v") < 0)
+    cat.appendByName(rows, "ods", "a", Seq("d"))
+    cat.overwritePartitionsByName(rows, "ods", "o", Seq("d"))
+    cat.createOrReplaceByName(rows, "ods", "r", Seq("d"))
+
+    for ((table, write) <- Seq[(String, () => Unit)](
+        "a" -> (() => cat.appendByName(none, "ods", "a", Seq("d"))),
+        "o" -> (() => cat.overwritePartitionsByName(none, "ods", "o", Seq("d"))))) {
+      val (treeBefore, commitsBefore) = (tree(table), commits(table))
+      Thread.sleep(10) // a rewritten entry would show a later mtime
+      write()
+      assert(commits(table) == commitsBefore, table)
+      assert(tree(table) == treeBefore, table)
+      assert(cat.table("ods", table).count() == 2, table)
+    }
+
+    val replacesBefore = commits("r").count(_.contains("replace"))
+    cat.createOrReplaceByName(none, "ods", "r", Seq("d"))
+    assert(cat.table("ods", "r").count() == 0)
+    assert(cat.read("ods", "r").count() == 0)
+    assert(commits("r").count(_.contains("replace")) == replacesBefore + 1)
+  }
+
   test("co-bucketed tables sort-merge join with no exchange on either side") {
     val cat = Catalog(spark, tmpDir("bucketed-wh"))
     val fact = (0L until 1000L).map(i => (i % 50, i)).toDF("k", "v")

@@ -3,6 +3,12 @@ package graft
 import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 import java.time.LocalDate
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.sql.functions._
 import graft.layers._
 import graft.runtime.{Catalog, Runner}
@@ -144,5 +150,112 @@ class PipelineE2ESpec extends SparkSpec {
       .collect().map(_.toString).sorted.toSeq
     assert(martAfter == martBefore)
     assert(cat.read("alerts", "covid_alerts").count() == alertsBefore)
+  }
+
+  /** The session's successful query executions, in order. The listener
+    * bus delivers them asynchronously: [[during]] runs a marker query
+    * after the body and waits until the listener has seen it, and the
+    * bus delivers in order, so every execution of the body is in by
+    * then.
+    */
+  private final class ExecutionLog extends QueryExecutionListener {
+    private val seen =
+      new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    override def onSuccess(funcName: String, qe: QueryExecution,
+        durationNs: Long): Unit = seen.add(qe)
+    override def onFailure(funcName: String, qe: QueryExecution,
+        exception: Exception): Unit = ()
+
+    private def marker(qe: QueryExecution): Option[String] =
+      qe.analyzed.output.map(_.name).find(_.startsWith("execution_log_"))
+
+    private def drain(): Unit = {
+      val name = s"execution_log_${System.nanoTime()}"
+      spark.range(1).toDF(name).collect()
+      val deadline = System.nanoTime() + 60.seconds.toNanos
+      while (!seen.asScala.exists(marker(_).contains(name))) {
+        assert(System.nanoTime() < deadline, "listener bus did not drain")
+        Thread.sleep(5)
+      }
+    }
+
+    def during[T](body: => T): (T, Seq[QueryExecution]) = {
+      drain()
+      seen.clear()
+      val result = body
+      drain()
+      (result, seen.asScala.toSeq.filter(marker(_).isEmpty))
+    }
+  }
+
+  private def withExecutionLog[T](f: ExecutionLog => T): T = {
+    val log = new ExecutionLog
+    spark.listenerManager.register(log)
+    try f(log) finally spark.listenerManager.unregister(log)
+  }
+
+  /** Runs `body` on another thread and fails the test when it does not
+    * finish in time, instead of hanging the suite.
+    */
+  private def within[T](limit: FiniteDuration)(body: => T): T =
+    Await.result(Future(body), limit)
+
+  test("one query execution per layer write on a steady-state day") {
+    val (cat, _) = env
+    val d = "2020-01-24"
+    withExecutionLog { log =>
+      def actions[T](body: => T): (T, Seq[String]) = {
+        val (result, runs) = log.during(body)
+        (result, runs.map(_.logical.nodeName))
+      }
+      val (written, ods) = actions(OdsLayer.run(cat, d, clock))
+      assert(written)
+      assert(ods.size == 1)
+      val (missing, dds) = actions(DdsLayer.run(cat, d))
+      assert(missing.contains(0L))
+      assert(dds.size == 2) // dim replace, fact overwrite
+      val (_, alerts) = actions(AlertsLayer.run(cat, d, clock))
+      assert(alerts.size == 1)
+    }
+  }
+
+  test("alerts over no dates append nothing and return 0") {
+    val (cat, _) = env
+    val before = cat.read("alerts", "covid_alerts").count()
+    assert(within(2.minutes)(AlertsLayer.runDates(cat, Nil, clock)) == 0L)
+    assert(cat.read("alerts", "covid_alerts").count() == before)
+  }
+
+  test("a write that fails rethrows its error without waiting for its metrics") {
+    val e = intercept[Exception](within(2.minutes)(
+      graft.runtime.WriteMetrics.observed(spark.range(3).toDF("x"),
+        count(lit(1)).as("rows"))(_.select(raise_error(lit("boom"))).collect())))
+    assert(e.getMessage.contains("boom"))
+  }
+
+  test("an empty day commits nothing to ods, fact, mart or alerts and skips the mart (C3)") {
+    val (cat, runner) = env
+    val empty = LocalDate.parse("2020-01-25")
+    writeCsv(runner.inputDir, s"$empty.csv",
+      Seq("Province/State,Country/Region,Last Update,Confirmed,Deaths,Recovered"))
+    val tables = Seq("ods" -> "daily_country_stats", "dds" -> "fact_covid",
+      "data_mart" -> "covid_analytics", "alerts" -> "covid_alerts")
+    def commits(layer: String, table: String): Seq[String] =
+      spark.table(s"${cat.sqlIdent(layer, table)}.commits")
+        .collect().map(_.toString).toSeq
+    def content(layer: String, table: String): Seq[String] =
+      cat.read(layer, table).collect().map(_.toString).sorted.toSeq
+    val before = tables.map { case (l, t) => (commits(l, t), content(l, t)) }
+
+    val (_, executions) = withExecutionLog(log =>
+      log.during(within(5.minutes)(runner.runDay(empty, clock))))
+
+    tables.zip(before).foreach { case ((l, t), (c, rows)) =>
+      assert(commits(l, t) == c, s"$l.$t gained a commit")
+      assert(content(l, t) == rows, s"$l.$t changed")
+    }
+    // no execution of the day's run plans the mart's write
+    assert(!executions.exists(_.analyzed.toString.contains(MartLayer.table)),
+      executions.map(_.analyzed.nodeName))
   }
 }

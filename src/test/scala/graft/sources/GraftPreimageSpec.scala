@@ -169,4 +169,23 @@ class GraftPreimageSpec extends SparkSpec {
     }
     assert(ex.getMessage != null)
   }
+
+  test("a table column named like a preimage mirror reads its stored values") {
+    val (cat, _) = freshCatalog()
+    spark.sql(s"CREATE NAMESPACE $cat.ods")
+    spark.sql(s"CREATE TABLE $cat.ods.u (k BIGINT, note STRING, " +
+      "_graft_pre_note STRING, _graft_pre_gone STRING)")
+    spark.sql(s"INSERT INTO $cat.ods.u VALUES " +
+      "(1, 'n1', 'stored1', 'g1'), (2, 'n2', 'stored2', 'g2')")
+    def read(cols: String): Set[Row] =
+      spark.sql(s"SELECT $cols FROM $cat.ods.u").collect().toSet
+    // a mirror of `note` would copy note's values; `gone` has no
+    // source column at all
+    assert(read("k, _graft_pre_note") ==
+      Set(Row(1L, "stored1"), Row(2L, "stored2")))
+    assert(read("_graft_pre_note, _graft_pre_gone") ==
+      Set(Row("stored1", "g1"), Row("stored2", "g2")))
+    assert(read("k, note, _graft_pre_note") ==
+      Set(Row(1L, "n1", "stored1"), Row(2L, "n2", "stored2")))
+  }
 }
