@@ -9,7 +9,8 @@ import graft.runtime.{Catalog, WriteMetrics}
   * Re-expresses `process_covid_dds.py:32-93`:
   *  - dim_location: deterministic sha-256 surrogate key over
   *    `upper(trim(country)) || year` (F10), `distinct()` dedup (A2),
-  *    full `createOrReplace` rebuild each run (S7);
+  *    full `createOrReplace` rebuild (S7) — skipped when the
+  *    population table has not committed since the last rebuild;
   *  - fact: ods rows for the run date (P4), enriched with
   *    `report_year` (F11), LEFT-joined to the dim on the compound
   *    (country name, year) key (J1) — the dim is countries×years, so it
@@ -52,8 +53,9 @@ object DdsLayer {
 
   /** Returns Some(missingJoinCount) if the fact partition was written,
     * None if the ods slice was empty (C3) or a source table is missing.
-    * Two query executions: the dim replace, then the fact overwrite
-    * with its row and missing-key counts observed on the written rows.
+    * One or two query executions: the dim replace when the population
+    * moved since the last one, then the fact overwrite with its row
+    * and missing-key counts observed on the written rows.
     */
   def run(cat: Catalog, reportDate: String): Option[Long] = {
     // No population source yet (the reference's DAG guarantees its seed
@@ -61,10 +63,17 @@ object DdsLayer {
     // build, and crashing the whole day-run would block the raw/ods
     // layers that don't need the dim.
     if (!cat.tableExists(PopulationLayer.layer, PopulationLayer.table)) return None
-    // Rebuilt unconditionally, matching process_covid_dds.py:41-44 (the
-    // reference rebuilds the dim before its empty-ODS short-circuit).
-    val dim = buildDim(cat.table(PopulationLayer.layer, PopulationLayer.table))
-    cat.createOrReplaceByName(dim, layer, dimTable)
+    // The reference rebuilds the dim every run, before its empty-ODS
+    // short-circuit (process_covid_dds.py:41-44). The rebuild notes the
+    // population commit it read; while that is the population's newest
+    // commit and the dim's newest commit is that rebuild, a rebuild
+    // would write the same rows, so it is skipped.
+    val built = cat.lastCommit(PopulationLayer.layer, PopulationLayer.table)
+      .map(c => s"population:c${c.id}@${c.ts}")
+    if (built.isEmpty || cat.lastCommit(layer, dimTable).map(_.note) != built) {
+      val dim = buildDim(cat.table(PopulationLayer.layer, PopulationLayer.table))
+      cat.createOrReplaceByName(dim, layer, dimTable, note = built.getOrElse(""))
+    }
 
     if (!cat.tableExists(OdsLayer.layer, OdsLayer.table)) return None
     val ods = cat.table(OdsLayer.layer, OdsLayer.table)

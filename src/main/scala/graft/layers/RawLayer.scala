@@ -13,7 +13,9 @@ import graft.schema.Schemas
   * inferSchema (S1), drift normalization to the 14-field target (P1/P2),
   * lineage columns `source_file` + `ingestion_ts` (P3), then a partitioned
   * append clustered by country (S5: `sortWithinPartitions("Country_Region")`,
-  * partitioned by `Country_Region`).
+  * partitioned by `Country_Region`) whose commit notes its source file,
+  * so a re-run day's already-ingested probe reads the commit journal
+  * instead of the raw rows.
   *
   * `fixedClock` substitutes a deterministic timestamp for
   * `current_timestamp()` so tests and oracles can hash results
@@ -27,11 +29,26 @@ object RawLayer {
     * relies on its forward-only cursor to never re-ingest
     * (`covid_to_s3.py:83-88`); we enforce the same effect explicitly so
     * a re-run of any day is idempotent end-to-end.
+    *
+    * Every ingest notes its source on its commit ([[noteOf]]), so when
+    * each live raw file was added by such a commit the journal answers
+    * on the driver, without a Spark job. Otherwise — a bulk load, a
+    * table written before ingests carried notes, a compacted table —
+    * the raw rows are scanned for the source file.
     */
   def alreadyIngested(cat: Catalog, csvPath: String): Boolean =
-    cat.tableExists(layer, table) &&
-      !cat.table(layer, table)
-        .where(col("source_file") === csvPath).limit(1).isEmpty
+    cat.tableExists(layer, table) && (
+      cat.liveFileNotes(layer, table)
+        .filter(_.forall(_.startsWith(NotePrefix))) match {
+        case Some(notes) => notes.contains(noteOf(csvPath))
+        case None => !cat.table(layer, table)
+          .where(col("source_file") === csvPath).limit(1).isEmpty
+      })
+
+  private val NotePrefix = "ingest:"
+
+  /** The commit note of an ingest of `sourcePath`. */
+  private def noteOf(sourcePath: String): String = NotePrefix + sourcePath
 
   def ingest(cat: Catalog, csvPath: String,
              fixedClock: Option[Timestamp] = None): Unit = {
@@ -80,6 +97,6 @@ object RawLayer {
       .withColumn("ingestion_ts", ts)
     cat.appendByName(finalDf, layer, table,
       partitionCols = Seq("Country_Region"),
-      sortCols = Seq("Country_Region"))
+      sortCols = Seq("Country_Region"), note = noteOf(sourcePath))
   }
 }

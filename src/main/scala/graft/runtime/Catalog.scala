@@ -147,11 +147,36 @@ final case class Catalog(spark: SparkSession, root: String,
     * stream's cloned session, which lacks a binding made after the
     * stream started — so the binding is carried into that session.
     */
-  private def writerFor(df: DataFrame, layer: String, table: String) = {
+  private def writerFor(df: DataFrame, layer: String, table: String,
+                        note: String = "") = {
     require(bind(df.sparkSession, sqlName),
       s"session catalog $sqlName is bound to a different root in the " +
         "DataFrame's session")
-    df.writeTo(sqlIdent(layer, table))
+    val w = df.writeTo(sqlIdent(layer, table))
+    if (note.isEmpty) w else w.option(graft.sources.GraftCommits.NoteOption, note)
+  }
+
+  /** The record of the table's newest commit — None when the table has
+    * no journal or that record was expired. A driver-side journal read,
+    * no Spark job.
+    */
+  private[graft] def lastCommit(layer: String, table: String)
+      : Option[graft.sources.GraftCommits.Rec] =
+    journalHead(layer, table).flatMap(_.last)
+
+  /** The notes of the commits that added the table's live files, one
+    * per live file ("" for a commit without one) — None when the table
+    * has no journal. A driver-side journal read, no Spark job.
+    */
+  private[graft] def liveFileNotes(layer: String, table: String)
+      : Option[Seq[String]] =
+    journalHead(layer, table).map(h =>
+      h.live.values.toSeq.map(id => h.notes.getOrElse(id, "")))
+
+  private def journalHead(layer: String, table: String) = {
+    val p = new org.apache.hadoop.fs.Path(path(layer, table))
+    graft.sources.GraftCommits.head(
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
   /** Fully-qualified SQL identifier for a table of this warehouse. */
@@ -170,14 +195,16 @@ final case class Catalog(spark: SparkSession, root: String,
     * catalog — CTAS on first write (which persists the schema + spec in
     * the table sidecar), by-name-resolved append after. A zero-row
     * append into an existing table commits nothing (no journal record,
-    * no file); a zero-row CTAS still creates the table, empty.
+    * no file); a zero-row CTAS still creates the table, empty. A
+    * non-empty `note` is recorded on the commit ([[liveFileNotes]]).
     */
   def appendByName(df: DataFrame, layer: String, table: String,
-                   partitionCols: Seq[String], sortCols: Seq[String] = Nil): Unit = {
+                   partitionCols: Seq[String], sortCols: Seq[String] = Nil,
+                   note: String = ""): Unit = {
     val clustered =
       if (sortCols.nonEmpty) df.sortWithinPartitions(sortCols.head, sortCols.tail: _*)
       else df
-    val w = writerFor(clustered, layer, table)
+    val w = writerFor(clustered, layer, table, note)
     if (tableExists(layer, table)) w.append()
     else {
       ensureNamespace(layer)
@@ -218,11 +245,13 @@ final case class Catalog(spark: SparkSession, root: String,
     * ([[graft.sources.GraftPartitionedCow.TruncateReplaceWrite]]), not
     * a drop+recreate RTAS — the table identity, properties, commit
     * journal and version history survive. A zero-row `df` still
-    * commits: it empties the table and journals a `replace`.
+    * commits: it empties the table and journals a `replace`. A
+    * non-empty `note` is recorded on the commit ([[lastCommit]]).
     */
   def createOrReplaceByName(df: DataFrame, layer: String, table: String,
-                            partitionCols: Seq[String] = Nil): Unit = {
-    val w = writerFor(df, layer, table)
+                            partitionCols: Seq[String] = Nil,
+                            note: String = ""): Unit = {
+    val w = writerFor(df, layer, table, note)
     if (tableExists(layer, table))
       w.overwrite(org.apache.spark.sql.functions.lit(true))
     else {
@@ -1037,12 +1066,15 @@ final case class Catalog(spark: SparkSession, root: String,
         GraftCommitLock.withLock(fs, base, s"merge-drop:$layer.$table") {
           // tombstoned, not deleted: a reader that planned before this
           // commit still finds its files ([[GraftRetired]])
+          // commit ([[GraftCommits]]): the record first, naming the
+          // tombstone the retire then fills
           val gone = emptied.flatMap(dataFiles(fs, _)).map(_.getPath)
-          val tomb = GraftRetired.retireFiles(fs, base, gone)
-          GraftDv.dropFor(fs, base, gone)
-          GraftCommits.tryRecord(fs, base, "delete", adds = Nil,
+          val tomb = GraftRetired.newCommitDir(base)
+          GraftCommits.record(fs, base, "delete", adds = Nil,
             removes = gone.map(g => GraftCommits.Remove(
-              GraftCommits.relOf(fs, base, g), tomb.getOrElse(""))))
+              GraftCommits.relOf(fs, base, g), tomb.getName)))
+          GraftRetired.retireFilesInto(fs, base, gone, tomb)
+          GraftDv.dropFor(fs, base, gone)
           emptied.foreach { leaf =>
             var d = leaf
             while (d != base && d.getName.contains("=") && fs.exists(d) &&

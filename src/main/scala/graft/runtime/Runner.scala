@@ -16,7 +16,9 @@ import graft.layers._
   *  - C3: empty-input short-circuits without a probe: each layer's
   *    write counts its own rows, a zero-row append or partition
   *    overwrite commits nothing, and the mart runs only when the fact
-  *    write carried rows;
+  *    write carried rows. The commit journal answers the rest: a
+  *    re-run day's raw file is found by its ingest note, and an
+  *    unchanged population skips the dim rebuild;
   *  - C5: alerts run for cursor − 1 day (`covid_alerts_dag.py:12`).
   *
   * Each run is an incremental load of exactly one `report_date`
@@ -49,9 +51,10 @@ final case class Runner(cat: Catalog, inputDir: String) {
     if (csvPath.getFileSystem(cat.spark.sparkContext.hadoopConfiguration).exists(csvPath))
       RawLayer.ingest(cat, csv, fixedClock)
     OdsLayer.run(cat, d, fixedClock)
-    // dim_location rebuilds unconditionally (process_covid_dds.py rebuilds
-    // the dim before its empty-ODS check); the mart is gated on the fact
-    // write having carried rows for the date.
+    // dim_location rebuilds before the empty-ODS check, as
+    // process_covid_dds.py does, unless the population has not committed
+    // since the last rebuild; the mart is gated on the fact write having
+    // carried rows for the date.
     if (DdsLayer.run(cat, d).isDefined)
       MartLayer.run(cat, d)
     // C5: the reference advances the cursor BEFORE triggering the alerts

@@ -15,6 +15,7 @@ import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.metric.{CustomMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read.{Batch, Scan, ScanBuilder, Statistics, SupportsPushDownAggregates, SupportsPushDownRequiredColumns, SupportsPushDownVariantExtractions, SupportsReportStatistics, SupportsRuntimeV2Filtering, VariantExtraction}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, SupportsDynamicOverwrite, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
+import org.apache.spark.sql.execution.datasources.PartitioningAwareFileIndex
 import org.apache.spark.sql.execution.datasources.v2.{FileScan, FileScanBuilder, FileTable}
 import org.apache.spark.sql.types.{DataType, DecimalType, DoubleType, FloatType, IntegerType, LongType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -697,19 +698,13 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   }
 
   private val durableKeys =
-    Seq(GraftDv.ModeKey, "bloom_columns", "bloom_fpp", "ndv_columns",
-      GraftManifestListing.Prop) ++
+    Seq(GraftDv.ModeKey, "bloom_columns", "bloom_fpp", "ndv_columns") ++
       GraftMaintenance.Keys
 
   /** Validate one durable table property (CREATE and ALTER share it). */
   private def validateDurableProp(key: String, value: String,
       format: String, schema: Option[StructType],
       partitionCols: Seq[String] = Nil): Unit = key match {
-    case GraftManifestListing.Prop =>
-      require(value == "true" || value == "false",
-        s"${GraftManifestListing.Prop} must be true or false, got '$value'")
-      require(value != "true" || format == "parquet",
-        s"${GraftManifestListing.Prop} needs parquet; format is $format")
     case GraftDv.ModeKey =>
       require(value == GraftDv.CowValue || value == GraftDv.MorValue,
         s"${GraftDv.ModeKey} must be '${GraftDv.CowValue}' or " +
@@ -1183,7 +1178,10 @@ private[sources] object GraftTableMeta {
 }
 
 /** One table of the [[GraftCatalog]]: reads delegate to Spark's file
-  * table for the format (full DSv2 pushdown/pruning tiers), DML writes
+  * table for the format (full DSv2 pushdown/pruning tiers) over the
+  * commit journal's file list ([[GraftManifestListing]] — once the
+  * table has a journal, no read lists a data directory while no commit
+  * holds its lock), DML writes
   * route through [[graft.runtime.Catalog]]'s crash-safe protocols, and
   * MERGE/UPDATE/DELETE implement group-based copy-on-write row-level
   * operations:
@@ -1206,12 +1204,12 @@ private[sources] object GraftTableMeta {
   *    within the scanned partitions — `MERGE INTO` cost bounded by
   *    touched partitions, the reference's incremental unit
   *    (`overwritePartitions()`, process_covid_ods.py:87), now as SQL.
-  *    A crash between publish and retirement leaves duplicate rows —
-  *    visible, repairable (delete the old-generation files), never
-  *    silent data loss — the same contract as the unpartitioned path.
+  *    The commit's journal record comes between publish and retirement
+  *    and is the commit: a crash before it leaves published files no
+  *    read plans, a crash after it superseded files no read plans.
   *
   * Scale: every path is a distributed job; the only driver-side work is
-  * directory bookkeeping (file listing, renames) — never row data.
+  * metadata bookkeeping (journal records, renames) — never row data.
   */
 private[sources] class GraftTable(
     spark: SparkSession, catalogName: String, root: String, format: String,
@@ -1264,34 +1262,63 @@ private[sources] class GraftTable(
   /** Fresh delegate per call: file listings must see the current
     * directory state, not the state at table-load time.
     */
-  private def delegate: FileTable = {
+  private def delegate: FileTable = delegateOver(None)
+
+  /** The journal's file index at its head ([[GraftManifestListing]]),
+    * or None when this table plans from a listing: a time-travel
+    * snapshot, a table with no journal yet, one with live stream
+    * artifacts, or one whose commit lock is held.
+    */
+  private def journalIndex: Option[PartitioningAwareFileIndex] =
+    if (readOnly) None
+    else GraftManifestListing.index(spark, new Path(dir), readOptions,
+      meta.schema)
+
+  /** The delegate scans plan from: over the journal's file index when
+    * there is one, else over a listing.
+    */
+  private def scanDelegate: FileTable = delegateOver(journalIndex)
+
+  private def delegateOver(idx: Option[PartitioningAwareFileIndex])
+      : FileTable = {
     val opts = new CaseInsensitiveStringMap(readOptions.asJava)
     val paths = Seq(dir)
-    format match {
-      case "parquet" =>
-        org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable(
-          name(), spark, opts, paths, meta.schema,
-          classOf[org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat])
-      case "orc" =>
-        org.apache.spark.sql.execution.datasources.v2.orc.OrcTable(
-          name(), spark, opts, paths, meta.schema,
-          classOf[org.apache.spark.sql.execution.datasources.orc.OrcFileFormat])
-      case "csv" =>
-        org.apache.spark.sql.execution.datasources.v2.csv.CSVTable(
-          name(), spark, opts, paths, meta.schema,
-          classOf[org.apache.spark.sql.execution.datasources.csv.CSVFileFormat])
-      case "json" =>
-        org.apache.spark.sql.execution.datasources.v2.json.JsonTable(
-          name(), spark, opts, paths, meta.schema,
-          classOf[org.apache.spark.sql.execution.datasources.json.JsonFileFormat])
-      case other => throw new IllegalStateException(s"unreachable format $other")
+    import org.apache.spark.sql.execution.datasources.{csv, json, orc, parquet}
+    import org.apache.spark.sql.execution.datasources.v2.{csv => csv2, json => json2, orc => orc2, parquet => parquet2}
+    (format, idx) match {
+      case ("parquet", None) => parquet2.ParquetTable(name(), spark, opts,
+        paths, meta.schema, classOf[parquet.ParquetFileFormat])
+      case ("parquet", Some(i)) => new parquet2.ParquetTable(name(), spark,
+          opts, paths, meta.schema, classOf[parquet.ParquetFileFormat]) {
+        override lazy val fileIndex: PartitioningAwareFileIndex = i
+      }
+      case ("orc", None) => orc2.OrcTable(name(), spark, opts, paths,
+        meta.schema, classOf[orc.OrcFileFormat])
+      case ("orc", Some(i)) => new orc2.OrcTable(name(), spark, opts, paths,
+          meta.schema, classOf[orc.OrcFileFormat]) {
+        override lazy val fileIndex: PartitioningAwareFileIndex = i
+      }
+      case ("csv", None) => csv2.CSVTable(name(), spark, opts, paths,
+        meta.schema, classOf[csv.CSVFileFormat])
+      case ("csv", Some(i)) => new csv2.CSVTable(name(), spark, opts, paths,
+          meta.schema, classOf[csv.CSVFileFormat]) {
+        override lazy val fileIndex: PartitioningAwareFileIndex = i
+      }
+      case ("json", None) => json2.JsonTable(name(), spark, opts, paths,
+        meta.schema, classOf[json.JsonFileFormat])
+      case ("json", Some(i)) => new json2.JsonTable(name(), spark, opts,
+          paths, meta.schema, classOf[json.JsonFileFormat]) {
+        override lazy val fileIndex: PartitioningAwareFileIndex = i
+      }
+      case (other, _) =>
+        throw new IllegalStateException(s"unreachable format $other")
     }
   }
 
   override def name(): String = s"$catalogName.$layer.$table"
 
   override def schema(): StructType =
-    meta.schema.getOrElse(delegate.schema)
+    meta.schema.getOrElse(scanDelegate.schema)
 
   /** ANCHOR partition columns: the spec prefix EVERY file era shares —
     * what reads expose as the partition schema and prune directories
@@ -1299,7 +1326,7 @@ private[sources] class GraftTable(
     */
   private def anchorPartitionCols: Seq[String] =
     if (meta.partitionCols.nonEmpty) meta.partitionCols
-    else delegate.partitioning().toSeq.collect {
+    else scanDelegate.partitioning().toSeq.collect {
       case t if t.name == "identity" =>
         t.references().head.fieldNames.mkString(".")
     }
@@ -1393,12 +1420,14 @@ private[sources] class GraftTable(
         GraftCommitLock.withLock(pmFs, new Path(dir), "drop-partition") {
           val rels = listDataFiles(pmFs, p)
             .map(GraftCommits.relOf(pmFs, new Path(dir), _))
-          val tomb = GraftRetired.retireFiles(pmFs, new Path(dir), Seq(p))
+          // the record comes first and names the tombstone the retire
+          // then fills
+          val tomb = GraftRetired.newCommitDir(new Path(dir))
           if (rels.nonEmpty)
-            GraftCommits.tryRecord(pmFs, new Path(dir), "delete",
+            GraftCommits.record(pmFs, new Path(dir), "delete",
               adds = Nil,
-              removes = rels.map(
-                GraftCommits.Remove(_, tomb.getOrElse(""))))
+              removes = rels.map(GraftCommits.Remove(_, tomb.getName)))
+          GraftRetired.retireFilesInto(pmFs, new Path(dir), Seq(p), tomb)
         }
         true
       }
@@ -1480,17 +1509,10 @@ private[sources] class GraftTable(
     * rebuilt delegate scan. PartitionPruningSpec pins the behavior.
     */
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    // manifest-served scan planning (r14 item 4, opt-in): when the
-    // listing census proves current, the delegate scan builder plans
-    // over synthesized statuses — zero data-directory listings
-    val manifestFsb: Option[FileScanBuilder] =
-      if (format == "parquet" && !readOnly && meta.evolvedCols.isEmpty &&
-          meta.schema.isDefined &&
-          meta.props.get(GraftManifestListing.Prop).contains("true"))
-        GraftManifestListing.scanBuilder(spark, new Path(dir),
-          meta.schema.get, anchorPartitionCols, options)
-      else None
-    manifestFsb.getOrElse(delegate.newScanBuilder(options)) match {
+    // the journal is the file list ([[GraftManifestListing]]); only a
+    // table planned from a listing pins it to the journal
+    val idx = journalIndex
+    delegateOver(idx).newScanBuilder(options) match {
       case fsb: FileScanBuilder =>
         // data-skipping tier: planned splits are pruned against the
         // _graft_stats manifest (when one exists) — see [[GraftStats]]
@@ -1511,7 +1533,7 @@ private[sources] class GraftTable(
               maxBytesPerTrigger = mbt, ignoreDeletes = ignoreDel,
               renameAliases = meta.renameAliases,
               evolvedCols = meta.evolvedCols,
-              pinToJournal = !readOnly)
+              pinToJournal = !readOnly && idx.isEmpty)
           case None =>
             new GraftScanBuilder(fsb, statsDir = stats,
               tableSchema = schema(), partitionSchema = pSchema,
@@ -1519,7 +1541,7 @@ private[sources] class GraftTable(
               maxFilesPerTrigger = mft, maxBytesPerTrigger = mbt,
               renameAliases = meta.renameAliases,
               evolvedCols = meta.evolvedCols,
-              pinToJournal = !readOnly)
+              pinToJournal = !readOnly && idx.isEmpty)
         }
       case other => other
     }
@@ -1810,7 +1832,7 @@ private[sources] class GraftTable(
       }
 
       override def build(): Write = {
-        withAutoAnalyze(withUpsert(mode match {
+        val write = mode match {
           // OVERWRITE_DYNAMIC is declared unconditionally in capabilities,
           // so with partitionOverwriteMode=dynamic set SESSION-WIDE Spark
           // plans OverwritePartitionsDynamic for ANY insert-overwrite —
@@ -1839,7 +1861,10 @@ private[sources] class GraftTable(
           case _ =>
             new GraftPartitionedCow.AppendWrite(spark, format, info.schema(),
               dir, effectivePartitionCols, meta.bucketSpec, info.queryId())
-        }))
+        }
+        Option(info.options.get(GraftCommits.NoteOption)).foreach(n =>
+          write.commitNote = n)
+        withAutoAnalyze(withUpsert(write))
       }
 
       private def oldFiles(): Seq[Path] = listDataFiles(
@@ -1849,7 +1874,7 @@ private[sources] class GraftTable(
       /** Staged-invisible full replace, archiving the replaced state as
         * a version when the catalog retains versions.
         */
-      private def buildReplace(): Write =
+      private def buildReplace(): GraftPartitionedCow.HiveLayoutWrite =
         new GraftPartitionedCow.TruncateReplaceWrite(spark, format,
           info.schema(), dir, effectivePartitionCols, oldFiles(),
           meta.bucketSpec,
@@ -2032,7 +2057,7 @@ private[sources] class GraftTable(
         * by construction — see [[GraftRuntimeFilterScan.filter]]).
         */
       override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-        val inner = delegate.newScanBuilder(options)
+        val inner = scanDelegate.newScanBuilder(options)
         // The ONE static pushdown this scan accepts: filters whose
         // references are ALL partition columns. Those drop whole GROUPS
         // (a partition-column predicate can never split a partition),
@@ -2220,11 +2245,12 @@ private[sources] class GraftTable(
           // directory renames move them (rel layout is preserved)
           val goneRels = tops.flatMap(listDataFiles(fs, _))
             .map(GraftCommits.relOf(fs, new Path(dir), _))
-          val tomb = GraftRetired.retireFiles(fs, new Path(dir), tops)
-          GraftCommits.tryRecord(fs, new Path(dir), "delete",
+          // recorded before the retire, naming the tombstone it fills
+          val tomb = GraftRetired.newCommitDir(new Path(dir))
+          GraftCommits.record(fs, new Path(dir), "delete",
             adds = Nil,
-            removes = goneRels.map(
-              GraftCommits.Remove(_, tomb.getOrElse(""))))
+            removes = goneRels.map(GraftCommits.Remove(_, tomb.getName)))
+          GraftRetired.retireFilesInto(fs, new Path(dir), tops, tomb)
         }
         GraftDv.dropAll(fs, new Path(dir))
         GraftEqDel.clearAll(fs, new Path(dir)) // rows gone = deletes moot
@@ -2268,22 +2294,18 @@ private[sources] class GraftTable(
       // ([[GraftRetired]]), never deleted at commit: an in-flight
       // reader that planned before this DELETE re-resolves its files
       // under the retired copy's preserved relative layout. Absent
-      // directories are already-satisfied deletes (idempotent); each
-      // drop is one atomic rename, so a crash mid-way leaves a prefix
-      // retired and a re-run converges.
+      // directories are already-satisfied deletes (idempotent). The
+      // record precedes the renames, so a crash mid-way leaves the
+      // delete committed with a prefix retired; the rest is no longer
+      // served, and a re-run retires it.
       // ONE tombstone commit dir for the whole walk, so the journal
       // record's removes all resolve under a single preserved layout
-      lazy val tombDir = GraftRetired.newCommitDir(new Path(dir))
-      var tombUsed = false
-      val goneRels = Seq.newBuilder[String]
+      val base = fs.makeQualified(new Path(dir))
+      val tombDir = GraftRetired.newCommitDir(base)
+      val drops = Seq.newBuilder[Path]
       def walk(d: Path, level: Int): Unit = {
         if (!parts.drop(level).exists(constraints.contains)) {
-          if (fs.exists(d)) {
-            goneRels ++= listDataFiles(fs, d)
-              .map(GraftCommits.relOf(fs, new Path(dir), _))
-            GraftRetired.retireFilesInto(fs, new Path(dir), Seq(d), tombDir)
-            tombUsed = true
-          }
+          if (fs.exists(d)) drops += d
         } else if (level < parts.length) {
           val col = parts(level)
           val children = constraints.get(col) match {
@@ -2298,20 +2320,29 @@ private[sources] class GraftTable(
                 .map(_.getPath)
           }
           children.foreach(walk(_, level + 1))
-          // a parent emptied by its children's deletion goes too, so
-          // the layout never accumulates hollow year=/month= shells
-          if (level > 0 && fs.exists(d) && fs.listStatus(d).isEmpty)
-            fs.delete(d, false)
         }
       }
-      GraftCommitLock.withLock(fs, new Path(dir), "partition-drop-delete") {
-        walk(new Path(dir), 0)
-        val rels = goneRels.result()
+      GraftCommitLock.withLock(fs, base, "partition-drop-delete") {
+        walk(base, 0)
+        val dropped = drops.result().map(fs.makeQualified)
+        val rels = dropped.flatMap(listDataFiles(fs, _))
+          .map(GraftCommits.relOf(fs, base, _))
+        // the record comes first and names the tombstone the retire
+        // then fills
         if (rels.nonEmpty)
-          GraftCommits.tryRecord(fs, new Path(dir), "delete",
-            adds = Nil,
-            removes = rels.map(GraftCommits.Remove(_,
-              if (tombUsed) tombDir.getName else "")))
+          GraftCommits.record(fs, base, "delete", adds = Nil,
+            removes = rels.map(GraftCommits.Remove(_, tombDir.getName)))
+        GraftRetired.retireFilesInto(fs, base, dropped, tombDir)
+        // a parent emptied by its children's deletion goes too, so
+        // the layout never accumulates hollow year=/month= shells
+        dropped.map(_.getParent).distinct.foreach { p0 =>
+          var d = p0
+          while (d != null && d != base && d.getName.contains("=") &&
+              fs.exists(d) && fs.listStatus(d).isEmpty) {
+            fs.delete(d, false)
+            d = d.getParent
+          }
+        }
       }
       // sidecar hygiene: vectors of files that died with their
       // partition directories are inert — sweep them
@@ -2415,19 +2446,30 @@ private[sources] class GraftTable(
           // pre-commit universe snapshot inside the critical section:
           // the journal record claims the delegated write's new files
           // as everything that appears across the commit
-          val before = GraftCommits.universe(fs, new Path(dir))
-          innerBatch.commit(messages) // new generation becomes visible
+          val base = new Path(dir)
+          val before = GraftCommits.universe(fs, base)
+          innerBatch.commit(messages) // new generation is published
+          // the delegated job's `_SUCCESS` marker is no path write
+          // ([[GraftCommits.claimPathWrite]])
+          fs.delete(new Path(base, "_SUCCESS"), false)
+          // the record is the commit: it names the tombstone the retire
+          // then fills; a failed record unpublishes the new generation
+          val tomb =
+            if (oldFiles.isEmpty) None else Some(GraftRetired.newCommitDir(base))
+          GraftCommits.recordOrUnpublish(fs, base,
+              (GraftCommits.universe(fs, base) -- before).toSeq
+                .map(new Path(base, _))) {
+            GraftCommits.recordClaiming(fs, base, "rewrite",
+              before = before,
+              removes = oldFiles.map(g => GraftCommits.Remove(
+                GraftCommits.relOf(fs, base, g), tomb.fold("")(_.getName))),
+              note = command)
+          }
           // old generation retires — TOMBSTONED, not deleted, so an
           // in-flight reader that planned before this commit completes
           // against its snapshot (r12 item 2; GC via remove_orphans)
-          val tomb = GraftRetired.retireFiles(fs, new Path(dir), oldFiles)
-          GraftDv.dropFor(fs, new Path(dir), oldFiles)
-          GraftCommits.tryRecordClaiming(fs, new Path(dir), "rewrite",
-            before = before,
-            removes = oldFiles.map(g => GraftCommits.Remove(
-              GraftCommits.relOf(fs, new Path(dir), g),
-              tomb.getOrElse(""))),
-            note = command)
+          tomb.foreach(GraftRetired.retireFilesInto(fs, base, oldFiles, _))
+          GraftDv.dropFor(fs, base, oldFiles)
         }
         // maintenance policy outside the lock: this commit grew the
         // tombstone area (retired.expire_ms GC)
@@ -3912,14 +3954,15 @@ private[sources] final class GraftTableMicroBatchStream(
   *     skip `.`/`_` names), so a crash mid-job leaves the live table
   *     byte-identical;
   *  2. driver commit renames each staged file to its visible name
-  *     (atomic per file, same directory), then deletes the superseded
-  *     generation's files WITHIN THE SCANNED PARTITIONS only, then
-  *     prunes partition directories the deletion emptied (a fully-
-  *     deleted partition disappears instead of resurrecting as an
-  *     empty dir);
+  *     (atomic per file, same directory), writes the commit's journal
+  *     record ([[GraftCommits.record]] — the commit point: reads plan
+  *     from it), then tombstones the superseded generation's files
+  *     WITHIN THE SCANNED PARTITIONS only, then prunes partition
+  *     directories the retirement emptied (a fully-deleted partition
+  *     disappears instead of resurrecting as an empty dir);
   *  3. abort deletes the staged files.
-  * A crash between publish and retirement leaves duplicate rows —
-  * visible, repairable, never silent loss.
+  * A crash before the record leaves published files no read plans; a
+  * crash after it leaves superseded files no read plans.
   *
   * Scale: the write declares `RequiresDistributionAndOrdering`
   * clustering on the partition columns, so Spark shuffles replacement
@@ -4161,7 +4204,7 @@ private[graft] object GraftPartitionedCow {
     * does internally (write/readFields), without reaching into
     * private[spark] helpers.
     */
-  private[sources] final class SerializableHadoopConf(
+  private final class ConfBytes(
       @transient var value: org.apache.hadoop.conf.Configuration)
     extends Serializable {
     private def writeObject(out: java.io.ObjectOutputStream): Unit = {
@@ -4173,6 +4216,17 @@ private[graft] object GraftPartitionedCow {
       value = new org.apache.hadoop.conf.Configuration(false)
       value.readFields(in)
     }
+  }
+
+  /** A Hadoop conf for task-side code, broadcast once per write or
+    * scan as Spark's own file reader factories do: a task fetches it
+    * once per executor instead of deserializing it from its closure.
+    */
+  private[sources] final class SerializableHadoopConf(
+      conf: org.apache.hadoop.conf.Configuration) extends Serializable {
+    private val shipped = SparkSession.active.sparkContext
+      .broadcast(new ConfBytes(conf))
+    def value: org.apache.hadoop.conf.Configuration = shipped.value.value
   }
 
   private[sources] final case class CowTaskFiles(
@@ -4465,22 +4519,31 @@ private[graft] object GraftPartitionedCow {
         val thisEpochTag = s"-s$queryTag-e$epochId-"
         val old = listVisibleFiles(fs, new Path(dir))
           .filterNot(_.getName.contains(thisEpochTag))
-        messages.foreach {
-          case CowTaskFiles(files, _, _) => files.foreach { case (staged, fin, _) =>
+        val finals = messages.toSeq.flatMap {
+          case CowTaskFiles(files, _, _) => files.map { case (staged, fin, _) =>
             val finP = new Path(fin)
             if (fs.exists(finP)) fs.delete(new Path(staged), false)
             else require(fs.rename(new Path(staged), finP),
               s"stream replace commit: could not publish $staged -> $fin")
+            finP
           }
-          case _ => ()
+          case _ => Nil
         }
+        // a journaled table (batch writes journaled it) plans from its
+        // journal: record the refresh as a floor before the old
+        // generation goes, so reads move to the new emission files
+        val base = new Path(dir)
+        if (GraftCommits.exists(fs, base))
+          GraftCommits.record(fs, base, "replace",
+            adds = finals.map(GraftCommits.relOf(fs, base, _)),
+            removes = old.map(f =>
+              GraftCommits.Remove(GraftCommits.relOf(fs, base, f), "")))
         old.foreach(fs.delete(_, false))
         // a complete refresh replaces every row: deletion vectors and
         // equality deletes of the retired generation are inert
         GraftDv.dropAll(fs, new Path(dir))
         GraftEqDel.clearAll(fs, new Path(dir))
         // prune partition dirs the refresh emptied
-        val base = new Path(dir)
         old.map(_.getParent).distinct.foreach { p0 =>
           var d = p0
           while (d != null && d != base && d.getName.contains("=") &&
@@ -4846,16 +4909,24 @@ private[graft] object GraftPartitionedCow {
     protected def retired(published: Seq[Path], fs: FileSystem): Seq[Path]
     /** Whether to prune partition directories the retirement emptied. */
     protected def pruneEmptied: Boolean
-    /** How retired files leave the live table: TOMBSTONED by default —
-      * renamed into the sibling `.__retired/<commit>/` area so a reader
-      * that planned before this commit still finds its snapshot's bytes
-      * ([[GraftRetired]], r12 item 2: never delete at commit). Physical
-      * deletion is deferred to `CALL system.remove_orphans`. Full-replace
-      * writes with version retention override this to MOVE files into
-      * the version store instead (same reader-isolation property).
+    /** The tombstone directory retired files move into, named before
+      * the commit's record so its removes can point at it; None = no
+      * tombstone (nothing retires, or the files go to a version store).
       */
-    protected def retire(gone: Seq[Path], fs: FileSystem): Option[String] =
-      GraftRetired.retireFiles(fs, new Path(dir), gone)
+    protected def tombstone(gone: Seq[Path]): Option[Path] =
+      if (gone.isEmpty) None else Some(GraftRetired.newCommitDir(new Path(dir)))
+    /** How retired files leave the live table, after the record:
+      * TOMBSTONED by default — renamed into `tomb` under the sibling
+      * `.__retired/` area so a reader that planned before this commit
+      * still finds its snapshot's bytes ([[GraftRetired]], r12 item 2:
+      * never delete at commit). Physical deletion is deferred to `CALL
+      * system.remove_orphans`. Full-replace writes with version
+      * retention override this to MOVE files into the version store
+      * instead (same reader-isolation property).
+      */
+    protected def retire(gone: Seq[Path], fs: FileSystem,
+        tomb: Option[Path]): Unit =
+      tomb.foreach(GraftRetired.retireFilesInto(fs, new Path(dir), gone, _))
     /** Commit-journal kind recorded for this write ([[GraftCommits]]):
       * the feed position + file accounting batch change capture and
       * per-commit time travel derive from.
@@ -4864,7 +4935,9 @@ private[graft] object GraftPartitionedCow {
     /** Record annotation ([[GraftCommits.Rec.note]]): row-level writes
       * carry their originating command so the feed labels update pairs.
       */
-    protected def journalNote: String = ""
+    protected def journalNote: String = commitNote
+    /** Set from the [[GraftCommits.NoteOption]] write option. */
+    @volatile private[sources] var commitNote: String = ""
     /** True when the write declared [[orderingOf]]: rows arrive grouped
       * by key, so the task writer runs in close-on-key-change mode (one
       * open columnar writer at a time).
@@ -4962,34 +5035,40 @@ private[graft] object GraftPartitionedCow {
         toDrop.foreach(p => fs.delete(new Path(p), false))
         checkNoInterference(
           toPublish.map(p => fs.makeQualified(new Path(p._2))), fs)
-        // phase 1 — publish the new generation (atomic per-file rename)
+        // phase 1 — publish the new generation (atomic per-file rename);
+        // no read plans a published file before the record names it
         val published = toPublish.map { case (staged0, fin) =>
           require(fs.rename(new Path(staged0), new Path(fin)),
             s"commit: could not publish $staged0 -> $fin")
-          fs.makeQualified(new Path(fin))
+          fs.getFileStatus(new Path(fin))
         }
-        // phase 2 — retire the superseded generation per the policy;
+        GraftPartitionedCow.onBetweenPublishAndRetire(dir)
+        // phase 2 — the record IS the commit ([[GraftCommits]]): adds
+        // with their lengths and mtimes (what scans plan from), and
+        // removes naming the tombstone phase 3 fills. A failure here
+        // fails the write and unpublishes the new files: readers keep
+        // the pre-commit state.
+        val base = new Path(dir)
+        val gone = retired(published.map(st => fs.makeQualified(st.getPath)), fs)
+        val tomb = tombstone(gone)
+        val added = published.map(st =>
+          GraftCommits.relOf(fs, base, st.getPath) ->
+            GraftCommits.FileInfo(st.getLen, st.getModificationTime))
+        GraftCommits.recordOrUnpublish(fs, base, published.map(_.getPath)) {
+          GraftCommits.record(fs, base, journalKind, adds = added.map(_._1),
+            removes = gone.map(g => GraftCommits.Remove(
+              GraftCommits.relOf(fs, base, g), tomb.fold("")(_.getName))),
+            note = journalNote, info = added.toMap)
+        }
+        // phase 3 — retire the superseded generation per the policy;
         // deletion vectors of retired files are inert — drop them
         // (version-archiving retires MOVE the sidecars first)
-        GraftPartitionedCow.onBetweenPublishAndRetire(dir)
-        val gone = retired(published, fs)
-        val tomb = retire(gone, fs)
-        GraftDv.dropFor(fs, new Path(dir), gone)
-        // commit journal ([[GraftCommits]]): one record inside this
-        // critical section — feed position, adds, and tombstone-
-        // resolvable removes for the batch changelog and time travel
-        GraftCommits.tryRecord(fs, new Path(dir), journalKind,
-          adds = published.map(p =>
-            GraftCommits.relOf(fs, new Path(dir), p)),
-          removes = gone.map(g => GraftCommits.Remove(
-            GraftCommits.relOf(fs, new Path(dir), g),
-            tomb.getOrElse(""))),
-          note = journalNote)
-        // phase 3 — prune partition directories the retirement emptied
+        retire(gone, fs, tomb)
+        GraftDv.dropFor(fs, base, gone)
+        // phase 4 — prune partition directories the retirement emptied
         // (fully-deleted partitions vanish rather than lingering as
         // empty dirs the next scan lists for nothing)
         if (pruneEmptied) {
-          val base = new Path(dir)
           gone.map(_.getParent).distinct.foreach { p =>
             var d = p
             while (d != null && d != base && d.getName.contains("=") &&
@@ -5398,9 +5477,11 @@ private[graft] object GraftPartitionedCow {
 
     override protected def retired(published: Seq[Path],
         fs: FileSystem): Seq[Path] = oldFiles
-    override protected def retire(gone: Seq[Path], fs: FileSystem)
-        : Option[String] = {
-      val tomb: Option[String] = versionStore match {
+    override protected def tombstone(gone: Seq[Path]): Option[Path] =
+      if (versionStore.isDefined) None else super.tombstone(gone)
+    override protected def retire(gone: Seq[Path], fs: FileSystem,
+        tomb: Option[Path]): Unit = {
+      versionStore match {
         case Some((store, retain)) =>
           val storeP = new Path(store)
           val existing: Seq[Int] =
@@ -5436,13 +5517,11 @@ private[graft] object GraftPartitionedCow {
           existing.dropRight(retain - 1).foreach { v =>
             fs.delete(new Path(storeP, f"v$v%06d"), true)
           }
-          None // preserved in the version store, not the tombstone area
         case None =>
-          val t = super.retire(gone, fs)
+          super.retire(gone, fs, tomb)
           // the replace superseded every row: live equality deletes
           // are consumed by it (this commit IS their materialization)
           GraftEqDel.clearAll(fs, new Path(dir))
-          t
       }
       // every surviving row was rewritten under the CURRENT column
       // names: rename aliases are materialized by this replace
@@ -5450,7 +5529,6 @@ private[graft] object GraftPartitionedCow {
       if (m.aliases.nonEmpty)
         GraftTableMeta.write(fs, new Path(dir), m.copy(aliases = Nil))
       fs.setTimes(new Path(dir), System.currentTimeMillis(), -1)
-      tomb
     }
   }
 

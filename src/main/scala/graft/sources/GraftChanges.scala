@@ -137,7 +137,7 @@ private[sources] object GraftChanges {
     */
   def loadSidecars(fs: org.apache.hadoop.fs.FileSystem, tableDir: Path)
       : Seq[GraftEqDel.EqDel] = {
-    val sidecars = GraftEqDel.list(fs, tableDir).map(GraftEqDel.read(fs, _))
+    val sidecars = GraftEqDel.readLive(fs, tableDir)
     require(sidecars.map(_.tag).distinct.length <= 1 &&
       sidecars.map(_.cols.map(_.toLowerCase)).distinct.length <= 1,
       s"$tableDir carries equality deletes from mixed streams or key " +
@@ -539,12 +539,11 @@ private[sources] final class GraftChangesScan(
 
     private val retired = GraftRetired.retiredRoot(tableDir)
     private val preRoot = GraftCommits.preRoot(tableDir)
-    // one existence probe per per-commit sidecar dir per planning pass
-    private val preDirOk = scala.collection.mutable.Map.empty[String, Boolean]
+    // a commit's sidecars serve only when every file it recorded is
+    // still there; a partly deleted set falls back to the ordinal read
     private def preServable(r: GraftCommits.Rec): Boolean =
-      r.pre.nonEmpty && r.pre.iterator.map(_.takeWhile(_ != '/')).forall(
-        d => d.nonEmpty && preDirOk.getOrElseUpdate(d,
-          fs.exists(new Path(preRoot, d))))
+      r.pre.nonEmpty && r.pre.forall(p =>
+        p.takeWhile(_ != '/').nonEmpty && fs.exists(new Path(preRoot, p)))
     // rel -> its removing records (id-ascending): resolves which
     // tombstone holds the instance a given commit added
     private val removalsByRel: Map[String, Seq[(Long, String)]] =

@@ -41,19 +41,27 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *  - NEUTRAL (`maintenance`): file churn with no logical row change
   *    (compaction) — accounted, never fed.
   *
-  * Self-healing by construction: a table whose journal is empty (its
-  * files predate journaling, or were written outside the catalog)
-  * has them claimed by its first journaled commit under a `genesis`
-  * floor record. Files a journal-bypassing writer adds to a journaled
-  * table degrade to a LOUD feed refusal (unaccounted files), never a
-  * silent gap, and `CALL system.compact` (a full replace) always
-  * resets the table to a servable state.
+  * The journal is the table's file list: every catalog scan of a
+  * journaled table plans from the live set at its head ([[head]],
+  * [[GraftManifestListing]]), each add carrying the length and mtime a
+  * scan plans it with ([[FileInfo]]). A table whose journal is empty
+  * (its files predate journaling, or were written outside the catalog)
+  * plans from a listing until its first journaled commit claims those
+  * files under a `genesis` floor record. A file a journal-bypassing
+  * writer adds to a journaled table is not served, and the feed
+  * refuses it loudly (unaccounted files); `CALL system.compact` (a
+  * full replace) resets the table to a servable state.
   *
-  * Crash window: records are finalized AFTER their commit's publish,
-  * still under the lock. A crash in between leaves published files
-  * unjournaled — the next feed read refuses on the accounting check
-  * and the next commit's genesis/claim logic re-converges. Loud, never
-  * silently partial (the engine-wide refusal posture).
+  * The record is the commit: every commit that publishes or retires
+  * data files (hive-layout and copy-on-write rewrites, metadata-only
+  * and partition-emptying deletes, rewrite_deletes, rollback) records
+  * after its publish and before its retire, under the lock, and a
+  * failed record fails the commit and unpublishes its new files
+  * ([[recordOrUnpublish]]). A crash before the record leaves published
+  * files no read plans (the pre-commit state); a crash after it leaves
+  * superseded files in place, no longer planned (the post-commit
+  * state). Merge-on-read deletes and stream epochs, which retire no
+  * file, journal best effort ([[tryRecord]]).
   *
   * Scale: one O(100 B) record per commit; assignment lists ONLY the
   * journal directory (bounded by commit count, prunable with history
@@ -69,6 +77,12 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 private[graft] object GraftCommits {
 
   val DirName = "_graft_commits"
+
+  /** Write option carrying the note ([[Rec.note]]) an append or full
+    * replace records, e.g. the source file an ingest loaded — Delta's
+    * `txnAppId` idempotency marker re-expressed.
+    */
+  val NoteOption = "commitNote"
 
   /** Feed-visible BATCH row-changing kinds (`_change_type` mapping:
     * adds → insert, removes/dv → delete, UPDATE/MERGE notes → update
@@ -98,6 +112,11 @@ private[graft] object GraftCommits {
 
   final case class Remove(rel: String, tomb: String)
 
+  /** A data file's length and modification time as its commit saw
+    * them: what a scan plans the file with instead of a listing.
+    */
+  final case class FileInfo(len: Long, mtime: Long)
+
   /** Per-commit PREIMAGE SIDECARS (Delta CDF's `_change_data` folder
     * re-expressed): a merge-on-read UPDATE/DELETE/MERGE captures the
     * exact rows its deletion-vector positions replaced — written by the
@@ -125,7 +144,10 @@ private[graft] object GraftCommits {
       // preimage sidecar paths relative to [[preRoot]]
       // (`<stamp>/<rel>`), row-parallel to the dv positions — see
       // [[preRoot]]; empty on legacy records and non-capturing commits
-      pre: Seq[String] = Nil) {
+      pre: Seq[String] = Nil,
+      // length and mtime of each add at its commit; absent on legacy
+      // records and on commits that did not stat their files
+      info: Map[String, FileInfo] = Map.empty) {
     require(FeedKinds(kind) || FloorKinds(kind) || NeutralKinds(kind) ||
       kind == StreamEpochKind, s"unknown commit kind '$kind'")
     def feedVisible: Boolean = FeedKinds(kind) || kind == StreamEpochKind
@@ -163,7 +185,11 @@ private[graft] object GraftCommits {
     // note rides as a 5th header column; b64("") renders empty and
     // split drops the trailing field, so legacy parsers stay compatible
     sb.append(s"v1\t${r.id}\t${r.kind}\t${r.ts}\t${b64(r.note)}\n")
-    r.adds.foreach(a => sb.append(s"A\t${b64(a)}\n"))
+    r.adds.foreach { a =>
+      sb.append(s"A\t${b64(a)}")
+      r.info.get(a).foreach(i => sb.append(s"\t${i.len}\t${i.mtime}"))
+      sb.append('\n')
+    }
     r.removes.foreach(rm => sb.append(s"R\t${b64(rm.rel)}\t${b64(rm.tomb)}\n"))
     r.dv.foreach { case (rel, ords) =>
       sb.append(s"D\t${b64(rel)}\t${ords.mkString(",")}\n")
@@ -180,10 +206,14 @@ private[graft] object GraftCommits {
     val removes = Seq.newBuilder[Remove]
     val dv = Map.newBuilder[String, Array[Long]]
     val pre = Seq.newBuilder[String]
+    val info = Map.newBuilder[String, FileInfo]
     lines.tail.foreach { ln =>
       val f = ln.split('\t')
       f(0) match {
-        case "A" => adds += unb64(f(1))
+        case "A" =>
+          val rel = unb64(f(1))
+          adds += rel
+          if (f.length > 3) info += rel -> FileInfo(f(2).toLong, f(3).toLong)
         case "R" => removes += Remove(unb64(f(1)),
           if (f.length > 2) unb64(f(2)) else "")
         case "D" => dv += (unb64(f(1)) ->
@@ -197,7 +227,7 @@ private[graft] object GraftCommits {
     Rec(hdr(1).toLong, hdr(2), hdr(3).toLong,
       adds.result(), removes.result(), dv.result(),
       note = if (hdr.length > 4 && hdr(4).nonEmpty) unb64(hdr(4)) else "",
-      pre = pre.result())
+      pre = pre.result(), info = info.result())
   }
 
   /** All RETAINED records, id-ascending. One listStatus of the journal
@@ -227,11 +257,15 @@ private[graft] object GraftCommits {
     * (keeps journal-axis feed-mode selection stable after stream-only
     * tails); `files` = rel -> the ADDING commit id (instance
     * resolution needs the original add position); `dv` = the absolute
-    * per-file deleted ordinals as of `id`.
+    * per-file deleted ordinals as of `id`; `info` = the live files'
+    * recorded [[FileInfo]]; `notes` = the notes of the folded commits
+    * that added a live file, by commit id.
     */
   final case class Checkpoint(id: Long, ts: Long, floor: Long,
       batch: Boolean, files: Map[String, Long],
-      dv: Map[String, Array[Long]])
+      dv: Map[String, Array[Long]],
+      info: Map[String, FileInfo] = Map.empty,
+      notes: Map[Long, String] = Map.empty)
 
   /** Records per checkpoint (assignment/stateAt read at most this many
     * record files once a checkpoint exists). Overridable per session
@@ -253,7 +287,12 @@ private[graft] object GraftCommits {
     val sb = new StringBuilder
     sb.append(s"ckv1\t${c.id}\t${c.ts}\t${c.floor}\t${if (c.batch) 1 else 0}\n")
     c.files.toSeq.sortBy(_._1).foreach { case (rel, addId) =>
-      sb.append(s"F\t${b64(rel)}\t$addId\n")
+      sb.append(s"F\t${b64(rel)}\t$addId")
+      c.info.get(rel).foreach(i => sb.append(s"\t${i.len}\t${i.mtime}"))
+      sb.append('\n')
+    }
+    c.notes.toSeq.sortBy(_._1).foreach { case (id, note) =>
+      sb.append(s"N\t$id\t${b64(note)}\n")
     }
     c.dv.toSeq.sortBy(_._1).foreach { case (rel, ords) =>
       sb.append(s"D\t${b64(rel)}\t${ords.mkString(",")}\n")
@@ -268,10 +307,16 @@ private[graft] object GraftCommits {
       s"bad commit checkpoint: ${lines.head}")
     val files = Map.newBuilder[String, Long]
     val dv = Map.newBuilder[String, Array[Long]]
+    val info = Map.newBuilder[String, FileInfo]
+    val notes = Map.newBuilder[Long, String]
     lines.tail.foreach { ln =>
       val f = ln.split('\t')
       f(0) match {
-        case "F" => files += (unb64(f(1)) -> f(2).toLong)
+        case "F" =>
+          val rel = unb64(f(1))
+          files += (rel -> f(2).toLong)
+          if (f.length > 4) info += rel -> FileInfo(f(3).toLong, f(4).toLong)
+        case "N" => notes += (f(1).toLong -> unb64(f(2)))
         case "D" => dv += (unb64(f(1)) ->
           (if (f.length > 2 && f(2).nonEmpty)
             f(2).split(',').map(_.toLong) else Array.empty[Long]))
@@ -280,7 +325,7 @@ private[graft] object GraftCommits {
       }
     }
     Checkpoint(hdr(1).toLong, hdr(2).toLong, hdr(3).toLong, hdr(4) == "1",
-      files.result(), dv.result())
+      files.result(), dv.result(), info.result(), notes.result())
   }
 
   /** (checkpoint ids, record ids) from one listStatus — NAMES only, no
@@ -363,6 +408,14 @@ private[graft] object GraftCommits {
       finally in.close()
     }
   }
+
+  /** Record `id`, or None when its file is gone (expired). */
+  private def recAt(fs: FileSystem, tableDir: Path, id: Long): Option[Rec] =
+    try {
+      val in = fs.open(new Path(dir(tableDir), recName(id)))
+      try Some(parse(scala.io.Source.fromInputStream(in, "UTF-8").mkString))
+      finally in.close()
+    } catch { case _: java.io.FileNotFoundException => None }
 
   private def writeCk(fs: FileSystem, tableDir: Path,
       c: Checkpoint): Unit = {
@@ -465,9 +518,25 @@ private[graft] object GraftCommits {
     val floor = (ckOpt.map(_.floor).getOrElse(-1L) +:
       folded.filter(_.isFloor).map(_.id)).max
     val batch = ckOpt.exists(_.batch) || folded.exists(_.batchVisible)
+    val known = ckOpt.map(_.info).getOrElse(Map.empty[String, FileInfo]) ++
+      folded.flatMap(_.info)
+    // a live file recorded before adds carried their info is stat'ed
+    // once here, so scans stop paying a getFileStatus for it
+    val info = files.keysIterator.flatMap { rel =>
+      known.get(rel).orElse(
+        try {
+          val st = fs.getFileStatus(new Path(tableDir, rel))
+          Some(FileInfo(st.getLen, st.getModificationTime))
+        } catch { case _: java.io.FileNotFoundException => None })
+        .map(rel -> _)
+    }.toMap
+    val addIds = files.values.toSet
+    val notes = (ckOpt.map(_.notes).getOrElse(Map.empty[Long, String]) ++
+      folded.filter(_.note.nonEmpty).map(r => r.id -> r.note))
+      .filter { case (id, _) => addIds(id) }
     writeCk(fs, tableDir, Checkpoint(atId, System.currentTimeMillis(),
       floor, batch, files.toMap,
-      dv.map { case (k, v) => (k, v.toArray) }.toMap))
+      dv.map { case (k, v) => (k, v.toArray) }.toMap, info, notes))
   }
 
   /** EXPIRE the journal prefix at or below the retention floor (the
@@ -519,13 +588,19 @@ private[graft] object GraftCommits {
   /** The accounting universe: visible batch data files as table-
     * relative paths.
     */
-  def universe(fs: FileSystem, tableDir: Path): Set[String] = {
+  def universe(fs: FileSystem, tableDir: Path): Set[String] =
+    universeInfo(fs, tableDir).keySet
+
+  /** [[universe]] with each file's listed [[FileInfo]]. */
+  private def universeInfo(fs: FileSystem, tableDir: Path)
+      : Map[String, FileInfo] = {
     val base = fs.makeQualified(tableDir).toUri.getPath
     GraftEvolved.listVisible(fs, tableDir)
       .filterNot(st => isStreamArtifact(st.getPath.getName))
       .map(st => fs.makeQualified(st.getPath).toUri.getPath
-        .stripPrefix(base).stripPrefix("/"))
-      .toSet
+        .stripPrefix(base).stripPrefix("/") ->
+        FileInfo(st.getLen, st.getModificationTime))
+      .toMap
   }
 
   /** The universe PLUS live stream artifacts the journal itself
@@ -563,7 +638,7 @@ private[graft] object GraftCommits {
     val d = dir(tableDir)
     fs.mkdirs(d)
     // ATOMIC tmp+rename, not create-then-write: journal readers run
-    // lock-free (feed censuses, pinned-scan planning) and a reader
+    // lock-free (feed censuses, scan planning) and a reader
     // opening the record between create and close used to parse an
     // EMPTY file. Ids are assigned under the commit lock, so the
     // deterministic name never races another writer.
@@ -576,30 +651,32 @@ private[graft] object GraftCommits {
   }
 
   /** Append one commit record. MUST run inside the table's commit-lock
-    * critical section, after the commit's publish/retire completed.
-    * If the journal is empty and OTHER visible batch files exist (the
-    * pre-journal generation), a `genesis`
-    * floor record claims them first so accounting stays total.
-    * Returns the assigned commit id.
+    * critical section, after the commit's files are in place. If the
+    * journal is empty and OTHER visible batch files exist (the
+    * pre-journal generation), a `genesis` floor record claims them
+    * first so accounting stays total. `info` carries the adds' lengths
+    * and mtimes, which scans plan with. Returns the assigned commit id.
     */
   def record(fs: FileSystem, tableDir: Path, kind: String,
       adds: Seq[String], removes: Seq[Remove] = Nil,
       dv: Map[String, Array[Long]] = Map.empty,
-      note: String = "", pre: Seq[String] = Nil): Long = {
+      note: String = "", pre: Seq[String] = Nil,
+      info: Map[String, FileInfo] = Map.empty): Long = {
     // id assignment from NAMES only — no record-content reads
     val (cks, recIds) = idsByName(fs, tableDir)
     var nextId = (cks ++ recIds).maxOption.map(_ + 1).getOrElse(0L)
     if (cks.isEmpty && recIds.isEmpty) {
-      val others = universe(fs, tableDir) -- adds -- removes.map(_.rel)
+      val others = universeInfo(fs, tableDir) -- adds -- removes.map(_.rel)
       if (others.nonEmpty) {
         writeRec(fs, tableDir, Rec(nextId, "genesis",
-          System.currentTimeMillis(), others.toSeq.sorted, Nil, Map.empty))
+          System.currentTimeMillis(), others.keys.toSeq.sorted, Nil,
+          Map.empty, info = others))
         nextId += 1
       }
     }
     writeRec(fs, tableDir,
       Rec(nextId, kind, System.currentTimeMillis(), adds, removes, dv,
-        note, pre))
+        note, pre, info))
     maybeCheckpoint(fs, tableDir)
     nextId
   }
@@ -624,7 +701,8 @@ private[graft] object GraftCommits {
       dv: Map[String, Array[Long]] = Map.empty,
       note: String = ""): Long = {
     val (ckOpt, tail) = load(fs, tableDir)
-    val now = universe(fs, tableDir)
+    val nowInfo = universeInfo(fs, tableDir)
+    val now = nowInfo.keySet
     val claim =
       (now -- before -- accountedLive(ckOpt, tail)).toSeq.sorted
     var nextId = (ckOpt.map(_.id) ++ tail.lastOption.map(_.id))
@@ -639,10 +717,28 @@ private[graft] object GraftCommits {
     }
     writeRec(fs, tableDir,
       Rec(nextId, kind, System.currentTimeMillis(), claim, removes, dv,
-        note))
+        note, info = claim.map(rel => rel -> nowInfo(rel)).toMap))
     maybeCheckpoint(fs, tableDir)
     nextId
   }
+
+  /** Runs a commit's record; when it fails, deletes the files the
+    * commit published that the journal does not account, then
+    * rethrows. No read planned those files, so the table stays exactly
+    * at its pre-commit state and nothing is left for a later claim
+    * ([[claimPathWrite]]) to adopt.
+    */
+  def recordOrUnpublish[T](fs: FileSystem, tableDir: Path,
+      published: => Seq[Path])(rec: => T): T =
+    try rec
+    catch { case NonFatal(e) =>
+      try {
+        val live = head(fs, tableDir).fold(Set.empty[String])(_.live.keySet)
+        published.filterNot(p => live(relOf(fs, tableDir, p)))
+          .foreach(fs.delete(_, false))
+      } catch { case NonFatal(_) => () }
+      throw e
+    }
 
   /** The rel paths the journal currently accounts as live: every
     * record's adds minus later removes. The race-free component of the
@@ -681,10 +777,11 @@ private[graft] object GraftCommits {
         s"$tableDir failed: ${e.getMessage}")
     }
 
-  /** Best-effort journaling wrapper for commit paths: the journal is
-    * derived metadata — a failure to record must not fail a commit
-    * whose data publish already succeeded (the feed's accounting check
-    * turns the gap into a loud refusal instead).
+  /** Best-effort journaling for the commit paths whose record is not
+    * their commit point (merge-on-read deletes, whose deletion vectors
+    * commit them, and stream epochs, whose markers do): a failure to
+    * record does not fail a commit that already took effect (the feed's
+    * accounting check turns the gap into a loud refusal instead).
     */
   def tryRecord(fs: FileSystem, tableDir: Path, kind: String,
       adds: => Seq[String], removes: => Seq[Remove] = Nil,
@@ -693,17 +790,123 @@ private[graft] object GraftCommits {
     try { record(fs, tableDir, kind, adds, removes, dv, note, pre); () }
     catch { case NonFatal(e) => logWarn(tableDir, kind, e) }
 
-  def tryRecordClaiming(fs: FileSystem, tableDir: Path, kind: String,
-      before: => Set[String], removes: => Seq[Remove] = Nil,
-      dv: => Map[String, Array[Long]] = Map.empty,
-      note: String = ""): Unit =
-    try { recordClaiming(fs, tableDir, kind, before, removes, dv, note); () }
-    catch { case NonFatal(e) => logWarn(tableDir, kind, e) }
-
   private def logWarn(tableDir: Path, kind: String, e: Throwable): Unit =
     System.err.println(s"[graft] WARN commit journal: could not record " +
       s"$kind on $tableDir: ${e.getMessage} — the changes feed will " +
       "refuse until CALL system.compact resets the table")
+
+  // ---- the head (what reads plan from) ----------------------------------
+
+  /** The journal at its newest commit: `last` = that commit's record
+    * (None when it was expired), `live` = rel -> the adding commit id,
+    * `info` = the [[FileInfo]] recorded for live files, `notes` =
+    * commit notes by id for the commits that added a live file.
+    * `fingerprint` names the journal state it was read at.
+    */
+  final case class Head(fingerprint: String, last: Option[Rec],
+      live: Map[String, Long], info: Map[String, FileInfo],
+      notes: Map[Long, String])
+
+  /** tableDir -> the last [[Head]] read. Records and checkpoints are
+    * immutable once written and ids only grow, so a journal directory
+    * whose file names, lengths and mtimes are unchanged holds the same
+    * head: one listStatus proves a cached head current.
+    */
+  private val heads =
+    new java.util.concurrent.ConcurrentHashMap[String, Head]()
+
+  /** Drains the head cache (specs that rebuild a table underneath the
+    * same path want fresh replays).
+    */
+  private[graft] def invalidateHeads(): Unit = heads.clear()
+
+  /** The table's journal head, or None when it has no journal. One
+    * listStatus of the journal directory; records are parsed only when
+    * it changed since the last call.
+    */
+  def head(fs: FileSystem, tableDir: Path): Option[Head] = {
+    val key = fs.makeQualified(tableDir).toString
+    val sts =
+      try fs.listStatus(dir(tableDir))
+      catch { case _: java.io.FileNotFoundException =>
+        heads.remove(key); return None }
+    val named = sts.filter(st => st.getPath.getName match {
+      case CkNameRe(_) | RecNameRe(_) => true
+      case _ => false
+    }).sortBy(_.getPath.getName)
+    if (named.isEmpty) { heads.remove(key); return None }
+    val fp = named.iterator.map(st =>
+      s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
+      .mkString(",")
+    val cached = heads.get(key)
+    if (cached != null && cached.fingerprint == fp) return Some(cached)
+    val (ck, tail) = load(fs, tableDir)
+    val files = scala.collection.mutable.LinkedHashMap
+      .from(ck.map(_.files).getOrElse(Map.empty[String, Long]))
+    replayInto(files, scala.collection.mutable.Map.empty, tail)
+    val live = files.toMap
+    val info = (ck.map(_.info).getOrElse(Map.empty[String, FileInfo]) ++
+      tail.flatMap(_.info)).filter { case (rel, _) => live.contains(rel) }
+    val addIds = live.values.toSet
+    val notes = (ck.map(_.notes).getOrElse(Map.empty[Long, String]) ++
+      tail.filter(_.note.nonEmpty).map(r => r.id -> r.note))
+      .filter { case (id, _) => addIds(id) }
+    // a checkpoint folds the record it ends at; the record file stays
+    // until expiry
+    val last = tail.lastOption.orElse(ck.flatMap(c => recAt(fs, tableDir, c.id)))
+    val h = Head(fp, last, live, info, notes)
+    heads.put(key, h)
+    Some(h)
+  }
+
+  /** Spark's task output file name: `part-<split>-<job id>…`. */
+  private val SparkJobFileRe =
+    "part-\\d{5}-(\\p{XDigit}{8}-\\p{XDigit}{4}-\\p{XDigit}{4}-\\p{XDigit}{4}-\\p{XDigit}{12}).*".r
+
+  /** Claims what ONE Spark path write (`df.write.parquet(<table dir>)`)
+    * left in a journaled table: a compatibility shim for callers that
+    * still add files outside the catalog (ROADMAP open item). Such a
+    * write's job commit leaves a `_SUCCESS` marker in the directory,
+    * which no catalog write keeps. Under the table's commit lock, when
+    * every visible data file the journal does not account carries the
+    * same Spark job id in its name, they are recorded as one `append`
+    * (Iceberg's `add_files`, implicitly). Unaccounted files of more
+    * than one writer (say, a path write after a commit that crashed
+    * before its record) are not claimed: the table stays at its
+    * journaled state, with a warning. Either way the marker goes, so a
+    * marker is weighed once. A busy lock defers the claim to the next
+    * call; any other failure (a reader without write access) leaves the
+    * table unclaimed and the read goes on.
+    */
+  def claimPathWrite(fs: FileSystem, tableDir: Path): Unit = {
+    val marker = new Path(tableDir, "_SUCCESS")
+    try {
+      if (fs.exists(marker))
+        GraftCommitLock.withLock(fs, tableDir, "claim-path-write") {
+          head(fs, tableDir).foreach { h =>
+            val found = universeInfo(fs, tableDir) -- h.live.keys
+            val jobs = found.keys.map(rel =>
+              rel.substring(rel.lastIndexOf('/') + 1) match {
+                case SparkJobFileRe(job) => job
+                case _ => ""
+              }).toSet
+            if (jobs.size == 1 && !jobs("")) {
+              record(fs, tableDir, "append", adds = found.keys.toSeq.sorted,
+                note = "claim:path-write", info = found)
+            } else if (found.nonEmpty)
+              System.err.println(s"[graft] WARN $tableDir: ${found.size} " +
+                "data files no commit recorded come from more than one " +
+                "writer — not claimed; the table serves its journaled state")
+            fs.delete(marker, false)
+          }
+        }
+    } catch {
+      case _: GraftCommitLock.ConcurrentCommitException => ()
+      case NonFatal(e) =>
+        System.err.println(s"[graft] WARN $tableDir: could not claim a " +
+          s"path write: ${e.getMessage}")
+    }
+  }
 
   // ---- replay (per-commit time travel / rollback) ------------------------
 
@@ -781,18 +984,31 @@ private[graft] object GraftCommits {
       val toRestore = resolved.filter { case (rel, p) =>
         fs.makeQualified(p).toString != s"$qualBase/$rel"
       }.toSeq.sortBy(_._1)
-      // phase 1 — retire the post-target generation (tombstoned, so
-      // the rolled-back-PAST state remains addressable)
-      val tomb = GraftRetired.retireFiles(fs, tableDir,
-        toRetire.map(new Path(tableDir, _)))
-      // phase 2 — restore parked instances (same bytes, one rename)
+      // phase 1 — restore parked instances (same bytes, one rename);
+      // no read plans them before the record names them
       toRestore.foreach { case (rel, parked) =>
         val dest = new Path(tableDir, rel)
         fs.mkdirs(dest.getParent)
         require(fs.rename(parked, dest),
           s"rollback: could not restore $parked as $dest")
       }
-      // phase 3 — deletion-vector state replays to the target
+      // phase 2 — the floor record is the commit (restored rels
+      // re-listed as adds so instance resolution finds the moved-back
+      // copies; dv carries the target's FULL deletion state — stateAt
+      // replays rollback dv as an absolute reset, matching phase 4's
+      // dropAll + rebuild); its removes name the tombstone phase 3 fills
+      val tomb = GraftRetired.newCommitDir(tableDir)
+      record(fs, tableDir, "rollback",
+        adds = toRestore.map(_._1),
+        removes = toRetire.map(Remove(_, tomb.getName)),
+        dv = wantDv.filter { case (rel, ords) =>
+          want.contains(rel) && ords.nonEmpty
+        })
+      // phase 3 — retire the post-target generation (tombstoned, so
+      // the rolled-back-PAST state remains addressable)
+      GraftRetired.retireFilesInto(fs, tableDir,
+        toRetire.map(new Path(tableDir, _)), tomb)
+      // phase 4 — deletion-vector state replays to the target
       GraftDv.dropAll(fs, tableDir)
       wantDv.foreach { case (rel, ords) =>
         if (want.contains(rel) && ords.nonEmpty) {
@@ -801,16 +1017,6 @@ private[graft] object GraftCommits {
             GraftDv.Dv(rel, st.getLen, st.getModificationTime, ords))
         }
       }
-      // phase 4 — the floor record (restored rels re-listed as adds so
-      // instance resolution finds the moved-back copies; dv carries the
-      // target's FULL deletion state — stateAt replays rollback dv as
-      // an absolute reset, matching phase 3's dropAll + rebuild)
-      record(fs, tableDir, "rollback",
-        adds = toRestore.map(_._1),
-        removes = toRetire.map(Remove(_, tomb.getOrElse(""))),
-        dv = wantDv.filter { case (rel, ords) =>
-          want.contains(rel) && ords.nonEmpty
-        })
       out = (toRestore.size, toRetire.size)
     }
     out

@@ -459,39 +459,47 @@ private[sources] object GraftDeltaMor {
                 .stripPrefix(base).stripPrefix("/")
             }.sorted
           }
-          // phase 2 — merge positions into the sidecars
-          allDeletes.foreach { case (rel, ords) =>
+          // the merged deletion vectors, validated before the record
+          val mergedDvs = allDeletes.toSeq.map { case (rel, ords) =>
             val st = fs.getFileStatus(new Path(dir, rel))
             val dvFile = GraftDv.dvPath(new Path(dir), rel)
-            val merged =
-              if (fs.exists(dvFile)) {
-                val prior = GraftDv.read(fs, dvFile)
-                require(prior.len == st.getLen &&
-                  prior.mtime == st.getModificationTime,
-                  s"deletion vector for $rel no longer matches its data " +
-                    "file — concurrent rewrite; re-run")
-                val set = mutable.SortedSet.empty[Long]
-                set ++= prior.ords; set ++= ords
-                GraftDv.Dv(rel, st.getLen, st.getModificationTime,
-                  set.toArray)
-              } else GraftDv.Dv(rel, st.getLen, st.getModificationTime,
-                ords.toArray.sorted)
-            GraftDv.write(fs, new Path(dir), merged)
+            if (fs.exists(dvFile)) {
+              val prior = GraftDv.read(fs, dvFile)
+              require(prior.len == st.getLen &&
+                prior.mtime == st.getModificationTime,
+                s"deletion vector for $rel no longer matches its data " +
+                  "file — concurrent rewrite; re-run")
+              val set = mutable.SortedSet.empty[Long]
+              set ++= prior.ords; set ++= ords
+              GraftDv.Dv(rel, st.getLen, st.getModificationTime,
+                set.toArray)
+            } else GraftDv.Dv(rel, st.getLen, st.getModificationTime,
+              ords.toArray.sorted)
           }
-          // phase 3 — commit journal ([[GraftCommits]]): one feed-
-          // visible record for the whole delta — appended rows as adds
-          // (feed: insert), the NEW ordinals per file as dv deltas
-          // (feed: delete; replay: per-commit deletion state). Without
-          // it a merge-on-read UPDATE/MERGE left its files unaccounted
-          // and its positions unattributed — the feed refused and time
-          // travel skipped the commit entirely.
-          if (staged.nonEmpty || allDeletes.nonEmpty)
-            GraftCommits.tryRecord(fs, new Path(dir), "mor_delete",
-              adds = staged.map { case (_, fin, _) =>
-                GraftCommits.relOf(fs, new Path(dir), new Path(fin)) },
-              dv = allDeletes.map { case (rel, ords) =>
-                (rel, ords.toArray.sorted) },
-              note = command, pre = preRels)
+          // phase 2 — commit journal ([[GraftCommits]]), the commit
+          // point: one feed-visible record for the whole delta —
+          // appended rows as adds (feed: insert; scans plan from it),
+          // the NEW ordinals per file as dv deltas (feed: delete;
+          // replay: per-commit deletion state). A failed record fails
+          // the operation and unpublishes its inserts before any
+          // position is deleted.
+          if (staged.nonEmpty || allDeletes.nonEmpty) {
+            val added = staged.map { case (_, fin, _) =>
+              val st = fs.getFileStatus(new Path(fin))
+              GraftCommits.relOf(fs, new Path(dir), st.getPath) ->
+                GraftCommits.FileInfo(st.getLen, st.getModificationTime)
+            }
+            GraftCommits.recordOrUnpublish(fs, new Path(dir),
+                staged.map { case (_, fin, _) => new Path(fin) }) {
+              GraftCommits.record(fs, new Path(dir), "mor_delete",
+                adds = added.map(_._1),
+                dv = allDeletes.map { case (rel, ords) =>
+                  (rel, ords.toArray.sorted) },
+                note = command, pre = preRels, info = added.toMap)
+            }
+          }
+          // phase 3 — the merged positions land in the sidecars
+          mergedDvs.foreach(GraftDv.write(fs, new Path(dir), _))
         }
         // advisory post-commit stats refresh, scoped to the published
         // dirs (the auto_analyze contract: never fails the write)

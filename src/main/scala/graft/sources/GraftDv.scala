@@ -1058,23 +1058,32 @@ private[graft] object GraftDv {
           throw new GraftCommitLock.ConcurrentCommitException(
             s"rewrite_deletes: $rel changed mid-rewrite " +
               "(concurrent commit) — re-run")
-        val published = parts.map { staged =>
+        val published = parts.toSeq.map { staged =>
           val finName =
             "rw-" + java.util.UUID.randomUUID().toString.take(8) + "-" +
               dataFile.getName
           require(fs.rename(staged,
             new Path(dataFile.getParent, finName)),
             s"rewrite_deletes: could not publish $finName")
-          new Path(dataFile.getParent, finName)
+          fs.getFileStatus(new Path(dataFile.getParent, finName))
         }
-        val tomb = GraftRetired.retireFiles(fs, tableDir, Seq(dataFile))
-        fs.delete(dvPath(tableDir, rel), false)
         // commit journal: NEUTRAL file churn — the row deletions were
         // already fed by their mor_delete records; this rewrite only
-        // re-homes the survivors (the feed must keep accounting total)
-        GraftCommits.tryRecord(fs, tableDir, "maintenance",
-          adds = published.toSeq.map(GraftCommits.relOf(fs, tableDir, _)),
-          removes = Seq(GraftCommits.Remove(rel, tomb.getOrElse(""))))
+        // re-homes the survivors (the feed must keep accounting total).
+        // The record is the commit: it comes before the retire, and a
+        // failed record unpublishes the survivors' new files
+        val tomb = GraftRetired.newCommitDir(tableDir)
+        val added = published.map(st =>
+          GraftCommits.relOf(fs, tableDir, st.getPath) ->
+            GraftCommits.FileInfo(st.getLen, st.getModificationTime))
+        GraftCommits.recordOrUnpublish(fs, tableDir, published.map(_.getPath)) {
+          GraftCommits.record(fs, tableDir, "maintenance",
+            adds = added.map(_._1),
+            removes = Seq(GraftCommits.Remove(rel, tomb.getName)),
+            info = added.toMap)
+        }
+        GraftRetired.retireFilesInto(fs, tableDir, Seq(dataFile), tomb)
+        fs.delete(dvPath(tableDir, rel), false)
       }
       files += 1
       positions += dv.ords.length

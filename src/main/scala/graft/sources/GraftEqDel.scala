@@ -150,6 +150,18 @@ private[graft] object GraftEqDel {
       .map(_.getPath).sortBy(_.getName)
   }
 
+  /** Every live sidecar, read. A sidecar that vanishes between the
+    * listing and its read was dropped by [[compactSidecars]] under the
+    * commit lock — dead or subsumed, so the set without it reads the
+    * same — and is skipped (a concurrent stream's commit compacts while
+    * another stream's trigger reads).
+    */
+  def readLive(fs: FileSystem, tableDir: Path): Seq[EqDel] =
+    list(fs, tableDir).flatMap { p =>
+      try Some(read(fs, p))
+      catch { case _: java.io.FileNotFoundException => None }
+    }
+
   def hasAny(fs: FileSystem, tableDir: Path): Boolean =
     try list(fs, tableDir).nonEmpty
     catch { case NonFatal(_) => false }
@@ -335,9 +347,8 @@ private[graft] object GraftEqDel {
     */
   def load(spark: SparkSession, fs: FileSystem, tableDir: Path)
       : Option[Index] = {
-    val ps = list(fs, tableDir)
-    if (ps.isEmpty) return None
-    val ds = ps.map(read(fs, _))
+    val ds = readLive(fs, tableDir)
+    if (ds.isEmpty) return None
     val tags = ds.map(_.tag).distinct
     require(tags.length == 1,
       s"$tableDir carries equality deletes from ${tags.length} different " +

@@ -6,7 +6,7 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression, Literal}
-import org.apache.spark.sql.execution.datasources.{InMemoryFileIndex, PartitionDirectory, PartitionPath, PartitionSpec}
+import org.apache.spark.sql.execution.datasources.{PartitionDirectory, PartitionPath, PartitionSpec}
 import org.apache.spark.sql.execution.datasources.v2.FileScan
 import org.apache.spark.sql.types.StructType
 
@@ -104,7 +104,11 @@ private[graft] object GraftEvolved {
       transforms: Seq[(GraftTransforms.Spec, org.apache.spark.sql.types.DataType)] = Nil)
       : EvolvedFileIndex = {
     val fs = tableDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val statuses = filesOpt.getOrElse(listVisible(fs, tableDir))
+    // qualified paths: the index matches partition directories to
+    // their files by path
+    val statuses = filesOpt.getOrElse(listVisible(fs, tableDir)).map(st =>
+      new FileStatus(st.getLen, false, st.getReplication, st.getBlockSize,
+        st.getModificationTime, fs.makeQualified(st.getPath)))
     val qualBase = fs.makeQualified(tableDir).toString
     val byParent = statuses.groupBy(_.getPath.getParent)
     val anchorVals = scala.collection.mutable.HashMap.empty[Path, InternalRow]
@@ -141,7 +145,7 @@ private[graft] object GraftEvolved {
     val spec = PartitionSpec(anchorSchema,
       byParent.keys.toSeq.sortBy(_.toString).map(p =>
         PartitionPath(anchorVals(p), fs.makeQualified(p))))
-    new EvolvedFileIndex(spark, tableDir, statuses.map(_.getPath),
+    new EvolvedFileIndex(spark, tableDir, statuses,
       anchorSchema, evolvedSchema, spec,
       evolvedVals.map { case (p, m) => fs.makeQualified(p) -> m }.toMap,
       transforms,
@@ -153,15 +157,15 @@ private[graft] object GraftEvolved {
     * evolved columns prune new-era files by their exact chain tokens.
     */
   final class EvolvedFileIndex(
-      spark: SparkSession, val tableDir: Path, leaves: Seq[Path],
+      spark: SparkSession, tableDir: Path, statuses: Seq[FileStatus],
       val anchorSchema: StructType, val evolvedSchema: StructType,
       spec: PartitionSpec, dirEvolved: Map[Path, Map[String, Any]],
       val transforms: Seq[(GraftTransforms.Spec,
         org.apache.spark.sql.types.DataType)] = Nil,
       dirTrans: Map[Path, Map[String, String]] = Map.empty)
-    extends InMemoryFileIndex(spark, leaves,
-      Map("basePath" -> tableDir.toString), None,
-      userSpecifiedPartitionSpec = Some(spec)) {
+    extends GraftManifestListing.ManifestFileIndex(spark, tableDir,
+      statuses, Map.empty, None, spec = Some(spec),
+      roots = Some(statuses.map(_.getPath))) {
 
     private val evolvedLower =
       evolvedSchema.fields.map(_.name.toLowerCase).toSet

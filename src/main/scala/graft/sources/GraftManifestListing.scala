@@ -1,231 +1,113 @@
 package graft.sources
 
-import scala.util.control.NonFatal
-
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.datasources.{PartitionPath, PartitionSpec, PartitioningAwareFileIndex}
+import org.apache.spark.sql.execution.datasources.{PartitionSpec, PartitioningAwareFileIndex}
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-/** SCAN PLANNING FROM THE MANIFEST, not a driver listing (r14 verdict
-  * item 4 — the first real 100 TB bottleneck: every scan paid a
-  * recursive `listStatus` that is O(files) in driver round-trips;
-  * Delta plans from the transaction log and Iceberg from manifests for
-  * exactly this reason).
+/** SCAN PLANNING FROM THE COMMIT JOURNAL: a journaled table's file
+  * list is the journal's accounted-live set at its head
+  * ([[GraftCommits.head]]), never a directory listing — Delta plans
+  * from its transaction log and Iceberg from manifests for the same
+  * reason (a listing is O(files) driver round-trips, and above Spark's
+  * parallel-discovery threshold a distributed job per scan).
   *
-  * `CALL system.analyze` already walks the table once; with this tier
-  * it additionally writes a CENSUS sidecar
-  * (`_graft_stats.d/_census`): every directory's mtime and every data
-  * file's (rel path, length, mtime), stamped with the analyze time.
-  * A later scan on a table with `scan.listing_from_manifest = true`
-  * then proves the census CURRENT with one `getFileStatus` PER
-  * DIRECTORY — O(partitions), not O(files) — and synthesizes the
-  * file statuses from the census without listing anything:
+  * Each live file's length and mtime come from its commit record
+  * ([[GraftCommits.FileInfo]]); a file recorded before records carried
+  * them costs one getFileStatus per JVM until the next checkpoint folds
+  * them in. Partition
+  * values parse from each file's `col=value` chain. The statuses are
+  * cached per (table dir, journal fingerprint): a repeat scan of an
+  * unchanged table costs one listStatus of the journal directory.
   *
-  *  - any file created, deleted or renamed in a directory bumps that
-  *    directory's mtime (rename-only publish is the engine-wide write
-  *    protocol), so mtime equality over EVERY census directory —
-  *    parents included, which catches new partition directories —
-  *    proves the tree unchanged since the walk;
-  *  - a GUARD BAND refuses service unless the directory had been
-  *    quiet for [[GuardMs]] before the analyze walk, closing the
-  *    coarse-mtime race (a write landing in the same mtime tick as
-  *    the walk);
-  *  - ANY mismatch — changed mtime, missing directory, absent or
-  *    pre-census manifest — falls back to the ordinary listing.
-  *    Fail-safe: the census can only be served when provably exact,
-  *    never a silently stale scan.
-  *
-  * OPT-IN by table property. TWO freshness proofs, selected by
-  * filesystem mode (EXCLUSIVE, never OR'd — on posix the mtime proof
-  * additionally catches commits whose best-effort journaling failed,
-  * so the journal proof must not override its verdict): directory
-  * mtimes (exact on HDFS and posix filesystems) by default, or the
-  * COMMIT JOURNAL (r15 item 4 — object-store safe; select with
-  * [[MtimeProofConf]] = false where directories have no mtimes): the
-  * journal's accounted-live file set must equal the census's file set
-  * exactly, proven with one metadata-dir listing + checkpoint/tail
-  * reads and zero data-directory access — the journal is the source
-  * of truth in that mode, the Delta-log contract. Out-of-band
-  * in-place file mutation (no rename) is undetectable by ANY
-  * directory-level proof and is outside the engine's write protocol.
+  * The journal is the table: a data file no commit recorded (a commit
+  * that crashed before its record, a foreign writer) is not served,
+  * except that one Spark path write into the table directory is
+  * claimed by the next scan ([[GraftCommits.claimPathWrite]]).
+  * Three cases still plan from a listing, pinned by [[GraftPinnedScan]]:
+  * a table with no journal yet; one whose live set holds stream
+  * emission or floor-stamped files (streaming rewrite-deletes renames
+  * those without a journaled remove, so the journal is not total
+  * there); and any table while its commit lock is held.
   */
 private[graft] object GraftManifestListing {
 
-  /** Durable table property that arms the tier. */
-  val Prop = "scan.listing_from_manifest"
+  /** table dir -> (journal fingerprint, live file statuses). */
+  private val cache = new java.util.concurrent.ConcurrentHashMap[
+    String, (String, Seq[FileStatus])]()
 
-  val GuardMs = 2000L
+  /** Drains the status cache (with [[GraftCommits.invalidateHeads]]). */
+  private[graft] def invalidate(): Unit = cache.clear()
 
-  /** Session conf simulating OBJECT-STORE semantics: `false` disables
-    * the directory-mtime freshness proof (object stores have no
-    * directories, so mtimes prove nothing there) — the census then
-    * serves only through the JOURNAL proof below. Default true (posix
-    * fast path).
+  private def nameOf(rel: String): String = rel.substring(rel.lastIndexOf('/') + 1)
+
+  /** The live files of the journal's head as qualified statuses, or
+    * None = plan from the listing (no journal, a live stream artifact,
+    * or a legacy live file that is gone). A legacy live file (recorded
+    * before adds carried their info) costs one getFileStatus per JVM,
+    * carried across journal states, until the next checkpoint folds
+    * its info in.
     */
-  val MtimeProofConf = "spark.graft.census.mtimeProof"
+  def liveStatuses(fs: FileSystem, tableDir: Path): Option[Seq[FileStatus]] = {
+    GraftCommits.claimPathWrite(fs, tableDir)
+    val head = GraftCommits.head(fs, tableDir).getOrElse(return None)
+    if (head.live.keysIterator.exists(rel =>
+        GraftEqDel.emissionOf(nameOf(rel)).isDefined ||
+          GraftEqDel.hasFloorStamp(nameOf(rel)))) return None
+    val base = fs.makeQualified(tableDir)
+    val key = base.toString
+    val prev = cache.get(key)
+    if (prev != null && prev._1 == head.fingerprint) return Some(prev._2)
+    val before: Map[String, FileStatus] =
+      if (prev == null) Map.empty
+      else prev._2.map(st => st.getPath.toString.stripPrefix(key + "/") -> st).toMap
+    val blockSize = fs.getDefaultBlockSize(base)
+    val statuses = head.live.keys.toSeq.sorted.map { rel =>
+      head.info.get(rel) match {
+        case Some(i) => new FileStatus(i.len, false, 1, blockSize, i.mtime,
+          new Path(base, rel))
+        case None => before.getOrElse(rel,
+          try fs.getFileStatus(new Path(base, rel))
+          catch { case _: java.io.FileNotFoundException => return None })
+      }
+    }
+    cache.put(key, (head.fingerprint, statuses))
+    Some(statuses)
+  }
 
-  private def censusPath(tableDir: Path): Path =
-    new Path(tableDir, "_graft_stats.d/_census")
-
-  private def b64(s: String): String =
-    java.util.Base64.getUrlEncoder.withoutPadding
-      .encodeToString(s.getBytes("UTF-8"))
-  private def unb64(s: String): String =
-    new String(java.util.Base64.getUrlDecoder.decode(s), "UTF-8")
-
-  /** Written at the end of a FULL analyze, from the walk it already
-    * paid: `v1 \t analyzedAt`, then one `D` line per directory (root
-    * included, rel "" ) and one `F` line per data file.
+  /** A file index over the journal's live files, or None when the
+    * table plans from the listing ([[liveStatuses]]). `parameters` are
+    * the table's read options; the partition spec is Spark's own
+    * inference over the files' directory chains, typed by `schema`.
     */
-  def writeCensus(fs: FileSystem, tableDir: Path, analyzedAt: Long,
-      dirs: Seq[(String, Long)], files: Seq[(String, Long, Long)]): Unit =
-    try {
-      // double-stat: a directory whose mtime moved DURING the walk
-      // (concurrent writer) must not census — the walk's file set for
-      // it may be mid-commit
-      val stable = dirs.forall { case (rel, mt) =>
-        val d = if (rel.isEmpty) tableDir else new Path(tableDir, rel)
-        try fs.getFileStatus(d).getModificationTime == mt
-        catch { case _: java.io.FileNotFoundException => false }
-      }
-      if (!stable) return
-      val sb = new StringBuilder
-      sb.append(s"v1\t$analyzedAt\n")
-      dirs.foreach { case (rel, mt) => sb.append(s"D\t${b64(rel)}\t$mt\n") }
-      files.foreach { case (rel, len, mt) =>
-        sb.append(s"F\t${b64(rel)}\t$len\t$mt\n")
-      }
-      val fin = censusPath(tableDir)
-      fs.mkdirs(fin.getParent)
-      val tmp = new Path(fin.getParent, "." + fin.getName + ".tmp")
-      val out = fs.create(tmp, true)
-      try out.write(sb.toString.getBytes("UTF-8")) finally out.close()
-      GraftDv.replaceAtomic(fs, tmp, fin)
-    } catch { case NonFatal(_) => () } // advisory tier: never fail analyze
+  def index(spark: SparkSession, tableDir: Path,
+      parameters: Map[String, String], schema: Option[StructType])
+      : Option[ManifestFileIndex] = {
+    val fs = tableDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // every commit records before it retires, so the journal's head is
+    // exact even mid-commit; but a lock holder outside that protocol (a
+    // writer of an older version, a hand-held lock) may be moving live
+    // files, so while the lock is held the table plans from the pinned
+    // listing, which serves the listing when an accounted file is gone
+    if (fs.exists(GraftCommitLock.lockPath(tableDir))) None
+    else liveStatuses(fs, tableDir).map(statuses => new ManifestFileIndex(
+      spark, fs.makeQualified(tableDir), statuses, parameters, schema))
+  }
 
-  /** The file statuses of the table IF the census is provably current
-    * (one getFileStatus per census DIRECTORY); None = fall back to the
-    * ordinary listing.
+  /** A file index over given statuses: zero filesystem calls at
+    * planning. The partition spec is `spec` when given, else inferred
+    * from the files' parent directories; `roots` defaults to the table
+    * directory (files at other depths then need a partition spec).
     */
-  def serveListing(fs: FileSystem, tableDir: Path)
-      : Option[Seq[FileStatus]] =
-    try {
-      val p = censusPath(tableDir)
-      if (!fs.exists(p)) return None
-      val in = fs.open(p)
-      val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
-        .getLines().toArray finally in.close()
-      if (lines.isEmpty || !lines.head.startsWith("v1\t")) return None
-      val analyzedAt = lines.head.split('\t')(1).toLong
-      val dirs = Seq.newBuilder[(String, Long)]
-      val files = Seq.newBuilder[(String, Long, Long)]
-      lines.tail.foreach { ln =>
-        val f = ln.split('\t')
-        f(0) match {
-          case "D" => dirs += ((unb64(f(1)), f(2).toLong))
-          case "F" => files += ((unb64(f(1)), f(2).toLong, f(3).toLong))
-          case _ => return None
-        }
-      }
-      // freshness proof 1 (posix fast path): every census directory
-      // unchanged + quiet through the guard band at walk time
-      val mtimeAllowed =
-        try SparkSession.active.conf.getOption(MtimeProofConf)
-          .forall(_.toBoolean)
-        catch { case NonFatal(_) => true }
-      def mtimeFresh = dirs.result().forall { case (rel, mt) =>
-        val d = if (rel.isEmpty) tableDir else new Path(tableDir, rel)
-        try {
-          val st = fs.getFileStatus(d)
-          st.isDirectory && st.getModificationTime == mt &&
-            analyzedAt >= mt + GuardMs
-        } catch { case _: java.io.FileNotFoundException => false }
-      }
-      // freshness proof 2 (OBJECT-STORE safe, r15 item 4; widened to
-      // journal-PINNED serving in r17): the file list IS the commit
-      // journal's accounted-live set at the latest COMPLETE commit —
-      // one metadata-dir listing + checkpoint/tail reads, NO data-dir
-      // listStatus. Statuses come from the census where it knows the
-      // file; files committed SINCE the analyze walk pay one
-      // getFileStatus each (O(delta since analyze), still zero
-      // listings). Records land after publish+retire under the table
-      // lock, so the accounted set never exposes a half-commit: this
-      // is the Delta-log/Iceberg-manifest pointer contract, and it
-      // also closes the publish→retire duplicate window for
-      // object-store readers (r16 verdict item 1). The JOURNAL is the
-      // source of truth in this mode: files a crashed, never-journaled
-      // commit left behind are not part of the table. Tables carrying
-      // STREAM artifacts decline (rewrite-deletes materialization
-      // renames emission files without a journaled remove — the
-      // journal is not total there), as does any accounted file whose
-      // status cannot be fetched (retired mid-read) — both fall back
-      // to the real listing, loudly costing a walk rather than
-      // silently serving a stale plan.
-      def journalServed: Option[Seq[FileStatus]] = {
-        val (ck, tail) = GraftCommits.load(fs, tableDir)
-        if (ck.isEmpty && tail.isEmpty) return None
-        val acc = GraftCommits.accountedLive(ck, tail)
-        def nameOf(rel: String): String = {
-          val i = rel.lastIndexOf('/')
-          if (i < 0) rel else rel.substring(i + 1)
-        }
-        if (acc.exists(rel => GraftEqDel.emissionOf(nameOf(rel)).isDefined ||
-            GraftEqDel.hasFloorStamp(nameOf(rel)))) return None
-        val census: Map[String, (Long, Long)] =
-          files.result().map { case (rel, len, mt) => (rel, (len, mt)) }
-            .toMap
-        // the journal must be TOTAL for this table: a census file the
-        // journal has NEVER seen (not live, not in any retained
-        // add/remove) is a commit whose best-effort journaling failed
-        // or a foreign writer — omitting it would be silent row loss,
-        // so decline and pay the real listing (the same verdict the
-        // pinned-scan tier reaches for the lock-free divergence case).
-        // Census files the journal RETIRED since the walk are the
-        // normal case and simply don't serve.
-        val everKnown = acc ++ ck.map(_.files.keySet).getOrElse(Set.empty) ++
-          tail.flatMap(r => r.adds ++ r.removes.map(_.rel))
-        if (!census.keysIterator.forall(everKnown.contains)) return None
-        Some(acc.toSeq.sorted.map { rel =>
-          census.get(rel) match {
-            case Some((len, mt)) =>
-              new FileStatus(len, false, 1, 128L * 1024 * 1024, mt,
-                fs.makeQualified(new Path(tableDir, rel)))
-            case None =>
-              // committed after the walk: one RPC, no listing; a
-              // FileNotFound here aborts to the real-listing fallback
-              // through the outer catch
-              fs.getFileStatus(new Path(tableDir, rel))
-          }
-        })
-      }
-      // the proofs are EXCLUSIVE, not OR'd: on posix the mtime proof
-      // is the stronger one (it also catches a commit whose
-      // best-effort journaling failed — disk changed, accounting
-      // didn't), so a FAILED mtime proof must fall back to the real
-      // listing, never be overridden by the journal set. The journal
-      // serves only where mtimes prove nothing at all (object-store
-      // mode, MtimeProofConf=false).
-      if (mtimeAllowed) {
-        if (!mtimeFresh) None
-        else Some(files.result().map { case (rel, len, mt) =>
-          new FileStatus(len, false, 1, 128L * 1024 * 1024, mt,
-            fs.makeQualified(new Path(tableDir, rel)))
-        })
-      } else journalServed
-    } catch { case NonFatal(_) => None }
+  class ManifestFileIndex(spark: SparkSession, val tableDir: Path,
+      val statuses: Seq[FileStatus], parameters: Map[String, String],
+      schema: Option[StructType], spec: Option[PartitionSpec] = None,
+      roots: Option[Seq[Path]] = None)
+    extends PartitioningAwareFileIndex(spark, parameters, schema) {
 
-  /** A file index over synthesized statuses: zero filesystem calls at
-    * planning — partition values parse from each parent's own
-    * `col=value` chain (the non-evolved layout has uniform depth).
-    */
-  final class ManifestFileIndex(spark: SparkSession, tableDir: Path,
-      statuses: Seq[FileStatus], spec: PartitionSpec)
-    extends PartitioningAwareFileIndex(spark,
-      Map("basePath" -> tableDir.toString), None) {
-
-    override def partitionSpec(): PartitionSpec = spec
+    private lazy val partitions: PartitionSpec =
+      spec.getOrElse(inferPartitioning())
+    override def partitionSpec(): PartitionSpec = partitions
 
     override val leafFiles
         : scala.collection.mutable.LinkedHashMap[Path, FileStatus] = {
@@ -238,49 +120,17 @@ private[graft] object GraftManifestListing {
       statuses.groupBy(_.getPath.getParent)
         .map { case (k, v) => (k, v.toArray) }
 
-    override def rootPaths: Seq[Path] = Seq(tableDir)
+    override def rootPaths: Seq[Path] = roots.getOrElse(Seq(tableDir))
     override def refresh(): Unit = ()
-  }
 
-  /** A parquet scan builder planning entirely from the census, or None
-    * when the census cannot be proven current.
-    */
-  def scanBuilder(spark: SparkSession, tableDir: Path,
-      fullSchema: StructType, partitionCols: Seq[String],
-      options: CaseInsensitiveStringMap)
-      : Option[org.apache.spark.sql.execution.datasources.v2.FileScanBuilder] = {
-    val fs = tableDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    serveListing(fs, tableDir).flatMap { statuses =>
-      try {
-        val partFields = partitionCols.map(c =>
-          fullSchema.fields.find(_.name.equalsIgnoreCase(c)).getOrElse(
-            return None))
-        val partSchema = StructType(partFields)
-        val qualBase = fs.makeQualified(tableDir).toString
-        val spec =
-          if (partFields.isEmpty) PartitionSpec.emptySpec
-          else {
-            val parents = statuses.map(_.getPath.getParent).distinct
-            PartitionSpec(partSchema, parents.sortBy(_.toString).map { p =>
-              val rel = p.toString.stripPrefix(qualBase).stripPrefix("/")
-              val toks = GraftEvolved.chainTokens(rel).toMap
-              val vals = partFields.map { f =>
-                GraftPartitionedCow.parseToken(
-                  toks.getOrElse(f.name.toLowerCase, return None),
-                  f.dataType)
-              }
-              PartitionPath(
-                org.apache.spark.sql.catalyst.InternalRow
-                  .fromSeq(vals.toSeq), p)
-            })
-          }
-        val dataSchema = StructType(fullSchema.fields.filterNot(f =>
-          partitionCols.exists(_.equalsIgnoreCase(f.name))))
-        val idx = new ManifestFileIndex(spark, fs.makeQualified(tableDir),
-          statuses, spec)
-        Some(org.apache.spark.sql.execution.datasources.v2.parquet
-          .ParquetScanBuilder(spark, idx, fullSchema, dataSchema, options))
-      } catch { case NonFatal(_) => None }
+    // two scans of one table state plan equal (exchange and subquery
+    // reuse compare scans, and so their indexes)
+    override def equals(o: Any): Boolean = o match {
+      case m: ManifestFileIndex => m.getClass == getClass &&
+        m.rootPaths == rootPaths &&
+        ((m.statuses eq statuses) || m.leafFiles.keySet == leafFiles.keySet)
+      case _ => false
     }
+    override def hashCode(): Int = rootPaths.hashCode()
   }
 }

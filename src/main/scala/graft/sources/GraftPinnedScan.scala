@@ -7,139 +7,49 @@ import org.apache.spark.sql.connector.read.InputPartition
 import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.v2.FileScan
 
-/** JOURNAL-PINNED SNAPSHOT READS (r16 verdict item 1 — the round's one
-  * `weak` component): a partitioned copy-on-write commit publishes the
-  * new generation's files by rename and only THEN retires the
-  * superseded generation, all inside the table's commit lock. A reader
-  * that lists the directory inside that window sees BOTH generations —
-  * at 100-TB partition counts (thousands of touched partitions per
-  * MERGE) the window is minutes long, and every query through it
-  * silently double-counts every touched partition.
+/** JOURNAL-PINNED LISTINGS — the fallback for the scans that still
+  * plan from a directory listing of a journaled table: one whose live
+  * set holds stream emission or floor-stamped files, or one planned
+  * while its commit lock is held ([[GraftManifestListing]] plans every
+  * other journaled table from the journal itself).
   *
-  * The fix is Iceberg's metadata-pointer semantics built from parts
-  * the engine already has: the commit journal's accounted-live file
-  * set ([[GraftCommits.accountedLive]]) at the latest COMPLETE commit
-  * is exactly the file set a reader should plan — records are written
-  * AFTER publish+retire, still under the lock, so the journal never
-  * exposes a half-commit. Every batch scan's planned splits are pinned
-  * against it:
-  *
-  *  - every planned file accounted live → nothing to do (the common
-  *    case: one metadata-dir listStatus, fingerprint-cached journal
-  *    replay, no data-dir access);
-  *  - unaccounted planned files WITH the commit lock held → a commit
-  *    is mid-flight between publish and journal: DROP the unaccounted
-  *    files (they are the not-yet-committed generation) — but only
-  *    when every accounted-live file is still present in the scan's
-  *    own listing (all-old-generation-present proves the stall is
-  *    before retirement). A mid-retirement listing (accounted ⊄
-  *    listed) can serve NEITHER generation completely, so the plan
-  *    waits — bounded by `spark.graft.pin.lockWaitMs` — for the
-  *    in-flight commit's lock to clear and then adjudicates against
-  *    the fresh journal like the lock-free case below; on timeout it
-  *    serves the listing unpinned, loudly.
-  *  - unaccounted files with NO lock held → re-read the journal (the
-  *    commit may have completed in between) and categorize each
-  *    straggler by the journal's EVER-KNOWN set: a file some retained
-  *    commit RETIRED is a stale-listing artifact of a completed commit
-  *    — when every accounted-live file is in the listing, the pin
-  *    serves exactly the post-commit snapshot and the stragglers drop.
-  *    A file the journal has NEVER seen is genuine divergence (a
-  *    commit whose best-effort journaling failed, or a foreign
-  *    writer) — the LISTING is truth there, serve it unpinned and
-  *    warn. The changes feed already refuses such tables loudly until
-  *    compact.
+  * A listing can hold batch files no commit made live: a commit's
+  * published files before its record, a retiring commit's superseded
+  * files after it, or files no commit ever recorded (a commit that
+  * crashed before its record, a foreign writer). The journal's head
+  * ([[GraftCommits.head]]) is the table, so a listing's batch files are
+  * pinned to its accounted-live set whenever the listing holds that
+  * whole set. A listing that misses an accounted file (the table was
+  * changed outside the commit protocol) cannot serve the snapshot: it
+  * serves unpinned, with a warning.
   *
   * Stream emission artifacts (epoch-named or floor-stamped files) stay
   * outside the pin: their visibility is epoch-gated by name
   * ([[GraftEqDel]]), and rewrite-deletes materialization renames them
   * without a journaled remove.
   *
-  * Races the pin does NOT close, by design: a retirement executing
-  * between this plan and the split's read re-points through
-  * [[GraftRetired.FallbackReaderFactory]] (the r12 snapshot-isolation
-  * fallback) or fails loudly — never silently. Scale: the pin costs
-  * one journal-dir listStatus per scan planning; record/checkpoint
-  * parsing is fingerprint-cached per table, so repeat scans replay
-  * nothing.
+  * A retirement executing between this plan and the split's read
+  * re-points through [[GraftRetired.FallbackReaderFactory]] (the r12
+  * snapshot-isolation fallback) or fails loudly — never silently.
   */
 private[sources] object GraftPinnedScan {
-
-  /** tableDir -> (journal-dir fingerprint, accounted-live rels,
-    * ever-known rels). The fingerprint is the sorted journal FILE NAME
-    * list — records and checkpoints are immutable once written and ids
-    * only grow, so name-set equality proves the cached replay current.
-    * Ever-known = live ∪ everything any retained record added or
-    * removed: `everKnown \ live` is the journal-RETIRED set the
-    * straggler categorization needs (uuid file names never repeat, so
-    * retired stays retired).
-    */
-  private val cache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Set[String], Set[String])]()
 
   private val warned =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  /** Test seam: drains the fingerprint cache (a spec that swaps table
+  /** Test seam: drains the journal caches (a spec that swaps table
     * directories underneath the same path wants fresh replays).
     */
-  private[graft] def invalidate(): Unit = cache.clear()
-
-  private def journalFingerprint(fs: FileSystem, tableDir: Path)
-      : Option[String] = {
-    val d = GraftCommits.dir(tableDir)
-    val sts =
-      try fs.listStatus(d)
-      catch { case _: java.io.FileNotFoundException => return None }
-    val names = sts.iterator.map(_.getPath.getName)
-      .filter(n => n.endsWith(".rec") || n.endsWith(".ck"))
-      .toArray.sorted
-    if (names.isEmpty) None else Some(names.mkString(","))
+  private[graft] def invalidate(): Unit = {
+    GraftCommits.invalidateHeads()
+    GraftManifestListing.invalidate()
   }
-
-  /** (accounted-live rels, ever-known rels) at the latest complete
-    * commit, or None = no journal (nothing to pin against).
-    */
-  private def accountedAt(fs: FileSystem, tableDir: Path,
-      fresh: Boolean): Option[(Set[String], Set[String])] = {
-    val key = tableDir.toString
-    if (fresh) cache.remove(key)
-    journalFingerprint(fs, tableDir) match {
-      case None => cache.remove(key); None
-      case Some(fp) =>
-        cache.get(key) match {
-          case (cfp, acc, known) if cfp == fp => Some((acc, known))
-          case _ =>
-            val (ck, tail) = GraftCommits.load(fs, tableDir)
-            val acc = GraftCommits.accountedLive(ck, tail)
-            val known = acc ++
-              ck.map(_.files.keySet).getOrElse(Set.empty[String]) ++
-              tail.flatMap(r => r.adds ++ r.removes.map(_.rel))
-            cache.put(key, (fp, acc, known))
-            Some((acc, known))
-        }
-    }
-  }
-
-  /** Bounded wait for a mid-retirement commit's lock to clear (the
-    * window where neither generation serves completely from the
-    * listing). Default 10 s; a 100-TB retirement takes minutes — size
-    * `spark.graft.pin.lockWaitMs` to the deployment's retire ceiling.
-    */
-  private def lockWaitMs: Long =
-    try org.apache.spark.sql.SparkSession.active.conf
-      .getOption("spark.graft.pin.lockWaitMs").map(_.toLong)
-      .getOrElse(10000L)
-    catch { case NonFatal(_) => 10000L }
 
   private def isStreamArtifact(name: String): Boolean =
     GraftEqDel.emissionOf(name).isDefined || GraftEqDel.hasFloorStamp(name)
 
   /** Pin a planned split set to the journal's accounted-live snapshot.
-    * Fail-safe in every uncertain direction: no journal, non-file
-    * partitions, journal-not-total, or mid-retirement listings all
-    * serve the delegate's plan unchanged. Thin wrapper over
-    * [[keepTest]] — ONE copy of the pin decision procedure.
+    * Thin wrapper over [[keepTest]] — ONE copy of the pin decision.
     */
   def pin(fs: FileSystem, tableDir: Path, scan: FileScan,
       parts: Array[InputPartition]): Array[InputPartition] = {
@@ -168,77 +78,24 @@ private[sources] object GraftPinnedScan {
         if (p.startsWith(base + "/"))
           Some(p.stripPrefix(base).stripPrefix("/"))
         else None
-      def nameOf(rel: String): String = {
-        val i = rel.lastIndexOf('/')
-        if (i < 0) rel else rel.substring(i + 1)
-      }
-      def strayRels(acc: Set[String]): Seq[String] =
-        planned.flatMap(f => relOf(f.toPath.toUri.getPath) match {
-          case Some(rel)
-              if !isStreamArtifact(nameOf(rel)) && !acc(rel) => Some(rel)
-          case _ => None
-        })
-      def pinTo(acc: Set[String]): Option[PartitionedFile => Boolean] =
-        Some(f => relOf(f.toPath.toUri.getPath) match {
+      def nameOf(rel: String): String = rel.substring(rel.lastIndexOf('/') + 1)
+      val acc = GraftCommits.head(fs, tableDir).getOrElse(return None)
+        .live.keySet
+      def keep(f: PartitionedFile): Boolean =
+        relOf(f.toPath.toUri.getPath) match {
           case Some(rel) => isStreamArtifact(nameOf(rel)) || acc(rel)
           case None => true
-        })
-      val (acc0, _) = accountedAt(fs, tableDir, fresh = false)
-        .getOrElse(return None)
-      if (strayRels(acc0).isEmpty) return None
+        }
+      if (planned.forall(keep)) return None
       val listed: Set[String] = scan.fileIndex.allFiles()
         .flatMap(st => relOf(st.getPath.toUri.getPath)).toSet
-      def snapshotListed(acc: Set[String]): Boolean =
-        acc.forall(r => isStreamArtifact(nameOf(r)) || listed(r))
-      def lockHeld: Boolean =
-        try fs.exists(GraftCommitLock.lockPath(tableDir))
-        catch { case NonFatal(_) => false }
-      if (lockHeld) {
-        // a commit is in flight. Stalled between publish and journal
-        // with the whole pre-commit generation still listed → pin to
-        // it (the pre-commit snapshot, exactly).
-        if (snapshotListed(acc0)) return pinTo(acc0)
-        // mid-retirement: neither generation is completely servable
-        // from this listing — wait (bounded) for the commit to finish,
-        // then adjudicate against the fresh journal below
-        val deadline = System.currentTimeMillis() + lockWaitMs
-        while (lockHeld && System.currentTimeMillis() < deadline)
-          Thread.sleep(50L)
-        if (lockHeld) {
-          if (warned.add(tableDir.toString + "#inflight"))
-            System.err.println(s"[graft] WARN $tableDir commit still " +
-              s"in flight after ${lockWaitMs} ms (mid-retirement) — " +
-              "serving the directory listing unpinned; raise " +
-              "spark.graft.pin.lockWaitMs above the retire ceiling")
-          return None
-        }
-      }
-      // no commit in flight (any more): the FRESH journal adjudicates
-      val (acc1, known1) = accountedAt(fs, tableDir, fresh = true)
-        .getOrElse(return None)
-      val strays = strayRels(acc1)
-      if (strays.isEmpty) return None
-      if (strays.exists(r => !known1(r))) {
-        // never-journaled files: genuine divergence — disk is truth
-        if (warned.add(tableDir.toString))
-          System.err.println(s"[graft] WARN $tableDir holds data files " +
-            "the commit journal does not account (a commit whose " +
-            "journaling failed, or a foreign writer) — scans serve the " +
-            "directory listing unpinned; CALL system.compact to reset")
-        return None
-      }
-      // every stray is journal-RETIRED: the listing raced a commit
-      // that has since completed. Serve the post-commit snapshot —
-      // but only when the listing holds ALL of it (a listing that
-      // raced SEVERAL commits may miss later files; dropping the
-      // strays there would undercount — serve it unpinned, loudly).
-      if (snapshotListed(acc1)) pinTo(acc1)
+      if (acc.forall(r => isStreamArtifact(nameOf(r)) || listed(r)))
+        Some(keep)
       else {
-        if (warned.add(tableDir.toString + "#multirace"))
-          System.err.println(s"[graft] WARN $tableDir scan listing " +
-            "raced multiple commits (retired stragglers present, " +
-            "newest snapshot incomplete) — serving the listing " +
-            "unpinned; re-run the query for an exact snapshot")
+        if (warned.add(tableDir.toString))
+          System.err.println(s"[graft] WARN $tableDir: the listing misses " +
+            "files the commit journal accounts live (changed outside " +
+            "the commit protocol) — serving the listing unpinned")
         None
       }
     } catch { case NonFatal(_) => None }

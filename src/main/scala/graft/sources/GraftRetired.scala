@@ -93,8 +93,14 @@ private[graft] object GraftRetired {
       fs.mkdirs(dest.getParent)
       require(fs.rename(f, dest),
         s"retire: could not tombstone $f as $dest")
+      onFileRetired(f)
     }
   }
+
+  /** Test seam: runs after each file or directory a retire moves (a
+    * spec stalls a commit in the middle of its retire).
+    */
+  @volatile private[graft] var onFileRetired: Path => Unit = _ => ()
 
   /** Delete tombstone commits older than the grace window. Returns
     * (files deleted, bytes reclaimed) through the same counting view as

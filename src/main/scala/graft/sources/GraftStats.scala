@@ -374,25 +374,11 @@ object GraftStats {
     if (!fs.exists(dir)) return 0
     val dirUri = dir.toUri.getPath
 
-    // census for manifest-served scan planning
-    // ([[GraftManifestListing]]): directory mtimes captured during the
-    // SAME walk, analyze-time stamped before it starts (guard-band
-    // conservative)
-    // the sidecar dir must pre-exist or its creation at publish time
-    // would bump the ROOT mtime after the walk recorded it (the census
-    // therefore arms from the SECOND analyze on a fresh stats dir)
-    if (scope.isEmpty) fs.mkdirs(shardDir(dir))
-    val censusStartedAt = System.currentTimeMillis()
-    val censusDirs = Seq.newBuilder[(String, Long)]
     def walk(p: Path): Seq[(String, Long, Long)] =
       fs.listStatus(p).toSeq.flatMap { st =>
         val n = st.getPath.getName
         if (n.startsWith("_") || n.startsWith(".")) Nil
-        else if (st.isDirectory) {
-          censusDirs += ((st.getPath.toUri.getPath.stripPrefix(dirUri)
-            .stripPrefix("/"), st.getModificationTime))
-          walk(st.getPath)
-        }
+        else if (st.isDirectory) walk(st.getPath)
         else Seq((st.getPath.toUri.getPath.stripPrefix(dirUri)
           .stripPrefix("/"), st.getLen, st.getModificationTime))
       }
@@ -414,14 +400,8 @@ object GraftStats {
     val legacy = readFileEntries(fs, legacyPath)
     val legacyByDir = legacy.groupBy { case (rel, _) => shardKeyOf(rel) }
 
-    val walkedFiles: Option[Seq[(String, Long, Long)]] = scope match {
-      case None =>
-        censusDirs += (("", fs.getFileStatus(dir).getModificationTime))
-        Some(walk(dir))
-      case Some(_) => None
-    }
     val byDir: Map[String, Seq[(String, Long, Long)]] = scope match {
-      case None => walkedFiles.get
+      case None => walk(dir)
         .groupBy { case (rel, _, _) => shardKeyOf(rel) }
       case Some(keys) =>
         keys.map(k => k -> listDir(k)).filter(_._2.nonEmpty).toMap
@@ -513,11 +493,6 @@ object GraftStats {
     // legacy migration completes on a FULL analyze only (a scoped one
     // may not have visited every directory the flat file covers)
     if (scope.isEmpty && legacy.nonEmpty) fs.delete(legacyPath, false)
-    // FULL analyze refreshes the listing census ([[GraftManifestListing]]
-    // — manifest-served scan planning); scoped analyzes leave it, and
-    // the freshness proof simply declines until the next full pass
-    walkedFiles.foreach(files => GraftManifestListing.writeCensus(
-      fs, dir, censusStartedAt, censusDirs.result(), files))
     todoAll.size
   }
 
@@ -1221,11 +1196,11 @@ object GraftStats {
         if (n.startsWith("_") || n.startsWith(".")) Nil
         else if (st.isDirectory) visible(st.getPath) else Seq(st)
       }
-    // the aggregate's coverage walk serves from the listing census when
-    // it is provably current ([[GraftManifestListing]]) — the count(*)
+    // the aggregate's coverage walk is the journal's live file list
+    // when the table has one ([[GraftManifestListing]]) — the count(*)
     // fast path then touches NO data directory at all
     def visibleAll(): Seq[org.apache.hadoop.fs.FileStatus] =
-      GraftManifestListing.serveListing(fs, tableDir)
+      GraftManifestListing.liveStatuses(fs, tableDir)
         .getOrElse(visible(tableDir))
     val dirUri = tableDir.toUri.getPath
     // 1. every visible file parses to its partition values first (a

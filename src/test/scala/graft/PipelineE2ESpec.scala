@@ -213,10 +213,79 @@ class PipelineE2ESpec extends SparkSpec {
       assert(ods.size == 1)
       val (missing, dds) = actions(DdsLayer.run(cat, d))
       assert(missing.contains(0L))
-      assert(dds.size == 2) // dim replace, fact overwrite
+      assert(dds.size == 1) // fact overwrite; the population did not move
       val (_, alerts) = actions(AlertsLayer.run(cat, d, clock))
       assert(alerts.size == 1)
+      // a population commit brings the dim rebuild back
+      cat.createOrReplace(cat.table("raw", "country_population"),
+        "raw", "country_population")
+      val (missing2, dds2) = actions(DdsLayer.run(cat, d))
+      assert(missing2.contains(0L))
+      assert(dds2.size == 2) // dim replace, fact overwrite
     }
+  }
+
+  private def rawCommits(cat: Catalog): Long =
+    spark.table(s"${cat.sqlIdent("raw", "daily_reports")}.commits").count()
+
+  test("a re-run day answers alreadyIngested from the journal: no Spark job, no raw commit") {
+    val (cat, runner) = env
+    val csv = s"${runner.inputDir}/2020-01-23.csv"
+    val (ingested, jobs) = jobsDuring(RawLayer.alreadyIngested(cat, csv))
+    assert(ingested)
+    assert(jobs.isEmpty, s"alreadyIngested ran Spark jobs: $jobs")
+    assert(!RawLayer.alreadyIngested(cat, s"${runner.inputDir}/2020-02-30.csv"))
+    val before = rawCommits(cat)
+    RawLayer.ingest(cat, csv, clock)
+    assert(rawCommits(cat) == before)
+  }
+
+  test("a raw table holding an un-noted commit falls back to the scan and still refuses a second ingest") {
+    val cat = Catalog(spark, tmpDir("warehouse-unnoted"))
+    val input = tmpDir("input-unnoted")
+    seedInput(input)
+    // a bulk load: rows of one file appended without an ingest note
+    val first = s"$input/2020-01-22.csv"
+    cat.appendByName(
+      graft.ops.Normalize(cat.spark.read.option("header", "true")
+          .option("inferSchema", "true").csv(first),
+        graft.schema.Schemas.rawDailyReport)
+        .withColumn("source_file", lit(first))
+        .withColumn("ingestion_ts", lit(clock.get)),
+      "raw", "daily_reports", partitionCols = Seq("Country_Region"))
+    val csv = s"$input/2020-01-23.csv"
+    RawLayer.ingest(cat, csv, clock)
+    val rows = cat.read("raw", "daily_reports").count()
+    val (ingested, jobs) = jobsDuring(RawLayer.alreadyIngested(cat, csv))
+    assert(ingested)
+    assert(jobs.nonEmpty, "an un-noted raw table must answer from its rows")
+    assert(RawLayer.alreadyIngested(cat, first))
+    val before = rawCommits(cat)
+    RawLayer.ingest(cat, csv, clock)
+    RawLayer.ingest(cat, first, clock)
+    assert(rawCommits(cat) == before)
+    assert(cat.read("raw", "daily_reports").count() == rows)
+  }
+
+  test("dim_location gains no commit on a steady-state day, and is rebuilt after a population commit") {
+    val (cat, runner) = env
+    def dimCommits: Long =
+      spark.table(s"${cat.sqlIdent("dds", "dim_location")}.commits").count()
+    def dimRows: Seq[String] =
+      cat.read("dds", "dim_location").collect().map(_.toString).sorted.toSeq
+    val d = LocalDate.parse("2020-01-24")
+    runner.runDay(d, clock)
+    val (commits, rows) = (dimCommits, dimRows)
+    runner.runDay(d, clock)
+    assert(dimCommits == commits, "a steady-state day rebuilt the dim")
+    assert(dimRows == rows)
+    cat.createOrReplace(cat.table("raw", "country_population"),
+      "raw", "country_population")
+    runner.runDay(d, clock)
+    assert(dimCommits == commits + 1, "a population commit did not rebuild the dim")
+    assert(dimRows == rows)
+    runner.runDay(d, clock)
+    assert(dimCommits == commits + 1)
   }
 
   test("alerts over no dates append nothing and return 0") {

@@ -21,4 +21,34 @@ abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.spark
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** `body`'s result and the descriptions of the Spark jobs it started.
+    * The listener bus delivers in order, so once a marker job run after
+    * `body` is seen, every job of `body` is too.
+    */
+  def jobsDuring[T](body: => T): (T, Seq[String]) = {
+    val marker = s"jobs-marker-${System.nanoTime()}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(s"job ${e.jobId}"))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val result = body
+      spark.sparkContext.setJobDescription(marker)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!seen.contains(marker)) {
+        assert(System.nanoTime() < deadline, "listener bus did not drain")
+        Thread.sleep(5)
+      }
+      import scala.jdk.CollectionConverters._
+      (result, seen.asScala.toSeq.filter(_ != marker))
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }

@@ -38,12 +38,12 @@ object CountingLocalFs {
   }
 }
 
-/** Manifest-served scan planning ([[GraftManifestListing]], r14 item
-  * 4): with `scan.listing_from_manifest = true` and a current census,
-  * scans plan from synthesized file statuses — zero data-directory
-  * listStatus calls (instrumented filesystem) — with partition pruning
-  * intact; ANY change since the census falls back to the real listing,
-  * never a stale scan.
+/** Scan planning from the commit journal ([[GraftManifestListing]]):
+  * a journaled table plans from its journal's live set — zero
+  * data-directory listStatus calls (instrumented filesystem), no
+  * listing job — with partition pruning intact, tracking every commit
+  * exactly. The record is the commit: files a commit published but
+  * never recorded are not served, and a failed record fails the write.
   */
 class GraftManifestListingSpec extends SparkSpec {
 
@@ -60,33 +60,24 @@ class GraftManifestListingSpec extends SparkSpec {
     (name, local)
   }
 
-  test("fresh census: zero data-directory listings, pruning intact; any change falls back") {
+  private def sumV(cat: String, t: String): (Long, Long) = {
+    val r = spark.table(s"$cat.ods.$t").agg(count(lit(1)), sum(col("v"))).head
+    (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+  }
+
+  test("journal planning: zero data-directory listings, pruning intact, every commit tracked exactly") {
     val (cat, local) = freshCatalog()
     spark.sql(s"CREATE NAMESPACE $cat.ods")
-    spark.sql(s"CREATE TABLE $cat.ods.t (k BIGINT, v BIGINT, p STRING) " +
-      "PARTITIONED BY (p) TBLPROPERTIES " +
-      s"('${GraftManifestListing.Prop}' = 'true')")
-    spark.sql(s"INSERT INTO $cat.ods.t SELECT id, id * 10, " +
+    spark.sql(s"CREATE TABLE $cat.ods.j (k BIGINT, v BIGINT, p STRING) " +
+      "PARTITIONED BY (p)")
+    spark.sql(s"INSERT INTO $cat.ods.j SELECT id, id * 10, " +
       "CASE WHEN id % 2 = 0 THEN 'a' ELSE 'b' END FROM range(0, 100)")
-    // the guard band: the census only serves when the directories had
-    // been quiet for 2s before the analyze walk — and the FIRST analyze
-    // creates the stats dir itself (root mtime bump), so the census
-    // arms from the second analyze on
-    Thread.sleep(GraftManifestListing.GuardMs + 200)
-    spark.sql(s"CALL $cat.system.analyze('ods.t')").collect()
-    Thread.sleep(GraftManifestListing.GuardMs + 200)
-    spark.sql(s"CALL $cat.system.analyze('ods.t')").collect()
-
     CountingLocalFs.reset()
-    val full = spark.table(s"$cat.ods.t")
-    assert(full.count() == 100)
-    assert(full.agg(sum(col("v"))).head.getLong(0) ==
-      (0L until 100L).map(_ * 10).sum)
-    val pruned = spark.table(s"$cat.ods.t").where(col("p") === "a")
+    assert(spark.table(s"$cat.ods.j").count() == 100)
+    val pruned = spark.table(s"$cat.ods.j").where(col("p") === "a")
     assert(pruned.count() == 50)
-    val listings = CountingLocalFs.dataListings(s"$local/ods/t")
-    assert(listings.isEmpty,
-      s"manifest-served scans still listed data dirs: $listings")
+    val listings = CountingLocalFs.dataListings(s"$local/ods/j")
+    assert(listings.isEmpty, s"journal-planned scans listed data dirs: $listings")
     // partition pruning proof: the 'a'-filtered scan planned only the
     // p=a partition's files
     pruned.collect()
@@ -100,86 +91,156 @@ class GraftManifestListingSpec extends SparkSpec {
           }.flatten
       }.flatten
     assert(scanned.nonEmpty && scanned.forall(_.contains("p=a")),
-      s"pruning broke under the manifest index: $scanned")
+      s"pruning broke under the journal index: $scanned")
 
-    // a NEW commit makes the census stale: the scan falls back to the
-    // real listing and sees the new rows — never a stale snapshot
-    spark.sql(s"INSERT INTO $cat.ods.t VALUES (999, 1, 'c')")
+    // a new commit: the file list is the journal's head, the fresh
+    // rows serve with still zero data-dir listings
+    spark.sql(s"INSERT INTO $cat.ods.j VALUES (999, 1, 'c')")
     CountingLocalFs.reset()
-    assert(spark.table(s"$cat.ods.t").count() == 101,
-      "stale census served a pre-commit snapshot")
-    assert(CountingLocalFs.dataListings(s"$local/ods/t").nonEmpty,
-      "fallback scan should have listed")
+    assert(spark.table(s"$cat.ods.j").count() == 101,
+      "journal planning served a stale snapshot")
+    assert(CountingLocalFs.dataListings(s"$local/ods/j").isEmpty,
+      "journal planning listed data dirs after a commit")
 
-    // re-analyze (after the guard) re-arms the census
-    Thread.sleep(GraftManifestListing.GuardMs + 200)
-    spark.sql(s"CALL $cat.system.analyze('ods.t')").collect()
+    // a row-level DELETE retires files and publishes a rewrite: the
+    // plan tracks it exactly (no stale files, no missing rows)
+    spark.sql(s"DELETE FROM $cat.ods.j WHERE k >= 90")
     CountingLocalFs.reset()
-    assert(spark.table(s"$cat.ods.t").count() == 101)
-    assert(CountingLocalFs.dataListings(s"$local/ods/t").isEmpty)
-
-    // row-level ops keep working (they use their own write-path
-    // listings; correctness is what matters here)
-    spark.sql(s"DELETE FROM $cat.ods.t WHERE k = 999")
-    assert(spark.table(s"$cat.ods.t").count() == 100,
-      "post-census DML must read through (fallback), not stale-serve")
+    assert(spark.table(s"$cat.ods.j").count() == 90,
+      "journal planning missed a row-level rewrite")
+    assert(CountingLocalFs.dataListings(s"$local/ods/j").isEmpty,
+      "post-DML journal planning listed data dirs")
   }
 
-  test("journal-proof census: zero data-dir listings with mtime proof DISABLED (object-store semantics); divergence falls back loudly (r15 item 4)") {
+  test("a name read of a 40-partition journaled table plans without a Spark job") {
+    val (cat, _) = freshCatalog()
+    spark.sql(s"CREATE NAMESPACE $cat.ods")
+    spark.sql(s"CREATE TABLE $cat.ods.wide (k BIGINT, v BIGINT, p INT) " +
+      "PARTITIONED BY (p)")
+    spark.sql(s"INSERT INTO $cat.ods.wide SELECT id, id, CAST(id % 40 AS INT) " +
+      "FROM range(0, 400)")
+    assert(spark.conf.get(
+      "spark.sql.sources.parallelPartitionDiscovery.threshold").toInt < 40)
+    val (_, jobs) = jobsDuring(spark.table(s"$cat.ods.wide")
+      .where(col("v") > 3).queryExecution.executedPlan)
+    assert(jobs.isEmpty, s"planning the name read ran Spark jobs: $jobs")
+    assert(spark.table(s"$cat.ods.wide").count() == 400)
+  }
+
+  test("a commit that crashes before its record leaves the table at its pre-commit state, and the next commit succeeds") {
     val (cat, local) = freshCatalog()
     spark.sql(s"CREATE NAMESPACE $cat.ods")
-    spark.sql(s"CREATE TABLE $cat.ods.j (k BIGINT, v BIGINT, p STRING) " +
-      "PARTITIONED BY (p) TBLPROPERTIES " +
-      s"('${GraftManifestListing.Prop}' = 'true')")
-    spark.sql(s"INSERT INTO $cat.ods.j SELECT id, id * 10, " +
+    spark.sql(s"CREATE TABLE $cat.ods.c (k BIGINT, v BIGINT, p STRING) " +
+      "PARTITIONED BY (p)")
+    spark.sql(s"INSERT INTO $cat.ods.c SELECT id, id * 10, " +
       "CASE WHEN id % 2 = 0 THEN 'a' ELSE 'b' END FROM range(0, 100)")
-    spark.sql(s"CALL $cat.system.analyze('ods.j')").collect()
-    // NO guard-band sleeps: the journal proof does not rest on mtimes
-    val prev = spark.conf.getOption(GraftManifestListing.MtimeProofConf)
-    spark.conf.set(GraftManifestListing.MtimeProofConf, "false")
+    val pre = sumV(cat, "c")
+    val old = GraftPartitionedCow.onBetweenPublishAndRetire
+    GraftPartitionedCow.onBetweenPublishAndRetire = dir =>
+      if (dir.endsWith("/ods/c")) throw new IllegalStateException("crash")
     try {
-      CountingLocalFs.reset()
-      assert(spark.table(s"$cat.ods.j").count() == 100)
-      assert(spark.table(s"$cat.ods.j").where(col("p") === "a")
-        .count() == 50)
-      val listings = CountingLocalFs.dataListings(s"$local/ods/j")
-      assert(listings.isEmpty,
-        s"journal-proof scans still listed data dirs: $listings")
+      val e = intercept[Exception](
+        spark.sql(s"UPDATE $cat.ods.c SET v = v + 1000000 WHERE p = 'a'"))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("crash")), e)
+      val e2 = intercept[Exception](
+        spark.sql(s"INSERT INTO $cat.ods.c VALUES (500, 5, 'a')"))
+      assert(Iterator.iterate[Throwable](e2)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("crash")), e2)
+    } finally GraftPartitionedCow.onBetweenPublishAndRetire = old
+    // both commits published files, neither recorded them: name reads
+    // serve exactly the pre-commit state
+    val tableDir = new Path(s"graftcnt://$local/ods/c")
+    val fs = tableDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(GraftEvolved.listVisible(fs, tableDir).size >
+      GraftCommits.accountedLive(GraftCommits.list(fs, tableDir)).size,
+      "the crashed commits published no file")
+    assert(sumV(cat, "c") == pre)
+    assert(spark.table(s"$cat.ods.c").where(col("p") === "a").count() == 50)
+    // the next commits succeed and serve on top of the pre-commit state
+    spark.sql(s"INSERT INTO $cat.ods.c VALUES (500, 5, 'a')")
+    assert(sumV(cat, "c") == ((pre._1 + 1, pre._2 + 5)))
+    spark.sql(s"UPDATE $cat.ods.c SET v = v + 1 WHERE p = 'b'")
+    assert(sumV(cat, "c") == ((pre._1 + 1, pre._2 + 5 + 50)))
+  }
 
-      // a new journaled commit: the file list comes from the JOURNAL's
-      // accounted-live set at the latest complete commit (r17 — the
-      // Delta-log pointer contract), with the census as the status
-      // cache and one getFileStatus for the post-analyze file — the
-      // fresh rows serve with STILL zero data-dir listings
-      spark.sql(s"INSERT INTO $cat.ods.j VALUES (999, 1, 'c')")
-      CountingLocalFs.reset()
-      assert(spark.table(s"$cat.ods.j").count() == 101,
-        "journal-pinned census served a stale snapshot")
-      assert(CountingLocalFs.dataListings(s"$local/ods/j").isEmpty,
-        "journal-pinned serving must not list data dirs for " +
-          "post-analyze commits")
+  test("a failed record fails the write and the table reads as before") {
+    val (cat, local) = freshCatalog()
+    spark.sql(s"CREATE NAMESPACE $cat.ods")
+    spark.sql(s"CREATE TABLE $cat.ods.f (k BIGINT, v BIGINT, p STRING) " +
+      "PARTITIONED BY (p)")
+    spark.sql(s"INSERT INTO $cat.ods.f SELECT id, id * 10, " +
+      "CASE WHEN id % 2 = 0 THEN 'a' ELSE 'b' END FROM range(0, 100)")
+    val pre = sumV(cat, "f")
+    val tableDir = new Path(s"graftcnt://$local/ods/f")
+    val fs = tableDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // the next record's staging path is taken by a directory: writing
+    // the record fails
+    val blocker = new Path(GraftCommits.dir(tableDir),
+      f".c${GraftCommits.lastId(fs, tableDir) + 1}%012d.rec.tmp")
+    assert(fs.mkdirs(new Path(blocker, "x")))
+    try {
+      intercept[Exception](
+        spark.sql(s"INSERT INTO $cat.ods.f VALUES (500, 5, 'a'), (501, 5, 'c')"))
+      intercept[Exception](
+        spark.sql(s"UPDATE $cat.ods.f SET v = v + 1000000 WHERE p = 'a'"))
+      assert(sumV(cat, "f") == pre, "a write whose record failed is visible")
+    } finally fs.delete(blocker, true)
+    spark.sql(s"INSERT INTO $cat.ods.f VALUES (500, 5, 'a')")
+    assert(sumV(cat, "f") == ((pre._1 + 1, pre._2 + 5)))
+  }
 
-      // re-analyze refreshes the status cache; serving stays zero-list
-      spark.sql(s"CALL $cat.system.analyze('ods.j')").collect()
-      CountingLocalFs.reset()
-      assert(spark.table(s"$cat.ods.j").count() == 101)
-      assert(CountingLocalFs.dataListings(s"$local/ods/j").isEmpty,
-        "journal proof failed to serve after re-analyze")
+  test("an UPDATE whose record failed, then a path append: no row is served twice") {
+    val (cat, local) = freshCatalog()
+    spark.sql(s"CREATE NAMESPACE $cat.ods")
+    spark.sql(s"CREATE TABLE $cat.ods.u (k BIGINT, v BIGINT)")
+    spark.sql(s"INSERT INTO $cat.ods.u SELECT id, id * 10 FROM range(0, 100)")
+    val pre = sumV(cat, "u")
+    val tableDir = new Path(s"graftcnt://$local/ods/u")
+    val fs = tableDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val blocker = new Path(GraftCommits.dir(tableDir),
+      f".c${GraftCommits.lastId(fs, tableDir) + 1}%012d.rec.tmp")
+    assert(fs.mkdirs(new Path(blocker, "x")))
+    try intercept[Exception](
+      spark.sql(s"UPDATE $cat.ods.u SET v = v + 1000000 WHERE k < 50"))
+    finally fs.delete(blocker, true)
+    assert(sumV(cat, "u") == pre, "an UPDATE whose record failed is visible")
+    // a Spark path write into the table directory is claimed: its one
+    // row serves once, and the failed UPDATE's generation never does
+    import spark.implicits._
+    Seq((1000L, 7L)).toDF("k", "v").coalesce(1)
+      .write.mode("append").parquet(s"$local/ods/u")
+    assert(sumV(cat, "u") == ((pre._1 + 1, pre._2 + 7)))
+    // a commit that crashes before its record leaves files behind; a
+    // path write after it is not claimed, because the unrecorded files
+    // then come from two writers
+    val old = GraftPartitionedCow.onBetweenPublishAndRetire
+    GraftPartitionedCow.onBetweenPublishAndRetire = dir =>
+      if (dir.endsWith("/ods/u")) throw new IllegalStateException("crash")
+    try intercept[Exception](
+      spark.sql(s"INSERT INTO $cat.ods.u SELECT id, 1 FROM range(0, 100)"))
+    finally GraftPartitionedCow.onBetweenPublishAndRetire = old
+    Seq((2000L, 9L)).toDF("k", "v").coalesce(1)
+      .write.mode("append").parquet(s"$local/ods/u")
+    assert(sumV(cat, "u") == ((pre._1 + 1, pre._2 + 7)))
+  }
 
-      // a row-level DELETE retires files and publishes a rewrite: the
-      // journal-pinned plan must track it exactly (no stale files, no
-      // missing rows), still with zero data-dir listings
-      spark.sql(s"DELETE FROM $cat.ods.j WHERE k >= 90")
-      CountingLocalFs.reset()
-      assert(spark.table(s"$cat.ods.j").count() == 90,
-        "journal-pinned serving missed a row-level rewrite")
-      assert(CountingLocalFs.dataListings(s"$local/ods/j").isEmpty,
-        "post-DML journal-pinned serving listed data dirs")
-    } finally prev match {
-      case Some(v) =>
-        spark.conf.set(GraftManifestListing.MtimeProofConf, v)
-      case None =>
-        spark.conf.unset(GraftManifestListing.MtimeProofConf)
-    }
+  test("a complete-mode stream refreshing a journaled table serves the refreshed state") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import spark.implicits._
+    val (cat, _) = freshCatalog()
+    spark.sql(s"CREATE NAMESPACE $cat.ods")
+    spark.sql(s"CREATE TABLE $cat.ods.s (seg STRING, n BIGINT)")
+    spark.sql(s"INSERT INTO $cat.ods.s VALUES ('z', 99)")
+    val m = MemoryStream[(Long, String)]
+    val q = m.toDF().toDF("k", "seg").groupBy("seg")
+      .agg(count(lit(1)).as("n")).writeStream.outputMode("complete")
+      .option("checkpointLocation", tmpDir("gml-s-cp"))
+      .toTable(s"$cat.ods.s")
+    try { m.addData((1L, "a"), (2L, "b"), (3L, "a")); q.processAllAvailable() }
+    finally q.stop()
+    assert(spark.table(s"$cat.ods.s").orderBy("seg").collect().toSeq ==
+      Seq(org.apache.spark.sql.Row("a", 2L), org.apache.spark.sql.Row("b", 1L)))
   }
 }

@@ -12,10 +12,10 @@ import graft.SparkSpec
   * copy-on-write commit publishes the new generation, then retires the
   * old one, all under the table lock. A reader planning INSIDE that
   * window used to see BOTH generations and double-count every touched
-  * partition. Scans now pin their planned file set to the commit
-  * journal's accounted-live snapshot whenever unaccounted files appear
-  * under a held lock; unjournaled divergence without a lock serves the
-  * listing (disk truth) — fail-safe in both directions.
+  * partition. Scans now plan from the commit journal's accounted-live
+  * snapshot, whose record is the commit: files a commit published but
+  * has not recorded, superseded files not yet retired and files no
+  * commit recorded are never served.
   */
 class GraftPinnedScanSpec extends SparkSpec {
 
@@ -94,7 +94,7 @@ class GraftPinnedScanSpec extends SparkSpec {
       "post-commit reader must see the completed UPDATE")
   }
 
-  test("unjournaled divergence WITHOUT a held lock serves the listing (disk truth), never silently hides data") {
+  test("an unjournaled file WITHOUT a held lock is not served: the journal is the table") {
     val (cat, root) = freshCatalog()
     spark.sql(s"CREATE NAMESPACE $cat.ods")
     spark.sql(s"CREATE TABLE $cat.ods.f (k BIGINT, v BIGINT)")
@@ -111,11 +111,10 @@ class GraftPinnedScanSpec extends SparkSpec {
     GraftPinnedScan.invalidate()
     val copiedRows = spark.read.parquet(copy.toString).count()
     assert(copiedRows > 0)
-    // no lock held: the listing is truth — the foreign rows serve
-    // (and the changes feed is what refuses loudly, not the scan)
-    assert(spark.table(s"$cat.ods.f").count() == 50L + copiedRows,
-      "an unjournaled file with no commit in flight must serve from " +
-        "the listing, not be silently hidden")
+    // no commit recorded the copy: name reads plan from the journal
+    // and never serve it
+    assert(spark.table(s"$cat.ods.f").count() == 50L,
+      "a data file no commit recorded must not be served")
   }
 
   test("journal-pinned plan drops ONLY the in-flight generation; accounted files absent from the listing disable the pin (fail-safe)") {
@@ -217,7 +216,7 @@ class GraftPinnedScanSpec extends SparkSpec {
     GraftPinnedScan.invalidate()
   }
 
-  test("a reader planning MID-RETIREMENT waits for the commit and serves the post-commit snapshot exactly") {
+  test("a reader planning after the record, while the retire is under way, serves the post-commit snapshot with no wait") {
     val (cat, root) = freshCatalog()
     spark.sql(s"CREATE NAMESPACE $cat.ods")
     spark.sql(s"CREATE TABLE $cat.ods.m (k BIGINT, v BIGINT, p STRING) " +
@@ -226,55 +225,97 @@ class GraftPinnedScanSpec extends SparkSpec {
       "CASE WHEN id % 2 = 0 THEN 'a' ELSE 'b' END FROM range(0, 100)")
     val preSum = spark.table(s"$cat.ods.m").agg(sum(col("v")))
       .head.getLong(0)
+    spark.sql(s"UPDATE $cat.ods.m SET v = v + 1000000 WHERE p = 'a'")
     val tableDir = new Path(s"$root/ods/m")
     val fs = tableDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val victim = GraftEvolved.listVisible(fs, tableDir).map(_.getPath)
-      .find(_.toString.contains("p=a"))
-      .getOrElse(fail("no partition-a file"))
-    val parked = new Path(tableDir.getParent, "parked-" + victim.getName)
-    spark.conf.set("spark.graft.pin.lockWaitMs", "30000")
-    val published = new CountDownLatch(1)
-    val release = new CountDownLatch(1)
-    val old = GraftPartitionedCow.onBetweenPublishAndRetire
-    GraftPartitionedCow.onBetweenPublishAndRetire = dir =>
-      if (dir.contains("/ods/m")) {
-        // retirement has STARTED: one pre-commit file is already gone —
-        // neither generation serves completely from a listing taken now
-        require(fs.rename(victim, parked))
-        published.countDown()
-        release.await(120, TimeUnit.SECONDS)
-        ()
+    // the state between the UPDATE's record and the end of its retire:
+    // the journal names the new generation, the commit lock is held,
+    // and superseded files are still in the live directory
+    val retiredArea = fs.makeQualified(new Path(tableDir.getParent,
+      tableDir.getName + ".__retired"))
+    val commitDir = fs.listStatus(retiredArea).head.getPath
+    val superseded = {
+      val it = fs.listFiles(commitDir, true)
+      val b = Seq.newBuilder[Path]
+      while (it.hasNext) {
+        val st = it.next()
+        if (st.getPath.getName.endsWith(".parquet")) b += st.getPath
       }
+      b.result()
+    }
+    assert(superseded.nonEmpty, "the UPDATE retired no file")
+    val back = superseded.take((superseded.size + 1) / 2).map { f =>
+      val dest = new Path(tableDir,
+        f.toString.stripPrefix(commitDir.toString).stripPrefix("/"))
+      org.apache.hadoop.fs.FileUtil.copy(fs, f, fs, dest, false,
+        spark.sparkContext.hadoopConfiguration)
+      dest
+    }
+    val token = GraftCommitLock.acquire(fs, tableDir, "spec-mid-retire")
     try {
-      val writer = new Thread(() =>
-        spark.sql(s"UPDATE $cat.ods.m SET v = v + 1000000 WHERE p = 'a'"))
-      writer.setDaemon(true)
-      writer.start()
-      assert(published.await(120, TimeUnit.SECONDS))
-      // un-park and release while the reader below is inside its
-      // bounded lock wait
-      val timer = new Thread(() => {
-        Thread.sleep(1500)
-        require(fs.rename(parked, victim))
-        release.countDown()
-      })
-      timer.setDaemon(true)
-      timer.start()
-      // plans mid-retirement: lock held and the pre-commit generation
-      // incomplete in the listing → the pin WAITS for the commit, then
-      // adjudicates against the fresh journal and serves EXACTLY the
-      // post-commit state (pre-refinement: both generations, unpinned)
+      val t0 = System.nanoTime()
       val got = spark.table(s"$cat.ods.m")
         .agg(count(lit(1)), sum(col("v"))).head
-      writer.join(120000)
+      val waitedMs = (System.nanoTime() - t0) / 1000000L
       assert(got.getLong(0) == 100L,
         s"mid-retirement reader saw ${got.getLong(0)} rows")
       assert(got.getLong(1) == preSum + 50L * 1000000L,
         "mid-retirement reader must serve the completed UPDATE exactly")
+      assert(waitedMs < 5000L,
+        s"the reader waited $waitedMs ms for the commit lock")
+    } finally {
+      GraftCommitLock.release(fs, tableDir, token)
+      back.foreach(fs.delete(_, false))
+    }
+  }
+
+  test("a reader planning while an unpartitioned UPDATE is stalled mid-retire serves exactly the post-commit state") {
+    val (cat, root) = freshCatalog()
+    spark.sql(s"CREATE NAMESPACE $cat.ods")
+    spark.sql(s"CREATE TABLE $cat.ods.u (k BIGINT, v BIGINT)")
+    (0 until 4).foreach { i =>
+      spark.sql(s"INSERT INTO $cat.ods.u SELECT id, id * 10 " +
+        s"FROM range(${i * 25}, ${(i + 1) * 25})")
+    }
+    val preSum = spark.table(s"$cat.ods.u").agg(sum(col("v")))
+      .head.getLong(0)
+    val tableDir = new Path(s"$root/ods/u")
+    val fs = tableDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val retiring = new CountDownLatch(1)
+    val release = new CountDownLatch(1)
+    GraftRetired.onFileRetired = f =>
+      if (f.toString.contains("/ods/u/")) {
+        retiring.countDown()
+        release.await(120, TimeUnit.SECONDS)
+        ()
+      }
+    @volatile var failure: Throwable = null
+    val writer = new Thread(() =>
+      try spark.sql(s"UPDATE $cat.ods.u SET v = v + 1000000 WHERE k % 2 = 0")
+      catch { case t: Throwable => failure = t })
+    writer.setDaemon(true)
+    try {
+      writer.start()
+      assert(retiring.await(120, TimeUnit.SECONDS),
+        "the UPDATE never started its retire")
+      // the retire is under way: one superseded file is gone, the
+      // others are still in the live directory, the lock is held
+      assert(fs.exists(GraftCommitLock.lockPath(tableDir)))
+      val mid = spark.table(s"$cat.ods.u")
+        .agg(count(lit(1)), sum(col("v"))).head
+      assert(mid.getLong(0) == 100L,
+        s"mid-retire reader saw ${mid.getLong(0)} rows")
+      assert(mid.getLong(1) == preSum + 50L * 1000000L,
+        "mid-retire reader must serve the committed UPDATE exactly")
     } finally {
       release.countDown()
-      GraftPartitionedCow.onBetweenPublishAndRetire = old
-      spark.conf.unset("spark.graft.pin.lockWaitMs")
+      GraftRetired.onFileRetired = _ => ()
+      writer.join(120000L)
     }
+    assert(failure == null, s"the UPDATE failed: $failure")
+    val post = spark.table(s"$cat.ods.u")
+      .agg(count(lit(1)), sum(col("v"))).head
+    assert(post.getLong(0) == 100L)
+    assert(post.getLong(1) == preSum + 50L * 1000000L)
   }
 }

@@ -188,4 +188,22 @@ class GraftPreimageSpec extends SparkSpec {
     assert(read("k, note, _graft_pre_note") ==
       Set(Row(1L, "n1", "stored1"), Row(2L, "n2", "stored2")))
   }
+
+  test("a partly deleted sidecar falls back to the exact ordinal read") {
+    val (cat, root) = freshCatalog()
+    val dir = scenario(cat, root, partitioned = true)
+    val fs = fsOf(root)
+    val expected = feedRows(cat)
+    // one recorded sidecar file of the DELETE commit goes missing; its
+    // stamp directory (and the commit's other sidecar files) stay
+    val del = GraftCommits.list(fs, dir).filter(_.dv.nonEmpty)
+      .find(_.note == "delete").getOrElse(fail("no delete commit"))
+    assert(del.pre.size > 1, s"the delete recorded ${del.pre.size} sidecar")
+    assert(fs.delete(new Path(GraftCommits.preRoot(dir), del.pre.head), false))
+    val got = feedRows(cat)
+    assert(got.filter(_.getString(1) == "delete") ==
+      expected.filter(_.getString(1) == "delete"),
+      "the feed lost delete rows of a partly deleted sidecar")
+    assert(got == expected)
+  }
 }
