@@ -755,9 +755,21 @@ final case class Catalog(spark: SparkSession, root: String,
     *    live visible files (`.name.crc` where `name` exists and is
     *    itself visible);
     *  - `_temporary` committer scratch directories older than the
-    *    grace (only a crashed V1 job leaves one behind).
+    *    grace (only a crashed V1 job leaves one behind);
+    *  - on a table with a commit journal, visible data files older than
+    *    the grace that no read serves and no retained record names: not
+    *    live at the journal's head, not among any retained record's adds
+    *    or removes (a commit that crashed before its record, a foreign
+    *    drop). Files a remove names stay. This runs under the table's
+    *    commit lock, where no commit sits between publish and record,
+    *    and only when the journal names every file reads serve: it is
+    *    complete ([[graft.sources.GraftCommits.complete]]; a journal
+    *    begun before stream epochs and rewrite_deletes recorded their
+    *    files is not until its next commit) and no live file is gone;
+    *  - `<table>.__pre` preimage stamp directories older than the grace
+    *    that no retained record's `pre` names (their records expired).
     *
-    * Never touched: visible data files, `_graft_meta` / `_graft_stats`
+    * Never touched: journaled data files, `_graft_meta` / `_graft_stats`
     * sidecars, `_graft_stream_commits` (epoch markers and crash-retry
     * manifests ARE the exactly-once state), and the `.__versions`
     * SIBLING directory (the time-travel store lives outside the table
@@ -777,23 +789,24 @@ final case class Catalog(spark: SparkSession, root: String,
     val cutoff = System.currentTimeMillis() - olderThanMs
     var files = 0
     var bytes = 0L
+    // counts through the same (checksum-filtered) listing view the walk
+    // uses — getContentSummary delegates to the raw FS and would count
+    // .crc sidecars
+    def deleteTree(dir: org.apache.hadoop.fs.Path): Unit = {
+      def sub(p: org.apache.hadoop.fs.Path): Unit =
+        fs.listStatus(p).foreach { c =>
+          if (c.isDirectory) sub(c.getPath)
+          else { files += 1; bytes += c.getLen }
+        }
+      sub(dir)
+      fs.delete(dir, true)
+    }
     def walk(dir: org.apache.hadoop.fs.Path): Unit =
       fs.listStatus(dir).foreach { st =>
         val n = st.getPath.getName
         if (st.isDirectory) {
           if (n == "_temporary") {
-            if (st.getModificationTime < cutoff) {
-              // count through the same (checksum-filtered) listing view
-              // the rest of the walk uses — getContentSummary delegates
-              // to the raw FS and would count .crc sidecars
-              def sub(p: org.apache.hadoop.fs.Path): Unit =
-                fs.listStatus(p).foreach { c =>
-                  if (c.isDirectory) sub(c.getPath)
-                  else { files += 1; bytes += c.getLen }
-                }
-              sub(st.getPath)
-              fs.delete(st.getPath, true)
-            }
+            if (st.getModificationTime < cutoff) deleteTree(st.getPath)
           } else if (!n.startsWith("_") && !n.startsWith("."))
             walk(st.getPath) // hive partition subtree
         } else if (n.startsWith(".")) {
@@ -811,6 +824,41 @@ final case class Catalog(spark: SparkSession, root: String,
         }
       }
     walk(base)
+    if (graft.sources.GraftCommits.exists(fs, base))
+      graft.sources.GraftCommitLock.withLock(fs, base, "remove-orphans") {
+        val live = graft.sources.GraftCommits.head(fs, base)
+          .fold(Set.empty[String])(_.live.keySet)
+        val recs = graft.sources.GraftCommits.list(fs, base)
+        val visible = graft.sources.GraftEvolved.listVisible(fs, base)
+          .map(st => graft.sources.GraftCommits.relOf(fs, base, st.getPath) -> st)
+        // only a journal that names every file its reads serve tells
+        // an orphan from a served file
+        if (!graft.sources.GraftCommits.complete(fs, base))
+          System.err.println(s"[graft] WARN $base: the commit journal " +
+            "predates complete file recording — data files are swept " +
+            "after the table's next commit")
+        else if (!live.subsetOf(visible.map(_._1).toSet))
+          System.err.println(s"[graft] WARN $base: files the commit " +
+            "journal names live are gone (changed outside the commit " +
+            "protocol) — no data file swept")
+        else {
+          val named = live ++ recs.flatMap(r => r.adds ++ r.removes.map(_.rel))
+          visible.foreach { case (rel, st) =>
+            if (st.getModificationTime < cutoff && !named(rel)) {
+              files += 1
+              bytes += st.getLen
+              fs.delete(st.getPath, false)
+            }
+          }
+        }
+        val preRoot = graft.sources.GraftCommits.preRoot(base)
+        val stamps = recs.flatMap(_.pre.map(_.takeWhile(_ != '/'))).toSet
+        if (fs.exists(preRoot))
+          fs.listStatus(preRoot).foreach { st =>
+            if (st.isDirectory && st.getModificationTime < cutoff &&
+                !stamps(st.getPath.getName)) deleteTree(st.getPath)
+          }
+      }
     // deletion-vector sidecars whose data file is gone are inert
     // garbage from rewrites/compactions — sweep them here too
     graft.sources.GraftDv.sweepStale(fs, base)

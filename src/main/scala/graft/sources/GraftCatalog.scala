@@ -1180,8 +1180,7 @@ private[sources] object GraftTableMeta {
 /** One table of the [[GraftCatalog]]: reads delegate to Spark's file
   * table for the format (full DSv2 pushdown/pruning tiers) over the
   * commit journal's file list ([[GraftManifestListing]] — once the
-  * table has a journal, no read lists a data directory while no commit
-  * holds its lock), DML writes
+  * table has a journal, no name read lists a data directory), DML writes
   * route through [[graft.runtime.Catalog]]'s crash-safe protocols, and
   * MERGE/UPDATE/DELETE implement group-based copy-on-write row-level
   * operations:
@@ -1266,8 +1265,7 @@ private[sources] class GraftTable(
 
   /** The journal's file index at its head ([[GraftManifestListing]]),
     * or None when this table plans from a listing: a time-travel
-    * snapshot, a table with no journal yet, one with live stream
-    * artifacts, or one whose commit lock is held.
+    * snapshot or a table with no journal yet.
     */
   private def journalIndex: Option[PartitioningAwareFileIndex] =
     if (readOnly) None
@@ -1509,10 +1507,8 @@ private[sources] class GraftTable(
     * rebuilt delegate scan. PartitionPruningSpec pins the behavior.
     */
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    // the journal is the file list ([[GraftManifestListing]]); only a
-    // table planned from a listing pins it to the journal
-    val idx = journalIndex
-    delegateOver(idx).newScanBuilder(options) match {
+    // the journal is the file list ([[GraftManifestListing]])
+    scanDelegate.newScanBuilder(options) match {
       case fsb: FileScanBuilder =>
         // data-skipping tier: planned splits are pruned against the
         // _graft_stats manifest (when one exists) — see [[GraftStats]]
@@ -1532,16 +1528,14 @@ private[sources] class GraftTable(
               partitionSchema = pSchema, maxFilesPerTrigger = mft,
               maxBytesPerTrigger = mbt, ignoreDeletes = ignoreDel,
               renameAliases = meta.renameAliases,
-              evolvedCols = meta.evolvedCols,
-              pinToJournal = !readOnly && idx.isEmpty)
+              evolvedCols = meta.evolvedCols)
           case None =>
             new GraftScanBuilder(fsb, statsDir = stats,
               tableSchema = schema(), partitionSchema = pSchema,
               ignoreDeletes = ignoreDel,
               maxFilesPerTrigger = mft, maxBytesPerTrigger = mbt,
               renameAliases = meta.renameAliases,
-              evolvedCols = meta.evolvedCols,
-              pinToJournal = !readOnly && idx.isEmpty)
+              evolvedCols = meta.evolvedCols)
         }
       case other => other
     }
@@ -2449,9 +2443,6 @@ private[sources] class GraftTable(
           val base = new Path(dir)
           val before = GraftCommits.universe(fs, base)
           innerBatch.commit(messages) // new generation is published
-          // the delegated job's `_SUCCESS` marker is no path write
-          // ([[GraftCommits.claimPathWrite]])
-          fs.delete(new Path(base, "_SUCCESS"), false)
           // the record is the commit: it names the tombstone the retire
           // then fills; a failed record unpublishes the new generation
           val tomb =
@@ -2579,8 +2570,7 @@ private[sources] final class GraftScanBuilder(delegate: FileScanBuilder,
     maxBytesPerTrigger: Option[Long] = None,
     ignoreDeletes: Boolean = false,
     renameAliases: Map[String, Seq[String]] = Map.empty,
-    evolvedCols: Seq[String] = Nil,
-    pinToJournal: Boolean = true)
+    evolvedCols: Seq[String] = Nil)
   extends ScanBuilder
   with SupportsPushDownRequiredColumns
   with org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
@@ -2760,14 +2750,12 @@ private[sources] final class GraftScanBuilder(delegate: FileScanBuilder,
             maxFilesPerTrigger = maxFilesPerTrigger,
             maxBytesPerTrigger = maxBytesPerTrigger,
             ignoreDeletes = ignoreDeletes,
-            renameAliases = renameAliases,
-            pinToJournal = pinToJournal)
+            renameAliases = renameAliases)
         case None => new GraftRuntimeFilterScan(fs, statsDir = statsDir,
           maxFilesPerTrigger = maxFilesPerTrigger,
           maxBytesPerTrigger = maxBytesPerTrigger,
           dvTableDir = statsDir, ignoreDeletes = ignoreDeletes,
-          renameAliases = renameAliases,
-          pinToJournal = pinToJournal)
+          renameAliases = renameAliases)
       }
       case other => other
     }
@@ -2820,9 +2808,7 @@ private[sources] final class GraftBucketedScan(initial: FileScan,
     ignoreDeletes: Boolean = false,
     // RENAME COLUMN alias map (current lower name -> retired names);
     // see [[GraftRename]]
-    renameAliases: Map[String, Seq[String]] = Map.empty,
-    // journal-pinned snapshot reads ([[GraftPinnedScan]], r16 item 1)
-    pinToJournal: Boolean = true)
+    renameAliases: Map[String, Seq[String]] = Map.empty)
   extends Scan with Batch
   with org.apache.spark.sql.connector.read.SupportsReportPartitioning
   with SupportsRuntimeV2Filtering
@@ -2977,34 +2963,12 @@ private[sources] final class GraftBucketedScan(initial: FileScan,
     else Some(per.flatten.reduce(_ intersect _))
   }
 
-  /** Journal-pinned keep-test over the planned batch files (r16 item
-    * 1) — None = nothing to pin (the common case).
-    */
-  private def pinKeep(planned: Seq[PartitionedFile])
-      : Option[PartitionedFile => Boolean] =
-    (statsDir, dvFs) match {
-      case (Some(td), Some(fs)) if pinToJournal =>
-        GraftPinnedScan.keepTest(fs, td, current, planned)
-      case _ => None
-    }
-
   override def planInputPartitions(): Array[
       org.apache.spark.sql.connector.read.InputPartition] =
     if (!groupable) {
       // fallback (untagged/foreign files): delegate plan, but deletion
       // vectors must still apply — regroup exactly as the plain scan
-      val parts0 = current.toBatch.planInputPartitions()
-      val parts = pinKeep(parts0.toSeq.collect {
-          case fp: FilePartition => fp.files.toSeq
-        }.flatten) match {
-        case Some(keepP) => parts0.map {
-          case fp: FilePartition =>
-            FilePartition(fp.index, fp.files.filter(keepP))
-              : org.apache.spark.sql.connector.read.InputPartition
-          case other => other
-        }
-        case None => parts0
-      }
+      val parts = current.toBatch.planInputPartitions()
       (statsDir, dvFs) match {
         case (Some(td), Some(fs)) if dvIndex.nonEmpty =>
           val planned = parts.toSeq.collect {
@@ -3019,14 +2983,8 @@ private[sources] final class GraftBucketedScan(initial: FileScan,
         case _ => parts
       }
     } else {
-      val by0 = bucketsOf(current.toBatch.planInputPartitions())
+      val by = bucketsOf(current.toBatch.planInputPartitions())
         .getOrElse(Map.empty[Int, Seq[PartitionedFile]])
-      // pin WITHIN bucket groups: all n key groups still emit
-      val by = pinKeep(by0.values.flatten.toSeq) match {
-        case Some(keepP) =>
-          by0.map { case (b, fl) => (b, fl.filter(keepP)) }
-        case None => by0
-      }
       val filters = current.dataFilters
       // hash-exact bucket pruning: non-matching buckets keep their
       // (empty) groups so the reported KeyGroupedPartitioning stays
@@ -3184,11 +3142,7 @@ private[sources] final class GraftRuntimeFilterScan(
     // into a rewrite's carryover
     dvTableDir: Option[Path] = None,
     // RENAME COLUMN alias map; see [[GraftRename]]
-    renameAliases: Map[String, Seq[String]] = Map.empty,
-    // journal-pinned snapshot reads ([[GraftPinnedScan]], r16 item 1):
-    // off for read-only time-travel dirs (their journal is an archived
-    // copy, not a live commit axis)
-    pinToJournal: Boolean = true)
+    renameAliases: Map[String, Seq[String]] = Map.empty)
   extends Scan with SupportsRuntimeV2Filtering with SupportsReportStatistics {
 
   @volatile private var current: FileScan = initial
@@ -3264,16 +3218,7 @@ private[sources] final class GraftRuntimeFilterScan(
   private final class GraftBatch extends Batch {
     override def planInputPartitions()
         : Array[org.apache.spark.sql.connector.read.InputPartition] = {
-      val parts0 = current.toBatch.planInputPartitions()
-      // journal-pinned snapshot (r16 item 1): a commit stalled between
-      // publish and retirement must not double-serve its partitions —
-      // capture-mode scans are excluded at toBatch (a COW rewrite reads
-      // its own groups under the very lock the pin would consult)
-      val parts = (dvTableDir, dvFs) match {
-        case (Some(td), Some(fs)) if pinToJournal =>
-          GraftPinnedScan.pin(fs, td, current, parts0)
-        case _ => parts0
-      }
+      val parts = current.toBatch.planInputPartitions()
       val filters = current.dataFilters
       val pruned = statsDir match {
         case Some(d) if captureTokens.isEmpty && filters.nonEmpty =>
@@ -3988,6 +3933,71 @@ private[graft] object GraftPartitionedCow {
     */
   private[graft] var onBeforeOverwriteCheck: String => Unit = _ => ()
 
+  /** Test seam: invoked inside a stream epoch's commit critical
+    * section, after its journal record and before its epoch marker.
+    */
+  private[graft] var onBeforeEpochMarker: String => Unit = _ => ()
+
+  /** (staged path, final path, row count) of a write's task files. */
+  private def stagedOf(messages: Array[WriterCommitMessage])
+      : Seq[(String, String, Long)] = messages.toSeq.flatMap {
+    case CowTaskFiles(files, _, _) => files
+    case _ => Nil
+  }
+
+  /** A stream epoch's commit up to its marker, under the table's commit
+    * lock. When the epoch's `manifest` exists, an earlier attempt
+    * crashed before its marker: if the journal already names the
+    * epoch, that attempt committed, so this one deletes its own staged
+    * files and returns the recorded files; otherwise the earlier
+    * attempt's published files (the manifest lists them) are deleted
+    * first. Then the manifest is written, the staged files publish and
+    * the epoch records as a [[GraftCommits.StreamEpochKind]] record —
+    * the commit point; a failed record fails the epoch and unpublishes
+    * its files. Returns the epoch's files and whether an earlier
+    * attempt recorded them.
+    */
+  private def commitEpoch(fs: FileSystem, dir: String, manifest: Path,
+      staged: Seq[(String, String, Long)], tag: String, epochId: Long)
+      : (Seq[Path], Boolean) = {
+    val base = new Path(dir)
+    if (fs.exists(manifest)) {
+      GraftCommits.streamEpochRecorded(fs, base, tag, epochId) match {
+        case Some(rec) =>
+          staged.foreach(f => fs.delete(new Path(f._1), false))
+          return (rec.adds.map(new Path(base, _)), true)
+        case None =>
+          val in = fs.open(manifest)
+          val prior = try scala.io.Source.fromInputStream(in, "UTF-8")
+            .getLines().toList finally in.close()
+          prior.filter(_.nonEmpty).foreach { p =>
+            try fs.delete(new Path(p), false)
+            catch { case scala.util.control.NonFatal(_) => () }
+          }
+      }
+    }
+    // manifest BEFORE the first rename
+    fs.mkdirs(manifest.getParent)
+    val out = fs.create(manifest, true)
+    try out.write(staged.map(_._2).mkString("\n").getBytes("UTF-8"))
+    finally out.close()
+    val published = staged.map { case (st, fin, _) =>
+      val finP = new Path(fin)
+      if (fs.exists(finP)) fs.delete(new Path(st), false)
+      else require(fs.rename(new Path(st), finP),
+        s"stream commit: could not publish $st -> $fin")
+      fs.getFileStatus(finP)
+    }
+    val added = published.map(st =>
+      GraftCommits.relOf(fs, base, st.getPath) ->
+        GraftCommits.FileInfo(st.getLen, st.getModificationTime))
+    GraftCommits.recordOrUnpublish(fs, base, published.map(_.getPath)) {
+      GraftCommits.record(fs, base, GraftCommits.StreamEpochKind,
+        adds = added.map(_._1), note = s"$tag:$epochId", info = added.toMap)
+    }
+    (published.map(_.getPath), false)
+  }
+
   /** The optimistic-concurrency check of a write that overwrites what
     * it listed at build, run under the commit lock before anything
     * publishes: in the partition directories `scope` (None = the whole
@@ -4322,13 +4332,16 @@ private[graft] object GraftPartitionedCow {
   }
 
   /** Exactly-once streaming append (`df.writeStream.toTable(...)`):
-    * tasks stage invisibly like every write here; `commit(epochId)` is
-    * idempotent at two levels:
+    * tasks stage invisibly like every write here; `commit(epochId)`
+    * publishes, records the epoch in the commit journal (the record is
+    * the commit: scans plan the epoch's files from it), then writes its
+    * marker — see [[commitEpoch]]. It is idempotent at two levels:
     *  1. an EPOCH MARKER (`_graft_stream_commits/<query>/<epoch>`,
-    *     underscore-invisible to scans, created after publish) makes a
-    *     re-delivered epoch a declared no-op — Spark re-runs an epoch
+    *     underscore-invisible to scans, created after the record) makes
+    *     a re-delivered epoch a declared no-op — Spark re-runs an epoch
     *     whose sink committed but whose checkpoint log write was lost,
-    *     the classic at-least-once window;
+    *     the classic at-least-once window; an epoch the journal already
+    *     names (a crash between record and marker) only gets its marker;
     *  2. inside the publish itself, final file names are DETERMINISTIC
     *     per (query, epoch, task partition, partition dir), so a crash
     *     BETWEEN renames re-converges file-by-file on re-execution — a
@@ -4340,20 +4353,21 @@ private[graft] object GraftPartitionedCow {
     * MANIFEST: before the first publish rename, the commit writes the
     * complete list of final names this attempt will make visible
     * (`_graft_stream_commits/<query>/<epoch>.manifest`). A re-executed
-    * epoch that finds a manifest but no marker is retrying after a
-    * mid-publish crash: it first deletes every file the crashed
-    * attempt may have published (the manifest IS that set — written
-    * before any rename, so it is always complete), then publishes its
-    * own files. A restart that re-plans the epoch with different
-    * parallelism or row routing therefore converges to exactly the new
-    * attempt's rows — no orphaned cells from the old shape survive.
+    * epoch that finds a manifest but no marker and no record is
+    * retrying after a crash before its record: it first deletes every
+    * file the crashed attempt may have published (the manifest IS that
+    * set — written before any rename, so it is always complete), then
+    * publishes its own files. A restart that re-plans the epoch with
+    * different parallelism or row routing therefore converges to
+    * exactly the new attempt's rows — no orphaned cells from the old
+    * shape survive.
     * The marker supersedes the manifest (deleted after the marker
     * lands); a crash between marker and manifest-delete is harmless —
     * the next delivery sees the marker first and declines.
     *
-    * Scale: manifest + marker are two tiny driver writes per epoch;
-    * publish is one rename per written file; no row ever touches the
-    * driver.
+    * Scale: manifest, record and marker are three tiny driver writes
+    * per epoch; publish is one rename and one stat per written file; no
+    * row ever touches the driver.
     */
   final class StreamingAppendWrite(
       spark: SparkSession, format: String, dataSchema: StructType,
@@ -4388,50 +4402,11 @@ private[graft] object GraftPartitionedCow {
       } else GraftCommitLock.withLock(fs, new Path(dir),
           s"stream-append:$queryTag:e$epochId") {
         GraftEqDel.requireNone(fs, new Path(dir), "an append-mode stream epoch")
-        // a manifest without a marker = a prior attempt of THIS epoch
-        // crashed mid-publish; retract whatever it made visible (the
-        // manifest is complete by construction — written before its
-        // first rename) so a re-planned attempt can't leave duplicates
-        val mf = manifest(epochId)
-        if (fs.exists(mf)) {
-          val in = fs.open(mf)
-          val prior = try scala.io.Source.fromInputStream(in, "UTF-8")
-            .getLines().toList finally in.close()
-          prior.filter(_.nonEmpty).foreach { p =>
-            try fs.delete(new Path(p), false)
-            catch { case scala.util.control.NonFatal(_) => () }
-          }
-        }
-        // manifest BEFORE the first rename
-        val finals = messages.collect {
-          case CowTaskFiles(files, _, _) => files.map(_._2)
-        }.flatten
-        fs.mkdirs(markerDir)
-        val out = fs.create(mf, true)
-        try out.write(finals.mkString("\n").getBytes("UTF-8"))
-        finally out.close()
-        messages.foreach {
-          case CowTaskFiles(files, _, _) => files.foreach { case (staged, fin, _) =>
-            val finP = new Path(fin)
-            if (fs.exists(finP)) fs.delete(new Path(staged), false)
-            else require(fs.rename(new Path(staged), finP),
-              s"stream commit: could not publish $staged -> $fin")
-          }
-          case _ => ()
-        }
-        val mk = fs.create(marker(epochId), true)
-        mk.close()
-        fs.delete(mf, false) // superseded by the marker
-        // one monotonic feed axis with batch DML (r15 item 2): the
-        // epoch journals as a stream_epoch record under this same
-        // lock, AFTER the marker (the commit point) so a crashed
-        // attempt never journals — a crash between marker and record
-        // degrades to the loud unjournaled-emission feed refusal
-        GraftCommits.tryRecord(fs, new Path(dir),
-          GraftCommits.StreamEpochKind,
-          adds = finals.map(f =>
-            GraftCommits.relOf(fs, new Path(dir), new Path(f))),
-          note = s"$queryTag:$epochId")
+        commitEpoch(fs, dir, manifest(epochId), stagedOf(messages),
+          queryTag, epochId)
+        onBeforeEpochMarker(dir)
+        fs.create(marker(epochId), true).close()
+        fs.delete(manifest(epochId), false) // superseded by the marker
       }
     }
 
@@ -4707,14 +4682,15 @@ private[graft] object GraftPartitionedCow {
     * holding the epoch's distinct key tuples. NO job ever touches the
     * table: per-epoch cost is the epoch, not the table.
     *
-    * Idempotence mirrors [[StreamingAppendWrite]]: epoch marker,
-    * retraction manifest written before the first publish, and
-    * deterministic final names — a kill/restart re-delivers the epoch,
-    * retracts any partial publish, and converges (the sidecar write is
-    * an atomic overwrite keyed by (query, epoch), so it converges
-    * too). The sidecar lands AFTER the rows: the worst crash window
-    * shows a key's old AND new row (visible duplicate, repaired by
-    * re-delivery) — never a silently lost row.
+    * Idempotence mirrors [[StreamingAppendWrite]]: the epoch
+    * publishes, records, writes its sidecar, then its marker. A
+    * kill/restart before the record re-delivers the epoch, retracts
+    * any partial publish, and converges; after the record, the
+    * re-delivery keeps the recorded files and only writes a missing
+    * sidecar and the marker (the sidecar write is an atomic overwrite
+    * keyed by (query, epoch)). The sidecar lands AFTER the record: the
+    * worst crash window shows a key's old AND new row (visible
+    * duplicate, repaired by re-delivery) — never a silently lost row.
     */
   final class StreamingEqUpsertWrite(
       spark: SparkSession, format: String, dataSchema: StructType,
@@ -4784,44 +4760,21 @@ private[graft] object GraftPartitionedCow {
           "system.rewrite_deletes before starting a new upsert stream")
       GraftCommitLock.withLock(fs, new Path(dir),
           s"stream-equpsert:$queryTag:e$epochId") {
-        // retraction manifest (see StreamingAppendWrite): a prior
-        // crashed attempt's partial publish is undone first
-        val mf = manifest(epochId)
-        if (fs.exists(mf)) {
-          val in = fs.open(mf)
-          val prior = try scala.io.Source.fromInputStream(in, "UTF-8")
-            .getLines().toList finally in.close()
-          prior.filter(_.nonEmpty).foreach { p =>
-            try fs.delete(new Path(p), false)
-            catch { case scala.util.control.NonFatal(_) => () }
-          }
-        }
-        val staged = messages.toSeq.flatMap {
-          case CowTaskFiles(files, _, _) => files
-          case _ => Nil
-        }
-        // manifest BEFORE the first publish
-        fs.mkdirs(markerDir)
-        val out = fs.create(mf, true)
-        try out.write(staged.map(_._2).mkString("\n").getBytes("UTF-8"))
-        finally out.close()
-        staged.foreach { case (st, fin, _) =>
-          val finP = new Path(fin)
-          if (fs.exists(finP)) fs.delete(new Path(st), false)
-          else require(fs.rename(new Path(st), finP),
-            s"equality upsert commit: could not publish $st -> $fin")
-        }
-        // the epoch's DISTINCT keys, read from ITS OWN just-published
-        // files — one epoch-bounded job; the table is never scanned.
-        // (A crash before the sidecar lands is retracted by the
-        // manifest on re-delivery, so reading post-publish is safe.)
-        val keyTuples: Seq[Seq[Option[Any]]] =
-          if (staged.isEmpty) Nil
+        // publish and record (see [[commitEpoch]]); a redelivery whose
+        // earlier attempt recorded the epoch keeps that attempt's files
+        val (files, redelivered) = commitEpoch(fs, dir, manifest(epochId),
+          stagedOf(messages), queryTag, epochId)
+        val sidecar = new Path(GraftEqDel.eqDir(new Path(dir)),
+          GraftEqDel.sidecarName(queryTag, epochId))
+        // the epoch's DISTINCT keys, read from ITS OWN recorded files
+        // — one epoch-bounded job; the table is never scanned
+        lazy val keyTuples: Seq[Seq[Option[Any]]] =
+          if (files.isEmpty) Nil
           else {
             val p = prepare(spark, format, dataSchema, partitionCols,
               bucketSpec, dir)
             val src = spark.read.schema(p.fileSchema)
-              .parquet(staged.map(_._2): _*)
+              .parquet(files.map(_.toString): _*)
             val maxKeys = spark.conf.getOption(GraftEqDel.MaxKeysConf)
               .map(_.toLong).getOrElse(GraftEqDel.MaxKeysDefault)
             val rows = src.select(keyFields.map(f =>
@@ -4847,19 +4800,13 @@ private[graft] object GraftPartitionedCow {
             }
           }
         // the sidecar: older rows with these keys are now deleted
-        GraftEqDel.write(fs, new Path(dir), GraftEqDel.EqDel(
-          queryTag, epochId, keyFields.map(_._1), keyFields.map(_._2),
-          keyTuples))
+        if (!redelivered || !fs.exists(sidecar))
+          GraftEqDel.write(fs, new Path(dir), GraftEqDel.EqDel(
+            queryTag, epochId, keyFields.map(_._1), keyFields.map(_._2),
+            keyTuples))
+        onBeforeEpochMarker(dir)
         fs.create(marker(epochId), true).close()
-        fs.delete(mf, false)
-        // one monotonic feed axis with batch DML (r15 item 2): see
-        // [[StreamingAppendWrite]] — journaled after the marker under
-        // this same lock
-        GraftCommits.tryRecord(fs, new Path(dir),
-          GraftCommits.StreamEpochKind,
-          adds = staged.map(f =>
-            GraftCommits.relOf(fs, new Path(dir), new Path(f._2))),
-          note = s"$queryTag:$epochId")
+        fs.delete(manifest(epochId), false)
         // floor-aware sidecar compaction (r13 item 5): dead sidecars
         // and subsumed keys shrink the read map at zero data cost —
         // still under this epoch's lock, so readers see an atomic
@@ -4976,13 +4923,6 @@ private[graft] object GraftPartitionedCow {
       * maintenance.
       */
     protected def commitsEmpty: Boolean = true
-
-    private def stagedOf(messages: Array[WriterCommitMessage])
-        : Seq[(String, String, Long)] =
-      messages.toSeq.flatMap {
-        case CowTaskFiles(files, _, _) => files
-        case _ => Nil
-      }
 
     /** True when [[commitsEmpty]] is off and no task staged a file:
       * the commit is a no-op, and so is any refresh that follows it.
@@ -5714,6 +5654,10 @@ private[graft] object GraftPartitionedCow {
     private var curKey: String = null
     private var curWriter: OutputWriter = null
     private var curIdx: Int = -1
+    // the task's output metrics (bytes and records written), set at
+    // commit by Spark's own file-write stats tracker
+    private val stats = new org.apache.spark.sql.execution.datasources
+      .BasicWriteTaskStatsTracker(conf, None)
 
     private def newFile(rel: String, bucketId: Int): (OutputWriter, Int) = {
       val name = finalName(rel, bucketId)
@@ -5721,6 +5665,7 @@ private[graft] object GraftPartitionedCow {
       val staged = s"$prefix/${stagedName(name)}"
       files += ((staged, s"$prefix/$name"))
       rowCounts += 0L
+      stats.newFile(staged)
       if (bloomCols.nonEmpty)
         fileBlooms += (if (files.length > MaxBloomFilesPerTask) null
         else bloomCols.map { _ =>
@@ -5762,7 +5707,10 @@ private[graft] object GraftPartitionedCow {
             // close-on-key-change; a recurring key (possible only if
             // the ordering guarantee broke) just opens a fresh file —
             // correct either way, fileSeq keeps names distinct
-            if (curWriter != null) curWriter.close()
+            if (curWriter != null) {
+              curWriter.close()
+              stats.closeFile(files(curIdx)._1)
+            }
             val (nw, ni) = newFile(rel, bucketId)
             curWriter = nw; curIdx = ni
             curKey = key
@@ -5770,6 +5718,7 @@ private[graft] object GraftPartitionedCow {
           (curWriter, curIdx)
         } else open.getOrElseUpdate(key, newFile(rel, bucketId))
       rowCounts(idx) += 1
+      stats.newRow(files(idx)._1, row)
       if (bloomCols.nonEmpty && fileBlooms(idx) != null) {
         val filters = fileBlooms(idx)
         var bi = 0
@@ -5817,9 +5766,17 @@ private[graft] object GraftPartitionedCow {
     }
 
     override def commit(): WriterCommitMessage = {
-      if (curWriter != null) { curWriter.close(); curWriter = null }
-      open.values.foreach(_._1.close())
+      if (curWriter != null) {
+        curWriter.close()
+        curWriter = null
+        stats.closeFile(files(curIdx)._1)
+      }
+      open.values.foreach { case (w, i) =>
+        w.close()
+        stats.closeFile(files(i)._1)
+      }
       open.clear()
+      stats.getFinalStats(0L)
       val shipped: Map[String, Seq[(String, Char, Array[Byte])]] =
         if (bloomCols.isEmpty) Map.empty
         else files.toSeq.zip(fileBlooms.toSeq).collect {

@@ -508,7 +508,7 @@ private[sources] final class GraftChangesScan(
           "the two change histories have no common ordering " +
           "and cannot be served as one feed; CALL system.compact to " +
           "reset the changelog, or consume the table state instead")
-      // accounting: every visible batch file must be attributed to a
+      // accounting: every visible data file must be attributed to a
       // commit — an unaccounted file means a crashed or journal-
       // bypassing commit whose changes would silently be missing
       val allAdds = recs.iterator.flatMap(_.adds).toSet ++ ckFiles
@@ -576,18 +576,22 @@ private[sources] final class GraftChangesScan(
         case None => Some(tableDir) // never removed since: live
       }
 
+    // emission files a rewrite_deletes materialization moved: the
+    // sidecars that retracted older rows for their epochs are consumed
+    private val materialized: Set[String] = recs.iterator
+      .filter(_.note == GraftEqDel.MaterializeNote)
+      .flatMap(_.removes.map(_.rel)).toSet
+
     private def servable(r: GraftCommits.Rec): Boolean = {
-      // stream-epoch adds that resolve LIVE must actually be live:
-      // rewrite_deletes materialization RENAMES emission files (floor
-      // stamps) without a journaled remove, so presence in the live
-      // emission census is the servability truth — a materialized
-      // epoch's record floors the feed exactly like rewritten batch
-      // history
+      // a stream epoch whose emission file was materialized away floors
+      // the feed exactly like rewritten batch history, wherever its
+      // bytes went; one that resolves live must be in the live census
       def addOk(rel: String): Boolean =
         instanceBase(rel, r.id) match {
           case None => false
-          case Some(base) if r.kind == GraftCommits.StreamEpochKind &&
-            base == tableDir => liveEmissionRels.contains(rel)
+          case Some(base) if r.kind == GraftCommits.StreamEpochKind =>
+            if (base == tableDir) liveEmissionRels.contains(rel)
+            else !materialized(rel)
           case Some(_) => true
         }
       r.adds.forall(addOk) &&

@@ -47,32 +47,38 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * scan plans it with ([[FileInfo]]). A table whose journal is empty
   * (its files predate journaling, or were written outside the catalog)
   * plans from a listing until its first journaled commit claims those
-  * files under a `genesis` floor record. A file a journal-bypassing
+  * files under a `genesis` floor record. A journal begun before stream
+  * epochs and rewrite_deletes recorded their files lacks the
+  * [[complete]] mark; its next commit first records what its reads
+  * served that the head lacks ([[upgrade]]). A file a journal-bypassing
   * writer adds to a journaled table is not served, and the feed
   * refuses it loudly (unaccounted files); `CALL system.compact` (a
   * full replace) resets the table to a servable state.
   *
   * The record is the commit: every commit that publishes or retires
   * data files (hive-layout and copy-on-write rewrites, metadata-only
-  * and partition-emptying deletes, rewrite_deletes, rollback) records
-  * after its publish and before its retire, under the lock, and a
-  * failed record fails the commit and unpublishes its new files
-  * ([[recordOrUnpublish]]). A crash before the record leaves published
-  * files no read plans (the pre-commit state); a crash after it leaves
-  * superseded files in place, no longer planned (the post-commit
-  * state). Merge-on-read deletes and stream epochs, which retire no
-  * file, journal best effort ([[tryRecord]]).
+  * and partition-emptying deletes, both rewrite_deletes, rollback,
+  * stream epochs) records after its publish and before its retire or
+  * epoch marker, under the lock, and a failed record fails the commit
+  * and unpublishes its new files ([[recordOrUnpublish]]). A crash
+  * before the record leaves published files no read plans (the
+  * pre-commit state); a crash after it leaves superseded files in
+  * place, no longer planned (the post-commit state). Only merge-on-read
+  * deletes, whose deletion vectors are their commit point and which
+  * publish no data file, journal best effort ([[tryRecord]]).
   *
   * Scale: one O(100 B) record per commit; assignment lists ONLY the
   * journal directory (bounded by commit count, prunable with history
   * expiry); no data listing beyond what the owning commit already
-  * performs. Stream epochs journal too ([[StreamEpochKind]], written
-  * after each epoch's commit marker under the same table lock): on a
-  * stream-only table those records are pure accounting (the classic
-  * epoch-axis feed still serves from the emission file names), but as
-  * soon as any BATCH row-changing kind appears the journal IS the
-  * interleaved history and `<t>.changes` serves both stream epochs and
-  * batch DML on one monotonic commit-id axis ([[GraftChanges]]).
+  * performs. Stream epochs journal like batch commits
+  * ([[StreamEpochKind]], recorded before each epoch's marker under the
+  * same table lock; a redelivered epoch the journal already names is
+  * found by [[streamEpochRecorded]] and not recorded twice): on a
+  * stream-only table the changes feed still serves from the emission
+  * file names, but as soon as any BATCH row-changing kind appears the
+  * journal IS the interleaved history and `<t>.changes` serves both
+  * stream epochs and batch DML on one monotonic commit-id axis
+  * ([[GraftChanges]]).
   */
 private[graft] object GraftCommits {
 
@@ -91,15 +97,15 @@ private[graft] object GraftCommits {
   val FeedKinds: Set[String] =
     Set("append", "overwrite", "rewrite", "delete", "mor_delete")
 
-  /** STREAM-epoch marker kind (r15 verdict item 2 — one monotonic feed
-    * axis for tables maintained by both streams and batch DML): every
-    * append-mode and equality-upsert epoch commit journals one record
+  /** STREAM-epoch kind (r15 verdict item 2 — one monotonic feed axis
+    * for tables maintained by both streams and batch DML): every
+    * append-mode and equality-upsert epoch commit records one record
     * under the same table lock batch commits use, with `adds` = the
-    * epoch's emission file rels and `note` = `tag:epoch`. On a
-    * STREAM-ONLY table these records are pure accounting (the classic
-    * epoch-axis feed still serves from the file names); as soon as a
-    * batch kind appears, the journal IS the interleaved history and
-    * the feed serves both on commit-id positions.
+    * epoch's emission file rels and `note` = `tag:epoch`. Scans plan
+    * the epoch's files from it like any add; on a STREAM-ONLY table the
+    * classic epoch-axis feed still serves from the file names, and as
+    * soon as a batch kind appears the journal IS the interleaved
+    * history and the feed serves both on commit-id positions.
     */
   val StreamEpochKind = "stream_epoch"
 
@@ -578,53 +584,81 @@ private[graft] object GraftCommits {
 
   // ---- recording (caller holds the table commit lock) -------------------
 
-  /** Names stamped by the STREAMING writers — outside the journal's
-    * accounting universe (their feed derives from the names
-    * themselves; [[GraftChanges]] owns that contract).
-    */
-  private def isStreamArtifact(name: String): Boolean =
-    GraftEqDel.emissionOf(name).isDefined || GraftEqDel.hasFloorStamp(name)
-
-  /** The accounting universe: visible batch data files as table-
-    * relative paths.
+  /** The accounting universe: every visible data file as a table-
+    * relative path, with its listed [[FileInfo]] — what a table with no
+    * journal serves, and so what its `genesis` record claims.
     */
   def universe(fs: FileSystem, tableDir: Path): Set[String] =
-    universeInfo(fs, tableDir).keySet
+    visibleInfo(fs, tableDir).keySet
 
-  /** [[universe]] with each file's listed [[FileInfo]]. */
-  private def universeInfo(fs: FileSystem, tableDir: Path)
+  private def visibleInfo(fs: FileSystem, tableDir: Path)
       : Map[String, FileInfo] = {
     val base = fs.makeQualified(tableDir).toUri.getPath
     GraftEvolved.listVisible(fs, tableDir)
-      .filterNot(st => isStreamArtifact(st.getPath.getName))
       .map(st => fs.makeQualified(st.getPath).toUri.getPath
         .stripPrefix(base).stripPrefix("/") ->
         FileInfo(st.getLen, st.getModificationTime))
       .toMap
   }
 
-  /** The universe PLUS live stream artifacts the journal itself
-    * accounts (stream-epoch adds): rollback must see journaled
-    * emission files as part of the current state or a rollback past a
-    * stream epoch would silently leave its rows live.
+  /** Present once the journal names every file its table serves:
+    * written with a journal's first record. A journal begun before
+    * stream epochs and rewrite_deletes recorded their files lacks it
+    * until its next commit runs [[upgrade]].
     */
-  def journaledUniverse(fs: FileSystem, tableDir: Path,
-      recs: Seq[Rec]): Set[String] = {
-    // checkpoint files fold expired stream-epoch adds: every accounted
-    // rel counts, whatever record accounted it
-    val streamAdds = recs.iterator
-      .filter(_.kind == StreamEpochKind).flatMap(_.adds).toSet ++
-      latestCheckpoint(fs, tableDir).map(_.files.keySet)
-        .getOrElse(Set.empty)
-    if (streamAdds.isEmpty) return universe(fs, tableDir)
-    val base = fs.makeQualified(tableDir).toUri.getPath
-    val liveStream = GraftEvolved.listVisible(fs, tableDir)
-      .filter(st => isStreamArtifact(st.getPath.getName))
-      .map(st => fs.makeQualified(st.getPath).toUri.getPath
-        .stripPrefix(base).stripPrefix("/"))
-      .filter(streamAdds.contains)
-    universe(fs, tableDir) ++ liveStream
+  private val CompleteMark = "complete"
+
+  private[graft] def completeMark(tableDir: Path): Path =
+    new Path(dir(tableDir), CompleteMark)
+
+  /** Whether the journal names every file its table serves. */
+  def complete(fs: FileSystem, tableDir: Path): Boolean =
+    fs.exists(completeMark(tableDir))
+
+  private def markComplete(fs: FileSystem, tableDir: Path): Unit = {
+    fs.mkdirs(dir(tableDir))
+    fs.create(completeMark(tableDir), true).close()
   }
+
+  /** The one-time upgrade of a journal begun before every commit
+    * recorded its files: stream epochs recorded best effort, and
+    * rewrite_deletes renamed and rewrote stream files unrecorded.
+    * Reads of such a table planned from a listing: pinned to the
+    * journal's batch files plus every stream-named file when the head
+    * held stream files and its batch files were all there, the journal
+    * itself when it held none and its unstatted files were there, the
+    * listing unpinned otherwise. One `maintenance` record adds what
+    * those reads served that the head lacks and removes, with no
+    * tombstone, the live files they did not serve (gone); then the
+    * journal is marked complete. `inFlight`: the files the calling
+    * commit publishes or retires, which its own record accounts.
+    * Caller holds the commit lock.
+    */
+  private def upgrade(fs: FileSystem, tableDir: Path,
+      inFlight: String => Boolean): Unit =
+    head(fs, tableDir).foreach { h =>
+      val listed = visibleInfo(fs, tableDir)
+      val live = h.live.keySet
+      def stream(rel: String): Boolean = {
+        val name = rel.substring(rel.lastIndexOf('/') + 1)
+        GraftEqDel.emissionOf(name).isDefined || GraftEqDel.hasFloorStamp(name)
+      }
+      val (liveStream, liveBatch) = live.partition(stream)
+      val served =
+        if (liveStream.nonEmpty && liveBatch.forall(listed.contains))
+          liveBatch ++ listed.keySet.filter(stream)
+        else if (liveStream.isEmpty &&
+            live.forall(r => h.info.contains(r) || listed.contains(r))) live
+        else listed.keySet
+      val adds = (served -- live).filterNot(inFlight).toSeq.sorted
+      val removes = (live -- served).filterNot(inFlight).toSeq.sorted
+      if (adds.nonEmpty || removes.nonEmpty)
+        writeRec(fs, tableDir, Rec(lastId(fs, tableDir) + 1, "maintenance",
+          System.currentTimeMillis(), adds, removes.map(Remove(_, "")),
+          Map.empty, note = "journal-upgrade",
+          info = adds.map(r => r -> listed(r)).toMap))
+      markComplete(fs, tableDir)
+    }
 
   def relOf(fs: FileSystem, tableDir: Path, p: Path): String = {
     val base = fs.makeQualified(tableDir).toUri.getPath
@@ -652,9 +686,11 @@ private[graft] object GraftCommits {
 
   /** Append one commit record. MUST run inside the table's commit-lock
     * critical section, after the commit's files are in place. If the
-    * journal is empty and OTHER visible batch files exist (the
-    * pre-journal generation), a `genesis` floor record claims them
-    * first so accounting stays total. `info` carries the adds' lengths
+    * journal is empty and OTHER visible data files exist (the
+    * pre-journal generation, stream-named files included), a `genesis`
+    * floor record claims them first so the journal serves what the
+    * listing did; a journal that is not [[complete]] is upgraded
+    * first. `info` carries the adds' lengths
     * and mtimes, which scans plan with. Returns the assigned commit id.
     */
   def record(fs: FileSystem, tableDir: Path, kind: String,
@@ -662,11 +698,16 @@ private[graft] object GraftCommits {
       dv: Map[String, Array[Long]] = Map.empty,
       note: String = "", pre: Seq[String] = Nil,
       info: Map[String, FileInfo] = Map.empty): Long = {
+    if (!complete(fs, tableDir)) {
+      val inFlight = adds.toSet ++ removes.map(_.rel)
+      upgrade(fs, tableDir, inFlight)
+    }
     // id assignment from NAMES only — no record-content reads
     val (cks, recIds) = idsByName(fs, tableDir)
     var nextId = (cks ++ recIds).maxOption.map(_ + 1).getOrElse(0L)
     if (cks.isEmpty && recIds.isEmpty) {
-      val others = universeInfo(fs, tableDir) -- adds -- removes.map(_.rel)
+      markComplete(fs, tableDir)
+      val others = visibleInfo(fs, tableDir) -- adds -- removes.map(_.rel)
       if (others.nonEmpty) {
         writeRec(fs, tableDir, Rec(nextId, "genesis",
           System.currentTimeMillis(), others.keys.toSeq.sorted, Nil,
@@ -700,18 +741,24 @@ private[graft] object GraftCommits {
       before: Set[String], removes: Seq[Remove] = Nil,
       dv: Map[String, Array[Long]] = Map.empty,
       note: String = ""): Long = {
+    if (!complete(fs, tableDir)) {
+      val retiring = removes.map(_.rel).toSet
+      upgrade(fs, tableDir, rel => !before(rel) || retiring(rel))
+    }
     val (ckOpt, tail) = load(fs, tableDir)
-    val nowInfo = universeInfo(fs, tableDir)
+    val nowInfo = visibleInfo(fs, tableDir)
     val now = nowInfo.keySet
     val claim =
       (now -- before -- accountedLive(ckOpt, tail)).toSeq.sorted
     var nextId = (ckOpt.map(_.id) ++ tail.lastOption.map(_.id))
       .maxOption.map(_ + 1).getOrElse(0L)
     if (ckOpt.isEmpty && tail.isEmpty) {
-      val others = now -- claim -- removes.map(_.rel)
+      markComplete(fs, tableDir)
+      val others = visibleInfo(fs, tableDir) -- claim -- removes.map(_.rel)
       if (others.nonEmpty) {
         writeRec(fs, tableDir, Rec(nextId, "genesis",
-          System.currentTimeMillis(), others.toSeq.sorted, Nil, Map.empty))
+          System.currentTimeMillis(), others.keys.toSeq.sorted, Nil,
+          Map.empty, info = others))
         nextId += 1
       }
     }
@@ -725,8 +772,7 @@ private[graft] object GraftCommits {
   /** Runs a commit's record; when it fails, deletes the files the
     * commit published that the journal does not account, then
     * rethrows. No read planned those files, so the table stays exactly
-    * at its pre-commit state and nothing is left for a later claim
-    * ([[claimPathWrite]]) to adopt.
+    * at its pre-commit state and leaves nothing behind.
     */
   def recordOrUnpublish[T](fs: FileSystem, tableDir: Path,
       published: => Seq[Path])(rec: => T): T =
@@ -777,23 +823,37 @@ private[graft] object GraftCommits {
         s"$tableDir failed: ${e.getMessage}")
     }
 
-  /** Best-effort journaling for the commit paths whose record is not
-    * their commit point (merge-on-read deletes, whose deletion vectors
-    * commit them, and stream epochs, whose markers do): a failure to
+  /** Best-effort journaling for the one commit path whose record is
+    * not its commit point: a merge-on-read delete, whose deletion
+    * vectors commit it and which publishes no data file. A failure to
     * record does not fail a commit that already took effect (the feed's
     * accounting check turns the gap into a loud refusal instead).
     */
   def tryRecord(fs: FileSystem, tableDir: Path, kind: String,
-      adds: => Seq[String], removes: => Seq[Remove] = Nil,
-      dv: => Map[String, Array[Long]] = Map.empty,
-      note: String = "", pre: => Seq[String] = Nil): Unit =
-    try { record(fs, tableDir, kind, adds, removes, dv, note, pre); () }
+      dv: => Map[String, Array[Long]], note: String,
+      pre: => Seq[String]): Unit =
+    try { record(fs, tableDir, kind, Nil, Nil, dv, note, pre); () }
     catch { case NonFatal(e) => logWarn(tableDir, kind, e) }
 
   private def logWarn(tableDir: Path, kind: String, e: Throwable): Unit =
     System.err.println(s"[graft] WARN commit journal: could not record " +
       s"$kind on $tableDir: ${e.getMessage} — the changes feed will " +
       "refuse until CALL system.compact resets the table")
+
+  /** The record of stream epoch `tag:epoch`, when the journal already
+    * holds it: a redelivered epoch whose earlier attempt crashed after
+    * its record. Reads retained records newest first and stops at the
+    * first record of `tag` — epochs of one stream commit in order, so
+    * an older record of the stream means this epoch never recorded.
+    * Caller holds the table commit lock.
+    */
+  def streamEpochRecorded(fs: FileSystem, tableDir: Path, tag: String,
+      epoch: Long): Option[Rec] = {
+    val (_, recIds) = idsByName(fs, tableDir)
+    recIds.reverseIterator.flatMap(recAt(fs, tableDir, _))
+      .find(_.streamEpoch.exists(_._1 == tag))
+      .filter(_.streamEpoch.contains((tag, epoch)))
+  }
 
   // ---- the head (what reads plan from) ----------------------------------
 
@@ -857,55 +917,6 @@ private[graft] object GraftCommits {
     val h = Head(fp, last, live, info, notes)
     heads.put(key, h)
     Some(h)
-  }
-
-  /** Spark's task output file name: `part-<split>-<job id>…`. */
-  private val SparkJobFileRe =
-    "part-\\d{5}-(\\p{XDigit}{8}-\\p{XDigit}{4}-\\p{XDigit}{4}-\\p{XDigit}{4}-\\p{XDigit}{12}).*".r
-
-  /** Claims what ONE Spark path write (`df.write.parquet(<table dir>)`)
-    * left in a journaled table: a compatibility shim for callers that
-    * still add files outside the catalog (ROADMAP open item). Such a
-    * write's job commit leaves a `_SUCCESS` marker in the directory,
-    * which no catalog write keeps. Under the table's commit lock, when
-    * every visible data file the journal does not account carries the
-    * same Spark job id in its name, they are recorded as one `append`
-    * (Iceberg's `add_files`, implicitly). Unaccounted files of more
-    * than one writer (say, a path write after a commit that crashed
-    * before its record) are not claimed: the table stays at its
-    * journaled state, with a warning. Either way the marker goes, so a
-    * marker is weighed once. A busy lock defers the claim to the next
-    * call; any other failure (a reader without write access) leaves the
-    * table unclaimed and the read goes on.
-    */
-  def claimPathWrite(fs: FileSystem, tableDir: Path): Unit = {
-    val marker = new Path(tableDir, "_SUCCESS")
-    try {
-      if (fs.exists(marker))
-        GraftCommitLock.withLock(fs, tableDir, "claim-path-write") {
-          head(fs, tableDir).foreach { h =>
-            val found = universeInfo(fs, tableDir) -- h.live.keys
-            val jobs = found.keys.map(rel =>
-              rel.substring(rel.lastIndexOf('/') + 1) match {
-                case SparkJobFileRe(job) => job
-                case _ => ""
-              }).toSet
-            if (jobs.size == 1 && !jobs("")) {
-              record(fs, tableDir, "append", adds = found.keys.toSeq.sorted,
-                note = "claim:path-write", info = found)
-            } else if (found.nonEmpty)
-              System.err.println(s"[graft] WARN $tableDir: ${found.size} " +
-                "data files no commit recorded come from more than one " +
-                "writer — not claimed; the table serves its journaled state")
-            fs.delete(marker, false)
-          }
-        }
-    } catch {
-      case _: GraftCommitLock.ConcurrentCommitException => ()
-      case NonFatal(e) =>
-        System.err.println(s"[graft] WARN $tableDir: could not claim a " +
-          s"path write: ${e.getMessage}")
-    }
   }
 
   // ---- replay (per-commit time travel / rollback) ------------------------
@@ -978,7 +989,7 @@ private[graft] object GraftCommits {
             s"$tableDir: cannot roll back to commit $target — the " +
               s"tombstone preserving $rel was expired by remove_orphans")))
       }
-      val current = journaledUniverse(fs, tableDir, recs)
+      val current = universe(fs, tableDir)
       val toRetire = (current -- want.keySet).toSeq.sorted
       val qualBase = fs.makeQualified(tableDir).toString
       val toRestore = resolved.filter { case (rel, p) =>

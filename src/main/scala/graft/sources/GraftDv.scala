@@ -488,8 +488,7 @@ private[graft] object GraftDv {
       // travel replays the deltas to any commit's deletion state
       if (perFile.nonEmpty)
         GraftCommits.tryRecord(fs, tableDir, "mor_delete",
-          adds = Nil, dv = dvDeltas.result(), note = "delete",
-          pre = preRels)
+          dv = dvDeltas.result(), note = "delete", pre = preRels)
     }
     fresh
   }

@@ -707,6 +707,12 @@ private[graft] object GraftEqDel {
 
   // ---- materialization (CALL system.rewrite_deletes) --------------------------
 
+  /** Note of a materialization's `maintenance` records: the changes
+    * feed cannot serve the retractions of an epoch whose emission file
+    * such a record moved, because its sidecar is consumed.
+    */
+  val MaterializeNote = "eqdel-materialize"
+
   /** Rewrite every file subject to any sidecar with the deletes
     * applied, in ONE distributed staging job (the batched
     * [[GraftDv.rewriteDeletes]] shape), then publish per file under
@@ -714,6 +720,15 @@ private[graft] object GraftEqDel {
     * are stamped `-ef<maxEpoch>-` so a crash between publishes leaves
     * every already-rewritten file immune to the still-live sidecars —
     * a re-run converges.
+    *
+    * Each lock section journals what it moved as one neutral
+    * `maintenance` record noted [[MaterializeNote]] (the deleted rows
+    * were fed by their epochs' sidecars): a rewrite publishes its
+    * `rw-…-ef…-` files, records them as adds and the old file as a
+    * remove naming the tombstone, then retires into it; a stamp-only
+    * rename records the renamed file as an add and the old name as a
+    * remove with no tombstone (the bytes moved). Scans plan from those
+    * records like any commit's.
     *
     * Returns (files rewritten, sidecars dropped).
     */
@@ -759,6 +774,19 @@ private[graft] object GraftEqDel {
         else fl < maxEpoch
       }
 
+    // a table with no journal plans from its listing: nothing to record
+    val journaled = GraftCommits.exists(fs, tableDir)
+    def journal(added: Seq[Path], removed: GraftCommits.Remove): Unit =
+      if (journaled) {
+        val info = added.map { p =>
+          val st = fs.getFileStatus(p)
+          GraftCommits.relOf(fs, tableDir, p) ->
+            GraftCommits.FileInfo(st.getLen, st.getModificationTime)
+        }
+        GraftCommits.record(fs, tableDir, "maintenance",
+          adds = info.map(_._1), removes = Seq(removed),
+          note = MaterializeNote, info = info.toMap)
+      }
     var rewritten = 0
     if (applicable.nonEmpty && ds.isEmpty) {
       // bounded, nothing to apply: a pure horizon advance — one rename
@@ -771,6 +799,14 @@ private[graft] object GraftEqDel {
                 floorStamp(tag, maxEpoch) + st0.getPath.getName)
             require(fs.rename(st0.getPath, stamped),
               s"eqdel-materialize: could not stamp ${st0.getPath}")
+            // a failed record moves the file back: the table stays as
+            // its journal says
+            try journal(Seq(stamped), GraftCommits.Remove(
+              GraftCommits.relOf(fs, tableDir, st0.getPath), ""))
+            catch { case NonFatal(e) =>
+              fs.rename(stamped, st0.getPath)
+              throw e
+            }
             rewritten += 1
           }
         }
@@ -845,14 +881,22 @@ private[graft] object GraftEqDel {
               st.getModificationTime != st0.getModificationTime)
             throw new GraftCommitLock.ConcurrentCommitException(
               s"rewrite_deletes: $rel changed mid-materialization — re-run")
-          parts.foreach { staged =>
-            val finName = "rw-" +
+          val published = parts.toSeq.map { staged =>
+            val fin = new Path(dataFile.getParent, "rw-" +
               java.util.UUID.randomUUID().toString.take(8) +
-              floorStamp(tag, maxEpoch) + dataFile.getName
-            require(fs.rename(staged, new Path(dataFile.getParent, finName)),
-              s"rewrite_deletes: could not publish $finName")
+              floorStamp(tag, maxEpoch) + dataFile.getName)
+            require(fs.rename(staged, fin),
+              s"rewrite_deletes: could not publish ${fin.getName}")
+            fin
           }
-          GraftRetired.retireFiles(fs, tableDir, Seq(dataFile))
+          // the record is the commit: it names the tombstone the retire
+          // then fills; a failed record unpublishes the new files
+          val tomb = GraftRetired.newCommitDir(tableDir)
+          GraftCommits.recordOrUnpublish(fs, tableDir, published) {
+            journal(published, GraftCommits.Remove(
+              GraftCommits.relOf(fs, tableDir, dataFile), tomb.getName))
+          }
+          GraftRetired.retireFilesInto(fs, tableDir, Seq(dataFile), tomb)
           GraftDv.dropFor(fs, tableDir, Seq(fs.makeQualified(dataFile)))
         }
         rewritten += 1

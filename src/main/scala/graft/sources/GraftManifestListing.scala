@@ -20,15 +20,20 @@ import org.apache.spark.sql.types.StructType
   * cached per (table dir, journal fingerprint): a repeat scan of an
   * unchanged table costs one listStatus of the journal directory.
   *
-  * The journal is the table: a data file no commit recorded (a commit
-  * that crashed before its record, a foreign writer) is not served,
-  * except that one Spark path write into the table directory is
-  * claimed by the next scan ([[GraftCommits.claimPathWrite]]).
-  * Three cases still plan from a listing, pinned by [[GraftPinnedScan]]:
-  * a table with no journal yet; one whose live set holds stream
-  * emission or floor-stamped files (streaming rewrite-deletes renames
-  * those without a journaled remove, so the journal is not total
-  * there); and any table while its commit lock is held.
+  * The journal is the table: every commit that publishes or retires a
+  * data file — batch writes, stream epochs, rewrite_deletes — records
+  * it before its retire, so the head is exact even while a commit
+  * holds the lock. A data file no commit recorded (a commit that
+  * crashed before its record, a foreign writer) is not served, and an
+  * accounted file that has gone missing fails the read loudly (a read
+  * already under way when a commit retires its file re-points to the
+  * tombstone through [[GraftRetired.FallbackReaderFactory]]). Only a
+  * table with no journal yet plans from a listing, unpinned: there is
+  * nothing to pin it against. A journal begun before stream epochs and
+  * rewrite_deletes recorded their files is made complete by its next
+  * commit ([[GraftCommits.complete]]); until then its reads plan from
+  * the head as it stands, or from the listing when an unstatted live
+  * file is gone ([[liveStatuses]]).
   */
 private[graft] object GraftManifestListing {
 
@@ -36,24 +41,26 @@ private[graft] object GraftManifestListing {
   private val cache = new java.util.concurrent.ConcurrentHashMap[
     String, (String, Seq[FileStatus])]()
 
-  /** Drains the status cache (with [[GraftCommits.invalidateHeads]]). */
-  private[graft] def invalidate(): Unit = cache.clear()
-
-  private def nameOf(rel: String): String = rel.substring(rel.lastIndexOf('/') + 1)
+  /** Test seam: drains the journal caches (a spec that swaps table
+    * directories underneath the same path wants fresh replays).
+    */
+  private[graft] def invalidate(): Unit = {
+    GraftCommits.invalidateHeads()
+    cache.clear()
+  }
 
   /** The live files of the journal's head as qualified statuses, or
-    * None = plan from the listing (no journal, a live stream artifact,
-    * or a legacy live file that is gone). A legacy live file (recorded
-    * before adds carried their info) costs one getFileStatus per JVM,
-    * carried across journal states, until the next checkpoint folds
-    * its info in.
+    * None = plan from the listing: no journal, or a journal from before
+    * every commit recorded its files ([[GraftCommits.complete]]) whose
+    * unstatted live file is gone — what reads of such a table served
+    * until its next commit upgrades the journal. A legacy live file
+    * (recorded before adds carried their info) costs one getFileStatus
+    * per JVM, carried across journal states, until the next checkpoint
+    * folds its info in; on a complete journal a gone one fails the
+    * plan, naming the file, as a gone recorded file fails the read.
     */
   def liveStatuses(fs: FileSystem, tableDir: Path): Option[Seq[FileStatus]] = {
-    GraftCommits.claimPathWrite(fs, tableDir)
     val head = GraftCommits.head(fs, tableDir).getOrElse(return None)
-    if (head.live.keysIterator.exists(rel =>
-        GraftEqDel.emissionOf(nameOf(rel)).isDefined ||
-          GraftEqDel.hasFloorStamp(nameOf(rel)))) return None
     val base = fs.makeQualified(tableDir)
     val key = base.toString
     val prev = cache.get(key)
@@ -68,7 +75,9 @@ private[graft] object GraftManifestListing {
           new Path(base, rel))
         case None => before.getOrElse(rel,
           try fs.getFileStatus(new Path(base, rel))
-          catch { case _: java.io.FileNotFoundException => return None })
+          catch { case e: java.io.FileNotFoundException =>
+            if (GraftCommits.complete(fs, tableDir)) throw e else return None
+          })
       }
     }
     cache.put(key, (head.fingerprint, statuses))
@@ -84,13 +93,7 @@ private[graft] object GraftManifestListing {
       parameters: Map[String, String], schema: Option[StructType])
       : Option[ManifestFileIndex] = {
     val fs = tableDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // every commit records before it retires, so the journal's head is
-    // exact even mid-commit; but a lock holder outside that protocol (a
-    // writer of an older version, a hand-held lock) may be moving live
-    // files, so while the lock is held the table plans from the pinned
-    // listing, which serves the listing when an accounted file is gone
-    if (fs.exists(GraftCommitLock.lockPath(tableDir))) None
-    else liveStatuses(fs, tableDir).map(statuses => new ManifestFileIndex(
+    liveStatuses(fs, tableDir).map(statuses => new ManifestFileIndex(
       spark, fs.makeQualified(tableDir), statuses, parameters, schema))
   }
 

@@ -323,8 +323,10 @@ class GraftBloomSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // it produces no rows in the build pass, so it used to land in
     // neither `valid` nor `built` — its entry was dropped every
     // analyze, coverage never converged, and it was re-read forever
-    spark.range(0).selectExpr("id AS k", "CAST(NULL AS STRING) AS tag")
-      .coalesce(1).write.mode("append").parquet(s"$root/ods/t")
+    journaledPathWrite(s"$root/ods/t") {
+      spark.range(0).selectExpr("id AS k", "CAST(NULL AS STRING) AS tag")
+        .coalesce(1).write.mode("append").parquet(s"$root/ods/t")
+    }
     val totalFiles = scannedFiles(spark.table(s"$cat.ods.t"))
     assert(totalFiles >= 5)
 

@@ -45,6 +45,29 @@ class GraftCatalogSpec extends SparkSpec {
       .map(_.getString(0)).contains("score"))
   }
 
+  test("a catalog append reports the bytes and records it wrote in the task output metrics") {
+    val (cat, _) = freshCatalog()
+    spark.sql(s"CREATE NAMESPACE $cat.ods")
+    spark.sql(s"CREATE TABLE $cat.ods.m (k BIGINT, p STRING) PARTITIONED BY (p)")
+    val bytes = new java.util.concurrent.atomic.AtomicLong()
+    val records = new java.util.concurrent.atomic.AtomicLong()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(
+          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach { m =>
+          bytes.addAndGet(m.outputMetrics.bytesWritten)
+          records.addAndGet(m.outputMetrics.recordsWritten)
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    // jobsDuring drains the listener bus past the write's task ends
+    try jobsDuring(spark.sql(s"INSERT INTO $cat.ods.m SELECT id, " +
+      "concat('p', id % 3) FROM range(0, 300)"))
+    finally spark.sparkContext.removeSparkListener(listener)
+    assert(bytes.get > 0, "the append reported no bytes written")
+    assert(records.get == 300L, s"the append reported ${records.get} records")
+  }
+
   test("tables written by the object API are readable by SQL name, and vice versa") {
     val (cat, root) = freshCatalog()
     val engine = Catalog(spark, root)

@@ -224,8 +224,10 @@ class GraftCommitLockSpec extends SparkSpec {
     // rewrite's read and its commit — the optimistic check must make
     // the COMPACTION lose, with the raced-in row surviving
     GraftPartitionedCow.onBeforeOverwriteCheck = _ =>
-      Seq((9999L, 9999L)).toDF("k", "v").coalesce(1)
-        .write.mode("append").parquet(s"$root/ods/t")
+      journaledPathWrite(s"$root/ods/t", lockHeld = true) {
+        Seq((9999L, 9999L)).toDF("k", "v").coalesce(1)
+          .write.mode("append").parquet(s"$root/ods/t")
+      }
     val e = try intercept[Throwable] { eng.compact("ods", "t") }
       finally GraftPartitionedCow.onBeforeOverwriteCheck = _ => ()
     assert(hasConcurrent(e), s"expected ConcurrentCommitException, got $e")
@@ -252,8 +254,10 @@ class GraftCommitLockSpec extends SparkSpec {
 
     // interference in a partition the overwrite TOUCHES: loser aborts
     GraftPartitionedCow.onBeforeOverwriteCheck = _ =>
-      Seq((7777L, 7777L, "p0")).toDF("k", "v", "g").coalesce(1)
-        .write.mode("append").partitionBy("g").parquet(s"$root/ods/p")
+      journaledPathWrite(s"$root/ods/p", lockHeld = true) {
+        Seq((7777L, 7777L, "p0")).toDF("k", "v", "g").coalesce(1)
+          .write.mode("append").partitionBy("g").parquet(s"$root/ods/p")
+      }
     val upd0 = Seq((1L, 111L, "p0")).toDF("k", "v", "g")
     val e = try intercept[Throwable] {
       eng.overwritePartitionsByName(upd0, "ods", "p", Seq("g"))
@@ -266,8 +270,10 @@ class GraftCommitLockSpec extends SparkSpec {
     // the same race through SQL: INSERT OVERWRITE under dynamic mode
     // commits through the same write, so it loses the same way
     GraftPartitionedCow.onBeforeOverwriteCheck = _ =>
-      Seq((7778L, 7778L, "p0")).toDF("k", "v", "g").coalesce(1)
-        .write.mode("append").partitionBy("g").parquet(s"$root/ods/p")
+      journaledPathWrite(s"$root/ods/p", lockHeld = true) {
+        Seq((7778L, 7778L, "p0")).toDF("k", "v", "g").coalesce(1)
+          .write.mode("append").partitionBy("g").parquet(s"$root/ods/p")
+      }
     val modeKey = "spark.sql.sources.partitionOverwriteMode"
     val prevMode = spark.conf.getOption(modeKey)
     spark.conf.set(modeKey, "dynamic")
@@ -288,8 +294,10 @@ class GraftCommitLockSpec extends SparkSpec {
     // interference in an UNTOUCHED partition: this overwrite proceeds
     // (its publish cannot erase the other partition's commit)
     GraftPartitionedCow.onBeforeOverwriteCheck = _ =>
-      Seq((8888L, 8888L, "p1")).toDF("k", "v", "g").coalesce(1)
-        .write.mode("append").partitionBy("g").parquet(s"$root/ods/p")
+      journaledPathWrite(s"$root/ods/p", lockHeld = true) {
+        Seq((8888L, 8888L, "p1")).toDF("k", "v", "g").coalesce(1)
+          .write.mode("append").partitionBy("g").parquet(s"$root/ods/p")
+      }
     val replacement = spark.table(s"$cat.ods.p")
       .where(col("g") === "p0").withColumn("v", col("v") + 1)
     try eng.overwritePartitionsByName(replacement, "ods", "p", Seq("g"))

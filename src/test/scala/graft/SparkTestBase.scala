@@ -22,6 +22,32 @@ abstract class SparkSpec extends AnyFunSuite {
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
+  /** Runs `write`, a Spark path write into the catalog table directory
+    * `dir`, then records the data files it added in the table's commit
+    * journal as one `append`, as a catalog commit would: name reads
+    * plan from the journal and serve only recorded files. `lockHeld`:
+    * the caller already holds the table's commit lock (a commit seam).
+    */
+  def journaledPathWrite(dir: String, lockHeld: Boolean = false)(
+      write: => Unit): Unit = {
+    import graft.sources.{GraftCommitLock, GraftCommits, GraftEvolved}
+    val base = new org.apache.hadoop.fs.Path(dir)
+    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def visible = GraftEvolved.listVisible(fs, base)
+      .map(st => GraftCommits.relOf(fs, base, st.getPath) -> st).toMap
+    def commit(): Unit = {
+      val before = visible.keySet
+      write
+      val added = visible -- before
+      GraftCommits.record(fs, base, "append", adds = added.keys.toSeq.sorted,
+        info = added.map { case (rel, st) =>
+          rel -> GraftCommits.FileInfo(st.getLen, st.getModificationTime)
+        })
+    }
+    if (lockHeld) commit()
+    else GraftCommitLock.withLock(fs, base, "spec-path-write")(commit())
+  }
+
   /** `body`'s result and the descriptions of the Spark jobs it started.
     * The listener bus delivers in order, so once a marker job run after
     * `body` is seen, every job of `body` is too.

@@ -7,15 +7,15 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** Journal-pinned snapshot reads ([[GraftPinnedScan]], r16 verdict
-  * item 1 — the round's one `weak` component): a partitioned
+/** Reads pinned to the commit journal's snapshot while commits run
+  * ([[GraftManifestListing]], r16 verdict item 1): a partitioned
   * copy-on-write commit publishes the new generation, then retires the
   * old one, all under the table lock. A reader planning INSIDE that
   * window used to see BOTH generations and double-count every touched
-  * partition. Scans now plan from the commit journal's accounted-live
-  * snapshot, whose record is the commit: files a commit published but
-  * has not recorded, superseded files not yet retired and files no
-  * commit recorded are never served.
+  * partition. Scans plan from the commit journal's accounted-live
+  * snapshot, whose record is the commit, held lock or not: files a
+  * commit published but has not recorded, superseded files not yet
+  * retired and files no commit recorded are never served.
   */
 class GraftPinnedScanSpec extends SparkSpec {
 
@@ -108,7 +108,7 @@ class GraftPinnedScanSpec extends SparkSpec {
     val copy = new Path(tableDir, "part-foreign-copy.parquet")
     org.apache.hadoop.fs.FileUtil.copy(fs, dataFile, fs, copy, false,
       spark.sparkContext.hadoopConfiguration)
-    GraftPinnedScan.invalidate()
+    GraftManifestListing.invalidate()
     val copiedRows = spark.read.parquet(copy.toString).count()
     assert(copiedRows > 0)
     // no commit recorded the copy: name reads plan from the journal
@@ -117,7 +117,7 @@ class GraftPinnedScanSpec extends SparkSpec {
       "a data file no commit recorded must not be served")
   }
 
-  test("journal-pinned plan drops ONLY the in-flight generation; accounted files absent from the listing disable the pin (fail-safe)") {
+  test("under a held lock the journal plan serves no unaccounted file, and a missing accounted file fails the read naming it") {
     val (cat, root) = freshCatalog()
     spark.sql(s"CREATE NAMESPACE $cat.ods")
     spark.sql(s"CREATE TABLE $cat.ods.g (k BIGINT, v BIGINT, p STRING) " +
@@ -125,43 +125,29 @@ class GraftPinnedScanSpec extends SparkSpec {
     spark.sql(s"INSERT INTO $cat.ods.g SELECT id, id, 'a' FROM range(0, 20)")
     val tableDir = new Path(s"$root/ods/g")
     val fs = tableDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // simulate a mid-RETIREMENT state: hold the lock AND delete an
-    // accounted file (as if retire started) while an unaccounted file
-    // exists — the pin must decline (accounted ⊄ listed) and serve
-    // the listing rather than silently missing rows
+    // a holder outside the commit protocol holds the lock, drops an
+    // unaccounted copy in, then moves an accounted file away
     val dataFile = GraftEvolved.listVisible(fs, tableDir)
       .map(_.getPath).head
-    val rel = GraftCommits.relOf(fs, tableDir, dataFile)
     val parked = new Path(tableDir.getParent, "parked-" + dataFile.getName)
-    // the spec HOLDS the lock across the assertion — cap the pin's
-    // mid-retirement wait so the decline is fast
-    spark.conf.set("spark.graft.pin.lockWaitMs", "300")
     val token = GraftCommitLock.acquire(fs, tableDir, "spec-mid-retire")
     try {
-      // unaccounted "new generation" copy
       val copy = new Path(dataFile.getParent, "part-newgen-copy.parquet")
       org.apache.hadoop.fs.FileUtil.copy(fs, dataFile, fs, copy, false,
         spark.sparkContext.hadoopConfiguration)
-      GraftPinnedScan.invalidate()
-      // accounted ⊆ listed holds → the pin drops the unaccounted copy
+      GraftManifestListing.invalidate()
       assert(spark.table(s"$cat.ods.g").count() == 20L,
-        "with all accounted files present, the pin must drop the " +
-          "unaccounted in-flight generation")
-      // now make an accounted file disappear (mid-retirement shape)
+        "the journal plan served a file no commit recorded")
       require(fs.rename(dataFile, parked))
-      GraftPinnedScan.invalidate()
-      val cnt = spark.table(s"$cat.ods.g").count()
-      // fail-safe: the pin declines; the plan serves what the listing
-      // has (the copy's rows still serve — never fewer files than the
-      // listing)
-      assert(cnt == 20L,
-        s"mid-retirement fail-safe must serve the listing: got $cnt")
+      GraftManifestListing.invalidate()
+      val e = intercept[Exception](spark.table(s"$cat.ods.g").count())
+      val messages = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
+      assert(messages.exists(_.contains(dataFile.getName)),
+        s"the failed read does not name the missing file: $messages")
     } finally {
       try { if (fs.exists(parked)) fs.rename(parked, dataFile) }
-      finally {
-        GraftCommitLock.release(fs, tableDir, token)
-        spark.conf.unset("spark.graft.pin.lockWaitMs")
-      }
+      finally GraftCommitLock.release(fs, tableDir, token)
     }
   }
 
@@ -203,7 +189,7 @@ class GraftPinnedScanSpec extends SparkSpec {
     val back = new Path(tableDir, rel)
     org.apache.hadoop.fs.FileUtil.copy(fs, straggler, fs, back, false,
       spark.sparkContext.hadoopConfiguration)
-    GraftPinnedScan.invalidate()
+    GraftManifestListing.invalidate()
     // no lock held, the straggler IS journal-retired: the pin serves
     // the post-commit snapshot exactly (before this refinement the
     // straggler double-served with a misleading foreign-writer warning)
@@ -213,7 +199,7 @@ class GraftPinnedScanSpec extends SparkSpec {
       s"retired straggler double-served: ${got.getLong(0)} rows")
     assert(got.getLong(1) == post.getLong(1))
     fs.delete(back, false)
-    GraftPinnedScan.invalidate()
+    GraftManifestListing.invalidate()
   }
 
   test("a reader planning after the record, while the retire is under way, serves the post-commit snapshot with no wait") {
