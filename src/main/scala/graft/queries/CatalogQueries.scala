@@ -73,10 +73,11 @@ object CatalogQueries {
       |SELECT k, bal_cents, seg FROM upd WHERE NOT del""".stripMargin
 
   /** q160 — schema-evolution read through
-    * [[graft.runtime.Catalog.readMerged]]: half the orders land with
-    * the original two-column schema, the other half append later with
-    * an extra `price_cents` column; the mergeSchema read must surface
-    * the union schema with nulls for the pre-evolution files. This is
+    * [[graft.runtime.Catalog.read]]: half the orders land with the
+    * original two-column schema, the other half append later with an
+    * extra `price_cents` column (the append adds it to the table schema
+    * first); the catalog scan must surface the union schema with nulls
+    * for the pre-evolution files. This is
     * the storage-layer twin of the ingest tier's `Normalize` drift
     * handling.
     */
@@ -92,7 +93,7 @@ object CatalogQueries {
         .select(col("o_orderkey").as("k"), col("o_custkey").as("cust"),
           expr("cast(round(o_totalprice * 100) as long)").as("price_cents")),
       "ods", "evolved", partitionCols = Nil)
-    cat.readMerged("ods", "evolved")
+    cat.read("ods", "evolved")
       .select(col("k"), col("cust"), col("price_cents"))
   }
 
@@ -562,7 +563,7 @@ object CatalogQueries {
     * `RENAME COLUMN` (r12 item 8 — metadata-only via the sidecar's
     * field-id aliases), and `DROP COLUMN` (readers stop projecting
     * it), through the session catalog's sidecar-schema alterTable —
-    * the SQL twin of q160's object-API readMerged evolution. The
+    * the SQL twin of q160's object-API schema evolution. The
     * aggregate runs over the RENAMED + WIDENED column across both
     * file eras — one era narrow-physical, one wide — old rows group
     * under a NULL segment, new rows under their real one, and the

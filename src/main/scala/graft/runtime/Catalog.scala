@@ -25,10 +25,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    compact, unpartitioned merge, SQL `INSERT OVERWRITE`);
   *    partitioned overwrites stay partition-scoped.
   *
-  * Every write resolves by name to the session catalog's staged
-  * hive-layout writes ([[graft.sources.GraftCatalog]]): one commit
-  * protocol, and the table's metadata sidecar and commit journal
-  * survive every write. Scale note: every write is a straight
+  * Every read and write resolves by name through the session catalog
+  * ([[graft.sources.GraftCatalog]]): reads plan from the table's commit
+  * journal, writes commit through its staged hive-layout writes — one
+  * scan, one commit protocol, and the table's metadata sidecar and
+  * commit journal survive every write. Scale note: every write is a straight
   * distributed write — no driver-side collection; partition columns
   * become hive directories so reads get partition pruning for free.
   */
@@ -41,15 +42,9 @@ final case class Catalog(spark: SparkSession, root: String,
 
   def path(layer: String, table: String): String = s"$root/$layer/$table"
 
-  /** Per-format reader/writer options: columnar formats need none;
-    * CSV round-trips through an explicit header (type inference on
-    * read restores numeric/date columns — lossy for exotic types, per
-    * the format itself, not this catalog).
+  /** Per-format writer options for [[writeBucketed]], the one write
+    * that does not go through the session catalog.
     */
-  private def readOptions: Map[String, String] = format match {
-    case "csv" => Map("header" -> "true", "inferSchema" -> "true")
-    case _ => Map.empty
-  }
   private def writeOptions: Map[String, String] = format match {
     case "csv" => Map("header" -> "true", "compression" -> "gzip")
     case "json" => Map("compression" -> "gzip")
@@ -63,27 +58,13 @@ final case class Catalog(spark: SparkSession, root: String,
     fs.exists(p) && fs.listStatus(p).nonEmpty
   }
 
-  /** S2 — catalog table scan (partition columns inferred from layout).
-    * Applies any merge-on-read deletion vectors ([[graft.sources.GraftDv]])
-    * the SQL-catalog surface recorded for the same warehouse dir — the
-    * object API and the name path read one table state. A table with
-    * no data file (a zero-row CTAS or full replace) has no file to infer
-    * a schema from: it reads by name, with the schema its sidecar keeps.
+  /** S2 — catalog table scan: the name read [[table]]. It plans from
+    * the table's commit journal, like every scan of the session
+    * catalog, so it serves exactly the files the commits recorded —
+    * a data file dropped into the directory outside a commit is not
+    * served — with deletion vectors and equality deletes applied.
     */
-  def read(layer: String, table: String): DataFrame = {
-    val df =
-      try spark.read.format(format).options(readOptions).load(path(layer, table))
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getCondition == "UNABLE_TO_INFER_SCHEMA" &&
-              tableExists(layer, table) =>
-          return this.table(layer, table)
-      }
-    graft.sources.GraftEqDel.applyToPathRead(spark,
-      graft.sources.GraftDv.applyToPathRead(spark, df,
-        new org.apache.hadoop.fs.Path(path(layer, table))),
-      new org.apache.hadoop.fs.Path(path(layer, table)))
-  }
+  def read(layer: String, table: String): DataFrame = this.table(layer, table)
 
   // ---- name-based addressing (session-catalog binding) -----------------
   // The reference addresses every table by CATALOG NAME
@@ -94,10 +75,11 @@ final case class Catalog(spark: SparkSession, root: String,
   // resolve `<catalog>.<layer>.<table>` identifiers through Spark's
   // catalog manager. Reads keep every DSv2 scan tier (pushdown, static
   // + runtime partition pruning via the catalog's
-  // SupportsRuntimeV2Filtering wrapper); writes — by name or through
-  // the path-addressed methods below — all commit through the
-  // catalog's staged-invisible hive-layout writes: one warehouse, two
-  // addressing modes, one publish-safety story.
+  // SupportsRuntimeV2Filtering wrapper). The layer/table methods below
+  // are shorthands for those names: every read is the catalog's
+  // journal-planned scan and every write commits through the catalog's
+  // staged-invisible hive-layout writes — one warehouse, one scan, one
+  // commit protocol.
 
   /** Session-catalog name bound to this root: `graft` when free (or
     * already bound to this root+format), otherwise a deterministic
@@ -389,7 +371,7 @@ final case class Catalog(spark: SparkSession, root: String,
     * fact-stream case (and what `append` itself supports).
     *
     * The delta terms are materialized BEFORE the bases absorb their
-    * deltas: parquet directory reads are lazy, so joining against
+    * deltas: table reads are lazy, so joining against
     * `read(base)` after appending would silently see the delta twice.
     * Non-key columns of the two sides must not collide (the join
     * output carries both).
@@ -450,7 +432,7 @@ final case class Catalog(spark: SparkSession, root: String,
     *
     * Bucketing metadata lives in the session catalog (saveAsTable), so
     * readers must use [[readBucketed]] (spark.table), not raw paths —
-    * a path read still sees the data but loses the bucket guarantee.
+    * [[read]] still sees the data but loses the bucket guarantee.
     */
   /** Session-catalog name for a bucketed table, scoped to this
     * Catalog's root — two Catalog instances over different roots must
@@ -485,22 +467,6 @@ final case class Catalog(spark: SparkSession, root: String,
   def readBucketed(layer: String, table: String): DataFrame =
     spark.table(bucketedName(layer, table))
 
-  /** Scan that unions the schemas of all files (columns added by later
-    * appends come back null for older files) — parquet/orc only, where
-    * per-file footers carry schemas. The schema-drift counterpart of
-    * `Normalize` at the storage layer.
-    */
-  def readMerged(layer: String, table: String): DataFrame = {
-    require(format == "parquet" || format == "orc",
-      s"mergeSchema needs per-file schema footers; format '$format' has none")
-    val df = spark.read.option("mergeSchema", "true").format(format)
-      .load(path(layer, table))
-    graft.sources.GraftEqDel.applyToPathRead(spark,
-      graft.sources.GraftDv.applyToPathRead(spark, df,
-        new org.apache.hadoop.fs.Path(path(layer, table))),
-      new org.apache.hadoop.fs.Path(path(layer, table)))
-  }
-
   /** Collect file-level column min/max statistics for a table into its
     * `_graft_stats` sidecar — the data-skipping tier
     * ([[graft.sources.GraftStats]]): subsequent scans (path or name
@@ -516,7 +482,10 @@ final case class Catalog(spark: SparkSession, root: String,
 
   /** Small-files compaction: rewrite the table into
     * ceil(bytes / targetFileBytes) files (per partition directory when
-    * `partitionCols` is given). Streaming/incremental appends
+    * `partitionCols` is given). The rewrite reads the table's catalog
+    * scan, whose schema is the union of every append's columns
+    * ([[addMissingColumns]]), so older files' missing columns come
+    * back null rather than being dropped. Streaming/incremental appends
     * accumulate thousands of small files; at 100 TB small files are a
     * NameNode/listing/scheduler tax AND a scan tax (each file is a
     * split floor). The rewrite is a [[createOrReplace]]: it stages
@@ -534,12 +503,7 @@ final case class Catalog(spark: SparkSession, root: String,
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val bytes = fs.getContentSummary(hp).getLength
     val tasks = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-    // read with schema merge where the format supports it — a plain
-    // read resolves ONE file's footer and would silently drop columns
-    // only newer files carry, making compaction lossy on evolved tables
-    val source =
-      if (format == "parquet" || format == "orc") readMerged(layer, table)
-      else read(layer, table)
+    val source = read(layer, table)
     // partitioned tables must repartition BY the partition columns:
     // round-robin would scatter every hive partition across all tasks,
     // producing tasks×partitions small files instead of ~1 per dir
@@ -553,8 +517,7 @@ final case class Catalog(spark: SparkSession, root: String,
 
   /** LAYOUT-PRESERVING compaction by catalog NAME: a self
     * `INSERT OVERWRITE` of the table's own name-resolved scan (where
-    * [[compact]] re-reads the path with a schema merge and sizes its
-    * own tasks). The catalog's truncate write
+    * [[compact]] sizes its own tasks). The catalog's truncate write
     * [[graft.sources.GraftPartitionedCow.TruncateReplaceWrite]]
     * re-clusters the rows by the partition+bucket transforms → ~one
     * tagged file per (partition, bucket); staged-invisible, old
@@ -919,19 +882,16 @@ final case class Catalog(spark: SparkSession, root: String,
     (gone.size, bytes)
   }
 
-  /** Time-travel read of a retained version. */
+  /** Time-travel read of a retained version: `VERSION AS OF` by name.
+    * The catalog serves the archived `v<N>` directory as a read-only
+    * snapshot table, applying the deletion vectors and equality deletes
+    * archived with it.
+    */
   def readVersion(layer: String, table: String, version: Int): DataFrame = {
     require(history(layer, table).contains(version),
       s"$layer.$table has no retained version $version " +
         s"(history: ${history(layer, table).mkString(", ")})")
-    val vDir = new org.apache.hadoop.fs.Path(
-      versionsDir(layer, table), f"v$version%06d")
-    val df = spark.read.format(format).options(readOptions)
-      .load(vDir.toString)
-    // archived generations carry their deletion-vector and
-    // equality-delete sidecars
-    graft.sources.GraftEqDel.applyToPathRead(spark,
-      graft.sources.GraftDv.applyToPathRead(spark, df, vDir), vDir)
+    spark.sql(s"SELECT * FROM ${sqlIdent(layer, table)} VERSION AS OF $version")
   }
 
   /** Roll the live table back to a retained version. The replaced
@@ -966,9 +926,12 @@ final case class Catalog(spark: SparkSession, root: String,
     */
   def changesBetween(layer: String, table: String, from: Int,
                      to: Option[Int] = None): DataFrame = {
-    import org.apache.spark.sql.functions.lit
+    import org.apache.spark.sql.functions.{col, lit}
     val a = readVersion(layer, table, from)
+    // exceptAll pairs columns by position: the live table's columns
+    // follow its schema, a snapshot's put partition columns last
     val b = to.map(readVersion(layer, table, _)).getOrElse(read(layer, table))
+      .select(a.columns.map(col): _*)
     b.exceptAll(a).withColumn("__op", lit("insert"))
       .unionByName(a.exceptAll(b).withColumn("__op", lit("delete")))
   }

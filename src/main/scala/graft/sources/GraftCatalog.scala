@@ -47,7 +47,7 @@ import graft.runtime.Catalog
   * written through `graft.runtime.Catalog` are therefore readable by
   * name with NO registration step (schema inferred from footers /
   * partition layout), and tables created via SQL DDL are readable by
-  * the object API — one warehouse, two addressing modes.
+  * the object API, whose reads and writes resolve here by name.
   *
   * Division of labor per surface:
   *  - READS delegate to Spark's own file tables (ParquetTable & co), so
@@ -59,7 +59,9 @@ import graft.runtime.Catalog
   *    — append, full replace, dynamic partition overwrite — one
   *    protocol, one commit journal, for every table;
   *  - MERGE / UPDATE / DELETE implement [[SupportsRowLevelOperations]]
-  *    as group-based copy-on-write (see [[GraftTable]] docs).
+  *    as group-based copy-on-write through the same hive-layout commit
+  *    ([[GraftPartitionedCow.PartitionedReplaceWrite]], see
+  *    [[GraftTable]] docs).
   *
   * SQL-created tables persist their schema + partition spec in a
   * `_graft_meta` sidecar inside the table directory (underscore prefix
@@ -1258,11 +1260,6 @@ private[sources] class GraftTable(
     if (meta.evolvedCols.nonEmpty) Map("recursiveFileLookup" -> "true")
     else Map.empty[String, String])
 
-  /** Fresh delegate per call: file listings must see the current
-    * directory state, not the state at table-load time.
-    */
-  private def delegate: FileTable = delegateOver(None)
-
   /** The journal's file index at its head ([[GraftManifestListing]]),
     * or None when this table plans from a listing: a time-travel
     * snapshot or a table with no journal yet.
@@ -1672,8 +1669,7 @@ private[sources] class GraftTable(
             s.startsWith("_") || s.startsWith(".")))
           .map(GraftStats.shardKeyOf).toSet)
       }
-    val fullReplace = w.isInstanceOf[GraftPartitionedCow.TruncateReplaceWrite] ||
-      w.isInstanceOf[ReplaceFilesWrite]
+    val fullReplace = w.isInstanceOf[GraftPartitionedCow.TruncateReplaceWrite]
     def batch(b: BatchWrite): BatchWrite = new BatchWrite {
       override def createBatchWriterFactory(
           info: PhysicalWriteInfo): DataWriterFactory =
@@ -2114,51 +2110,30 @@ private[sources] class GraftTable(
 
       override def newWriteBuilder(writeInfo: LogicalWriteInfo): WriteBuilder = {
         val parts = effectivePartitionCols
-        // a BUCKETED (even unpartitioned) table must keep bucket-tagged
-        // files through a rewrite, so it takes the hive-layout path too
-        if (parts.isEmpty && meta.bucketSpec.isEmpty)
-          new WriteBuilder { override def build(): Write = {
-            // snapshot the current generation's data files NOW (driver,
-            // pre-job): these are exactly the files the replacement
-            // supersedes and retires at commit
-            val fs = new Path(dir)
-              .getFileSystem(spark.sparkContext.hadoopConfiguration)
-            val old = listDataFiles(fs, new Path(dir))
-            val fileWrite = delegate.newWriteBuilder(writeInfo).build()
-            withAutoAnalyze(
-              new ReplaceFilesWrite(fileWrite, writeInfo.schema(), dir, old,
-                GraftCheck.boundFor(spark,
-                  spark.sparkContext.hadoopConfiguration, dir,
-                  writeInfo.schema()),
-                command = info.command.toString.toLowerCase))
-          } }
-        else {
-          // partitioned copy-on-write: the replacement write lays rows
-          // out in the hive directory structure itself (the piece the
-          // flat v2 file write lacks) and retires the directories it
-          // scanned, so every partition column must be a plain column
-          // whose directory token is unambiguous
-          val schema = writeInfo.schema()
-          val transforms = parts.filter(GraftTransforms.isTransform)
-          require(transforms.isEmpty,
-            s"${info.command}: hidden-partitioning fields " +
-              s"${transforms.mkString(", ")} are not supported by " +
-              "row-level copy-on-write")
-          GraftPartitionedCow.requireDirRenderable(info.command.toString,
-            schema, parts)
-          require(parts.size < schema.fields.length,
-            s"${info.command}: every column is a partition column — no " +
-              "data columns to write")
-          new WriteBuilder { override def build(): Write = {
-            val fs = new Path(dir)
-              .getFileSystem(spark.sparkContext.hadoopConfiguration)
-            val old = listDataFiles(fs, new Path(dir))
-            withAutoAnalyze(new GraftPartitionedCow.PartitionedReplaceWrite(
-              spark, format, schema, dir, parts, old, () => scanned,
-              meta.bucketSpec, () => leafScope,
-              command = info.command.toString.toLowerCase))
-          } }
-        }
+        // the replacement write lays rows out in the hive directory
+        // structure (none for an unpartitioned table) and retires the
+        // files its scan superseded, so every partition column must be
+        // a plain column whose directory token is unambiguous
+        val schema = writeInfo.schema()
+        val transforms = parts.filter(GraftTransforms.isTransform)
+        require(transforms.isEmpty,
+          s"${info.command}: hidden-partitioning fields " +
+            s"${transforms.mkString(", ")} are not supported by " +
+            "row-level copy-on-write")
+        GraftPartitionedCow.requireDirRenderable(info.command.toString,
+          schema, parts)
+        require(parts.size < schema.fields.length,
+          s"${info.command}: every column is a partition column — no " +
+            "data columns to write")
+        new WriteBuilder { override def build(): Write = {
+          val fs = new Path(dir)
+            .getFileSystem(spark.sparkContext.hadoopConfiguration)
+          val old = listDataFiles(fs, new Path(dir))
+          withAutoAnalyze(new GraftPartitionedCow.PartitionedReplaceWrite(
+            spark, format, schema, dir, parts, old, () => scanned,
+            meta.bucketSpec, () => leafScope,
+            command = info.command.toString.toLowerCase))
+        } }
       }
     }
   }
@@ -2388,166 +2363,6 @@ private[sources] class GraftTable(
       else if (st.isDirectory) listDataFiles(fs, st.getPath)
       else Seq(st.getPath)
     }
-
-  /** The copy-on-write replacement write: delegate the distributed
-    * write (staged invisibly by the file commit protocol), then retire
-    * the superseded generation in the same driver commit.
-    *
-    * Row layout note: group-based ReplaceData rows arrive prefixed with
-    * Spark's `__row_operation` int column; the runtime only projects it
-    * away when the operation declares metadata attributes (the
-    * [[org.apache.spark.sql.execution.datasources.v2.ReplaceDataExec]]
-    * writingTask dispatch), so with none declared the raw
-    * `[op, data...]` rows would hit the format writer and overflow its
-    * schema. [[StripOperationFactory]] applies the data projection the
-    * engine would otherwise skip.
-    */
-  private class ReplaceFilesWrite(inner: Write, dataSchema: StructType,
-                                  dir: String,
-                                  oldFiles: Seq[Path],
-                                  checks: Seq[GraftCheck.Bound] = Nil,
-                                  command: String = "")
-    extends Write {
-    override def description(): String = s"graft replace-data $dir"
-    // deletion-vector conflict guard (see PartitionedReplaceWrite):
-    // snapshot at write build, re-check under the commit lock
-    private val dvBefore = GraftDv.fingerprint(new Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration), new Path(dir))
-    override def toBatch: BatchWrite = new BatchWrite {
-      private val innerBatch = inner.toBatch
-      override def createBatchWriterFactory(
-          info: PhysicalWriteInfo): DataWriterFactory = {
-        val stripped = StripOperationFactory(
-          innerBatch.createBatchWriterFactory(info), dataSchema)
-        // write-time CHECK constraints ([[GraftCheck]]): the stripped
-        // rows match dataSchema exactly, so the guard binds at offset 0
-        if (checks.isEmpty) stripped
-        else CheckingWriterFactory(stripped, checks, dataSchema)
-      }
-      override def useCommitCoordinator(): Boolean =
-        innerBatch.useCommitCoordinator()
-      override def commit(messages: Array[WriterCommitMessage]): Unit = {
-        val fs = new Path(dir)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        // publish + retire are one commit critical section: a racing
-        // committer fails cleanly instead of interleaving (r11 item 6)
-        GraftCommitLock.withLock(fs, new Path(dir), "replace-files") {
-          GraftEqDel.requireNone(fs, new Path(dir), "a copy-on-write rewrite")
-          if (GraftDv.fingerprint(fs, new Path(dir)) != dvBefore)
-            throw new GraftCommitLock.ConcurrentCommitException(
-              s"$dir: deletion vectors changed while this rewrite ran; " +
-                "the rewrite read pre-delete rows and was DISCARDED — re-run")
-          // pre-commit universe snapshot inside the critical section:
-          // the journal record claims the delegated write's new files
-          // as everything that appears across the commit
-          val base = new Path(dir)
-          val before = GraftCommits.universe(fs, base)
-          innerBatch.commit(messages) // new generation is published
-          // the record is the commit: it names the tombstone the retire
-          // then fills; a failed record unpublishes the new generation
-          val tomb =
-            if (oldFiles.isEmpty) None else Some(GraftRetired.newCommitDir(base))
-          GraftCommits.recordOrUnpublish(fs, base,
-              (GraftCommits.universe(fs, base) -- before).toSeq
-                .map(new Path(base, _))) {
-            GraftCommits.recordClaiming(fs, base, "rewrite",
-              before = before,
-              removes = oldFiles.map(g => GraftCommits.Remove(
-                GraftCommits.relOf(fs, base, g), tomb.fold("")(_.getName))),
-              note = command)
-          }
-          // old generation retires — TOMBSTONED, not deleted, so an
-          // in-flight reader that planned before this commit completes
-          // against its snapshot (r12 item 2; GC via remove_orphans)
-          tomb.foreach(GraftRetired.retireFilesInto(fs, base, oldFiles, _))
-          GraftDv.dropFor(fs, base, oldFiles)
-        }
-        // maintenance policy outside the lock: this commit grew the
-        // tombstone area (retired.expire_ms GC)
-        GraftMaintenance.afterCommit(spark, fs, new Path(dir))
-      }
-      override def abort(messages: Array[WriterCommitMessage]): Unit =
-        innerBatch.abort(messages) // old generation untouched
-    }
-  }
-}
-
-/** Task-side adapter for the [[GraftTable]] row-level write: strips the
-  * leading `__row_operation` column off group-based replacement rows
-  * (the rewrites emit `[op] ++ dataColumns` in table-column order, per
-  * `RewriteRowLevelCommand.buildReplaceDataProjections`) so the
-  * delegated file writer sees exactly its declared schema. Rows that
-  * already match the data schema pass through untouched, which keeps
-  * the adapter correct if a future Spark applies its own projection.
-  */
-/** Task-side CHECK-constraint decorator for delegated file writes
-  * ([[GraftCheck]]): every row is checked before the inner writer sees
-  * it. The hive-layout writers enforce inline instead (they own the
-  * row loop); this wrapper covers the paths that delegate to Spark's
-  * own file writers.
-  */
-private case class CheckingWriterFactory(
-    inner: org.apache.spark.sql.connector.write.DataWriterFactory,
-    checks: Seq[GraftCheck.Bound], dataSchema: StructType)
-  extends org.apache.spark.sql.connector.write.DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long)
-      : org.apache.spark.sql.connector.write.DataWriter[
-        org.apache.spark.sql.catalyst.InternalRow] = {
-    val innerW = inner.createWriter(partitionId, taskId)
-    // rows may arrive prefixed with Spark's __row_operation column
-    // (row-level rewrites emit [op] ++ data); the guard binds per
-    // observed layout, exactly like the hive-layout writer
-    val guards = new Array[GraftCheck.RowGuard](2)
-    new org.apache.spark.sql.connector.write.DataWriter[
-        org.apache.spark.sql.catalyst.InternalRow] {
-      override def write(
-          row: org.apache.spark.sql.catalyst.InternalRow): Unit = {
-        val offset = row.numFields - dataSchema.length
-        require(offset == 0 || offset == 1,
-          s"row has ${row.numFields} fields for a " +
-            s"${dataSchema.length}-column table")
-        if (guards(offset) == null)
-          guards(offset) = new GraftCheck.RowGuard(
-            GraftCheck.shift(checks, offset), dataSchema, offset)
-        guards(offset).check(row)
-        innerW.write(row)
-      }
-      override def commit()
-          : org.apache.spark.sql.connector.write.WriterCommitMessage =
-        innerW.commit()
-      override def abort(): Unit = innerW.abort()
-      override def close(): Unit = innerW.close()
-    }
-  }
-}
-
-private case class StripOperationFactory(
-    inner: org.apache.spark.sql.connector.write.DataWriterFactory,
-    dataSchema: StructType)
-  extends org.apache.spark.sql.connector.write.DataWriterFactory {
-
-  override def createWriter(partitionId: Int, taskId: Long)
-      : org.apache.spark.sql.connector.write.DataWriter[
-        org.apache.spark.sql.catalyst.InternalRow] = {
-    val delegate = inner.createWriter(partitionId, taskId)
-    val n = dataSchema.length
-    val proj = org.apache.spark.sql.catalyst.ProjectingInternalRow(
-      dataSchema, (1 to n).toIndexedSeq)
-    new org.apache.spark.sql.connector.write.DataWriter[
-        org.apache.spark.sql.catalyst.InternalRow] {
-      override def write(row: org.apache.spark.sql.catalyst.InternalRow): Unit =
-        if (row.numFields == n) delegate.write(row)
-        else {
-          require(row.numFields == n + 1,
-            s"replacement row has ${row.numFields} fields for a $n-column table")
-          proj.project(row)
-          delegate.write(proj)
-        }
-      override def commit(): WriterCommitMessage = delegate.commit()
-      override def abort(): Unit = delegate.abort()
-      override def close(): Unit = delegate.close()
-    }
-  }
 }
 
 /** Forwarding scan builder: preserves every pushdown tier of the
@@ -5044,15 +4859,6 @@ private[graft] object GraftPartitionedCow {
       (staged.map(t => (t._1, t._2)), Nil)
   }
 
-  /** Copy-on-write replacement (row-level MERGE/UPDATE/DELETE): retires
-    * the old generation inside the partitions the operation's SCAN was
-    * runtime-group-filtered to (None = the filter never fired = the
-    * scan read everything, whole-table rewrite). Declares a clustered
-    * distribution on the partition columns: replacement rows for a
-    * partition arrive at one task, so a 1000-executor merge writes a
-    * handful of files per touched partition instead of
-    * tasks × partitions slivers.
-    */
   /** Clustering for a hive-layout write: identity partitions plus the
     * bucket transform when present — one shuffle, then each task owns
     * whole (partition, bucket) groups. Declared NON-strict
@@ -5118,6 +4924,18 @@ private[graft] object GraftPartitionedCow {
         org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING))
       .toArray
 
+  /** Copy-on-write replacement (row-level MERGE/UPDATE/DELETE), for
+    * every layout: retires the old generation inside the partitions the
+    * operation's SCAN was runtime-group-filtered to (None = the filter
+    * never fired = the scan read everything, whole-table rewrite — always
+    * the case for an unpartitioned table, which gets no partition
+    * columns and writes its files at the table root). Declares a
+    * clustered distribution on the partition columns: replacement rows
+    * for a partition arrive at one task, so a 1000-executor merge writes
+    * a handful of files per touched partition instead of
+    * tasks × partitions slivers; with no partition or bucket column it
+    * declares none.
+    */
   final class PartitionedReplaceWrite(
       spark: SparkSession, format: String, dataSchema: StructType,
       dir: String, partitionCols: Seq[String], oldFiles: Seq[Path],
@@ -5509,8 +5327,10 @@ private[graft] object GraftPartitionedCow {
   }
 
   /** Task-side dynamic-partition writer. Replacement rows may arrive
-    * prefixed with Spark's `__row_operation` int column (see
-    * [[StripOperationFactory]]) — the offset is detected per row and
+    * prefixed with Spark's `__row_operation` int column (group-based
+    * rewrites emit `[op] ++ data` and Spark projects the op away only
+    * for operations that declare metadata attributes) — the offset is
+    * detected per row and
     * both the partition-value reads and the file projection shift by
     * it. One open OutputWriter per partition value encountered; with
     * the clustered distribution above that is a handful per task.

@@ -722,53 +722,6 @@ private[graft] object GraftCommits {
     nextId
   }
 
-  /** Append a record whose adds are CLAIMED as the visible batch files
-    * not present in `before` (for publish paths that don't know their
-    * final file names — delegated Spark writes). The
-    * claim runs under the lock and ALSO subtracts the journal's own
-    * accounted-live set (ADVICE r15 medium): a `before` listed before
-    * an unlocked save can miss a concurrent committer's just-published
-    * files, and two such committers would otherwise each claim the
-    * other's files — the feed would serve those rows as inserts TWICE
-    * under two ids. Diffing against the journal's accounting is
-    * monotonic under the lock, so every file lands in exactly one
-    * record's adds (a racing pair may attribute the slower save to the
-    * faster record's id — same rows, served once, net-change intact).
-    * An unjournaled foreign writer still degrades to the loud feed
-    * accounting refusal, never misattribution of a SERVED row.
-    */
-  def recordClaiming(fs: FileSystem, tableDir: Path, kind: String,
-      before: Set[String], removes: Seq[Remove] = Nil,
-      dv: Map[String, Array[Long]] = Map.empty,
-      note: String = ""): Long = {
-    if (!complete(fs, tableDir)) {
-      val retiring = removes.map(_.rel).toSet
-      upgrade(fs, tableDir, rel => !before(rel) || retiring(rel))
-    }
-    val (ckOpt, tail) = load(fs, tableDir)
-    val nowInfo = visibleInfo(fs, tableDir)
-    val now = nowInfo.keySet
-    val claim =
-      (now -- before -- accountedLive(ckOpt, tail)).toSeq.sorted
-    var nextId = (ckOpt.map(_.id) ++ tail.lastOption.map(_.id))
-      .maxOption.map(_ + 1).getOrElse(0L)
-    if (ckOpt.isEmpty && tail.isEmpty) {
-      markComplete(fs, tableDir)
-      val others = visibleInfo(fs, tableDir) -- claim -- removes.map(_.rel)
-      if (others.nonEmpty) {
-        writeRec(fs, tableDir, Rec(nextId, "genesis",
-          System.currentTimeMillis(), others.keys.toSeq.sorted, Nil,
-          Map.empty, info = others))
-        nextId += 1
-      }
-    }
-    writeRec(fs, tableDir,
-      Rec(nextId, kind, System.currentTimeMillis(), claim, removes, dv,
-        note, info = claim.map(rel => rel -> nowInfo(rel)).toMap))
-    maybeCheckpoint(fs, tableDir)
-    nextId
-  }
-
   /** Runs a commit's record; when it fails, deletes the files the
     * commit published that the journal does not account, then
     * rethrows. No read planned those files, so the table stays exactly
@@ -786,18 +739,11 @@ private[graft] object GraftCommits {
       throw e
     }
 
-  /** The rel paths the journal currently accounts as live: every
-    * record's adds minus later removes. The race-free component of the
-    * claiming baseline — unlike a directory listing, it only ever
-    * grows under the commit lock.
+  /** The rel paths `recs` account as live: every record's adds minus
+    * later removes.
     */
-  def accountedLive(recs: Seq[Rec]): Set[String] =
-    accountedLive(None, recs)
-
-  def accountedLive(ck: Option[Checkpoint], recs: Seq[Rec])
-      : Set[String] = {
+  def accountedLive(recs: Seq[Rec]): Set[String] = {
     val files = scala.collection.mutable.HashSet.empty[String]
-    ck.foreach(files ++= _.files.keys)
     recs.foreach { r =>
       r.removes.foreach(rm => files -= rm.rel)
       files ++= r.adds
@@ -978,6 +924,9 @@ private[graft] object GraftCommits {
     var out = (0, 0)
     GraftCommitLock.withLock(fs, tableDir, s"rollback-c$target") {
       GraftEqDel.requireNone(fs, tableDir, "a commit rollback")
+      // a journal from before every commit recorded its files first
+      // accounts what its reads served, as `record` would
+      if (!complete(fs, tableDir)) upgrade(fs, tableDir, _ => false)
       // checkpoint-aware: state + the records resolution needs
       // (≤ tail-length reads once a checkpoint exists; expired
       // prefixes refuse inside stateAndRecs)
@@ -989,7 +938,10 @@ private[graft] object GraftCommits {
             s"$tableDir: cannot roll back to commit $target — the " +
               s"tombstone preserving $rel was expired by remove_orphans")))
       }
-      val current = universe(fs, tableDir)
+      // the current state is the head's live set, not a listing: a
+      // data file no commit recorded is not served, so it is neither
+      // retired nor named in the record's removes
+      val current = head(fs, tableDir).fold(Set.empty[String])(_.live.keySet)
       val toRetire = (current -- want.keySet).toSeq.sorted
       val qualBase = fs.makeQualified(tableDir).toString
       val toRestore = resolved.filter { case (rel, p) =>

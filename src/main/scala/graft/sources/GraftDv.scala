@@ -6,7 +6,7 @@ import scala.collection.mutable
 import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.expressions.{Literal => V2Literal, NamedReference}
 import org.apache.spark.sql.connector.expressions.filter.{And => V2And, Not => V2Not, Or => V2Or, Predicate}
@@ -997,9 +997,8 @@ private[graft] object GraftDv {
     }
     if (live.isEmpty) return (0, 0L, swept)
 
-    // scheme/slash normalization shared with the path-read apply: the
-    // driver-side qualified URI and the reader's file_path rendering
-    // meet on one key
+    // scheme/slash normalization: the driver-side qualified URI and
+    // the reader's file_path rendering meet on one key
     def norm(s: String): String =
       s.replaceFirst("^[a-zA-Z][a-zA-Z0-9+.-]*:", "").replaceFirst("^/+", "/")
     def keyOf(rel: String): String = java.util.Base64.getUrlEncoder
@@ -1089,68 +1088,5 @@ private[graft] object GraftDv {
     }
     fs.delete(staging, true)
     (files, positions, swept)
-  }
-
-  // ---- path-read application (object API) --------------------------------
-
-  /** Apply a table's deletion vectors to a RAW path read
-    * (`spark.read.parquet(dir)`): anti-join on `(_metadata.file_path,
-    * row_index)` against the exploded sidecars. Distributed, no
-    * positional counting needed — the metadata columns carry exact
-    * positions. No-op (and zero-cost) when the table has no vectors.
-    */
-  def applyToPathRead(spark: SparkSession, df: DataFrame, tableDir: Path)
-      : DataFrame = {
-    val fs = tableDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val index = list(fs, tableDir)
-    if (index.isEmpty) df
-    else {
-      val dirUri = tableDir.toUri.getPath
-      // an orphaned sidecar (data file retired under a fresh name) is
-      // inert — it contributes no rows and its keys anti-join nothing;
-      // skip it rather than failing the read. A sidecar whose file
-      // EXISTS but changed stays a loud refusal (resurrection risk).
-      val entries = index.toSeq.map { case (rel, p) => read(fs, p) }
-        .filter { dv =>
-          val f = new Path(tableDir, dv.rel)
-          if (!fs.exists(f)) false
-          else {
-            val st = fs.getFileStatus(f)
-            require(st.getLen == dv.len &&
-              st.getModificationTime == dv.mtime,
-              s"deletion vector for ${dv.rel} no longer matches its data " +
-                "file — refusing the path read")
-            true
-          }
-        }
-      if (entries.isEmpty) return df
-      import spark.implicits._
-      // key both sides through ONE normalization — scheme stripped,
-      // leading slashes collapsed — so `file:/x` (Hadoop qualified)
-      // and `file:///x` (the reader's SparkPath rendering) meet. The
-      // identical rule is applied to the driver-side qualified URI and
-      // (as a Spark expression) to `_metadata.file_path`, so any
-      // authority component survives identically on both sides.
-      def norm(s: String): String =
-        s.replaceFirst("^[a-zA-Z][a-zA-Z0-9+.-]*:", "")
-          .replaceFirst("^/+", "/")
-      val deleted = entries
-        .flatMap { dv =>
-          val q = fs.makeQualified(new Path(tableDir, dv.rel))
-            .toUri.toString
-          val bare = dirUri.stripSuffix("/") + "/" + dv.rel
-          dv.ords.flatMap(o =>
-            Seq(norm(q), norm(bare)).distinct.map(k => (k, o)))
-        }
-        .toDF("__dv_f", "__dv_o")
-      val fileKey = regexp_replace(
-        regexp_replace(col("_metadata.file_path"),
-          "^[a-zA-Z][a-zA-Z0-9+.-]*:", ""),
-        "^/+", "/")
-      df.join(broadcast(deleted),
-        fileKey === col("__dv_f") &&
-          col("_metadata.row_index") === col("__dv_o"),
-        "left_anti")
-    }
   }
 }

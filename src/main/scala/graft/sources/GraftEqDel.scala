@@ -4,7 +4,7 @@ import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
 import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
@@ -646,63 +646,6 @@ private[graft] object GraftEqDel {
     val bc = SparkSession.active.sparkContext.broadcast(ix.maxByKey)
     new EqReaderFactory(innerF, outIdx, keyIdx, ix.kinds.toArray,
       extTypes, ix.tag, ix.maxEpoch, bc)
-  }
-
-  // ---- raw path reads (object API, archived versions) -------------------------
-
-  /** Apply a directory's equality deletes to a raw path read: derive
-    * each row's file floor from `_metadata.file_path` and null-safe
-    * anti-join against the (key, latest epoch) set. No-op (zero cost)
-    * without sidecars.
-    */
-  def applyToPathRead(spark: SparkSession, df: DataFrame, tableDir: Path)
-      : DataFrame = {
-    val fs = tableDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ps = list(fs, tableDir)
-    if (ps.isEmpty) return df
-    val ds = ps.map(read(fs, _))
-    // the same LOUD single-stream validation every catalog scan gets
-    // via load(): a contract-violated directory must refuse, not
-    // silently mis-floor the other stream's files
-    require(ds.map(_.tag).distinct.length == 1 &&
-      ds.map(_.cols.map(_.toLowerCase)).distinct.length == 1,
-      s"$tableDir carries equality deletes from mixed streams or key " +
-        "columns — CALL system.rewrite_deletes before path reads")
-    val tag = ds.head.tag
-    val cols = ds.head.cols
-    val kinds = ds.head.kinds
-    // latest epoch per key, as typed columns
-    val latest = new scala.collection.mutable.HashMap[Seq[Option[Any]], Long]
-    ds.foreach(d => d.keys.foreach { k =>
-      if (latest.getOrElse(k, Long.MinValue) < d.epoch) latest(k) = d.epoch
-    })
-    import org.apache.spark.sql.Row
-    val fields = cols.zip(kinds).map { case (c, k) =>
-      StructField(s"__eq_$c", if (k == 'l') LongType else StringType)
-    } :+ StructField("__eq_epoch", LongType)
-    val rows = latest.toSeq.map { case (k, e) =>
-      Row.fromSeq(k.map {
-        case Some(v: Long) => v
-        case Some(v) => v.toString
-        case None => null
-      } :+ e)
-    }
-    val delDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 1), StructType(fields))
-    val fileName = element_at(split(col("_metadata.file_path"), "/"), -1)
-    // regexp_extract yields "" on no match; guard the cast (ANSI-safe)
-    def tagged(pattern: String) = {
-      val m = regexp_extract(fileName, pattern, 1)
-      coalesce(when(m =!= "", m.cast(LongType)), lit(-1L))
-    }
-    val floorExpr =
-      greatest(tagged(s"-s$tag-e(\\d+)-"), tagged(s"-ef${tag}x(\\d+)-"))
-    df.withColumn("__eq_floor", floorExpr)
-      .join(broadcast(delDf),
-        cols.map(c => col(c) <=> delDf(s"__eq_$c")).reduceLeft(_ && _) &&
-          (delDf("__eq_epoch") > col("__eq_floor")),
-        "left_anti")
-      .drop("__eq_floor")
   }
 
   // ---- materialization (CALL system.rewrite_deletes) --------------------------

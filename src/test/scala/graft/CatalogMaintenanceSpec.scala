@@ -152,19 +152,14 @@ class CatalogMaintenanceSpec extends SparkSpec {
     }
   }
 
-  test("readMerged unions schemas across appends; plain read does not") {
+  test("read unions schemas across appends") {
     val cat = Catalog(spark, tmpDir("evolve-wh"))
     cat.append(Seq((1L, "a")).toDF("id", "s"), "raw", "t", Seq.empty)
     cat.append(Seq((2L, "b", 9.5)).toDF("id", "s", "x"), "raw", "t", Seq.empty)
-    val merged = cat.readMerged("raw", "t")
+    val merged = cat.read("raw", "t")
     assert(merged.columns.toSet == Set("id", "s", "x"))
     assert(merged.filter(col("id") === 1L).select("x").first().isNullAt(0))
     assert(merged.filter(col("id") === 2L).select("x").as[Double].head() == 9.5)
-  }
-
-  test("readMerged refuses formats without per-file schemas") {
-    val cat = Catalog(spark, tmpDir("evolve-csv"), "csv")
-    intercept[IllegalArgumentException] { cat.readMerged("raw", "t") }
   }
 
   test("refreshAggregate maintains a keyed sum/count incrementally, versioned") {

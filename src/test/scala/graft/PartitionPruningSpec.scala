@@ -3,7 +3,8 @@ package graft
 import java.sql.{Date, Timestamp}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.DynamicPruning
-import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import graft.layers.{AlertsLayer, DdsLayer, MartLayer}
 import graft.runtime.Catalog
@@ -54,10 +55,18 @@ class PartitionPruningSpec extends SparkSpec {
     cat
   }
 
-  private def factScans(df: DataFrame): Seq[FileSourceScanExec] =
+  /** A fact-table scan: its static partition filters (as the file
+    * scan renders them) and the runtime filters Spark attached.
+    */
+  private case class FactScan(partitionFilters: String,
+                              runtimeFilters: Seq[Expression])
+
+  private def factScans(df: DataFrame): Seq[FactScan] =
     df.queryExecution.sparkPlan.collect {
-      case f: FileSourceScanExec
-        if f.relation.location.rootPaths.exists(_.toString.contains(DdsLayer.factTable)) => f
+      case b: BatchScanExec if b.table.name().endsWith(DdsLayer.factTable) =>
+        FactScan("PartitionFilters: \\[([^\\]]*)\\]".r
+          .findFirstMatchIn(b.scan.description()).map(_.group(1)).getOrElse(""),
+          b.runtimeFilters)
     }
 
   test("static pruning: the day-slice scan touches exactly one partition") {
@@ -68,8 +77,7 @@ class PartitionPruningSpec extends SparkSpec {
       .filter(col("report_date") === lit("2020-03-04").cast("date"))
     val scans = factScans(slice)
     assert(scans.nonEmpty, "no fact scan found")
-    assert(scans.forall(_.partitionFilters.exists(
-        _.references.exists(_.name == "report_date"))),
+    assert(scans.forall(_.partitionFilters.contains("report_date")),
       s"date predicate did not reach the scan as a partition filter:\n$slice")
     // execution-level proof: every file actually read is from the one
     // hive partition
@@ -100,7 +108,7 @@ class PartitionPruningSpec extends SparkSpec {
       .groupBy("report_date").agg(sum("confirmed").as("c"))
     val scans = factScans(q)
     assert(scans.nonEmpty, "no fact scan found")
-    assert(scans.exists(_.partitionFilters.exists(e =>
+    assert(scans.exists(_.runtimeFilters.exists(e =>
         e.exists(_.isInstanceOf[DynamicPruning]))),
       "no DynamicPruningExpression on the fact scan's partition filters — " +
         s"a date-dim join would full-scan history at 100 TB:\n${q.queryExecution.sparkPlan}")

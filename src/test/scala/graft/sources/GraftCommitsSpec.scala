@@ -92,6 +92,32 @@ class GraftCommitsSpec extends SparkSpec {
     assert(spark.table(s"$cat.ods.t.commits").count() == 5)
   }
 
+  test("rollback takes the current state from the head: an unrecorded data file is neither retired nor removed") {
+    val (cat, root) = freshCatalog()
+    spark.sql(s"CREATE NAMESPACE $cat.ods")
+    spark.sql(s"CREATE TABLE $cat.ods.r (k BIGINT, v BIGINT)")
+    spark.sql(s"INSERT INTO $cat.ods.r VALUES (1, 10)") // c0
+    spark.sql(s"INSERT INTO $cat.ods.r VALUES (2, 20)") // c1
+    // a Spark path write into the table directory is no commit
+    import spark.implicits._
+    Seq((3L, 30L)).toDF("k", "v").coalesce(1)
+      .write.mode("append").parquet(s"$root/ods/r")
+    val dir = new Path(s"$root/ods/r")
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val live = GraftCommits.head(fs, dir).get.live.keySet
+    val unrecorded = GraftCommits.universe(fs, dir) -- live
+    assert(unrecorded.size == 1, s"unrecorded files: $unrecorded")
+    spark.sql(s"CALL $cat.system.rollback_to_commit(" +
+      "table => 'ods.r', commit => 0)").collect()
+    val rec = GraftCommits.list(fs, dir).last
+    assert(rec.kind == "rollback")
+    assert(rec.removes.map(_.rel).toSet == live -- GraftCommits.list(fs, dir)
+      .head.adds.toSet, s"rollback removes: ${rec.removes}")
+    assert(unrecorded.forall(rel => fs.exists(new Path(dir, rel))),
+      "the rollback retired a file no commit recorded")
+    assert(rows(spark.sql(s"SELECT k, v FROM $cat.ods.r")) == Set((1L, 10L)))
+  }
+
   test("deletion-vector state replays per commit; rollback across a mor-delete resurrects rows") {
     val (cat, _) = freshCatalog()
     spark.sql(s"CREATE NAMESPACE $cat.ods")
@@ -141,36 +167,6 @@ class GraftCommitsSpec extends SparkSpec {
     assert(at("c3") == live,
       "rollback-commit snapshot served rows the target had deleted")
     assert(at("c1") == live)
-  }
-
-  test("concurrent claiming appends never double-claim a racer's files (ADVICE r15 medium)") {
-    val (cat, root) = freshCatalog()
-    spark.sql(s"CREATE NAMESPACE $cat.ods")
-    spark.sql(s"CREATE TABLE $cat.ods.cc (k BIGINT, v BIGINT)")
-    spark.sql(s"INSERT INTO $cat.ods.cc VALUES (1, 10)") // journal born
-    val dir = new Path(s"$root/ods/cc")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // both racers snapshot the universe BEFORE either unlocked save
-    // publishes (the V1 append shape: list, save, lock, claim)
-    val before = GraftCommits.universe(fs, dir)
-    // ...then both saves land before either takes the journal lock
-    Seq("part-racer-a.parquet", "part-racer-b.parquet").foreach { nm =>
-      val out = fs.create(new Path(dir, nm), false)
-      try out.write(Array[Byte](1)) finally out.close()
-    }
-    GraftCommits.recordClaiming(fs, dir, "append", before)
-    GraftCommits.recordClaiming(fs, dir, "append", before)
-    val recs = GraftCommits.list(fs, dir)
-    val adds = recs.flatMap(_.adds)
-    assert(adds.distinct == adds,
-      s"a file was claimed by two commits (feed would double-serve): " +
-        recs.map(r => s"c${r.id}:${r.adds.mkString("+")}").mkString(" "))
-    // the faster record claimed both racers' files; the slower one
-    // found everything accounted and claimed nothing
-    assert(recs.last.adds.isEmpty, s"slower racer re-claimed: ${recs.last}")
-    // accounting stays total: every visible batch file is owned
-    assert(GraftCommits.universe(fs, dir) ==
-      GraftCommits.accountedLive(recs))
   }
 
   test("rollback floors the changes feed: lagging consumers refuse, fresh reads serve post-rollback commits") {

@@ -164,6 +164,55 @@ class GraftManifestListingSpec extends SparkSpec {
     assert(sumV(cat, "c") == ((pre._1 + 1, pre._2 + 5 + 50)))
   }
 
+  test("Catalog.read of a journaled table serves what Catalog.table serves, not an unrecorded file") {
+    val (_, local) = freshCatalog()
+    val engine = graft.runtime.Catalog(spark, s"graftcnt://$local")
+    import spark.implicits._
+    engine.append((0L until 20L).map(i => (i, i * 10, s"p${i % 2}"))
+      .toDF("k", "v", "p"), "ods", "r", Seq("p"))
+    // a Spark path write into the table directory is no commit
+    Seq((1000L, 7L)).toDF("k", "v").coalesce(1)
+      .write.mode("append").parquet(s"$local/ods/r/p=p0")
+    def rowsOf(df: org.apache.spark.sql.DataFrame) =
+      df.select("k", "v", "p").as[(Long, Long, String)].collect().toSet
+    assert(rowsOf(engine.read("ods", "r")) == rowsOf(engine.table("ods", "r")))
+    assert(engine.read("ods", "r").count() == 20,
+      "the object-API read served a file no commit recorded")
+  }
+
+  test("Catalog.read of a journaled table lists no data directory") {
+    val (_, local) = freshCatalog()
+    val engine = graft.runtime.Catalog(spark, s"graftcnt://$local")
+    import spark.implicits._
+    engine.append((0L until 20L).map(i => (i, i * 10, s"p${i % 2}"))
+      .toDF("k", "v", "p"), "ods", "l", Seq("p"))
+    CountingLocalFs.reset()
+    assert(engine.read("ods", "l").count() == 20)
+    val listings = CountingLocalFs.dataListings(s"$local/ods/l")
+    assert(listings.isEmpty, s"Catalog.read listed data dirs: $listings")
+  }
+
+  test("an unpartitioned UPDATE that crashes before its record leaves the pre-commit state, and the next UPDATE succeeds") {
+    val (cat, _) = freshCatalog()
+    spark.sql(s"CREATE NAMESPACE $cat.ods")
+    spark.sql(s"CREATE TABLE $cat.ods.n (k BIGINT, v BIGINT)")
+    spark.sql(s"INSERT INTO $cat.ods.n SELECT id, id * 10 FROM range(0, 100)")
+    val pre = sumV(cat, "n")
+    val old = GraftPartitionedCow.onBetweenPublishAndRetire
+    GraftPartitionedCow.onBetweenPublishAndRetire = dir =>
+      if (dir.endsWith("/ods/n")) throw new IllegalStateException("crash")
+    try {
+      val e = intercept[Exception](
+        spark.sql(s"UPDATE $cat.ods.n SET v = v + 1000000 WHERE k < 50"))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("crash")), e)
+    } finally GraftPartitionedCow.onBetweenPublishAndRetire = old
+    // the record is the commit point and the crash came before it
+    assert(sumV(cat, "n") == pre)
+    spark.sql(s"UPDATE $cat.ods.n SET v = v + 1 WHERE k < 50")
+    assert(sumV(cat, "n") == ((pre._1, pre._2 + 50)))
+  }
+
   test("a failed record fails the write and the table reads as before") {
     val (cat, local) = freshCatalog()
     spark.sql(s"CREATE NAMESPACE $cat.ods")
